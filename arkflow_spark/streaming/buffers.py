@@ -66,8 +66,8 @@ class TumblingWindow(_WindowBuffer):
 class SlidingWindow(_WindowBuffer):
     """Time-based sliding window. The reference's sliding buffer is
     count-based (buffer/sliding_window.rs:283) — that exact semantics is
-    :class:`arkflow_spark.streaming.state.SlidingCountWindow`; this is the
-    idiomatic time-based form."""
+    :func:`arkflow_spark.streaming.state.sliding_count_window_stream`;
+    this is the idiomatic time-based form."""
 
     def __init__(self, conf: dict):
         super().__init__(conf)

@@ -12,17 +12,104 @@ Two implementations with identical semantics:
   distributed after a per-key sort;
 - streaming: applyInPandasWithState keeping a bounded buffer per key
   (at most window_size - 1 rows carry over between micro-batches).
+
+The other stateful operators below are keyed folds too: each one is a
+step function run by :func:`_keyed_fold`, the module's only
+applyInPandasWithState call.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable
+from collections.abc import Callable, Iterable
+from typing import Any
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import DataType, StructType
+
+Rows = list[tuple]
+
+
+def _keyed_fold(
+    df: DataFrame,
+    group_col: str,
+    *,
+    init: tuple,
+    step: Callable[[Any, dict], tuple[Any, Rows]],
+    state_schema: str | StructType,
+    out_schema: str,
+    sort_by: str | list[str] | None = None,
+    load: Callable[[tuple], Any] | None = None,
+    dump: Callable[[Any], tuple] | None = None,
+    finish: Callable[[Any], tuple[Any, Rows]] | None = None,
+) -> DataFrame:
+    """Per-key left fold over a stream with state kept across
+    micro-batches and checkpoint restarts.
+
+    For each key of each micro-batch: the stored state tuple (``init``
+    for a new key) is mapped through ``load`` to the fold state; the
+    key's rows, stable-sorted by ``sort_by`` (arrival order when None),
+    go one at a time as column->value dicts through
+    ``step(state, row) -> (state, rows)``; ``finish(state) ->
+    (state, rows)`` then runs once, for operators that emit a
+    per-batch summary; ``dump(state)`` is stored. ``init`` is in
+    stored-tuple form because ``load`` is applied to it. Each emitted
+    row is a tuple of the output columns after the group key, which is
+    prepended here: every output schema starts with it. A batch that
+    emits nothing yields an empty frame.
+    """
+    names = DataType.fromDDL(out_schema).names
+
+    def fn(
+        key: tuple,
+        pdfs: Iterable[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterable[pd.DataFrame]:
+        st = state.get if state.exists else init
+        if load is not None:
+            st = load(st)
+        batch = pd.concat(list(pdfs), ignore_index=True)
+        if sort_by is not None:
+            batch = batch.sort_values(sort_by, kind="stable")
+        out: Rows = []
+        for row in batch.to_dict("records"):
+            st, rows = step(st, row)
+            out.extend(rows)
+        if finish is not None:
+            st, rows = finish(st)
+            out.extend(rows)
+        state.update(dump(st) if dump is not None else st)
+        yield pd.DataFrame.from_records(
+            [(key[0], *r) for r in out], columns=names
+        )
+
+    return df.groupBy(group_col).applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def _check_slide(window_size: int, slide_size: int) -> None:
+    """Reject sizes the streaming sliding windows cannot honour: a zero
+    size never drains the buffer, and a slide longer than the window
+    would have to skip rows that have not arrived yet (the batch form,
+    which sees every row, handles such gaps)."""
+    if window_size < 1 or slide_size < 1:
+        raise ValueError(
+            f"window_size and slide_size must be >= 1, got "
+            f"{window_size} and {slide_size}"
+        )
+    if slide_size > window_size:
+        raise ValueError(
+            f"slide_size {slide_size} > window_size {window_size} is not "
+            "supported on a stream; use sliding_count_window_batch"
+        )
 
 
 def sliding_count_window_batch(
@@ -86,42 +173,23 @@ def sliding_count_window_stream(
     ``output_schema`` must be: key, window_id long, pos_in_window long,
     then value_cols in order.
     """
+    _check_slide(window_size, slide_size)
 
-    out_cols = [key_col, "window_id", "pos_in_window"] + value_cols
+    def load(st: tuple) -> tuple:
+        return st[0], [list(r) for r in zip(*st[1:])]
 
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            got = state.get
-            next_wid = got[0]
-            stored = got[1:]
-            buf = [list(r) for r in zip(*stored)] if stored and stored[0] else []
-        else:
-            next_wid = 0
-            buf = []
-        for pdf in pdfs:
-            buf.extend(
-                [list(r) for r in pdf[value_cols].itertuples(index=False)]
-            )
-        out_frames = []
-        while len(buf) >= window_size:
-            window = buf[:window_size]
-            out = pd.DataFrame(window, columns=value_cols)
-            out.insert(0, "pos_in_window", range(window_size))
-            out.insert(0, "window_id", next_wid)
-            out.insert(0, key_col, key[0])
-            out_frames.append(out)
-            next_wid += 1
-            buf = buf[slide_size:]
-        cols = list(zip(*buf)) if buf else [[] for _ in value_cols]
-        state.update((next_wid, *[list(c) for c in cols]))
-        if out_frames:
-            yield from out_frames
-        else:
-            yield pd.DataFrame(columns=out_cols)
+    def step(st: tuple, row: dict) -> tuple:
+        next_wid, buf = st
+        buf.append([row[c] for c in value_cols])
+        if len(buf) < window_size:
+            return (next_wid, buf), []
+        rows = [(next_wid, i, *vals) for i, vals in enumerate(buf)]
+        return (next_wid + 1, buf[slide_size:]), rows
+
+    def dump(st: tuple) -> tuple:
+        next_wid, buf = st
+        cols = zip(*buf) if buf else [[] for _ in value_cols]
+        return (next_wid, *[list(c) for c in cols])
 
     import pyspark.sql.types as T
 
@@ -133,15 +201,15 @@ def sliding_count_window_stream(
             for f in value_fields
         ]
     )
-    return (
-        df.groupBy(key_col)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=output_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        df,
+        key_col,
+        init=(0, *[[] for _ in value_cols]),
+        step=step,
+        state_schema=state_schema,
+        out_schema=output_schema,
+        load=load,
+        dump=dump,
     )
 
 
@@ -173,6 +241,7 @@ def sliding_count_window_tws(
     container): the RocksDB state store provider and the google.protobuf
     package (pyspark's transformWithState state-server protocol).
     """
+    _check_slide(window_size, slide_size)
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,
@@ -263,49 +332,20 @@ def ewma_stream(
         f"{value_col} DOUBLE, ewma DOUBLE, n BIGINT"
     )
 
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            prev, n = state.get
-        else:
-            prev, n = None, 0
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if len(batch):
-            batch = batch.sort_values(ts_col, kind="stable")
-            ew = []
-            for v in batch[value_col]:
-                prev = (
-                    float(v)
-                    if prev is None
-                    else alpha * float(v) + (1.0 - alpha) * prev
-                )
-                n += 1
-                ew.append(prev)
-            out = pd.DataFrame(
-                {
-                    key_col: key[0],
-                    ts_col: batch[ts_col].values,
-                    value_col: batch[value_col].values,
-                    "ewma": ew,
-                    "n": range(n - len(ew) + 1, n + 1),
-                }
-            )
-            state.update((prev, n))
-            yield out
-        else:
-            yield pd.DataFrame(
-                columns=[key_col, ts_col, value_col, "ewma", "n"]
-            )
+    def step(st: tuple, row: dict) -> tuple:
+        prev, n = st
+        v = float(row[value_col])
+        prev = v if prev is None else alpha * v + (1.0 - alpha) * prev
+        return (prev, n + 1), [(row[ts_col], row[value_col], prev, n + 1)]
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="ewma DOUBLE, n BIGINT",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        df,
+        key_col,
+        init=(None, 0),
+        step=step,
+        state_schema="ewma DOUBLE, n BIGINT",
+        out_schema=out_schema,
+        sort_by=ts_col,
     )
 
 
@@ -334,54 +374,30 @@ def rolling_zscore_stream(
         " n BIGINT, zscore DOUBLE, is_anomaly BOOLEAN"
     )
 
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        buf: list[float] = list(state.get[0]) if state.exists else []
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if not len(batch):
-            yield pd.DataFrame(
-                columns=[
-                    key_col, ts_col, value_col, "n", "zscore", "is_anomaly"
-                ]
-            )
-            return
-        batch = batch.sort_values(ts_col, kind="stable")
-        ns, zs, flags = [], [], []
-        for v in batch[value_col]:
-            n = len(buf)
-            z = None
-            if n >= 5:
-                mean = sum(buf) / n
-                var = (sum(x * x for x in buf) - n * mean * mean) / (n - 1)
-                if var > 1e-9:
-                    z = (float(v) - mean) / var**0.5
-            ns.append(n)
-            zs.append(z)
-            flags.append(bool(z is not None and abs(z) > threshold))
-            buf.append(float(v))
-            if len(buf) > window:
-                buf = buf[-window:]
-        state.update((buf,))
-        yield pd.DataFrame(
-            {
-                key_col: key[0],
-                ts_col: batch[ts_col].values,
-                value_col: batch[value_col].values,
-                "n": ns,
-                "zscore": zs,
-                "is_anomaly": flags,
-            }
-        )
+    def step(st: tuple, row: dict) -> tuple:
+        (buf,) = st
+        v = row[value_col]
+        n = len(buf)
+        z = None
+        if n >= 5:
+            mean = sum(buf) / n
+            var = (sum(x * x for x in buf) - n * mean * mean) / (n - 1)
+            if var > 1e-9:
+                z = (float(v) - mean) / var**0.5
+        flag = bool(z is not None and abs(z) > threshold)
+        buf = [*buf, float(v)]
+        if len(buf) > window:
+            buf = buf[-window:]
+        return (buf,), [(row[ts_col], v, n, z, flag)]
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="buf ARRAY<DOUBLE>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        df,
+        key_col,
+        init=([],),
+        step=step,
+        state_schema="buf ARRAY<DOUBLE>",
+        out_schema=out_schema,
+        sort_by=ts_col,
     )
 
 
@@ -457,59 +473,26 @@ def counter_rate_stream(
         "increase DOUBLE, cum_increase DOUBLE"
     )
 
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            prev, cum = state.get
-        else:
-            prev, cum = None, 0.0
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if len(batch):
-            batch = batch.sort_values(ts_col, kind="stable")
-            incs, cums = [], []
-            for v in batch[value_col]:
-                v = float(v)
-                if prev is None:
-                    inc = 0.0
-                elif v >= prev:
-                    inc = v - prev
-                else:  # counter reset
-                    inc = v
-                prev = v
-                cum += inc
-                incs.append(inc)
-                cums.append(cum)
-            out = pd.DataFrame(
-                {
-                    key_col: key[0],
-                    ts_col: batch[ts_col].values,
-                    value_col: batch[value_col].values,
-                    "increase": incs,
-                    "cum_increase": cums,
-                }
-            )
-            state.update((prev, cum))
-            yield out
-        else:
-            yield pd.DataFrame(
-                columns=[
-                    key_col,
-                    ts_col,
-                    value_col,
-                    "increase",
-                    "cum_increase",
-                ]
-            )
+    def step(st: tuple, row: dict) -> tuple:
+        prev, cum = st
+        v = float(row[value_col])
+        if prev is None:
+            inc = 0.0
+        elif v >= prev:
+            inc = v - prev
+        else:  # counter reset
+            inc = v
+        cum += inc
+        return (v, cum), [(row[ts_col], row[value_col], inc, cum)]
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="last_value DOUBLE, cum_increase DOUBLE",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        df,
+        key_col,
+        init=(None, 0.0),
+        step=step,
+        state_schema="last_value DOUBLE, cum_increase DOUBLE",
+        out_schema=out_schema,
+        sort_by=ts_col,
     )
 
 def funnel_stream(
@@ -537,33 +520,20 @@ def funnel_stream(
     )
     idx = {s: i for i, s in enumerate(stages)}
 
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        reached = state.get[0] if state.exists else -1
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        out = {key_col: [], "stage_idx": [], "stage": [], ts_col: []}
-        if len(batch):
-            batch = batch.sort_values(ts_col, kind="stable")
-            for ts, typ in zip(batch[ts_col], batch[type_col]):
-                nxt = reached + 1
-                if nxt < len(stages) and idx.get(typ) == nxt:
-                    reached = nxt
-                    out[key_col].append(key[0])
-                    out["stage_idx"].append(nxt)
-                    out["stage"].append(stages[nxt])
-                    out[ts_col].append(ts)
-            state.update((reached,))
-        yield pd.DataFrame(out)
+    def step(st: tuple, row: dict) -> tuple:
+        nxt = st[0] + 1
+        if nxt < len(stages) and idx.get(row[type_col]) == nxt:
+            return (nxt,), [(nxt, stages[nxt], row[ts_col])]
+        return st, []
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="stage_idx INT",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        df,
+        key_col,
+        init=(-1,),
+        step=step,
+        state_schema="stage_idx INT",
+        out_schema=out_schema,
+        sort_by=ts_col,
     )
 
 
@@ -596,45 +566,40 @@ def cep_pattern_stream(
         "latency_s BIGINT"
     )
 
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        pending = state.get[0] if state.exists else None
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        starts, ends, lats = [], [], []
-        if len(batch):
-            batch = batch.sort_values(ts_col, kind="stable")
-            for ts, et in zip(batch[ts_col], batch[type_col]):
-                epoch = ts.timestamp()
-                if et == start_event:
-                    if pending is None:
-                        pending = epoch
-                elif et == end_event and pending is not None:
-                    lat = epoch - pending
-                    if lat <= within_s:
-                        starts.append(pending)
-                        ends.append(epoch)
-                        lats.append(int(lat))
-                    pending = None
-        state.update((pending,))
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]] * len(starts),
-                "start_ts": pd.to_datetime(starts, unit="s"),
-                "end_ts": pd.to_datetime(ends, unit="s"),
-                "latency_s": pd.Series(lats, dtype="int64"),
-            }
-        )
+    def step(st: tuple, row: dict) -> tuple:
+        (pending,) = st
+        epoch = row[ts_col].timestamp()
+        et = row[type_col]
+        if et == start_event:
+            return (epoch if pending is None else pending,), []
+        if et != end_event or pending is None:
+            return st, []
+        lat = epoch - pending
+        if lat > within_s:
+            return (None,), []
+        start_ts, end_ts = pd.to_datetime([pending, epoch], unit="s")
+        return (None,), [(start_ts, end_ts, int(lat))]
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="pending DOUBLE",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        df,
+        key_col,
+        init=(None,),
+        step=step,
+        state_schema="pending DOUBLE",
+        out_schema=out_schema,
+        sort_by=ts_col,
     )
+
+
+def _load_counts(st: tuple) -> tuple:
+    """Stored (keys, counts, n, version) -> ({key: count}, n, version)."""
+    keys, cnts, n, version = st
+    return dict(zip(map(int, keys), map(int, cnts))), int(n), int(version)
+
+
+def _dump_counts(st: tuple) -> tuple:
+    counts, n, version = st
+    return list(counts), list(counts.values()), n, version
 
 
 def heavy_hitters_stream(
@@ -664,68 +629,45 @@ def heavy_hitters_stream(
         "version BIGINT"
     )
 
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            keys, cnts, n, version = state.get
-            counters = dict(zip((int(x) for x in keys),
-                                (int(c) for c in cnts)))
-            n, version = int(n), int(version)
+    def step(st: tuple, row: dict) -> tuple:
+        counters, n, version = st
+        u = int(row[key_col])
+        if u in counters:
+            counters[u] += 1
+        elif len(counters) < k:
+            counters[u] = 1
         else:
-            counters, n, version = {}, 0, 0
-        for pdf in pdfs:
-            for u in pdf[key_col]:
-                u = int(u)
-                n += 1
-                if u in counters:
-                    counters[u] += 1
-                elif len(counters) < k:
-                    counters[u] = 1
-                else:
-                    dead = []
-                    for kk in counters:
-                        counters[kk] -= 1
-                        if counters[kk] == 0:
-                            dead.append(kk)
-                    for kk in dead:
-                        del counters[kk]
+            for kk in list(counters):
+                counters[kk] -= 1
+                if counters[kk] == 0:
+                    del counters[kk]
+        return (counters, n + 1, version), []
+
+    def finish(st: tuple) -> tuple:
+        counters, n, version = st
         version += 1
-        state.update(
-            (list(counters), list(counters.values()), n, version)
-        )
         # a Misra-Gries summary can legitimately end EMPTY (every counter
         # decremented away); emit a null-key sentinel so downstream still
         # sees this shard's latest (n, version) instead of a stale one
-        width = max(len(counters), 1)
-        yield pd.DataFrame(
-            {
-                "shard": pd.Series([key[0]] * width, dtype="int32"),
-                key_col: pd.array(
-                    list(counters) or [None], dtype="Int64"
-                ),
-                "est": pd.array(
-                    list(counters.values()) or [None], dtype="Int64"
-                ),
-                "n": pd.Series([n] * width, dtype="int64"),
-                "version": pd.Series([version] * width, dtype="int64"),
-            }
-        )
+        rows = [(u, c, n, version) for u, c in counters.items()]
+        return (counters, n, version), rows or [(None, None, n, version)]
 
     sharded = df.withColumn(
         "shard", F.pmod(F.col(key_col), F.lit(n_shards)).cast("int")
     )
-    return sharded.groupBy("shard").applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=(
+    return _keyed_fold(
+        sharded,
+        "shard",
+        init=([], [], 0, 0),
+        step=step,
+        state_schema=(
             "keys ARRAY<BIGINT>, cnts ARRAY<BIGINT>, n BIGINT, "
             "version BIGINT"
         ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema=out_schema,
+        load=_load_counts,
+        dump=_dump_counts,
+        finish=finish,
     )
 
 
@@ -758,31 +700,19 @@ def ddsketch_stream(
     )
     lg = math.log(gamma)
 
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            bks, cnts, n, version = state.get
-            hist = dict(zip((int(b) for b in bks),
-                            (int(c) for c in cnts)))
-            n, version = int(n), int(version)
-        else:
-            hist, n, version = {}, 0, 0
-        for pdf in pdfs:
-            for v in pdf[value_col]:
-                v = float(v)
-                if v <= 0.0:
-                    continue
-                b = math.ceil(math.log(v) / lg)
-                hist[b] = hist.get(b, 0) + 1
-                n += 1
+    def step(st: tuple, row: dict) -> tuple:
+        hist, n, version = st
+        v = float(row[value_col])
+        if v <= 0.0:
+            return st, []
+        b = math.ceil(math.log(v) / lg)
+        hist[b] = hist.get(b, 0) + 1
+        return (hist, n + 1, version), []
+
+    def finish(st: tuple) -> tuple:
+        hist, n, version = st
         version += 1
-        state.update(
-            (list(hist), list(hist.values()), n, version)
-        )
-        ests = []
+        rows = []
         if n:
             items = sorted(hist.items())
             for q in qs:
@@ -791,31 +721,24 @@ def ddsketch_stream(
                 for b, c in items:
                     cum += c
                     if cum >= target:
-                        ests.append(
-                            (q, 2.0 * gamma**b / (gamma + 1.0))
-                        )
+                        est = 2.0 * gamma**b / (gamma + 1.0)
+                        rows.append((q, est, n, version))
                         break
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]] * len(ests),
-                "q": pd.Series([q for q, _ in ests], dtype="float64"),
-                "est": pd.Series([e for _, e in ests], dtype="float64"),
-                "n": pd.Series([n] * len(ests), dtype="int64"),
-                "version": pd.Series(
-                    [version] * len(ests), dtype="int64"
-                ),
-            }
-        )
+        return (hist, n, version), rows
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=(
+    return _keyed_fold(
+        df,
+        key_col,
+        init=([], [], 0, 0),
+        step=step,
+        state_schema=(
             "buckets ARRAY<BIGINT>, counts ARRAY<BIGINT>, n BIGINT, "
             "version BIGINT"
         ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema=out_schema,
+        load=_load_counts,
+        dump=_dump_counts,
+        finish=finish,
     )
 
 
@@ -847,46 +770,24 @@ def burst_hysteresis_stream(
         "burst BOOLEAN, burst_start BOOLEAN"
     )
 
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        st = int(state.get[0]) if state.exists else 0
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if len(batch):
-            batch = batch.sort_values(ts_col, kind="stable")
-            burst, start = [], []
-            for v in batch[value_col]:
-                prev = st
-                v = float(v)
-                if v > enter_above:
-                    st = 1
-                elif v < exit_below:
-                    st = 0
-                burst.append(bool(st))
-                start.append(bool(st and not prev))
-            yield pd.DataFrame(
-                {
-                    key_col: key[0],
-                    ts_col: batch[ts_col].values,
-                    value_col: batch[value_col].values,
-                    "burst": pd.Series(burst, dtype="bool"),
-                    "burst_start": pd.Series(start, dtype="bool"),
-                }
-            )
-        else:
-            yield pd.DataFrame(
-                columns=[key_col, ts_col, value_col, "burst", "burst_start"]
-            )
-        state.update((st,))
+    def step(st: tuple, row: dict) -> tuple:
+        prev = cur = int(st[0])
+        v = float(row[value_col])
+        if v > enter_above:
+            cur = 1
+        elif v < exit_below:
+            cur = 0
+        burst, start = bool(cur), bool(cur and not prev)
+        return (cur,), [(row[ts_col], row[value_col], burst, start)]
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="burst INT",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        df,
+        key_col,
+        init=(0,),
+        step=step,
+        state_schema="burst INT",
+        out_schema=out_schema,
+        sort_by=ts_col,
     )
 
 
@@ -920,40 +821,25 @@ def uniform_sample_stream(
         "n_seen BIGINT, version BIGINT"
     )
 
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            prios, ids, n_seen, version = state.get
-            pool = list(zip(list(prios), (int(i) for i in ids)))
-            n_seen, version = int(n_seen), int(version)
-        else:
-            pool, n_seen, version = [], 0, 0
-        for pdf in pdfs:
-            n_seen += len(pdf)
-            pool.extend(zip(pdf["priority"], (int(i) for i in pdf[id_col])))
-        pool.sort()
-        pool = pool[:k]
+    def load(st: tuple) -> tuple:
+        prios, ids, n_seen, version = st
+        return list(zip(prios, map(int, ids))), int(n_seen), int(version)
+
+    def step(st: tuple, row: dict) -> tuple:
+        pool, n_seen, version = st
+        pool.append((row["priority"], int(row[id_col])))
+        return (pool, n_seen + 1, version), []
+
+    def finish(st: tuple) -> tuple:
+        pool, n_seen, version = st
+        pool = sorted(pool)[:k]
         version += 1
-        state.update(
-            ([p for p, _ in pool], [i for _, i in pool], n_seen, version)
-        )
-        width = max(len(pool), 1)
-        yield pd.DataFrame(
-            {
-                "shard": pd.Series([key[0]] * width, dtype="int32"),
-                "priority": pd.Series(
-                    [p for p, _ in pool] or [None], dtype="object"
-                ),
-                id_col: pd.array(
-                    [i for _, i in pool] or [None], dtype="Int64"
-                ),
-                "n_seen": pd.Series([n_seen] * width, dtype="int64"),
-                "version": pd.Series([version] * width, dtype="int64"),
-            }
-        )
+        rows = [(p, i, n_seen, version) for p, i in pool]
+        return (pool, n_seen, version), rows or [(None, None, n_seen, version)]
+
+    def dump(st: tuple) -> tuple:
+        pool, n_seen, version = st
+        return [p for p, _ in pool], [i for _, i in pool], n_seen, version
 
     sharded = df.select(
         F.pmod(F.col(id_col), F.lit(n_shards)).cast("int").alias("shard"),
@@ -962,15 +848,19 @@ def uniform_sample_stream(
         ),
         id_col,
     )
-    return sharded.groupBy("shard").applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=(
+    return _keyed_fold(
+        sharded,
+        "shard",
+        init=([], [], 0, 0),
+        step=step,
+        state_schema=(
             f"prios ARRAY<STRING>, ids ARRAY<BIGINT>, n_seen BIGINT, "
             "version BIGINT"
         ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema=out_schema,
+        load=load,
+        dump=dump,
+        finish=finish,
     )
 
 
@@ -1007,75 +897,38 @@ def xmr_limits_stream(
         "out_of_control BOOLEAN, n BIGINT"
     )
 
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            n, sum_x, sum_mr, n_mr, last, n_out = state.get
+    def step(st: tuple, row: dict) -> tuple:
+        n, sum_x, sum_mr, n_mr, last, n_out = st
+        x = float(row[value_col])
+        # limits from PRIOR data only (need >= 2 points for MRbar)
+        if n >= 2 and n_mr >= 1:
+            xbar = sum_x / n
+            mrbar = sum_mr / n_mr
+            ucl = xbar + k * mrbar
+            lcl = xbar - k * mrbar
+            out = bool(x > ucl or x < lcl)
         else:
-            n, sum_x, sum_mr, n_mr, last, n_out = 0, 0.0, 0.0, 0, None, 0
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if not len(batch):
-            yield pd.DataFrame(
-                columns=[
-                    key_col, ts_col, value_col,
-                    "xbar", "mrbar", "ucl", "lcl", "out_of_control", "n",
-                ]
-            )
-            return
-        batch = batch.sort_values(ts_col, kind="stable")
-        xbars, mrbars, ucls, lcls, flags, ns = [], [], [], [], [], []
-        for v in batch[value_col]:
-            x = float(v)
-            # limits from PRIOR data only (need >= 2 points for MRbar)
-            if n >= 2 and n_mr >= 1:
-                xbar = sum_x / n
-                mrbar = sum_mr / n_mr
-                ucl = xbar + k * mrbar
-                lcl = xbar - k * mrbar
-                out = bool(x > ucl or x < lcl)
-            else:
-                xbar = mrbar = ucl = lcl = None
-                out = False
-            if last is not None:
-                sum_mr += abs(x - last)
-                n_mr += 1
-            sum_x += x
-            n += 1
-            last = x
-            n_out += int(out)
-            xbars.append(xbar)
-            mrbars.append(mrbar)
-            ucls.append(ucl)
-            lcls.append(lcl)
-            flags.append(out)
-            ns.append(n)
-        state.update((n, sum_x, sum_mr, n_mr, last, n_out))
-        yield pd.DataFrame(
-            {
-                key_col: key[0],
-                ts_col: batch[ts_col].values,
-                value_col: batch[value_col].values,
-                "xbar": pd.Series(xbars, dtype="float64"),
-                "mrbar": pd.Series(mrbars, dtype="float64"),
-                "ucl": pd.Series(ucls, dtype="float64"),
-                "lcl": pd.Series(lcls, dtype="float64"),
-                "out_of_control": flags,
-                "n": ns,
-            }
-        )
+            xbar = mrbar = ucl = lcl = None
+            out = False
+        if last is not None:
+            sum_mr += abs(x - last)
+            n_mr += 1
+        n += 1
+        st = (n, sum_x + x, sum_mr, n_mr, x, n_out + int(out))
+        row_out = (row[ts_col], row[value_col], xbar, mrbar, ucl, lcl, out, n)
+        return st, [row_out]
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=(
+    return _keyed_fold(
+        df,
+        key_col,
+        init=(0, 0.0, 0.0, 0, None, 0),
+        step=step,
+        state_schema=(
             "n BIGINT, sum_x DOUBLE, sum_mr DOUBLE, n_mr BIGINT, "
             "last DOUBLE, n_out BIGINT"
         ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema=out_schema,
+        sort_by=ts_col,
     )
 
 
@@ -1117,63 +970,31 @@ def page_hinkley_stream(
         "m DOUBLE, ph_stat DOUBLE, alarm BOOLEAN, n BIGINT"
     )
 
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            n, sum_x, m, extreme, n_alarms = state.get
-        else:
-            n, sum_x, m, extreme, n_alarms = 0, 0.0, 0.0, 0.0, 0
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if not len(batch):
-            yield pd.DataFrame(
-                columns=[
-                    key_col, ts_col, value_col,
-                    "m", "ph_stat", "alarm", "n",
-                ]
-            )
-            return
-        batch = batch.sort_values(ts_col, kind="stable")
-        ms, stats, alarms, ns = [], [], [], []
-        for v in batch[value_col]:
-            x = round(float(v), 6)  # pre-quantize: restart-exact sums
-            sum_x += x
-            n += 1
-            mean = sum_x / n
-            dev = (x - mean - delta) if inc else (x - mean + delta)
-            m = round(m + dev, 9)
-            extreme = min(extreme, m) if inc else max(extreme, m)
-            stat = (m - extreme) if inc else (extreme - m)
-            alarm = bool(stat > lam)
-            n_alarms += int(alarm)
-            ms.append(m)
-            stats.append(stat)
-            alarms.append(alarm)
-            ns.append(n)
-        state.update((n, sum_x, m, extreme, n_alarms))
-        yield pd.DataFrame(
-            {
-                key_col: key[0],
-                ts_col: batch[ts_col].values,
-                value_col: batch[value_col].values,
-                "m": pd.Series(ms, dtype="float64"),
-                "ph_stat": pd.Series(stats, dtype="float64"),
-                "alarm": alarms,
-                "n": ns,
-            }
-        )
+    def step(st: tuple, row: dict) -> tuple:
+        n, sum_x, m, extreme, n_alarms = st
+        x = round(float(row[value_col]), 6)  # pre-quantize: restart-exact sums
+        sum_x += x
+        n += 1
+        mean = sum_x / n
+        dev = (x - mean - delta) if inc else (x - mean + delta)
+        m = round(m + dev, 9)
+        extreme = min(extreme, m) if inc else max(extreme, m)
+        stat = (m - extreme) if inc else (extreme - m)
+        alarm = bool(stat > lam)
+        st = (n, sum_x, m, extreme, n_alarms + int(alarm))
+        return st, [(row[ts_col], row[value_col], m, stat, alarm, n)]
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=(
+    return _keyed_fold(
+        df,
+        key_col,
+        init=(0, 0.0, 0.0, 0.0, 0),
+        step=step,
+        state_schema=(
             "n BIGINT, sum_x DOUBLE, m DOUBLE, extreme DOUBLE, "
             "n_alarms BIGINT"
         ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema=out_schema,
+        sort_by=ts_col,
     )
 
 
@@ -1287,49 +1108,25 @@ def p2_quantile_stream(
         "estimate DOUBLE, n BIGINT"
     )
 
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            flat = state.get
-            st = (flat[0], tuple(flat[1:6]), tuple(flat[6:11]))
-        else:
-            st = (0, (0.0,) * 5, (0, 0, 0, 0, 0))
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if not len(batch):
-            yield pd.DataFrame(
-                columns=[key_col, ts_col, value_col, "estimate", "n"]
-            )
-            return
-        batch = batch.sort_values(ts_col, kind="stable")
-        ests, ns = [], []
-        for v in batch[value_col]:
-            st = p2_fold_value(st, v, p)
-            ests.append(p2_estimate(st))
-            ns.append(st[0])
-        state.update((st[0], *st[1], *st[2]))
-        yield pd.DataFrame(
-            {
-                key_col: key[0],
-                ts_col: batch[ts_col].values,
-                value_col: batch[value_col].values,
-                "estimate": pd.Series(ests, dtype="float64"),
-                "n": ns,
-            }
-        )
+    def step(st: tuple, row: dict) -> tuple:
+        v = row[value_col]
+        st = p2_fold_value(st, v, p)
+        return st, [(row[ts_col], v, p2_estimate(st), st[0])]
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=(
+    return _keyed_fold(
+        df,
+        key_col,
+        init=(0, *(0.0,) * 5, *(0,) * 5),
+        step=step,
+        state_schema=(
             "n BIGINT, q1 DOUBLE, q2 DOUBLE, q3 DOUBLE, q4 DOUBLE, "
             "q5 DOUBLE, p1 BIGINT, p2 BIGINT, p3 BIGINT, p4 BIGINT, "
             "p5 BIGINT"
         ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema=out_schema,
+        sort_by=ts_col,
+        load=lambda flat: (flat[0], tuple(flat[1:6]), tuple(flat[6:11])),
+        dump=lambda st: (st[0], *st[1], *st[2]),
     )
 
 
@@ -1361,54 +1158,28 @@ def rate_limit_stream(
         "accepted BOOLEAN, in_window BIGINT, n_dropped BIGINT"
     )
 
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            (log_csv, n_dropped) = state.get
-            log = [int(x) for x in log_csv.split(",") if x]
+    def step(st: tuple, row: dict) -> tuple:
+        log, n_dropped = st
+        ts = row[ts_col]
+        sec = int(pd.Timestamp(ts).value // 1_000_000_000)
+        log = [t for t in log if t > sec - window_s]
+        ok = len(log) < limit
+        if ok:
+            log.append(sec)
         else:
-            log, n_dropped = [], 0
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if not len(batch):
-            yield pd.DataFrame(
-                columns=[
-                    key_col, ts_col, "accepted", "in_window", "n_dropped",
-                ]
-            )
-            return
-        batch = batch.sort_values(ts_col, kind="stable")
-        acc, inw, drops = [], [], []
-        for ts in batch[ts_col]:
-            sec = int(pd.Timestamp(ts).value // 1_000_000_000)
-            log = [t for t in log if t > sec - window_s]
-            ok = len(log) < limit
-            if ok:
-                log.append(sec)
-            else:
-                n_dropped += 1
-            acc.append(ok)
-            inw.append(len(log))
-            drops.append(n_dropped)
-        state.update((",".join(str(t) for t in log), n_dropped))
-        yield pd.DataFrame(
-            {
-                key_col: key[0],
-                ts_col: batch[ts_col].values,
-                "accepted": acc,
-                "in_window": inw,
-                "n_dropped": drops,
-            }
-        )
+            n_dropped += 1
+        return (log, n_dropped), [(ts, ok, len(log), n_dropped)]
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="log_csv STRING, n_dropped BIGINT",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        df,
+        key_col,
+        init=("", 0),
+        step=step,
+        state_schema="log_csv STRING, n_dropped BIGINT",
+        out_schema=out_schema,
+        sort_by=ts_col,
+        load=lambda st: ([int(x) for x in st[0].split(",") if x], st[1]),
+        dump=lambda st: (",".join(str(t) for t in st[0]), st[1]),
     )
 
 
@@ -1446,58 +1217,26 @@ def cusum_stream(
         "s_hi DOUBLE, s_lo DOUBLE, alarm BOOLEAN, n BIGINT"
     )
 
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            s_hi, s_lo, n, n_alarms = state.get
-        else:
-            s_hi, s_lo, n, n_alarms = 0.0, 0.0, 0, 0
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if not len(batch):
-            yield pd.DataFrame(
-                columns=[
-                    key_col, ts_col, value_col,
-                    "s_hi", "s_lo", "alarm", "n",
-                ]
-            )
-            return
-        batch = batch.sort_values(ts_col, kind="stable")
-        his, los, alarms, ns = [], [], [], []
-        for v in batch[value_col]:
-            x = round(float(v), 6)  # pre-quantize: restart-exact sums
-            s_hi = round(max(0.0, s_hi + (x - target - slack)), 9)
-            s_lo = round(max(0.0, s_lo + (target - x - slack)), 9)
-            n += 1
-            alarm = bool(s_hi > h or s_lo > h)
-            n_alarms += int(alarm)
-            his.append(s_hi)
-            los.append(s_lo)
-            alarms.append(alarm)
-            ns.append(n)
-        state.update((s_hi, s_lo, n, n_alarms))
-        yield pd.DataFrame(
-            {
-                key_col: key[0],
-                ts_col: batch[ts_col].values,
-                value_col: batch[value_col].values,
-                "s_hi": pd.Series(his, dtype="float64"),
-                "s_lo": pd.Series(los, dtype="float64"),
-                "alarm": alarms,
-                "n": ns,
-            }
-        )
+    def step(st: tuple, row: dict) -> tuple:
+        s_hi, s_lo, n, n_alarms = st
+        x = round(float(row[value_col]), 6)  # pre-quantize: restart-exact sums
+        s_hi = round(max(0.0, s_hi + (x - target - slack)), 9)
+        s_lo = round(max(0.0, s_lo + (target - x - slack)), 9)
+        n += 1
+        alarm = bool(s_hi > h or s_lo > h)
+        st = (s_hi, s_lo, n, n_alarms + int(alarm))
+        return st, [(row[ts_col], row[value_col], s_hi, s_lo, alarm, n)]
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=(
+    return _keyed_fold(
+        df,
+        key_col,
+        init=(0.0, 0.0, 0, 0),
+        step=step,
+        state_schema=(
             "s_hi DOUBLE, s_lo DOUBLE, n BIGINT, n_alarms BIGINT"
         ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema=out_schema,
+        sort_by=ts_col,
     )
 
 
@@ -1520,6 +1259,15 @@ def _bloom_positions(fp: str) -> list[int]:
     ]
 
 
+def _load_bits(st: tuple) -> tuple:
+    """Stored (BINARY, *rest) -> (mutable bytearray, *rest)."""
+    return (bytearray(st[0]), *st[1:])
+
+
+def _dump_bits(st: tuple) -> tuple:
+    return (bytes(st[0]), *st[1:])
+
+
 def bloom_dedup_stream(
     df: DataFrame,
     key_col: str,
@@ -1527,7 +1275,7 @@ def bloom_dedup_stream(
     fp_col: str,
 ) -> DataFrame:
     """Streaming approximate dedup with BOUNDED state: a per-key Bloom
-    filter (m={m} bits, k={k} hashes from one md5) tests-and-inserts
+    filter (m=8192 bits, k=4 hashes from one md5) tests-and-inserts
     each arriving fingerprint. `dedup_incremental`'s ledger is exact
     but grows with distinct keys; the Bloom twin caps state at m/8
     bytes per key forever, trading a quantifiable false-positive rate
@@ -1536,72 +1284,40 @@ def bloom_dedup_stream(
 
     State per key: (filter bytes, bits_set, n_seen, n_dup_flagged) —
     O(m) forever, restart-exact (bit operations are integer-exact).
-    """.format(m=_BLOOM_M_BITS, k=_BLOOM_K)
+    """
     out_schema = (
         f"{key_col} STRING, {ts_col} TIMESTAMP, {fp_col} STRING, "
         "dup_probable BOOLEAN, bits_set BIGINT, fp_rate DOUBLE, n BIGINT"
     )
 
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            buf, bits_set, n_seen, n_dup = state.get
-            arr = bytearray(buf)
-        else:
-            arr = bytearray(_BLOOM_M_BITS // 8)
-            bits_set, n_seen, n_dup = 0, 0, 0
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if not len(batch):
-            yield pd.DataFrame(
-                columns=[
-                    key_col, ts_col, fp_col,
-                    "dup_probable", "bits_set", "fp_rate", "n",
-                ]
-            )
-            return
-        batch = batch.sort_values(ts_col, kind="stable")
-        dups, setss, rates, ns = [], [], [], []
-        for fp in batch[fp_col]:
-            pos = _bloom_positions(str(fp))
-            hit = all(arr[p >> 3] & (1 << (p & 7)) for p in pos)
-            if not hit:
-                for p in pos:
-                    if not arr[p >> 3] & (1 << (p & 7)):
-                        arr[p >> 3] |= 1 << (p & 7)
-                        bits_set += 1
-            n_seen += 1
-            n_dup += int(hit)
-            dups.append(bool(hit))
-            setss.append(bits_set)
-            rates.append(
-                round((bits_set / _BLOOM_M_BITS) ** _BLOOM_K, 9)
-            )
-            ns.append(n_seen)
-        state.update((bytes(arr), bits_set, n_seen, n_dup))
-        yield pd.DataFrame(
-            {
-                key_col: key[0],
-                ts_col: batch[ts_col].values,
-                fp_col: batch[fp_col].values,
-                "dup_probable": dups,
-                "bits_set": setss,
-                "fp_rate": pd.Series(rates, dtype="float64"),
-                "n": ns,
-            }
-        )
+    def step(st: tuple, row: dict) -> tuple:
+        arr, bits_set, n_seen, n_dup = st
+        fp = row[fp_col]
+        pos = _bloom_positions(str(fp))
+        hit = all(arr[p >> 3] & (1 << (p & 7)) for p in pos)
+        if not hit:
+            for p in pos:
+                if not arr[p >> 3] & (1 << (p & 7)):
+                    arr[p >> 3] |= 1 << (p & 7)
+                    bits_set += 1
+        n_seen += 1
+        rate = round((bits_set / _BLOOM_M_BITS) ** _BLOOM_K, 9)
+        st = (arr, bits_set, n_seen, n_dup + int(hit))
+        return st, [(row[ts_col], fp, bool(hit), bits_set, rate, n_seen)]
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=(
+    return _keyed_fold(
+        df,
+        key_col,
+        init=(bytes(_BLOOM_M_BITS // 8), 0, 0, 0),
+        step=step,
+        state_schema=(
             "filter BINARY, bits_set BIGINT, n_seen BIGINT, "
             "n_dup BIGINT"
         ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema=out_schema,
+        sort_by=ts_col,
+        load=_load_bits,
+        dump=_dump_bits,
     )
 
 
@@ -1648,60 +1364,36 @@ def hll_cardinality_stream(
 ) -> DataFrame:
     """Streaming HyperLogLog distinct count per key: the online twin of
     the batch `agg_approx_distinct` sketch family. Each arriving item
-    folds into 2^{p} one-byte registers; every row emits the running
+    folds into 2^10 one-byte registers; every row emits the running
     estimate. Exact distinct counting needs state proportional to the
-    distinct set; HLL holds {m} bytes per key FOREVER with ~1.6%
+    distinct set; HLL holds 1024 bytes per key FOREVER with ~1.6%
     standard error at this width — the only viable shape for per-key
     cardinality over unbounded streams.
 
     State per key: (registers BINARY, n_seen) — O(1), restart-exact
     (register maxima are integer-exact under any replay order).
-    """.format(p=_HLL_P, m=1 << _HLL_P)
+    """
     out_schema = (
         f"{key_col} STRING, {ts_col} TIMESTAMP, "
         "estimate DOUBLE, n_seen BIGINT"
     )
 
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            buf, n_seen = state.get
-            regs = bytearray(buf)
-        else:
-            regs = bytearray(1 << _HLL_P)
-            n_seen = 0
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if not len(batch):
-            yield pd.DataFrame(
-                columns=[key_col, ts_col, "estimate", "n_seen"]
-            )
-            return
-        batch = batch.sort_values(ts_col, kind="stable")
-        ests, ns = [], []
-        for item in batch[item_col]:
-            hll_fold_item(regs, item)
-            n_seen += 1
-            ests.append(round(hll_estimate(bytes(regs)), 4))
-            ns.append(n_seen)
-        state.update((bytes(regs), n_seen))
-        yield pd.DataFrame(
-            {
-                key_col: key[0],
-                ts_col: batch[ts_col].values,
-                "estimate": pd.Series(ests, dtype="float64"),
-                "n_seen": ns,
-            }
-        )
+    def step(st: tuple, row: dict) -> tuple:
+        regs, n_seen = st
+        hll_fold_item(regs, row[item_col])
+        est = round(hll_estimate(regs), 4)
+        return (regs, n_seen + 1), [(row[ts_col], est, n_seen + 1)]
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="registers BINARY, n_seen BIGINT",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        df,
+        key_col,
+        init=(bytes(1 << _HLL_P), 0),
+        step=step,
+        state_schema="registers BINARY, n_seen BIGINT",
+        out_schema=out_schema,
+        sort_by=ts_col,
+        load=_load_bits,
+        dump=_dump_bits,
     )
 
 
@@ -1766,86 +1458,38 @@ def capped_sessions_stream(
         "session_id BIGINT, session_start TIMESTAMP, is_late BOOLEAN"
     )
 
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            sid, start_ns, prev_ns = state.get
-        else:
-            sid, start_ns, prev_ns = 0, None, None
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if not len(batch):
-            yield pd.DataFrame(
-                columns=[
-                    key_col, ts_col, id_col,
-                    "session_id", "session_start", "is_late",
-                ]
-            )
-            return
-        batch = batch.sort_values(
-            [ts_col, id_col], kind="stable"
-        ).reset_index(drop=True)
-        sids, starts, lates, keep = [], [], [], []
-        for idx, ts in enumerate(batch[ts_col]):
-            ns = ts.value
-            # lateness is cross-batch only: the batch is sorted, so a
-            # late row can only regress vs the SAVED clock, and late
-            # rows form a prefix of the sorted batch
-            late = prev_ns is not None and ns < prev_ns
-            if late and late_policy == "drop":
-                continue
-            if late and late_policy == "flag":
-                sids.append(sid)
-                starts.append(pd.Timestamp(start_ns))
-                lates.append(True)
-                keep.append(idx)
-                continue
-            if (
-                prev_ns is None
-                or ns - prev_ns > gap_ns
-                or ns - start_ns > cap_ns
-            ):
-                sid += 1
-                start_ns = ns
-            sids.append(sid)
-            starts.append(pd.Timestamp(start_ns))
-            lates.append(False)
-            keep.append(idx)
-            prev_ns = ns
-        if prev_ns is not None:
-            state.update((int(sid), int(start_ns), int(prev_ns)))
-        if not keep:
-            yield pd.DataFrame(
-                columns=[
-                    key_col, ts_col, id_col,
-                    "session_id", "session_start", "is_late",
-                ]
-            )
-            return
-        kept = batch.iloc[keep]
-        yield pd.DataFrame(
-            {
-                key_col: key[0],
-                ts_col: kept[ts_col].values,
-                id_col: kept[id_col].values,
-                "session_id": pd.Series(sids, dtype="int64"),
-                "session_start": pd.Series(
-                    starts, dtype="datetime64[ns]"
-                ),
-                "is_late": pd.Series(lates, dtype="bool"),
-            }
-        )
+    def step(st: tuple, row: dict) -> tuple:
+        sid, start_ns, prev_ns = st
+        ts = row[ts_col]
+        ns = ts.value
+        # lateness is cross-batch only: the batch is sorted, so a
+        # late row can only regress vs the SAVED clock, and late
+        # rows form a prefix of the sorted batch
+        late = prev_ns is not None and ns < prev_ns
+        if late and late_policy == "drop":
+            return st, []
+        if late and late_policy == "flag":
+            return st, [(ts, row[id_col], sid, pd.Timestamp(start_ns), True)]
+        if (
+            prev_ns is None
+            or ns - prev_ns > gap_ns
+            or ns - start_ns > cap_ns
+        ):
+            sid += 1
+            start_ns = ns
+        row_out = (ts, row[id_col], sid, pd.Timestamp(start_ns), False)
+        return (sid, start_ns, ns), [row_out]
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=(
+    return _keyed_fold(
+        df,
+        key_col,
+        init=(0, None, None),
+        step=step,
+        state_schema=(
             "session_id BIGINT, start_ns BIGINT, prev_ns BIGINT"
         ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema=out_schema,
+        sort_by=[ts_col, id_col],
     )
 
 
@@ -1883,56 +1527,27 @@ def growth_accounting_stream(
     """
     out_schema = f"{user_col} BIGINT, day DATE, status STRING"
 
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterable[pd.DataFrame]:
-        first_day, last_day = state.get if state.exists else (None, None)
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if not len(batch):
-            yield pd.DataFrame(columns=[user_col, "day", "status"])
-            return
-        days = sorted(
-            {
-                int(ts.normalize().value // 86_400_000_000_000)
-                for ts in batch[ts_col]
-            }
-        )
-        out_days, statuses = [], []
-        for d in days:
-            if last_day is not None and d <= last_day:
-                continue  # emitted already or late — nothing new
-            if first_day is None:
-                status = "new"
-                first_day = d
-            elif d == last_day + 1:
-                status = "retained"
-            else:
-                status = "resurrected"
-            last_day = d
-            out_days.append(d)
-            statuses.append(status)
-        if first_day is not None:
-            state.update((int(first_day), int(last_day)))
-        if not out_days:
-            yield pd.DataFrame(columns=[user_col, "day", "status"])
-            return
-        yield pd.DataFrame(
-            {
-                user_col: key[0],
-                "day": [
-                    pd.Timestamp(d * 86_400_000_000_000).date()
-                    for d in out_days
-                ],
-                "status": statuses,
-            }
-        )
+    def step(st: tuple, row: dict) -> tuple:
+        first_day, last_day = st
+        d = int(row[ts_col].normalize().value // 86_400_000_000_000)
+        if last_day is not None and d <= last_day:
+            return st, []  # emitted already or late — nothing new
+        if first_day is None:
+            status = "new"
+            first_day = d
+        elif d == last_day + 1:
+            status = "retained"
+        else:
+            status = "resurrected"
+        day = pd.Timestamp(d * 86_400_000_000_000).date()
+        return (first_day, d), [(day, status)]
 
-    return df.groupBy(user_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="first_day BIGINT, last_day BIGINT",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        df,
+        user_col,
+        init=(None, None),
+        step=step,
+        state_schema="first_day BIGINT, last_day BIGINT",
+        out_schema=out_schema,
+        sort_by=ts_col,
     )

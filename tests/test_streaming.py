@@ -3,9 +3,12 @@ with processAllAvailable (file-stream sources for determinism)."""
 
 from __future__ import annotations
 
+import copy
+import hashlib
 import json
 import textwrap
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -460,7 +463,6 @@ def test_checkpoint_restart_resumes_offsets_exactly_once(spark, tmp_path):
     assert offsets == [0, 1, 2, 3, 4]
 
 
-@pytest.mark.slow  # r9: >=10s multi-batch/restart run — ARKFLOW_FULL_TESTS=1
 def test_stream_ewma_exact_recurrence_across_batches(spark, tmp_path):
     """The streaming EWMA must carry its accumulator across micro-batches:
     two file drops, one query restart boundary per drop, final values equal
@@ -510,7 +512,6 @@ def test_stream_ewma_exact_recurrence_across_batches(spark, tmp_path):
     assert len(got) == 10
 
 
-@pytest.mark.slow  # r9: >=10s multi-batch/restart run — ARKFLOW_FULL_TESTS=1
 def test_stream_rolling_zscore_state_across_batches(spark, tmp_path):
     """Streaming z-score must score against the previous-window state,
     carrying the ring buffer across micro-batches and checkpoint restarts;
@@ -572,7 +573,6 @@ def test_stream_rolling_zscore_state_across_batches(spark, tmp_path):
     assert by_id[6]["zscore"] == pytest.approx(want)
 
 
-@pytest.mark.slow  # r9: >=10s multi-batch/restart run — ARKFLOW_FULL_TESTS=1
 def test_stream_windowed_topk_append_mode(spark, tmp_path):
     """Streaming windowed top-N: append-mode finalization emits each
     window's surviving keys together, so per-batch ranking equals the
@@ -639,7 +639,6 @@ def test_stream_windowed_topk_append_mode(spark, tmp_path):
     assert all(not ws.startswith("2024-01-01 00:30") for ws, _ in got)
 
 
-@pytest.mark.slow  # r9: >=10s multi-batch/restart run — ARKFLOW_FULL_TESTS=1
 def test_stream_counter_rate_resets_across_batches(spark, tmp_path):
     """Streaming counter increase must carry last_value/cum across
     micro-batches and count a mid-stream counter reset as the post-reset
@@ -698,7 +697,6 @@ def test_stream_counter_rate_resets_across_batches(spark, tmp_path):
     assert got == want
 
 
-@pytest.mark.slow  # r9: >=10s multi-batch/restart run — ARKFLOW_FULL_TESTS=1
 def test_stream_funnel_progression_across_batches(spark, tmp_path):
     """Streaming funnel must carry the furthest-stage state across
     micro-batches: a user who viewed in batch 1 converts on the click +
@@ -756,7 +754,6 @@ def test_stream_funnel_progression_across_batches(spark, tmp_path):
     ]
 
 
-@pytest.mark.slow  # r9: >=10s multi-batch/restart run — ARKFLOW_FULL_TESTS=1
 def test_stream_cep_pattern_within_horizon_across_batches(spark, tmp_path):
     """The CEP detector must arm on the first unmatched start event, carry
     the pending state across a checkpoint restart, emit only end events
@@ -814,7 +811,6 @@ def test_stream_cep_pattern_within_horizon_across_batches(spark, tmp_path):
     ]
 
 
-@pytest.mark.slow  # r9: >=10s multi-batch/restart run — ARKFLOW_FULL_TESTS=1
 def test_stream_heavy_hitters_bound_across_restarts(spark, tmp_path):
     """The streaming Misra-Gries summary must survive a checkpoint
     restart: two file drops with a query restart between them, then the
@@ -877,7 +873,6 @@ def test_stream_heavy_hitters_bound_across_restarts(spark, tmp_path):
     assert merged and max(merged, key=lambda u: merged[u]) == 1
 
 
-@pytest.mark.slow  # r9: >=10s multi-batch/restart run — ARKFLOW_FULL_TESTS=1
 def test_stream_ddsketch_quantiles_across_restarts(spark, tmp_path):
     """The streaming DDSketch histogram must survive a checkpoint
     restart: after two file drops with a restart between, the latest
@@ -942,7 +937,6 @@ def test_stream_ddsketch_quantiles_across_restarts(spark, tmp_path):
         assert abs(latest[q]["est"] - true_val) / true_val <= alpha * 1.0001
 
 
-@pytest.mark.slow  # r9: >=10s multi-batch/restart run — ARKFLOW_FULL_TESTS=1
 def test_stream_burst_hysteresis_state_across_restarts(spark, tmp_path):
     """The Schmitt-trigger burst flag must carry across a checkpoint
     restart: a burst entered in run 1 (value > enter) must still be ON
@@ -995,7 +989,6 @@ def test_stream_burst_hysteresis_state_across_restarts(spark, tmp_path):
     assert got["2024-01-01 00:04:00"] == (False, False)
 
 
-@pytest.mark.slow  # r9: >=10s multi-batch/restart run — ARKFLOW_FULL_TESTS=1
 def test_stream_uniform_sample_matches_batch_across_restarts(spark, tmp_path):
     """The streaming hash-priority reservoir must (a) survive a
     checkpoint restart and (b) after any prefix equal the BATCH
@@ -1058,7 +1051,6 @@ def test_stream_uniform_sample_matches_batch_across_restarts(spark, tmp_path):
     assert stream_sample == batch
 
 
-@pytest.mark.slow  # r9: >=10s multi-batch/restart run — ARKFLOW_FULL_TESTS=1
 def test_stream_xmr_limits_state_across_batches(spark, tmp_path):
     """Streaming XmR must score each point against limits from PRIOR
     data only and carry (n, sum_x, sum_mr, last) across a checkpoint
@@ -1134,7 +1126,6 @@ def test_stream_xmr_limits_state_across_batches(spark, tmp_path):
     assert by_n[8]["out_of_control"] is False
 
 
-@pytest.mark.slow  # r9: >=10s multi-batch/restart run — ARKFLOW_FULL_TESTS=1
 def test_stream_page_hinkley_state_across_batches(spark, tmp_path):
     """Streaming Page-Hinkley must carry (n, sum_x, m, extreme) across a
     checkpoint restart: a level shift delivered in the second file must
@@ -1201,7 +1192,6 @@ def test_stream_page_hinkley_state_across_batches(spark, tmp_path):
     assert by_n[10]["alarm"]
 
 
-@pytest.mark.slow  # r9: >=10s multi-batch/restart run — ARKFLOW_FULL_TESTS=1
 def test_stream_p2_quantile_state_across_batches(spark, tmp_path):
     """Streaming P-square markers must survive a checkpoint restart:
     estimates after the second file must equal a single pure-fold pass
@@ -1264,7 +1254,6 @@ def test_stream_p2_quantile_state_across_batches(spark, tmp_path):
     assert 75.0 <= by_n[80]["estimate"] <= 100.0
 
 
-@pytest.mark.slow  # r9: >=10s multi-batch/restart run — ARKFLOW_FULL_TESTS=1
 def test_stream_rate_limit_sliding_log_across_batches(spark, tmp_path):
     """The sliding-log limiter must carry its accepted-timestamp log
     across a checkpoint restart: events early in the second file must
@@ -1328,7 +1317,6 @@ def test_stream_rate_limit_sliding_log_across_batches(spark, tmp_path):
     assert rows[-1]["n_dropped"] == 7
 
 
-@pytest.mark.slow  # r9: >=10s multi-batch/restart run — ARKFLOW_FULL_TESTS=1
 def test_stream_cusum_state_across_batches(spark, tmp_path):
     """Streaming CUSUM must carry (s_hi, s_lo) across a checkpoint
     restart: a small persistent upward shift split across two files
@@ -1390,7 +1378,6 @@ def test_stream_cusum_state_across_batches(spark, tmp_path):
     assert by_n[8]["alarm"]  # 1.5 * 4 = 6.0 > h across the restart
 
 
-@pytest.mark.slow  # r9: >=10s multi-batch/restart run — ARKFLOW_FULL_TESTS=1
 def test_stream_bloom_dedup_state_across_batches(spark, tmp_path):
     """The Bloom filter must persist across a restart: a fingerprint
     first seen in file 1 must be flagged as a probable duplicate when
@@ -1446,7 +1433,6 @@ def test_stream_bloom_dedup_state_across_batches(spark, tmp_path):
     assert by_n[7]["fp_rate"] < 1e-8  # nearly-empty filter
 
 
-@pytest.mark.slow  # r9: >=10s multi-batch/restart run — ARKFLOW_FULL_TESTS=1
 def test_stream_hll_cardinality_state_across_batches(spark, tmp_path):
     """HLL registers must persist across a restart: repeats of items
     from file 1 must not move the estimate, fresh items must; the
@@ -1514,7 +1500,6 @@ def test_stream_hll_cardinality_state_across_batches(spark, tmp_path):
     assert abs(by_n[43]["estimate"] - 40) < 2
 
 
-@pytest.mark.slow  # r9: >=10s multi-batch/restart run — ARKFLOW_FULL_TESTS=1
 def test_stream_capped_sessions_matches_batch_fold(spark, tmp_path):
     """The streaming gap+cap sessionizer must carry its open session
     across a checkpoint restart and reproduce the BATCH fold's
@@ -1596,7 +1581,6 @@ def test_stream_capped_sessions_matches_batch_fold(spark, tmp_path):
     assert not any(r["is_late"] for r in collected)
 
 
-@pytest.mark.slow  # r9: >=10s multi-batch/restart run — ARKFLOW_FULL_TESTS=1
 def test_stream_capped_sessions_flags_late_rows(spark, tmp_path):
     """r5 advisor: a row arriving with ts < the saved last-event time
     used to silently join the open session AND regress the clock,
@@ -1676,7 +1660,6 @@ def test_capped_sessions_rejects_unknown_policy(spark):
         )
 
 
-@pytest.mark.slow  # r9: >=10s multi-batch/restart run — ARKFLOW_FULL_TESTS=1
 def test_stream_growth_accounting_matches_batch(spark, tmp_path):
     """The incremental growth-accounting stream must classify each
     user-day exactly once across a checkpoint restart, and its daily
@@ -1762,3 +1745,191 @@ def test_stream_growth_accounting_matches_batch(spark, tmp_path):
         assert agg[day]["new"] == r["new_users"], day
         assert agg[day]["retained"] == r["retained"], day
         assert agg[day]["resurrected"] == r["resurrected"], day
+
+
+# ------------------------------------------ keyed folds, no streaming query
+
+
+class _FakeGroupState:
+    """The GroupState surface the keyed folds use. Updates are stored as
+    deep copies, so a fold that mutates its state after storing it shows
+    up as a mismatch."""
+
+    def __init__(self):
+        self.value = None
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return copy.deepcopy(self.value)
+
+    def update(self, value):
+        self.value = copy.deepcopy(tuple(value))
+
+
+def _one_key_rows() -> pd.DataFrame:
+    """12 rows of one key in event-time order, shaped so every operator
+    changes state: counter resets, bursts, funnel advances, matched and
+    expired CEP pairs, Misra-Gries evictions, Bloom repeats, rate-limit
+    drops, session gap and cap splits, new/retained/resurrected days."""
+    secs = [0, 10, 30, 3600, 3605, 86400, 86420,
+            259200, 259201, 259202, 345600, 345690]
+    ids = list(range(1, 13))
+    return pd.DataFrame(
+        {
+            "k": "a",
+            "ts": pd.Timestamp("2024-01-01") + pd.to_timedelta(secs, "s"),
+            "v": [1.0, 3.0, 2.0, 8.0, 0.5, 9.0, 9.5, 1.0, 2.0, 40.0, 3.0,
+                  1.0],
+            "typ": ["view", "x", "cart", "view", "buy", "start", "end",
+                    "start", "x", "end", "start", "end"],
+            "id": ids,
+            "u": [1, 2, 1, 3, 1, 4, 5, 1, 2, 6, 1, 7],
+            "fp": ["a", "b", "a", "c", "b", "d", "a", "e", "f", "g", "a",
+                   "h"],
+            "shard": 0,
+            "priority": [
+                hashlib.md5(str(i).encode()).hexdigest()[:12] for i in ids
+            ],
+        }
+    )
+
+
+_WINDOW_OUT = (
+    "k STRING, window_id BIGINT, pos_in_window BIGINT, id BIGINT, v DOUBLE"
+)
+_GAP_NS, _CAP_NS = 60 * 10**9, 20 * 10**9
+
+# name -> build(state module, df)
+_FOLD_CASES = {
+    "sliding_count_window_3_2": lambda s, df: s.sliding_count_window_stream(
+        df, 3, 2, "k", ["id", "v"], _WINDOW_OUT
+    ),
+    "sliding_count_window_3_3": lambda s, df: s.sliding_count_window_stream(
+        df, 3, 3, "k", ["id", "v"], _WINDOW_OUT
+    ),
+    "ewma": lambda s, df: s.ewma_stream(df, 0.3, "k", "ts", "v"),
+    "rolling_zscore": lambda s, df: s.rolling_zscore_stream(
+        df, 6, "k", "ts", "v", threshold=1.5
+    ),
+    "counter_rate": lambda s, df: s.counter_rate_stream(df, "k", "ts", "v"),
+    "funnel": lambda s, df: s.funnel_stream(
+        df, ["view", "cart", "buy"], "k", "ts", "typ"
+    ),
+    "cep_pattern": lambda s, df: s.cep_pattern_stream(
+        df, "k", "ts", "typ", "start", "end", 60
+    ),
+    "burst_hysteresis": lambda s, df: s.burst_hysteresis_stream(
+        df, "k", "ts", "v", 5.0, 2.0
+    ),
+    "xmr_limits": lambda s, df: s.xmr_limits_stream(
+        df, "k", "ts", "v", k=1.0
+    ),
+    "page_hinkley": lambda s, df: s.page_hinkley_stream(
+        df, "k", "ts", "v", lam=5.0
+    ),
+    "p2_quantile": lambda s, df: s.p2_quantile_stream(
+        df, "k", "ts", "v", p=0.7
+    ),
+    "rate_limit": lambda s, df: s.rate_limit_stream(
+        df, "k", "ts", limit=2, window_s=60
+    ),
+    "cusum": lambda s, df: s.cusum_stream(df, "k", "ts", "v", 3.0, h=4.0),
+    "bloom_dedup": lambda s, df: s.bloom_dedup_stream(df, "k", "ts", "fp"),
+    "hll_cardinality": lambda s, df: s.hll_cardinality_stream(
+        df, "k", "ts", "fp"
+    ),
+    "capped_sessions": lambda s, df: s.capped_sessions_stream(
+        df, "k", "ts", "id", _GAP_NS, _CAP_NS
+    ),
+    "growth_accounting": lambda s, df: s.growth_accounting_stream(
+        df, "k", "ts"
+    ),
+    "heavy_hitters": lambda s, df: s.heavy_hitters_stream(df, "u", 2),
+    "ddsketch": lambda s, df: s.ddsketch_stream(df, "k", "v"),
+    "uniform_sample": lambda s, df: s.uniform_sample_stream(df, "id", 3),
+}
+# grouped by shard instead of by "k"
+_SHARD_KEYED = {"heavy_hitters", "uniform_sample"}
+# re-emit a whole summary, tagged with a per-batch version, every batch
+_SUMMARY_EMITTERS = {"heavy_hitters", "ddsketch", "uniform_sample"}
+
+
+@pytest.mark.parametrize("name", list(_FOLD_CASES))
+def test_keyed_fold_is_split_invariant(spark, monkeypatch, name):
+    """One key's rows fed as one micro-batch, or split in two at any row,
+    emit the same rows and store the same state. The per-group function
+    is captured from a stubbed applyInPandasWithState and driven with a
+    fake GroupState, so no streaming query runs. Summary emitters re-emit
+    every batch, so only their final state (less ``version``) counts."""
+    from pyspark.sql.pandas.group_ops import PandasGroupedOpsMixin
+
+    from arkflow_spark.streaming import state as state_ops
+
+    key = (0,) if name in _SHARD_KEYED else ("a",)
+    summary = name in _SUMMARY_EMITTERS
+    captured = []
+    monkeypatch.setattr(
+        PandasGroupedOpsMixin,
+        "applyInPandasWithState",
+        lambda self, fn, **kw: captured.append(fn),
+    )
+    _FOLD_CASES[name](
+        state_ops,
+        spark.createDataFrame(
+            [],
+            "k STRING, ts TIMESTAMP, v DOUBLE, typ STRING, id BIGINT, "
+            "u BIGINT, fp STRING",
+        ),
+    )
+    (fn,) = captured
+    rows = _one_key_rows()
+
+    def run(*batches):
+        state = _FakeGroupState()
+        emitted = [
+            tuple(None if pd.isna(x) else x for x in r)
+            for b in batches
+            for out in fn(key, [b.reset_index(drop=True)], state)
+            for r in out.itertuples(index=False, name=None)
+        ]
+        return emitted, state.value
+
+    whole, whole_state = run(rows)
+    assert summary or whole
+    for cut in range(1, len(rows)):
+        emitted, stored = run(rows.iloc[:cut], rows.iloc[cut:])
+        if summary:
+            assert stored[:-1] == whole_state[:-1], cut
+        else:
+            assert emitted == whole, cut
+            assert stored == whole_state, cut
+
+
+@pytest.mark.parametrize(
+    "form", ["sliding_count_window_stream", "sliding_count_window_tws"]
+)
+@pytest.mark.parametrize(
+    "window_size,slide_size", [(3, 5), (3, 0), (0, 1)]
+)
+def test_stream_sliding_count_window_rejects_bad_sizes(
+    spark, form, window_size, slide_size
+):
+    """A slide longer than the window made the output depend on where
+    micro-batch boundaries fell (skipped rows leaked into the next
+    window); a zero size never drains the buffer, so the fold never
+    ends. Both stream forms reject them up front."""
+    from arkflow_spark.streaming import state as state_ops
+
+    with pytest.raises(ValueError, match="slide_size"):
+        getattr(state_ops, form)(
+            spark.createDataFrame([], "k STRING, id BIGINT"),
+            window_size,
+            slide_size,
+            "k",
+            ["id"],
+            "k STRING, window_id BIGINT, pos_in_window BIGINT, id BIGINT",
+        )
