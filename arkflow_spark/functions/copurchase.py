@@ -26,11 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.functions.indexes import (
-    bucketed_fresh,
-    index_table_name,
-    materialize_bucketed,
-)
+from arkflow_spark.functions.indexes import bucketed_index
 from arkflow_spark.tables import load
 
 
@@ -65,15 +61,13 @@ def und_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed index (built on first use, reused by every graph query in
     the session). Bucketed+sorted on ``u``, the neighbour-join /
     per-source-cap key."""
-    nb = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    table = index_table_name(spark, sf_dir, nb, prefix="_cp_und_b")
-    if bucketed_fresh(spark, table, sf_dir, nb):
-        return spark.table(table)
-    pc = pair_counts(spark, sf_dir)
-    und = pc.unionAll(
-        pc.select(F.col("v").alias("u"), F.col("u").alias("v"), "n")
-    )
-    return materialize_bucketed(spark, und, table, "u", sf_dir, nb)
+    def build() -> DataFrame:
+        pc = pair_counts(spark, sf_dir)
+        return pc.unionAll(
+            pc.select(F.col("v").alias("u"), F.col("u").alias("v"), "n")
+        )
+
+    return bucketed_index(spark, "_cp_und_b", sf_dir, "u", build)
 
 
 def directed(

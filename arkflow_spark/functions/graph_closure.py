@@ -35,11 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from arkflow_spark.functions import copurchase
-from arkflow_spark.functions.indexes import (
-    bucketed_fresh,
-    index_table_name,
-    materialize_bucketed,
-)
+from arkflow_spark.functions.indexes import bucketed_index
 
 
 def closed_edges(
@@ -50,12 +46,16 @@ def closed_edges(
     served from a bucketed table built at most once per (session,
     sf_dir, support). The complement of this set within the edge list
     is exactly the local-bridge set."""
-    nb = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    key = f"{sf_dir}#s{min_support}#closure"
-    table = index_table_name(spark, key, nb, "_cl_closed_b")
-    if bucketed_fresh(spark, table, key, nb):
-        return spark.table(table)
+    return bucketed_index(
+        spark, "_cl_closed_b", f"{sf_dir}#s{min_support}#closure", "u",
+        lambda: _closed_edges_compute(spark, sf_dir, min_support),
+    )
 
+
+def _closed_edges_compute(
+    spark: SparkSession, sf_dir: str, min_support: int
+) -> DataFrame:
+    """The wedge-join classification behind the index."""
     edges = copurchase.directed(
         spark, sf_dir, min_support=min_support
     ).select("u", "v")
@@ -82,10 +82,9 @@ def closed_edges(
     )
     a = und.select(F.col("u").alias("lo"), F.col("v").alias("w"))
     b = und.select(F.col("u").alias("hi"), F.col("v").alias("w"))
-    closed = (
+    return (
         oriented.join(a, "lo")
         .join(b, ["hi", "w"], "left_semi")
         .select("u", "v")
         .distinct()
     )
-    return materialize_bucketed(spark, closed, table, "u", key, nb)

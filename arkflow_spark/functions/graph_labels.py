@@ -14,10 +14,11 @@ At 100 TB the labels table is the stored artifact a production graph
 pipeline keeps next to its edge list: linear in node count, bucketed
 on the node key so downstream joins (modularity's edge-endpoint label
 lookups, degree rollups) read pre-shuffled storage. The BUILD runs the
-bounded synchronous min-label rounds on bucketed edge/node staging
-tables (the `graph_pagerank_bucketed` machinery): every round's
-edges-x-labels neighbour join is exchange-free, leaving one exchange
-per round — the unavoidable neighbour-min transpose
+bounded synchronous min-label rounds straight on the shared co-purchase
+index, bucketed on ``u`` (the same shape as `graph_pagerank_bucketed`'s
+iterations): every round's edges-x-labels neighbour join is
+exchange-free, leaving one exchange per round — the unavoidable
+neighbour-min transpose
 (tests/test_plans.py::test_label_prop_bucketed_round_join_exchange_free).
 
 Reference scope: arkflow expresses graph queries through its SQL
@@ -32,11 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from arkflow_spark.functions import copurchase
-from arkflow_spark.functions.indexes import (
-    bucketed_fresh,
-    index_table_name,
-    materialize_bucketed,
-)
+from arkflow_spark.functions.indexes import bucketed_index
 
 DEFAULT_ROUNDS = 3
 
@@ -80,27 +77,10 @@ def lp_rounds(lbl: DataFrame, und: DataFrame, rounds: int) -> DataFrame:
     return lbl
 
 
-def lp_table_names(
-    spark: SparkSession,
-    sf_dir: str,
-    min_support: int,
-    rounds: int,
-    nb: int,
-) -> tuple[str, str, str]:
-    """(edges, nodes, labels) table names, keyed by (sf_dir, support)
-    and — for labels — rounds. The edge/node STAGING tables are gone
-    (r8 optimization round): the gather-via-source round form reads
-    the shared co-purchase index's bucketed-on-``u`` storage directly,
-    so the build needs no per-support re-materialization of the edge
-    list. The first two names stay derivable for the index GC (old
-    sessions' staging dirs are still swept by prefix)."""
-    ekey = f"{sf_dir}#s{min_support}"
-    lkey = f"{sf_dir}#s{min_support}#r{rounds}"
-    return (
-        index_table_name(spark, ekey, nb, "_lp_edges_b"),
-        index_table_name(spark, ekey, nb, "_lp_nodes_b"),
-        index_table_name(spark, lkey, nb, "_lp_labels_b"),
-    )
+def lp_labels_key(sf_dir: str, min_support: int, rounds: int) -> str:
+    """The source key of the ``_lp_labels_b`` index: one labels table
+    per (sf_dir, support, rounds)."""
+    return f"{sf_dir}#s{min_support}#r{rounds}"
 
 
 def component_labels(
@@ -118,18 +98,16 @@ def component_labels(
     themselves — the r8-build staging tables (edges re-bucketed on
     ``v`` + node list) are gone with the transpose-keyed join that
     needed them."""
-    nb = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    lkey = f"{sf_dir}#s{min_support}#r{rounds}"
-    _, _, ltable = lp_table_names(spark, sf_dir, min_support, rounds, nb)
-    if bucketed_fresh(spark, ltable, lkey, nb):
-        return spark.table(ltable)
-    und = copurchase.undirected(
-        spark, sf_dir, min_support=min_support
-    ).select("u", "v")
-    # seed = distinct sources (== all nodes: the edge set is
-    # symmetric); the distinct is exchange-free on the bucketed scan
-    seed = und.select("u").distinct().select(
-        "u", F.col("u").alias("lbl")
-    )
-    lbl = lp_rounds(seed, und, rounds)
-    return materialize_bucketed(spark, lbl, ltable, "u", lkey, nb)
+    def build() -> DataFrame:
+        und = copurchase.undirected(
+            spark, sf_dir, min_support=min_support
+        ).select("u", "v")
+        # seed = distinct sources (== all nodes: the edge set is
+        # symmetric); the distinct is exchange-free on the bucketed scan
+        seed = und.select("u").distinct().select(
+            "u", F.col("u").alias("lbl")
+        )
+        return lp_rounds(seed, und, rounds)
+
+    key = lp_labels_key(sf_dir, min_support, rounds)
+    return bucketed_index(spark, "_lp_labels_b", key, "u", build)

@@ -38,19 +38,20 @@ import shutil
 import time
 from pathlib import Path
 
-# one entry per index family registered in functions/indexes.py callers;
-# tests/test_indexes_gc.py asserts this list covers every
-# index_table_name() call site so a new family can't silently leak
+# one entry per index family; functions/indexes.bucketed_index refuses
+# a family missing here, so a new family can't silently leak
 INDEX_PREFIXES = (
     "_cc_lbl_b",      # near-dup cluster labels index (r9)
     "_cl_closed_b",   # triangle-closure closed-edge set (r8)
     "_cp_und_b",      # shared co-purchase undirected edge index
     "_ivf_assign_b",  # IVF coarse assignment
-    "_lp_edges_b",    # label-prop bucketed edges
-    "_lp_nodes_b",    # label-prop bucketed nodes
+    "_lp_edges_b",    # sweep-only: label-prop staging edges (pre-r8 dirs)
+    "_lp_nodes_b",    # sweep-only: label-prop staging nodes (pre-r8 dirs)
     "_lp_labels_b",   # materialized component labels (r7)
     "_mh_sig_b",      # MinHash signature table (r7)
     "_pq_codes_b",    # PQ code assignment + reconstruction error (r8)
+    "_pr_edges_b",    # PageRank weight-share edges, bucketed on src
+    "_pr_nodes_b",    # PageRank node list, bucketed on node
     "_shingles_b",    # 3-gram shingle staging
 )
 

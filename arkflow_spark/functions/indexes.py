@@ -2,12 +2,15 @@
 
 Several query families amortize an expensive derived table across many
 queries / iterations by materializing it ONCE per (session, source
-dataset) as a Hive-bucketed table: PageRank's weight-share edge list
-(`queries/graph_q.py`), label propagation's undirected edge + node
-tables (`queries/analytics43_q.py`), and the shared co-purchase edge
-index (`functions/copurchase.py`). This module is the one copy of that
-machinery (r5 judge item 3: the graph family had grown per-query
-clones).
+dataset) as a Hive-bucketed table. The families, one prefix each in
+``functions/index_gc.INDEX_PREFIXES``: the co-purchase undirected edge
+index (`functions/copurchase.py`), component labels
+(`functions/graph_labels.py`), the triangle-closure edge set
+(`functions/graph_closure.py`), PQ codes (`functions/pq.py`), PageRank's
+weight-share edges and node list (`queries/graph_q.py`), the shingle,
+MinHash-signature and cluster-label tables (`queries/dedup_q.py`) and
+the IVF coarse assignment (`queries/vector_q.py`). Every one of them
+goes through :func:`bucketed_index`, the module's one way in.
 
 Addressing (round-4 judge finding): fixed table names in the SHARED
 ``spark.sql.warehouse.dir`` race across sessions — each session has its
@@ -27,8 +30,11 @@ from __future__ import annotations
 
 import hashlib
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from arkflow_spark.functions.index_gc import INDEX_PREFIXES, write_owner
 
 
 def index_table_name(
@@ -118,9 +124,35 @@ def materialize_bucketed(
     # record this process as the directory's owner so the startup
     # sweep (functions/index_gc.gc_nonlive) can reclaim it once the
     # session's process exits, without racing concurrent sessions
-    from arkflow_spark.functions.index_gc import write_owner
-
     write_owner(
         spark.conf.get("spark.sql.warehouse.dir", ""), table
     )
     return spark.table(table)
+
+
+def bucketed_index(
+    spark: SparkSession,
+    family: str,
+    src_key: str,
+    bucket_col: str,
+    build: Callable[[], DataFrame],
+) -> DataFrame:
+    """The stored index of ``family`` for ``src_key``, bucketed+sorted
+    on ``bucket_col`` into ``spark.sql.shuffle.partitions`` buckets.
+
+    ``src_key`` names the source dataset (plus any parameters the index
+    depends on). ``build`` returns the DataFrame to store and runs only
+    when the session has no fresh copy. ``family`` must be registered in
+    ``INDEX_PREFIXES``, or the GC sweeps could never reclaim its
+    directories. The freshness check and the write are looked up in the
+    module globals at call time, so wrappers installed there see every
+    index lookup and build."""
+    if family not in INDEX_PREFIXES:
+        raise ValueError(
+            f"index family {family!r} is not in index_gc.INDEX_PREFIXES"
+        )
+    nb = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    table = index_table_name(spark, src_key, nb, family)
+    if bucketed_fresh(spark, table, src_key, nb):
+        return spark.table(table)
+    return materialize_bucketed(spark, build(), table, bucket_col, src_key, nb)

@@ -36,11 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.functions.indexes import (
-    bucketed_fresh,
-    index_table_name,
-    materialize_bucketed,
-)
+from arkflow_spark.functions.indexes import bucketed_index
 from arkflow_spark.tables import load
 
 DIM = 64
@@ -86,14 +82,17 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus's PQ codes plus per-subspace reconstruction error,
     served from a table bucketed on ``vec_id`` and built at most once
     per (session, dataset)."""
-    nb = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    key = f"{sf_dir}#pq{M}x{K}"
-    table = index_table_name(spark, key, nb, "_pq_codes_b")
-    if bucketed_fresh(spark, table, key, nb):
-        return spark.table(table)
+    return bucketed_index(
+        spark, "_pq_codes_b", f"{sf_dir}#pq{M}x{K}", "vec_id",
+        lambda: _pq_codes_compute(spark, sf_dir),
+    )
+
+
+def _pq_codes_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The nearest-codeword assignment behind the index."""
     e = load(spark, sf_dir, "embeddings")
     cb = subspaces(e.filter(F.col("vec_id") < K), "code")
-    codes = (
+    return (
         subspaces(e, "vec_id")
         .join(F.broadcast(cb.withColumnRenamed("sub", "cb_sub")), "s")
         .select(
@@ -113,4 +112,3 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("best.d2").alias("d2"),
         )
     )
-    return materialize_bucketed(spark, codes, table, "vec_id", key, nb)

@@ -307,7 +307,7 @@ def graph_component_size_histogram(
 ) -> DataFrame:
     """Component-size distribution of the co-purchase graph after
     {r} bounded min-label rounds (both engines run the IDENTICAL
-    unrolled computation — the `graph_pagerank_bipartite`
+    unrolled computation — the `graph_pagerank_bucketed`
     discipline, so the histogram is deterministic even where labels
     have not fully converged). A giant component holding most nodes
     says cross-sell paths reach the whole catalog; many small islands

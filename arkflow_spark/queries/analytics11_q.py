@@ -66,7 +66,7 @@ def part_hierarchy_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     a synthetic forest (parent = key div 10) to its single-digit root,
     then subtree size, depth, and value roll up per root — the
     bill-of-materials / org-chart query that previously needed the
-    unrolled-iteration workaround (see `graph_pagerank_bipartite`).
+    unrolled-iteration workaround (see `graph_pagerank_bucketed`).
 
     The recursion depth is log10(max key) — bounded and data-
     independent, which is exactly when a recursive CTE is safe at

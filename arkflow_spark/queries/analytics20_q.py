@@ -14,7 +14,7 @@ migration, and bounded k-core peeling.
   k=3) over the co-purchase graph: iteratively drop nodes with degree
   < k; survivors of round r are an upper bound on the true k-core
   that tightens each round — the dense-subgraph filter (community
-  seeds, spam rings), unrolled exactly like `graph_pagerank_bipartite`
+  seeds, spam rings), unrolled exactly like `graph_pagerank_bucketed`
   so both engines run the identical bounded computation.
 """
 
@@ -295,7 +295,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     < k and the edges touching them; the surviving set shrinks toward
     the true {k}-core (an upper bound that tightens monotonically —
     both engines run the IDENTICAL bounded computation, the
-    `graph_pagerank_bipartite` unrolling discipline). The dense-core
+    `graph_pagerank_bucketed` unrolling discipline). The dense-core
     filter behind community seeding and collusion/spam-ring detection.
 
     Scale: each round is one gather join on the bucketed co-purchase

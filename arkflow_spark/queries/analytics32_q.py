@@ -471,7 +471,7 @@ def graph_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     exist and every graph join over this edge set needs the skew
     toolkit (`events_skew_salted_agg` / AQE skew join); a flat shallow
     slope says uniform degrees and plain hash joins are safe. The
-    pre-flight check before running `graph_pagerank_bipartite` on a new
+    pre-flight check before running `graph_pagerank_bucketed` on a new
     edge table.
 
     Scale: degree = one count-distinct aggregate on the edge table;

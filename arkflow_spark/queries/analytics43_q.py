@@ -116,7 +116,7 @@ def graph_community_label_prop(
     Both engines unroll the SAME {r} rounds (integer min — no floating
     point anywhere), so results are exactly equal. Plan: each round is
     one edge-keyed join + min-agg (the Pregel dataflow shape
-    `graph_pagerank_bipartite` uses); the edge table is built once and
+    `graph_pagerank_bucketed` uses); the edge table is built once and
     persisted. At 100 TB, bucket the edge table by u (the
     `graph_pagerank_bucketed` machinery) to make every round
     exchange-free. Edges read the shared materialized co-purchase

@@ -40,19 +40,11 @@ def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     item); one build per session now feeds them all, and at 100 TB
     the shingle set IS the stored dedup artifact every
     MinHash/LSH/PPJoin pass reads."""
-    from arkflow_spark.functions.indexes import (
-        bucketed_fresh,
-        index_table_name,
-        materialize_bucketed,
-    )
+    from arkflow_spark.functions.indexes import bucketed_index
 
-    nb = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    table = index_table_name(spark, sf_dir, nb, "_shingles_b")
-    if bucketed_fresh(spark, table, sf_dir, nb):
-        return spark.table(table)
-    return materialize_bucketed(
-        spark, _shingles_compute(spark, sf_dir), table, "doc_id",
-        sf_dir, nb,
+    return bucketed_index(
+        spark, "_shingles_b", sf_dir, "doc_id",
+        lambda: _shingles_compute(spark, sf_dir),
     )
 
 
@@ -89,19 +81,11 @@ def _mh_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     (analytics13), `dedup_band_sweep` (analytics28),
     `dedup_minhash_bbit_calibration` (analytics49); `n` is the
     distinct-shingle count every verify stage needs."""
-    from arkflow_spark.functions.indexes import (
-        bucketed_fresh,
-        index_table_name,
-        materialize_bucketed,
-    )
+    from arkflow_spark.functions.indexes import bucketed_index
 
-    nb = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    table = index_table_name(spark, sf_dir, nb, "_mh_sig_b")
-    if bucketed_fresh(spark, table, sf_dir, nb):
-        return spark.table(table)
-    return materialize_bucketed(
-        spark, _mh_signatures_compute(spark, sf_dir), table, "doc_id",
-        sf_dir, nb,
+    return bucketed_index(
+        spark, "_mh_sig_b", sf_dir, "doc_id",
+        lambda: _mh_signatures_compute(spark, sf_dir),
     )
 
 
@@ -516,18 +500,11 @@ def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-verified witness, and
     tests/test_labels_and_sig_indexes.py::test_cc_labels_equal_live_loop
     pins index == live row-for-row."""
-    from arkflow_spark.functions.indexes import (
-        bucketed_fresh,
-        index_table_name,
-        materialize_bucketed,
-    )
+    from arkflow_spark.functions.indexes import bucketed_index
 
-    nb = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    table = index_table_name(spark, sf_dir, nb, "_cc_lbl_b")
-    if bucketed_fresh(spark, table, sf_dir, nb):
-        return spark.table(table)
-    return materialize_bucketed(
-        spark, _cc_labels_compute(spark, sf_dir), table, "doc_id", sf_dir, nb
+    return bucketed_index(
+        spark, "_cc_lbl_b", sf_dir, "doc_id",
+        lambda: _cc_labels_compute(spark, sf_dir),
     )
 
 

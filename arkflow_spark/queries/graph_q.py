@@ -6,7 +6,7 @@ graph workload — PageRank — over the customer<->supplier graph induced by
 orders/lineitem. The driver loop unrolls a FIXED number of power
 iterations (deterministic, oracle-matched by an identically-unrolled CTE
 chain in DuckDB), which is exactly how productionized Spark PageRank runs:
-edges partitioned once and persisted, each iteration one join + one
+edges partitioned once and stored, each iteration one join + one
 aggregate, ranks re-used across iterations.
 """
 
@@ -16,11 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from arkflow_spark.functions import copurchase
-from arkflow_spark.functions.indexes import (
-    bucketed_fresh as _bucketed_fresh,
-    drop_managed as _drop_managed,
-    index_table_name,
-)
+from arkflow_spark.functions.indexes import bucketed_index
 from arkflow_spark.queries.base import query
 from arkflow_spark.tables import load
 
@@ -79,34 +75,9 @@ def _oracle_sql() -> str:
     return _ORACLE.replace("{iter_ctes}", ",\n    ".join(steps))
 
 
-@query("graph_pagerank_bipartite", oracle=_oracle_sql())
-def graph_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted PageRank (3 power iterations, damping 0.85) over the
-    bipartite customer<->supplier order graph; top-25 nodes.
-
-    Determinism: per-edge contributions are identical doubles in both
-    engines (rank x weight-share), summed exactly as DECIMAL(28,16); the
-    damping update is then pure double arithmetic. Final ranks floor-
-    rounded to 6 decimals with (rank, node) ordering.
-
-    Scale notes: edges are built once (one join + one aggregate),
-    persisted, and re-used every iteration — each iteration is one
-    shuffle-join of the rank vector against the edge partitioning plus
-    one aggregate on dst. This is GraphX/Pregel's exact dataflow
-    expressed in DataFrames; at 100 TB the edge table would be bucketed
-    by src so the per-iteration join is exchange-free, and the rank
-    vector (1 row/node) broadcasts while it fits.
-    """
-    ew, nodes = _edges_and_shares(spark, sf_dir)
-    ew, nodes = ew.persist(), nodes.persist()
-    n_nodes = nodes.count()  # scalar loop constant (node count, tiny)
-    ranks = _power_iterations(ew, nodes, n_nodes, broadcast_ranks=True)
-    return _topk_ranks(ranks)
-
-
-def _edges_and_shares(spark: SparkSession, sf_dir: str):
-    """(src, dst, share) weight-share edges + distinct node list for the
-    bipartite order graph — the iteration-invariant inputs."""
+def _edge_shares(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst, share) weight-share edges for the bipartite order
+    graph — the iteration-invariant input."""
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     pair = (
@@ -121,7 +92,7 @@ def _edges_and_shares(spark: SparkSession, sf_dir: str):
         F.col("c").alias("src"), F.col("s").alias("dst"), "w"
     ).unionAll(
         pair.select(F.col("s").alias("src"), F.col("c").alias("dst"), "w")
-    ).persist()  # feeds the share window AND the node list
+    )
     # weight share is iteration-invariant: ONE src-keyed window pass
     # (r8 optimization round — replaces the old groupBy-sum + join-back,
     # which cost an extra aggregate exchange plus a join per run; the
@@ -129,21 +100,13 @@ def _edges_and_shares(spark: SparkSession, sf_dir: str):
     from pyspark.sql import Window
 
     ow = F.sum("w").over(Window.partitionBy("src"))
-    ew = edges.select(
+    return edges.select(
         "src", "dst", (F.col("w") * 1.0 / ow).alias("share")
     )
-    nodes = edges.select(F.col("src").alias("node")).distinct()
-    return ew, nodes
 
 
-def _power_iterations(ew, nodes, n_nodes: int, broadcast_ranks=False):
-    """broadcast_ranks=True is the while-it-fits path (unbucketed
-    baseline): the rank vector is one row per node, so broadcasting it
-    means the persisted edge table is NEVER reshuffled — each iteration
-    costs one exchange (the dst transpose). False is the beyond-
-    broadcast path used by the bucketed twin, where pre-shuffled
-    storage makes the SMJ exchange-free without any size cap on the
-    rank vector.
+def _power_iterations(ew, nodes, n_nodes: int):
+    """ITERS damped power iterations from the uniform rank vector.
 
     r8 optimization round: the old per-iteration ``nodes LEFT JOIN
     contrib`` (+ a second broadcast per iteration) was a provable
@@ -158,7 +121,7 @@ def _power_iterations(ew, nodes, n_nodes: int, broadcast_ranks=False):
     results are unchanged."""
     ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("r"))
     for _ in range(ITERS):
-        contrib = _contrib_step(ranks, ew, broadcast_ranks)
+        contrib = _contrib_step(ranks, ew)
         ranks = contrib.select(
             "node",
             (
@@ -169,26 +132,21 @@ def _power_iterations(ew, nodes, n_nodes: int, broadcast_ranks=False):
     return ranks
 
 
-def _contrib_step(ranks, ew, broadcast_ranks=False):
+def _contrib_step(ranks, ew):
     """One power-iteration transpose: rank-weighted contributions
     gathered per destination. The ranks-x-edges join and the dst
     aggregate are the whole per-iteration dataflow.
 
-    With broadcast_ranks the rank vector (one row per node, orders of
-    magnitude smaller than the edge list) broadcasts into the edge
-    partitioning, so the persisted edges are never reshuffled across
-    iterations and each round costs exactly one exchange (the dst
-    aggregate). Without it (the bucketed twin) the edges read from
-    bucket-partitioned storage and the join is an exchange-free SMJ —
-    the no-size-cap scale path (tests/test_plans.py asserts both plan
-    shapes). The MERGE hint pins that strategy: without it Catalyst's
-    size estimates flip iterations 2+ to broadcasting the EDGE TABLE
-    (the bucketed scan's file stats sit under the broadcast threshold
-    while the rank-chain's estimate balloons through the aggregates) —
-    backwards at any scale, and measured 2x slower even at sf0.1."""
-    r = F.broadcast(ranks) if broadcast_ranks else ranks.hint("merge")
+    The edges read from bucket-partitioned storage, so the join is an
+    exchange-free SMJ with no size cap on the rank vector
+    (tests/test_plans.py asserts the plan shape). The MERGE hint pins
+    that strategy: without it Catalyst's size estimates flip iterations
+    2+ to broadcasting the EDGE TABLE (the bucketed scan's file stats
+    sit under the broadcast threshold while the rank-chain's estimate
+    balloons through the aggregates) — backwards at any scale, and
+    measured 2x slower even at sf0.1."""
     return (
-        ew.join(r, ranks.node == ew.src)
+        ew.join(ranks.hint("merge"), ranks.node == ew.src)
         .select(
             F.col("dst").alias("node"),
             (F.col("r") * F.col("share")).alias("contrib"),
@@ -223,60 +181,38 @@ def _topk_ranks(ranks):
     )
 
 
-def _index_table_names(
-    spark: SparkSession, sf_dir: str, nb: int, prefix: str = "_pr"
-) -> tuple[str, str]:
-    """Session-addressed (edge, node) index table names — see
-    `functions/indexes.py` for the addressing rationale (round-4 judge
-    race finding); this wrapper just derives the graph family's
-    edge/node table pair."""
-    return (
-        index_table_name(spark, sf_dir, nb, f"{prefix}_edges_b"),
-        index_table_name(spark, sf_dir, nb, f"{prefix}_nodes_b"),
-    )
-
-
 @query("graph_pagerank_bucketed", oracle=_oracle_sql())
 def graph_pagerank_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100x scale path for `graph_pagerank_bipartite`: the
-    weight-share edge table and the node list are materialized ONCE as
-    tables bucketed on the per-iteration join key (`src` / `node`), so
-    every subsequent power iteration reads pre-shuffled storage — the
-    ranks-x-edges join needs NO exchange on either side (the edge scan
-    is bucket-partitioned; the rank vector arrives hash-partitioned on
-    `node` from the previous dst-aggregate), leaving exactly ONE
-    exchange per iteration: the unavoidable transpose (groupBy dst).
-    Identical results to the unbucketed twin (same oracle); the write
-    cost amortizes over iterations — at 100 TB over tens of them.
+    """Weighted PageRank (3 power iterations, damping 0.85) over the
+    bipartite customer<->supplier order graph; top-25 nodes.
+
+    Determinism: per-edge contributions are identical doubles in both
+    engines (rank x weight-share), summed exactly as DECIMAL(28,16); the
+    damping update is then pure double arithmetic. Final ranks floor-
+    rounded to 6 decimals with (rank, node) ordering.
+
+    Scale path: the weight-share edge table and the node list are
+    materialized ONCE per (session, dataset) as indexes bucketed on the
+    per-iteration join key (`src` / `node`), so every power iteration
+    reads pre-shuffled storage — the ranks-x-edges join needs NO
+    exchange on either side (the edge scan is bucket-partitioned; the
+    rank vector arrives hash-partitioned on `node` from the previous
+    dst-aggregate), leaving exactly ONE exchange per iteration: the
+    unavoidable transpose (groupBy dst). The write cost amortizes over
+    iterations and repeated queries — at 100 TB over tens of them.
 
     Plan evidence: tests/test_plans.py::test_pagerank_bucketed_iteration
     asserts the iteration join subtree has zero Exchange operators.
     """
-    nb = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # Materialized-index semantics: rebuild only when the source dataset
-    # changes (the testdata dirs are immutable), so repeated queries pay
-    # the bucketed write ONCE — exactly how a production edge index
-    # amortizes over many PageRank runs / iterations. Names are
-    # session-scoped (see _index_table_names) so concurrent sessions
-    # sharing a warehouse dir cannot clobber each other's live tables.
-    etable, ntable = _index_table_names(spark, sf_dir, nb)
-    if not _bucketed_fresh(spark, etable, sf_dir, nb):
-        ew, nodes = _edges_and_shares(spark, sf_dir)
-        _drop_managed(spark, etable)
-        _drop_managed(spark, ntable)
-        ew.write.bucketBy(nb, "src").sortBy("src").mode(
-            "overwrite"
-        ).saveAsTable(etable)
-        nodes.write.bucketBy(nb, "node").sortBy("node").mode(
-            "overwrite"
-        ).saveAsTable(ntable)
-        for t in (etable, ntable):
-            spark.sql(
-                f"ALTER TABLE {t} SET TBLPROPERTIES"
-                f" ('src_dir'='{sf_dir}', 'buckets'='{nb}')"
-            )
-    ew_b = spark.table(etable)
-    nodes_b = spark.table(ntable)
+    ew_b = bucketed_index(
+        spark, "_pr_edges_b", sf_dir, "src",
+        lambda: _edge_shares(spark, sf_dir),
+    )
+    # the edge list is symmetrized, so every node is a src
+    nodes_b = bucketed_index(
+        spark, "_pr_nodes_b", sf_dir, "node",
+        lambda: ew_b.select(F.col("src").alias("node")).distinct(),
+    )
     n_nodes = nodes_b.count()
     ranks = _power_iterations(ew_b, nodes_b, n_nodes)
     return _topk_ranks(ranks)

@@ -182,23 +182,11 @@ def ann_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ivf_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The materialized IVF coarse assignment — build-once-per-session
     bucketed table keyed on the probe-join column `assigned_label`."""
-    from arkflow_spark.functions.indexes import (
-        bucketed_fresh,
-        index_table_name,
-        materialize_bucketed,
-    )
+    from arkflow_spark.functions.indexes import bucketed_index
 
-    nb = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    table = index_table_name(spark, sf_dir, nb, "_ivf_assign_b")
-    if bucketed_fresh(spark, table, sf_dir, nb):
-        return spark.table(table)
-    return materialize_bucketed(
-        spark,
-        _ivf_assignment_compute(spark, sf_dir),
-        table,
-        "assigned_label",
-        sf_dir,
-        nb,
+    return bucketed_index(
+        spark, "_ivf_assign_b", sf_dir, "assigned_label",
+        lambda: _ivf_assignment_compute(spark, sf_dir),
     )
 
 

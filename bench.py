@@ -48,7 +48,6 @@ HEADLINE = [
     # round-3 second-session operators (first benched in BENCH_r03)
     "text_bigram_logprob",
     "events_counter_rate",
-    "graph_pagerank_bipartite",
     # round-3 third-session operators (first benched in BENCH_r03)
     "events_sequence_pattern",
     "events_session_capped",

@@ -61,7 +61,6 @@ DEFAULT_QUERIES = (
     "text_bigram_logprob",
     "documents_dedup_quality_survivorship",
     # relational-heavy (10x lineitem/orders/events)
-    "graph_pagerank_bipartite",
     "graph_pagerank_bucketed",
     "graph_kcore_peel",
     "graph_triangle_count",

@@ -21,11 +21,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from arkflow_spark.functions.index_gc import (  # noqa: E402
-    INDEX_PREFIXES,  # noqa: F401  (re-export: tests import it here)
-    gc,
-    gc_nonlive,
-)
+from arkflow_spark.functions.index_gc import gc, gc_nonlive  # noqa: E402
 
 
 def main() -> None:

@@ -17,10 +17,9 @@ SF_CORRECT = "/root/testdata/sf0.01"
 # minutes, which overran the driver's verify window (VERIFY_r08
 # tests_ok=false with the tail cut at ~96% and zero failures). The
 # slowest classes — the hypothesis/fuzz sweeps vs DuckDB, the
-# full-registry window scale gate, the concurrent-session index
-# integration, and the multi-restart streaming state tests — are now
-# marked `slow` and SKIPPED by default so the default profile finishes
-# well inside the window. Nothing is deleted: set ARKFLOW_FULL_TESTS=1
+# full-registry window scale gate and the multi-restart streaming
+# state tests — are now marked `slow` and SKIPPED by default so the
+# default profile finishes well inside the window. Nothing is deleted: set ARKFLOW_FULL_TESTS=1
 # to run everything (the builder's pre-commit profile). Oracle-parity
 # smokes (test_entry), plan gates (test_plans), and the per-operator
 # unit tests all stay in the default path.

@@ -2,38 +2,11 @@
 
 from __future__ import annotations
 
-import re
-import subprocess
 from pathlib import Path
 
-from scripts.gc_indexes import INDEX_PREFIXES, gc
+import pytest
 
-REPO = Path(__file__).resolve().parent.parent
-
-
-def _call_site_prefixes() -> set[str]:
-    """Every literal prefix passed to index_table_name() in the package."""
-    out = subprocess.run(
-        ["grep", "-rhn", "index_table_name(", str(REPO / "arkflow_spark")],
-        capture_output=True,
-        text=True,
-        check=True,
-    ).stdout
-    found = set()
-    for line in out.splitlines():
-        m = re.search(r'"(_[a-z_]+)"', line)
-        if m:
-            found.add(m.group(1))
-    return found
-
-
-def test_gc_prefix_list_covers_all_call_sites():
-    """A new index family must be added to scripts/gc_indexes.py or its
-    directories leak forever (the r6 ADVICE failure mode)."""
-    missing = _call_site_prefixes() - set(INDEX_PREFIXES)
-    assert not missing, (
-        f"index prefixes not covered by scripts/gc_indexes.py: {missing}"
-    )
+from arkflow_spark.functions.index_gc import gc
 
 
 def test_gc_removes_only_index_dirs(tmp_path):
@@ -125,23 +98,66 @@ def test_write_owner_and_local_path(tmp_path):
     write_owner("s3a://bucket/wh", "_cp_und_b_eeeeeeeeeeee")
 
 
-def test_materialized_index_records_owner(spark):
+def _pagerank(spark, sf):
+    from arkflow_spark.queries import QUERIES
+
+    QUERIES["graph_pagerank_bucketed"](spark, sf)
+
+
+def _closure(spark, sf):
+    from arkflow_spark.functions.graph_closure import closed_edges
+
+    closed_edges(spark, sf, 2)
+
+
+# family -> (function that builds it, source-key suffix after the dataset dir)
+_OWNED = {
+    "_cl_closed_b": (_closure, "#s2#closure"),
+    "_pr_edges_b": (_pagerank, ""),
+    "_pr_nodes_b": (_pagerank, ""),
+}
+
+
+@pytest.mark.parametrize("family", sorted(_OWNED))
+def test_materialized_index_records_owner(spark, family):
     """The real build path drops the sidecar: a table materialized by
     this session is owned by this (live) process, so a concurrent
     sweep must keep it."""
-    from arkflow_spark.functions.graph_closure import closed_edges
     from arkflow_spark.functions.indexes import index_table_name
     from tests.conftest import SF_SMOKE
 
-    closed_edges(spark, SF_SMOKE, 2)
+    build, key_suffix = _OWNED[family]
+    build(spark, SF_SMOKE)
     nb = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    table = index_table_name(
-        spark, f"{SF_SMOKE}#s2#closure", nb, "_cl_closed_b"
-    )
+    table = index_table_name(spark, SF_SMOKE + key_suffix, nb, family)
     wh = local_warehouse_path(
         spark.conf.get("spark.sql.warehouse.dir", "")
     )
     owner = Path(wh) / table / OWNER_FILE
     assert owner.is_file()
     assert json.loads(owner.read_text())["pid"] == os.getpid()
+    assert gc(wh, dry_run=True).count(table) == 1  # the sweep sees it
     assert gc_nonlive(wh, dry_run=True).count(table) == 0
+
+
+def test_bucketed_index_entry_point(spark):
+    """The one way in: refuses an unregistered family, survives a quote
+    in the source key, and serves the stored table on the second call
+    without running ``build`` again."""
+    from arkflow_spark.functions.indexes import bucketed_index
+
+    calls = []
+
+    def build():
+        calls.append(1)
+        return spark.range(5).withColumnRenamed("id", "k")
+
+    with pytest.raises(ValueError, match="_nope_b"):
+        bucketed_index(spark, "_nope_b", "src", "k", build)
+    assert calls == []
+    key = "/data/o'brien/sf0"
+    first = bucketed_index(spark, "_cp_und_b", key, "k", build)
+    assert sorted(r.k for r in first.collect()) == [0, 1, 2, 3, 4]
+    again = bucketed_index(spark, "_cp_und_b", key, "k", build)
+    assert calls == [1]
+    assert sorted(r.k for r in again.collect()) == [0, 1, 2, 3, 4]

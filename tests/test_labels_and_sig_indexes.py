@@ -15,9 +15,10 @@ from pyspark.sql import functions as F
 
 from arkflow_spark.functions.graph_labels import (
     component_labels,
+    lp_labels_key,
     lp_rounds,
-    lp_table_names,
 )
+from arkflow_spark.functions.indexes import index_table_name
 from arkflow_spark.functions import copurchase
 from arkflow_spark.queries.dedup_q import (
     _mh_signatures,
@@ -29,7 +30,9 @@ from tests.conftest import SF_SMOKE
 def test_labels_materialize_bucketed_and_short_circuit(spark):
     component_labels(spark, SF_SMOKE, 2, 3)
     nb = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    _, _, ltable = lp_table_names(spark, SF_SMOKE, 2, 3, nb)
+    ltable = index_table_name(
+        spark, lp_labels_key(SF_SMOKE, 2, 3), nb, "_lp_labels_b"
+    )
     assert spark.catalog.tableExists(ltable)
     desc = spark.sql(f"DESCRIBE EXTENDED {ltable}").collect()
     info = {r.col_name: r.data_type for r in desc}
@@ -40,13 +43,10 @@ def test_labels_materialize_bucketed_and_short_circuit(spark):
     assert ltable in plan
 
 
-def test_labels_keyed_by_support_and_rounds(spark):
-    nb = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    names = {
-        lp_table_names(spark, SF_SMOKE, s, r, nb)[2]
-        for s, r in [(1, 3), (2, 3), (2, 4)]
-    }
-    assert len(names) == 3, names
+def test_labels_keyed_by_support_and_rounds():
+    pairs = [(1, 3), (2, 3), (2, 4)]
+    keys = {lp_labels_key(SF_SMOKE, s, r) for s, r in pairs}
+    assert len(keys) == 3, keys
 
 
 def test_labels_equal_live_propagation(spark):
@@ -69,8 +69,6 @@ def test_labels_equal_live_propagation(spark):
 
 def test_signatures_materialize_and_match_compute(spark):
     sig = _mh_signatures(spark, SF_SMOKE)
-    from arkflow_spark.functions.indexes import index_table_name
-
     nb = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     table = index_table_name(spark, SF_SMOKE, nb, "_mh_sig_b")
     assert spark.catalog.tableExists(table)
@@ -87,7 +85,6 @@ def test_signatures_materialize_and_match_compute(spark):
 def test_cc_labels_materialize_bucketed_and_short_circuit(spark):
     """r9 cluster-labels index: materializes doc_id-bucketed, keyed on
     (sf_dir, buckets), and the second call serves the stored table."""
-    from arkflow_spark.functions.indexes import index_table_name
     from arkflow_spark.queries.dedup_q import _cc_labels
 
     _cc_labels(spark, SF_SMOKE)

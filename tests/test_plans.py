@@ -1060,7 +1060,7 @@ def test_cuped_two_reduction_passes(spark):
 
 
 def test_pagerank_bucketed_iteration_join_exchange_free(spark):
-    """The bucketed PageRank twin's per-iteration dataflow: the
+    """The bucketed PageRank's per-iteration dataflow: the
     ranks-x-edges join must read pre-shuffled bucketed storage with
     ZERO Exchange operators in the join subtree — the single remaining
     exchange is the unavoidable dst-transpose aggregate. This is the
@@ -1073,13 +1073,16 @@ def test_pagerank_bucketed_iteration_join_exchange_free(spark):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         # materializes the bucketed tables as a side effect
-        from arkflow_spark.queries.graph_q import _index_table_names
+        from arkflow_spark.functions.indexes import index_table_name
 
         QUERIES["graph_pagerank_bucketed"](spark, SF_CORRECT).collect()
         nb = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        etable, ntable = _index_table_names(spark, SF_CORRECT, nb)
-        ew_b = spark.table(etable)
-        nodes_b = spark.table(ntable)
+        ew_b = spark.table(
+            index_table_name(spark, SF_CORRECT, nb, "_pr_edges_b")
+        )
+        nodes_b = spark.table(
+            index_table_name(spark, SF_CORRECT, nb, "_pr_nodes_b")
+        )
         n = nodes_b.count()
         ranks0 = nodes_b.select("node", F.lit(1.0 / n).alias("r"))
         step = _contrib_step(ranks0, ew_b)
@@ -1093,45 +1096,6 @@ def test_pagerank_bucketed_iteration_join_exchange_free(spark):
         assert "Exchange" not in join_subtree, join_subtree[:2000]
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_pagerank_bipartite_rank_vector_broadcasts(spark):
-    """The unbucketed baseline's while-it-fits path: the rank vector
-    (one row per node) must BROADCAST into the persisted edge
-    partitioning, so the edge table is never reshuffled across
-    iterations — each round's only shuffle is the dst transpose."""
-    from pyspark.sql import functions as F
-
-    from arkflow_spark.queries.graph_q import (
-        _contrib_step,
-        _edges_and_shares,
-    )
-
-    ew, nodes = _edges_and_shares(spark, SF_CORRECT)
-    ew, nodes = ew.persist(), nodes.persist()
-    try:
-        n = nodes.count()
-        ew.count()  # materialize so the step plan reads the cache
-        ranks0 = nodes.select("node", F.lit(1.0 / n).alias("r"))
-        step = _contrib_step(ranks0, ew, broadcast_ranks=True)
-        step.count()
-        plan = step._jdf.queryExecution().executedPlan().toString()
-        # InMemoryRelation's toString embeds the (non-executing) plan
-        # that BUILT the cache — only the prefix above it executes
-        live = plan.split("InMemoryRelation", 1)[0]
-        assert "BroadcastHashJoin" in live, plan[:2000]
-        # the edge side reads the cache directly — the only shuffle in
-        # the executing step is the dst aggregate
-        assert live.count("Exchange hashpartitioning") <= 1, plan[:3000]
-    finally:
-        ew.unpersist()
-        nodes.unpersist()
-
-
-def test_pagerank_bucketed_matches_unbucketed(spark):
-    a = QUERIES["graph_pagerank_bipartite"](spark, SF_CORRECT).collect()
-    b = QUERIES["graph_pagerank_bucketed"](spark, SF_CORRECT).collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
 
 def test_bootstrap_ci_single_keyed_aggregate_no_python(spark):

@@ -48,7 +48,6 @@ pytestmark = pytest.mark.slow
 # in the helper's source, which inspect.getsource(fn) does not include).
 # The justification string must still name an enumerated class.
 HELPER_MARKED = {
-    "graph_pagerank_bipartite": "graph_q._topk_ranks: top-k-bounded",
     "graph_pagerank_bucketed": "graph_q._topk_ranks: top-k-bounded",
 }
 
