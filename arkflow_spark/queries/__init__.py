@@ -1,179 +1,20 @@
 """Query registry: importing this package registers every named query.
 
-Modules self-register into :data:`arkflow_spark.queries.base.QUERIES` /
-``ORACLE`` via the ``@query`` decorator; ``__spark_entry__.py`` re-exports
-them for the driver contract.
+Every module in this package except ``base`` is found by file and imported
+here; each registers its queries into
+:data:`arkflow_spark.queries.base.QUERIES` / ``ORACLE`` via the ``@query``
+decorator, which rejects a name registered twice. ``__spark_entry__.py``
+re-exports them for the driver contract.
 """
+
+import importlib
+import pkgutil
 
 from arkflow_spark.queries.base import ORACLE, QUERIES  # noqa: F401
 
-# Import order is unimportant; each module registers on import.
-from arkflow_spark.queries import relational  # noqa: F401,E402
-from arkflow_spark.queries import stats  # noqa: F401,E402
-from arkflow_spark.queries import windows_q  # noqa: F401,E402
-
-for _mod in (
-    "tpch",
-    "relational2",
-    "udf_q",
-    "scalar_q",
-    "scalar2_q",
-    "events_q",
-    "text_q",
-    "dedup_q",
-    "vector_q",
-    "multimodal_q",
-    "streaming_q",
-    "ml_q",
-    "timeseries_q",
-    "corpus_q",
-    "analytics_q",
-    "layout_q",
-    "pq_q",
-    "relational3",
-    "text2_q",
-    "graph_q",
-    "analytics2_q",
-    "analytics3_q",
-    "analytics4_q",
-    "analytics5_q",
-    "analytics6_q",
-    "analytics7_q",
-    "analytics8_q",
-    "analytics9_q",
-    "analytics10_q",
-    "analytics11_q",
-    "analytics12_q",
-    "analytics13_q",
-    "analytics14_q",
-    "analytics15_q",
-    "analytics16_q",
-    "analytics17_q",
-    "analytics18_q",
-    "analytics19_q",
-    "analytics20_q",
-    "analytics21_q",
-    "analytics22_q",
-    "analytics23_q",
-    "analytics24_q",
-    "analytics25_q",
-    "analytics26_q",
-    "analytics27_q",
-    "analytics28_q",
-    "analytics29_q",
-    "analytics30_q",
-    "analytics31_q",
-    "analytics32_q",
-    "analytics33_q",
-    "analytics34_q",
-    "analytics35_q",
-    "analytics36_q",
-    "analytics37_q",
-    "analytics38_q",
-    "analytics39_q",
-    "analytics40_q",
-    "analytics41_q",
-    "analytics42_q",
-    "analytics43_q",
-    "analytics44_q",
-    "analytics45_q",
-    "analytics46_q",
-    "analytics47_q",
-    "analytics48_q",
-    "analytics49_q",
-    "analytics50_q",
-    "analytics51_q",
-    "analytics52_q",
-    "analytics53_q",
-    "analytics54_q",
-    "analytics55_q",
-    "analytics56_q",
-    "analytics57_q",
-    "analytics58_q",
-    "analytics59_q",
-    "analytics60_q",
-    "analytics61_q",
-    "analytics62_q",
-    "analytics63_q",
-    "analytics64_q",
-    "analytics65_q",
-    "analytics66_q",
-    "analytics67_q",
-    "analytics68_q",
-    "analytics69_q",
-    "analytics70_q",
-    "analytics71_q",
-    "analytics72_q",
-    "analytics73_q",
-    "analytics74_q",
-    "analytics75_q",
-    "analytics76_q",
-    "analytics77_q",
-    "analytics78_q",
-    "analytics79_q",
-    "analytics80_q",
-    "analytics81_q",
-    "analytics82_q",
-    "analytics83_q",
-    "analytics84_q",
-    "analytics85_q",
-    "analytics86_q",
-    "analytics87_q",
-    "analytics88_q",
-    "analytics89_q",
-    "analytics90_q",
-    "analytics91_q",
-    "analytics92_q",
-    "analytics93_q",
-    "analytics94_q",
-    "analytics95_q",
-    "analytics96_q",
-    "analytics97_q",
-    "analytics98_q",
-    "analytics99_q",
-    "analytics100_q",
-    "analytics101_q",
-    "analytics102_q",
-    "analytics103_q",
-    "analytics104_q",
-    "analytics105_q",
-    "analytics106_q",
-    "analytics107_q",
-    "analytics108_q",
-    "analytics109_q",
-    "analytics110_q",
-    "analytics111_q",
-    "analytics112_q",
-    "analytics113_q",
-    "analytics114_q",
-    "analytics115_q",
-    "analytics116_q",
-    "analytics117_q",
-    "analytics118_q",
-    "analytics119_q",
-    "analytics120_q",
-    "analytics121_q",
-    "analytics122_q",
-    "analytics123_q",
-    "analytics124_q",
-    "analytics125_q",
-    "analytics126_q",
-    "analytics127_q",
-    "analytics128_q",
-    "analytics129_q",
-    "analytics130_q",
-    "analytics131_q",
-    "analytics132_q",
-    "analytics133_q",
-    "analytics134_q",
-    "analytics135_q",
-    "analytics136_q",
-):
-    try:  # modules land incrementally; missing ones are fine, bugs are not
-        __import__(f"arkflow_spark.queries.{_mod}")
-    except ModuleNotFoundError as e:
-        if e.name != f"arkflow_spark.queries.{_mod}":
-            raise
+for _info in pkgutil.iter_modules(__path__):
+    if _info.name != "base":
+        importlib.import_module(f"{__name__}.{_info.name}")
 
 
 # The driver's per-round correctness check samples the FIRST 50 registry

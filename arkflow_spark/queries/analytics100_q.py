@@ -28,18 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    """Deterministic 6-decimal quantization (see analytics27_q)."""
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ------------------------------------- order/line status consistency
@@ -121,7 +111,7 @@ def dq_order_line_status_consistency(
         .agg(
             F.count("*").cast("bigint").alias("n_orders"),
             F.sum("ok").cast("bigint").alias("n_consistent"),
-            _floor4(F.sum("ok") * 1.0 / F.count("*")).alias(
+            quantize(F.sum("ok") * 1.0 / F.count("*"), 4).alias(
                 "consistency_rate"
             ),
         )
@@ -180,7 +170,7 @@ def part_brand_price_positioning(
     px = p.select(
         F.col("p_brand").alias("brand"),
         F.col("p_type").alias("type"),
-        _floor6(F.log("p_retailprice")).alias("lp"),
+        quantize(F.log("p_retailprice"), 6).alias("lp"),
     )
     type_base = px.groupBy("type").agg(
         (
@@ -189,7 +179,7 @@ def part_brand_price_positioning(
         ).alias("mt")
     )
     resid = px.join(F.broadcast(type_base), "type").select(
-        "brand", _floor6(F.col("lp") - F.col("mt")).alias("r")
+        "brand", quantize(F.col("lp") - F.col("mt"), 6).alias("r")
     )
     mean_r = (
         F.sum(F.col("r").cast("decimal(18,6)")).cast("double")
@@ -199,8 +189,8 @@ def part_brand_price_positioning(
         resid.groupBy("brand")
         .agg(
             F.count("*").cast("bigint").alias("n_parts"),
-            _floor4(mean_r).alias("mean_log_premium"),
-            _floor4(F.exp(mean_r)).alias("premium_ratio"),
+            quantize(mean_r, 4).alias("mean_log_premium"),
+            quantize(F.exp(mean_r), 4).alias("premium_ratio"),
         )
         .orderBy(F.col("mean_log_premium").desc(), "brand")
     )
@@ -294,7 +284,7 @@ def embedding_label_centroid_margin(
     )
     cent = x.groupBy("label", "i").agg(
         (
-            F.sum(_floor6(F.col("v")).cast("decimal(18,6)")).cast(
+            F.sum(quantize(F.col("v"), 6).cast("decimal(18,6)")).cast(
                 "double"
             )
             / F.count_distinct("vec_id")
@@ -306,8 +296,8 @@ def embedding_label_centroid_margin(
         .select(
             "label",
             "vec_id",
-            _floor6(
-                (F.col("v") - F.col("c")) * (F.col("v") - F.col("c"))
+            quantize(
+                (F.col("v") - F.col("c")) * (F.col("v") - F.col("c")), 6
             ).alias("t"),
         )
         .groupBy("label", "vec_id")
@@ -320,7 +310,7 @@ def embedding_label_centroid_margin(
     within = per_vec.groupBy("label").agg(
         F.count("*").cast("bigint").alias("n_members"),
         (
-            F.sum(_floor6(F.col("d2")).cast("decimal(18,6)")).cast(
+            F.sum(quantize(F.col("d2"), 6).cast("decimal(18,6)")).cast(
                 "double"
             )
             / F.count("*")
@@ -338,9 +328,9 @@ def embedding_label_centroid_margin(
         .groupBy("la", "lb")
         .agg(
             F.sum(
-                _floor6(
+                quantize(
                     (F.col("cva") - F.col("cvb"))
-                    * (F.col("cva") - F.col("cvb"))
+                    * (F.col("cva") - F.col("cvb")), 6
                 ).cast("decimal(18,6)")
             )
             .cast("double")
@@ -355,9 +345,9 @@ def embedding_label_centroid_margin(
         .select(
             "label",
             "n_members",
-            _floor4(F.col("msd")).alias("within_msd"),
-            _floor4(F.col("nearest_cd2")).alias("nearest_cd2"),
-            _floor4(F.col("nearest_cd2") / F.col("msd")).alias(
+            quantize(F.col("msd"), 4).alias("within_msd"),
+            quantize(F.col("nearest_cd2"), 4).alias("nearest_cd2"),
+            quantize(F.col("nearest_cd2") / F.col("msd"), 4).alias(
                 "margin_ratio"
             ),
         )

@@ -25,18 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    """Deterministic 6-decimal quantization (see analytics27_q)."""
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ------------------------------------------- Herdan richness by source
@@ -97,13 +87,13 @@ def text_herdan_richness_by_source(
             F.sum(F.when(F.col("c") == 1, 1).otherwise(0))
             .cast("bigint")
             .alias("n_hapax"),
-            _floor4(
-                F.log(F.count("*")) / F.log(F.sum("c"))
+            quantize(
+                F.log(F.count("*")) / F.log(F.sum("c")), 4
             ).alias("herdan_c"),
-            _floor4(
+            quantize(
                 F.sum(F.when(F.col("c") == 1, 1).otherwise(0))
                 * 1.0
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("hapax_share"),
         )
         .orderBy("source")
@@ -196,9 +186,9 @@ def text_bigram_entropy_rate(
         .crossJoin(F.broadcast(btot))
         .agg(
             F.sum(
-                _floor6(
+                quantize(
                     -(F.col("c12") * 1.0 / F.col("t"))
-                    * F.log2(F.col("c12") * 1.0 / F.col("c1"))
+                    * F.log2(F.col("c12") * 1.0 / F.col("c1")), 6
                 ).cast("decimal(18,6)")
             )
             .cast("double")
@@ -212,9 +202,9 @@ def text_bigram_entropy_rate(
         uni.crossJoin(F.broadcast(utot))
         .agg(
             F.sum(
-                _floor6(
+                quantize(
                     -(F.col("c") * 1.0 / F.col("n"))
-                    * F.log2(F.col("c") * 1.0 / F.col("n"))
+                    * F.log2(F.col("c") * 1.0 / F.col("n")), 6
                 ).cast("decimal(18,6)")
             )
             .cast("double")
@@ -228,9 +218,9 @@ def text_bigram_entropy_rate(
         .select(
             F.col("n").alias("n_tokens"),
             "n_types",
-            _floor4(F.col("h1")).alias("unigram_entropy_bits"),
-            _floor4(F.col("h2")).alias("bigram_cond_entropy_bits"),
-            _floor4(F.col("h1") - F.col("h2")).alias(
+            quantize(F.col("h1"), 4).alias("unigram_entropy_bits"),
+            quantize(F.col("h2"), 4).alias("bigram_cond_entropy_bits"),
+            quantize(F.col("h1") - F.col("h2"), 4).alias(
                 "predictability_gain_bits"
             ),
         )
@@ -342,13 +332,13 @@ def supplier_share_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(t1))
         .select(
             "suppkey",
-            _floor6(
+            quantize(
                 F.coalesce(F.col("r0"), F.lit(0)).cast("double")
-                / F.col("tr0").cast("double")
+                / F.col("tr0").cast("double"), 6
             ).alias("share_h1"),
-            _floor6(
+            quantize(
                 F.coalesce(F.col("r1"), F.lit(0)).cast("double")
-                / F.col("tr1").cast("double")
+                / F.col("tr1").cast("double"), 6
             ).alias("share_h2"),
         )
     )
@@ -357,7 +347,7 @@ def supplier_share_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "suppkey",
             "share_h1",
             "share_h2",
-            _floor6(F.col("share_h2") - F.col("share_h1")).alias(
+            quantize(F.col("share_h2") - F.col("share_h1"), 6).alias(
                 "share_delta"
             ),
         )

@@ -25,18 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    """Deterministic 6-decimal quantization (see analytics27_q)."""
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ------------------------------------------- customer value trajectory
@@ -117,12 +107,12 @@ def customer_value_trajectory(
     )
     slope = mom.filter(F.col("n") >= 2).select(
         "o_custkey",
-        _floor6(
+        quantize(
             (
                 F.col("n") * F.col("sxy").cast("double")
                 - F.col("sx") * F.col("sy").cast("double")
             )
-            / (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
+            / (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")), 6
         ).alias("b"),
     )
     return (
@@ -141,14 +131,14 @@ def customer_value_trajectory(
             F.sum(F.when(F.col("b") > 0, 1).otherwise(0))
             .cast("bigint")
             .alias("n_growing"),
-            _floor4(
+            quantize(
                 F.sum(F.when(F.col("b") > 0, 1).otherwise(0))
                 * 1.0
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("growing_share"),
-            _floor4(
+            quantize(
                 F.sum(F.col("b").cast("decimal(18,6)")).cast("double")
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("mean_slope"),
         )
         .orderBy("segment")
@@ -241,24 +231,19 @@ def orders_concentration_trend(
     qt = rev.groupBy("q").agg(
         F.sum("r").alias("tr"), F.count("*").cast("bigint").alias("ns")
     )
-    term = (
-        F.floor(
-            F.pow(
-                F.col("r").cast("double") / F.col("tr").cast("double"),
-                F.lit(2),
-            )
-            * 100000000
-            + 0.5
-        )
-        / 100000000
+    term = quantize(
+        F.pow(
+            F.col("r").cast("double") / F.col("tr").cast("double"),
+            F.lit(2),
+        ), 8
     )
     hhi = (
         rev.join(F.broadcast(qt), "q")
         .groupBy("q")
         .agg(
             F.max("ns").alias("n_suppliers"),
-            _floor4(
-                F.sum(term.cast("decimal(18,8)"))
+            quantize(
+                F.sum(term.cast("decimal(18,8)")), 4
             ).alias("hhi"),
         )
     )
@@ -283,12 +268,12 @@ def orders_concentration_trend(
             F.col("q").alias("quarter"),
             "n_suppliers",
             "hhi",
-            _floor6(
+            quantize(
                 (F.col("k") * F.col("sih") - F.col("si") * F.col("sh"))
                 / (
                     F.col("k") * F.col("sii")
                     - F.col("si") * F.col("si")
-                )
+                ), 6
             ).alias("hhi_trend_per_quarter"),
         )
         .orderBy("quarter")
@@ -377,18 +362,18 @@ def dedup_source_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             "n_before",
             "n_after",
-            _floor4(
-                1 - F.col("n_after") * 1.0 / F.col("n_before")
+            quantize(
+                1 - F.col("n_after") * 1.0 / F.col("n_before"), 4
             ).alias("removal_rate"),
-            _floor4(F.col("n_before") * 1.0 / F.col("tb")).alias(
+            quantize(F.col("n_before") * 1.0 / F.col("tb"), 4).alias(
                 "share_before"
             ),
-            _floor4(F.col("n_after") * 1.0 / F.col("ta")).alias(
+            quantize(F.col("n_after") * 1.0 / F.col("ta"), 4).alias(
                 "share_after"
             ),
-            _floor4(
+            quantize(
                 F.col("n_after") * 1.0 / F.col("ta")
-                - F.col("n_before") * 1.0 / F.col("tb")
+                - F.col("n_before") * 1.0 / F.col("tb"), 4
             ).alias("share_delta"),
         )
         .orderBy("source")

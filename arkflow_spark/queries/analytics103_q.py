@@ -27,13 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 _SESS_GAP_MIN = 30
@@ -178,12 +173,12 @@ def events_session_basket_lift(
             "type_a",
             "type_b",
             F.col("c_ab").alias("sessions_both"),
-            _floor4(F.col("c_ab") * 1.0 / F.col("ca")).alias(
+            quantize(F.col("c_ab") * 1.0 / F.col("ca"), 4).alias(
                 "p_b_given_a"
             ),
-            _floor4(
+            quantize(
                 F.col("c_ab") * 1.0 * F.col("n")
-                / (F.col("ca") * F.col("cb"))
+                / (F.col("ca") * F.col("cb")), 4
             ).alias("lift"),
         )
         .orderBy("type_a", "type_b")
@@ -248,12 +243,12 @@ def dq_decimal_precision_profile(
     out = None
     for tbl, col in cols:
         c = F.col(col)
-        share = lambda k: _floor4(
+        share = lambda k: quantize(
             F.sum(
                 F.when(c * k == F.floor(c * k), 1).otherwise(0)
             )
             * 1.0
-            / F.count("*")
+            / F.count("*"), 4
         )
         row = (
             load(spark, sf_dir, tbl)
@@ -330,18 +325,14 @@ def lineitem_line_position_profile(
         .select(
             F.col("pos").alias("line_number"),
             "n_lines",
-            _floor4(F.col("sq") * 1.0 / F.col("n_lines")).alias(
+            quantize(F.col("sq") * 1.0 / F.col("n_lines"), 4).alias(
                 "mean_quantity"
             ),
-            (
-                F.floor(
-                    F.col("sp").cast("double") / F.col("n_lines") * 100
-                    + 0.5
-                )
-                / 100
-            ).alias("mean_price"),
-            _floor4(
-                F.col("sp").cast("double") / F.col("tp").cast("double")
+            quantize(F.col("sp").cast("double") / F.col("n_lines"), 2).alias(
+                "mean_price"
+            ),
+            quantize(
+                F.col("sp").cast("double") / F.col("tp").cast("double"), 4
             ).alias("revenue_share"),
         )
         .orderBy("line_number")

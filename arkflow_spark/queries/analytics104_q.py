@@ -25,13 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 _PFX_LEN = 64
@@ -108,10 +103,10 @@ def text_template_prefix_audit(
         .select(
             F.col("p").alias("prefix"),
             "n_docs",
-            _floor4(F.col("n_docs") * 1.0 / F.col("n")).alias(
+            quantize(F.col("n_docs") * 1.0 / F.col("n"), 4).alias(
                 "doc_share"
             ),
-            _floor4(F.col("shared") * 1.0 / F.col("n")).alias(
+            quantize(F.col("shared") * 1.0 / F.col("n"), 4).alias(
                 "corpus_shared_prefix_share"
             ),
         )
@@ -199,7 +194,7 @@ def text_casing_style_profile(
             "source",
             "style",
             F.col("c").alias("n_tokens"),
-            _floor4(F.col("c") * 1.0 / F.col("n")).alias("share"),
+            quantize(F.col("c") * 1.0 / F.col("n"), 4).alias("share"),
         )
         .orderBy("source", "style")
     )
@@ -260,7 +255,7 @@ def dq_functional_dependency_strength(
             F.count("*").cast("bigint").alias("n_keys"),
             F.sum("m").cast("bigint").alias("majority_rows"),
             F.sum("c").cast("bigint").alias("n_rows"),
-            _floor4(F.sum("m") * 1.0 / F.sum("c")).alias("fd_strength"),
+            quantize(F.sum("m") * 1.0 / F.sum("c"), 4).alias("fd_strength"),
         ).select(
             F.lit(f"{tbl}.{x} -> {tbl}.{y}").alias("dependency"),
             "n_keys",

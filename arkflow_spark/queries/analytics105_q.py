@@ -26,13 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ retry duplicates
@@ -97,7 +92,7 @@ def dq_event_retry_duplicates(
         "event_id",
         "user_id",
         "event_type",
-        (F.floor(F.col("value") * 1000000 + 0.5) / 1000000).alias("v"),
+        quantize(F.col("value"), 6).alias("v"),
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ep"),
     ).persist()  # feeds both self-join sides and the per-stream totals
     a = e.alias("a")
@@ -137,10 +132,10 @@ def dq_event_retry_duplicates(
             F.coalesce("n_suspect_events", F.lit(0))
             .cast("bigint")
             .alias("n_suspect_events"),
-            _floor4(
+            quantize(
                 F.coalesce("n_suspect_events", F.lit(0))
                 * 1.0
-                / F.col("n_events")
+                / F.col("n_events"), 4
             ).alias("suspect_share"),
         )
         .orderBy("event_type")
@@ -230,25 +225,24 @@ def orders_trading_day_adjustment(
         .cast("bigint")
         .alias("weekdays")
     )
-    cents = lambda c: F.floor(c * 100 + 0.5) / 100
     adj = months.join(wd, "m").select(
         "m",
         "rev",
         "weekdays",
-        cents(F.col("rev").cast("double") / F.col("weekdays")).alias(
+        quantize(F.col("rev").cast("double") / F.col("weekdays"), 2).alias(
             "rev_per_trading_day"
         ),
     )
     wlag = Window.orderBy("m")
     return adj.select(
         F.date_format("m", "yyyy-MM").alias("month"),
-        cents(F.col("rev").cast("double")).alias("revenue"),
+        quantize(F.col("rev").cast("double"), 2).alias("revenue"),
         "weekdays",
         "rev_per_trading_day",
-        _floor4(
+        quantize(
             F.col("rev_per_trading_day")
             / F.lag("rev_per_trading_day").over(wlag)
-            - 1
+            - 1, 4
         ).alias("adjusted_mom_change"),
     ).orderBy("month")
 
@@ -345,19 +339,18 @@ def part_product_family_mix(
         .filter(F.col("rn") == 1)
         .select("family", F.col("variant").alias("top_variant"), "r")
     )
-    cents = lambda c: F.floor(c * 100 + 0.5) / 100
     return (
         fam.join(top_var, "family")
         .crossJoin(F.broadcast(tot))
         .select(
             "family",
-            cents(F.col("fr").cast("double")).alias("revenue"),
-            _floor4(
-                F.col("fr").cast("double") / F.col("t").cast("double")
+            quantize(F.col("fr").cast("double"), 2).alias("revenue"),
+            quantize(
+                F.col("fr").cast("double") / F.col("t").cast("double"), 4
             ).alias("revenue_share"),
             "top_variant",
-            _floor4(
-                F.col("r").cast("double") / F.col("fr").cast("double")
+            quantize(
+                F.col("r").cast("double") / F.col("fr").cast("double"), 4
             ).alias("top_variant_share"),
         )
         .orderBy("family")

@@ -25,13 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ basket size profile
@@ -102,7 +97,6 @@ def orders_basket_size_profile(
         F.count("*").cast("bigint").alias("n_orders"),
         F.sum("rev").alias("tr"),
     )
-    cents = lambda c: F.floor(c * 100 + 0.5) / 100
     return (
         banded.groupBy(F.col("band").alias("basket_size_band"))
         .agg(
@@ -113,15 +107,15 @@ def orders_basket_size_profile(
         .select(
             "basket_size_band",
             F.col("n_orders_b").alias("n_orders"),
-            _floor4(F.col("n_orders_b") * 1.0 / F.col("n_orders")).alias(
+            quantize(F.col("n_orders_b") * 1.0 / F.col("n_orders"), 4).alias(
                 "order_share"
             ),
-            cents(F.col("rev_b").cast("double")).alias("revenue"),
-            _floor4(
-                F.col("rev_b").cast("double") / F.col("tr").cast("double")
+            quantize(F.col("rev_b").cast("double"), 2).alias("revenue"),
+            quantize(
+                F.col("rev_b").cast("double") / F.col("tr").cast("double"), 4
             ).alias("revenue_share"),
-            cents(
-                F.col("rev_b").cast("double") / F.col("n_orders_b")
+            quantize(
+                F.col("rev_b").cast("double") / F.col("n_orders_b"), 2
             ).alias("revenue_per_order"),
         )
         .orderBy("basket_size_band")
@@ -200,10 +194,9 @@ def text_brevity_law_check(
         .groupBy("lang", "w")
         .agg(F.count("*").cast("bigint").alias("c"))
     )
-    q6 = lambda col: F.floor(col * 1000000 + 0.5) / 1000000
     scored = vocab.select(
         "lang",
-        q6(F.log("c")).alias("x"),
+        quantize(F.log("c"), 6).alias("x"),
         F.length("w").cast("double").alias("y"),
     )
     mom = scored.groupBy("lang").agg(
@@ -212,11 +205,11 @@ def text_brevity_law_check(
         .cast("double")
         .alias("sx"),
         F.sum("y").alias("sy"),
-        F.sum(q6(F.col("x") * F.col("x")).cast("decimal(18,6)"))
+        F.sum(quantize(F.col("x") * F.col("x"), 6).cast("decimal(18,6)"))
         .cast("double")
         .alias("sxx"),
         F.sum(F.col("y") * F.col("y")).alias("syy"),
-        F.sum(q6(F.col("x") * F.col("y")).cast("decimal(18,6)"))
+        F.sum(quantize(F.col("x") * F.col("y"), 6).cast("decimal(18,6)"))
         .cast("double")
         .alias("sxy"),
     )
@@ -224,15 +217,15 @@ def text_brevity_law_check(
     return mom.select(
         "lang",
         F.col("n").alias("n_types"),
-        _floor4(
+        quantize(
             cov
             / F.sqrt(
                 (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
                 * (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy"))
-            )
+            ), 4
         ).alias("freq_length_corr"),
-        _floor4(
-            cov / (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
+        quantize(
+            cov / (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")), 4
         ).alias("chars_per_log_freq"),
     ).orderBy("lang")
 
@@ -350,10 +343,10 @@ def dq_id_gap_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_missing"),
             "max_gap",
-            _floor4(
+            quantize(
                 F.col("n_ids")
                 * 1.0
-                / (F.col("max_id") - F.col("min_id") + 1)
+                / (F.col("max_id") - F.col("min_id") + 1), 4
             ).alias("density"),
         )
         .orderBy("id_column")

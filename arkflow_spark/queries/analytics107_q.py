@@ -27,13 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------- churn hazard by tenure
@@ -147,10 +142,10 @@ def customer_churn_hazard_by_tenure(
             "n_at_risk",
             "n_ending",
             "n_censored",
-            _floor4(
+            quantize(
                 (F.col("n_ending") - F.col("n_censored"))
                 * 1.0
-                / F.col("n_at_risk")
+                / F.col("n_at_risk"), 4
             ).alias("churn_hazard"),
         )
         .orderBy("tenure_q")
@@ -200,7 +195,6 @@ def lineitem_promo_intensity_trend(
     """.format(d=_DEEP_DISCOUNT)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
-    q6 = lambda col: F.floor(col * 1000000 + 0.5) / 1000000
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .groupBy(
@@ -212,31 +206,26 @@ def lineitem_promo_intensity_trend(
         )
         .agg(
             F.count("*").cast("bigint").alias("n_lines"),
-            _floor4(
+            quantize(
                 F.sum(
-                    q6(F.col("l_discount")).cast("decimal(18,6)")
+                    quantize(F.col("l_discount"), 6).cast("decimal(18,6)")
                 ).cast("double")
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("mean_discount"),
-            _floor4(
+            quantize(
                 F.sum(
                     F.when(
                         F.col("l_discount") >= _DEEP_DISCOUNT, 1
                     ).otherwise(0)
                 )
                 * 1.0
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("deep_discount_share"),
-            (
-                F.floor(
-                    F.sum(
-                        F.col("l_extendedprice").cast("decimal(18,2)")
-                        * F.col("l_discount")
-                    ).cast("double")
-                    * 100
-                    + 0.5
-                )
-                / 100
+            quantize(
+                F.sum(
+                    F.col("l_extendedprice").cast("decimal(18,2)")
+                    * F.col("l_discount")
+                ).cast("double"), 2
             ).alias("revenue_given_back"),
         )
         .orderBy("quarter")
@@ -312,8 +301,8 @@ def dq_fanout_ratio_stability(
             F.date_format("m", "yyyy-MM").alias("month"),
             "n_orders",
             "n_lines",
-            _floor4(ratio).alias("lines_per_order"),
-            _floor4(ratio / overall).alias("ratio_vs_overall"),
+            quantize(ratio, 4).alias("lines_per_order"),
+            quantize(ratio / overall, 4).alias("ratio_vs_overall"),
             (F.abs(ratio / overall - 1) > 0.1).alias("flagged"),
         )
         .orderBy("month")

@@ -26,13 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------- lang x source residuals
@@ -106,14 +101,14 @@ def documents_lang_source_residuals(
         "lang",
         "source",
         F.col("o").alias("n_docs"),
-        _floor4(exp).alias("expected"),
-        _floor4(
+        quantize(exp, 4).alias("expected"),
+        quantize(
             (F.col("o") - exp)
             / F.sqrt(
                 exp
                 * (1 - F.col("rl").cast("double") / F.col("n"))
                 * (1 - F.col("cs").cast("double") / F.col("n"))
-            )
+            ), 4
         ).alias("std_residual"),
     ).orderBy("lang", "source")
 
@@ -165,15 +160,15 @@ def events_json_prop_profile(
         .groupBy("event_type")
         .agg(
             F.count("*").cast("bigint").alias("n_events"),
-            _floor4(
+            quantize(
                 F.sum(
                     F.when(F.col("kj").isNotNull(), 1).otherwise(0)
                 )
                 * 1.0
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("k_present_share"),
             F.min("kv").cast("bigint").alias("k_min"),
-            _floor4(F.sum("kv") / F.count("kv")).alias("k_mean"),
+            quantize(F.sum("kv") / F.count("kv"), 4).alias("k_mean"),
             F.max("kv").cast("bigint").alias("k_max"),
         )
         .orderBy("event_type")
@@ -274,13 +269,13 @@ def text_line_structure_profile(
             "source",
             "n_docs",
             "n_lines",
-            _floor4(F.col("n_lines") * 1.0 / F.col("n_docs")).alias(
+            quantize(F.col("n_lines") * 1.0 / F.col("n_docs"), 4).alias(
                 "lines_per_doc"
             ),
-            _floor4(
-                F.col("sum_chars") * 1.0 / F.col("n_lines")
+            quantize(
+                F.col("sum_chars") * 1.0 / F.col("n_lines"), 4
             ).alias("mean_line_chars"),
-            _floor4(F.col("n_short") * 1.0 / F.col("n_lines")).alias(
+            quantize(F.col("n_short") * 1.0 / F.col("n_lines"), 4).alias(
                 "short_line_share"
             ),
         )

@@ -28,13 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from arkflow_spark.functions import copurchase
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 _TOP_SUPP = 20
@@ -142,14 +137,14 @@ def supplier_top20_customer_overlap(
             F.col("shared").alias("shared_customers"),
             "customers_a",
             "customers_b",
-            _floor4(
+            quantize(
                 F.col("shared")
                 * 1.0
                 / (
                     F.col("customers_a")
                     + F.col("customers_b")
                     - F.col("shared")
-                )
+                ), 4
             ).alias("jaccard"),
         )
         .orderBy("supp_a", "supp_b")
@@ -243,7 +238,7 @@ def text_digit_token_profile(
             "source",
             "kind",
             F.col("c").alias("n_tokens"),
-            _floor4(F.col("c") * 1.0 / F.col("n")).alias("share"),
+            quantize(F.col("c") * 1.0 / F.col("n"), 4).alias("share"),
         )
         .orderBy("source", "kind")
     )
@@ -340,7 +335,7 @@ def graph_component_size_histogram(
             "component_size",
             "n_components",
             "n_nodes",
-            _floor4(F.col("n_nodes") * 1.0 / F.col("n")).alias(
+            quantize(F.col("n_nodes") * 1.0 / F.col("n"), 4).alias(
                 "node_share"
             ),
         )

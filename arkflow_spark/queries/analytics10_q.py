@@ -29,13 +29,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import DUCK_TS_FMT, SPARK_TS_FMT, query
+from arkflow_spark.queries.base import (
+    DUCK_TS_FMT,
+    SPARK_TS_FMT,
+    quantize,
+    query,
+)
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # -------------------------------------------------- VARIANT shredding
@@ -205,7 +205,7 @@ def events_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        mom.select("lag_h", "n", _floor4(num / den).alias("r"))
+        mom.select("lag_h", "n", quantize(num / den, 4).alias("r"))
         .orderBy("lag_h")
     )
 
@@ -287,8 +287,8 @@ def events_error_budget_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("h", SPARK_TS_FMT).alias("h"),
         "total",
         "errors",
-        _floor4(fast / _BURN_BUDGET).alias("burn_fast"),
-        _floor4(slow / _BURN_BUDGET).alias("burn_slow"),
+        quantize(fast / _BURN_BUDGET, 4).alias("burn_fast"),
+        quantize(slow / _BURN_BUDGET, 4).alias("burn_slow"),
         ((fast > thresh) & (slow > thresh)).alias("alert"),
     ).orderBy("h")
 

@@ -27,13 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ brand repeat rate
@@ -117,9 +112,9 @@ def part_brand_loyalty_repeat_rate(
             "brand",
             "n_buyers",
             "n_repeaters",
-            _floor4(rate).alias("repeat_rate"),
-            _floor4(
-                rate / (F.col("r") * 1.0 / F.col("b"))
+            quantize(rate, 4).alias("repeat_rate"),
+            quantize(
+                rate / (F.col("r") * 1.0 / F.col("b")), 4
             ).alias("rate_vs_catalog"),
         )
         .orderBy("brand")
@@ -130,6 +125,8 @@ def part_brand_loyalty_repeat_rate(
 
 
 def _probe_cost_oracle() -> str:
+    # vector_q registers the ann_ivf_assign oracle read below
+    import arkflow_spark.queries.vector_q  # noqa: F401
     from arkflow_spark.queries.base import ORACLE
 
     ivf = ORACLE["ann_ivf_assign"]
@@ -199,7 +196,7 @@ def ann_probe_cost_distribution(
     return cum.agg(
         F.max("n").alias("n_queries"),
         F.count("*").cast("bigint").alias("n_buckets"),
-        _floor4(F.max("sc2") * 1.0 / F.max("n")).alias(
+        quantize(F.max("sc2") * 1.0 / F.max("n"), 4).alias(
             "mean_probe_cost"
         ),
         F.min(
@@ -314,10 +311,10 @@ def events_feature_adoption_breadth(
         .select(
             F.col("w").alias("tenure_week"),
             "n_users",
-            _floor4(
+            quantize(
                 F.coalesce("n_adoptions", F.lit(0))
                 * 1.0
-                / F.col("n_users")
+                / F.col("n_users"), 4
             ).alias("mean_breadth"),
         )
         .orderBy("tenure_week")

@@ -26,18 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    """Deterministic 6-decimal quantization (see analytics27_q)."""
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 _VOL_TOP = 20
@@ -130,10 +120,10 @@ def supplier_revenue_volatility(
         .select(
             F.col("s").alias("suppkey"),
             "n_quarters",
-            (F.floor(mean * 100 + 0.5) / 100).alias(
+            quantize(mean, 2).alias(
                 "mean_quarterly_rev"
             ),
-            _floor4(sd / mean).alias("rev_cv"),
+            quantize(sd / mean, 4).alias("rev_cv"),
         )
         .orderBy(F.col("rev_cv").desc(), "suppkey")
         .limit(_VOL_TOP)
@@ -227,7 +217,7 @@ def ann_ivf_assignment_stability(
     # Values are identical, the oracle hash is the witness.
     cent = x.groupBy("half", "label", "i").agg(
         (
-            F.sum(_floor6(F.col("v")).cast("decimal(18,6)")).cast(
+            F.sum(quantize(F.col("v"), 6).cast("decimal(18,6)")).cast(
                 "double"
             )
             / F.count("*")
@@ -245,8 +235,8 @@ def ann_ivf_assignment_stability(
         .groupBy("vec_id", "chalf", "clabel")
         .agg(
             F.sum(
-                _floor6(
-                    (F.col("v") - F.col("c")) * (F.col("v") - F.col("c"))
+                quantize(
+                    (F.col("v") - F.col("c")) * (F.col("v") - F.col("c")), 6
                 ).cast("decimal(28,6)")
             ).alias("d2")
         )
@@ -286,7 +276,7 @@ def ann_ivf_assignment_stability(
         .agg(
             F.count("*").cast("bigint").alias("n_vectors"),
             F.sum("same").cast("bigint").alias("n_agree"),
-            _floor4(F.sum("same") * 1.0 / F.count("*")).alias(
+            quantize(F.sum("same") * 1.0 / F.count("*"), 4).alias(
                 "stability"
             ),
         )
@@ -353,13 +343,12 @@ def orders_arpu_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import Window
 
-    cents = lambda c: F.floor(c * 100 + 0.5) / 100
     wq = Window.orderBy("q")
     idx = per.select(
         "q",
         "n_active",
         "rev",
-        cents(F.col("rev").cast("double") / F.col("n_active")).alias(
+        quantize(F.col("rev").cast("double") / F.col("n_active"), 2).alias(
             "arpu"
         ),
         F.row_number().over(wq).alias("i"),
@@ -376,11 +365,11 @@ def orders_arpu_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("q").alias("quarter"),
             "n_active",
-            cents(F.col("rev").cast("double")).alias("revenue"),
+            quantize(F.col("rev").cast("double"), 2).alias("revenue"),
             "arpu",
-            _floor4(
+            quantize(
                 (F.col("k") * F.col("sia") - F.col("si") * F.col("sa"))
-                / (F.col("k") * F.col("sii") - F.col("si") * F.col("si"))
+                / (F.col("k") * F.col("sii") - F.col("si") * F.col("si")), 4
             ).alias("arpu_trend_per_quarter"),
         )
         .orderBy("quarter")

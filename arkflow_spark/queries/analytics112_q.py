@@ -29,13 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------- amount reconciliation
@@ -101,19 +96,18 @@ def dq_amount_reconciliation(
             F.sum("gross").alias("line_amt"),
         )
     )
-    cents = lambda c: F.floor(c * 100 + 0.5) / 100
     ratio = F.col("line_amt").cast("double") / F.col("order_amt").cast(
         "double"
     )
     return per.select(
         F.date_format("m", "yyyy-MM").alias("month"),
-        cents(F.col("order_amt").cast("double")).alias(
+        quantize(F.col("order_amt").cast("double"), 2).alias(
             "order_side_amount"
         ),
-        cents(F.col("line_amt").cast("double")).alias(
+        quantize(F.col("line_amt").cast("double"), 2).alias(
             "line_side_amount"
         ),
-        _floor4(ratio).alias("line_to_order_ratio"),
+        quantize(ratio, 4).alias("line_to_order_ratio"),
         (F.abs(ratio - 1) > 0.02).alias("flagged"),
     ).orderBy("month")
 
@@ -177,16 +171,16 @@ def events_daily_amplitude(
     )
     amp = daily.select(
         "event_type",
-        _floor4(
-            F.col("peak") * 1.0 / (F.col("tot") * 1.0 / F.col("nh"))
+        quantize(
+            F.col("peak") * 1.0 / (F.col("tot") * 1.0 / F.col("nh")), 4
         ).alias("a"),
     )
     return (
         amp.groupBy("event_type")
         .agg(
             F.count("*").cast("bigint").alias("n_days"),
-            _floor4(
-                F.sum(F.col("a").cast("decimal(18,4)")) / F.count("*")
+            quantize(
+                F.sum(F.col("a").cast("decimal(18,4)")) / F.count("*"), 4
             ).alias("mean_amplitude"),
             F.max("a").alias("max_amplitude"),
         )
@@ -303,14 +297,14 @@ def customer_first_order_predictiveness(
     return mom.select(
         "segment",
         F.col("n").alias("n_repeat_customers"),
-        _floor4(
+        quantize(
             cov
             / F.sqrt(
                 (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
                 * (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy"))
-            )
+            ), 4
         ).alias("first_rest_corr"),
-        _floor4(
-            cov / (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
+        quantize(
+            cov / (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")), 4
         ).alias("rest_per_first_dollar"),
     ).orderBy("segment")

@@ -28,13 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ bullwhip effect
@@ -159,9 +154,9 @@ def orders_bullwhip_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "brand",
             F.col("n").cast("bigint").alias("n_months"),
-            _floor4(cv2_d).alias("cv2_demand"),
-            _floor4(cv2_s).alias("cv2_shipments"),
-            _floor4(cv2_s / cv2_d).alias("bullwhip_ratio"),
+            quantize(cv2_d, 4).alias("cv2_demand"),
+            quantize(cv2_s, 4).alias("cv2_shipments"),
+            quantize(cv2_s / cv2_d, 4).alias("bullwhip_ratio"),
             (cv2_s > cv2_d).alias("amplified"),
         )
         .orderBy("brand")
@@ -300,10 +295,10 @@ def part_power_of_two_policy(
         .filter(F.col("rn") == 1)
         .select(
             "brand",
-            _floor4(F.col("t_star")).alias("optimal_days"),
+            quantize(F.col("t_star"), 4).alias("optimal_days"),
             F.col("k").cast("int").alias("chosen_k"),
             F.col("t_pow").alias("chosen_days"),
-            _floor4(F.col("cost_ratio")).alias("cost_ratio"),
+            quantize(F.col("cost_ratio"), 4).alias("cost_ratio"),
             (F.col("cost_ratio") <= 1.06067).alias("within_bound"),
         )
         .orderBy("brand")
@@ -414,7 +409,6 @@ def nation_gravity_model(spark: SparkSession, sf_dir: str) -> DataFrame:
         / F.col("t").cast("double")
     )
     g = F.log(obs / exp_)
-    cents = lambda col: F.floor(col * 100 + 0.5) / 100
     return (
         flow.join(F.broadcast(sm), "supplier_nation")
         .join(F.broadcast(cm), "customer_nation")
@@ -422,9 +416,9 @@ def nation_gravity_model(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "supplier_nation",
             "customer_nation",
-            cents(obs).alias("observed"),
-            cents(exp_).alias("expected"),
-            _floor4(g).alias("gravity_residual"),
+            quantize(obs, 2).alias("observed"),
+            quantize(exp_, 2).alias("expected"),
+            quantize(g, 4).alias("gravity_residual"),
             g.alias("_g"),
         )
         .orderBy(

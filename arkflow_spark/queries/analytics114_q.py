@@ -30,13 +30,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from arkflow_spark.functions.distributed_rank import with_global_order
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ log-rank test
@@ -206,9 +201,9 @@ def events_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("na").cast("bigint").alias("n_a"),
         F.col("nb").cast("bigint").alias("n_b"),
         "observed_a",
-        _floor4(F.col("expected_a")).alias("expected_a"),
-        _floor4(diff / F.sqrt(F.col("variance"))).alias("z"),
-        _floor4(chi2).alias("chi2"),
+        quantize(F.col("expected_a"), 4).alias("expected_a"),
+        quantize(diff / F.sqrt(F.col("variance")), 4).alias("z"),
+        quantize(chi2, 4).alias("chi2"),
         (chi2 > 3.841459).alias("reject_05"),
     )
 
@@ -288,7 +283,7 @@ def documents_mcnemar_filters(
         b.cast("bigint").alias("only_chars"),
         c.cast("bigint").alias("only_words"),
         F.col("both_fail").cast("bigint").alias("both_fail"),
-        _floor4(stat).alias("mcnemar_chi2"),
+        quantize(stat, 4).alias("mcnemar_chi2"),
         (stat > 3.841459).alias("reject_05"),
     )
 
@@ -404,9 +399,9 @@ def events_growth_accounting(
         churned.cast("bigint").alias("churned"),
         F.when(
             churned > 0,
-            _floor4(
+            quantize(
                 (F.col("new_users") + F.col("resurrected")) * 1.0
-                / churned
+                / churned, 4
             ),
         ).alias("quick_ratio"),
     ).orderBy("day")

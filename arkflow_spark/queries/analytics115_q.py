@@ -32,13 +32,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from arkflow_spark.functions import copurchase
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ RBO drift
@@ -166,8 +161,8 @@ def events_topk_rbo_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         terms.groupBy("d")
         .agg(
-            _floor4(
-                F.sum("t").cast("double") / float(_RBO_NORM)
+            quantize(
+                F.sum("t").cast("double") / float(_RBO_NORM), 4
             ).alias("rbo"),
             F.max("full_overlap").cast("bigint").alias("overlap_20"),
         )
@@ -269,11 +264,11 @@ def graph_local_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return marked.agg(
         F.count("*").cast("bigint").alias("n_edges"),
         cnt(F.col("is_bridge")).cast("bigint").alias("n_local_bridges"),
-        _floor4(cnt(F.col("is_bridge")) * 1.0 / F.count("*")).alias(
+        quantize(cnt(F.col("is_bridge")) * 1.0 / F.count("*"), 4).alias(
             "bridge_share"
         ),
-        _floor4(mb).alias("mean_support_bridges"),
-        _floor4(me).alias("mean_support_embedded"),
+        quantize(mb, 4).alias("mean_support_bridges"),
+        quantize(me, 4).alias("mean_support_embedded"),
         (mb < me).alias("weak_ties_confirmed"),
     )
 
@@ -366,8 +361,8 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
             er.cast("bigint").alias("n_edges"),
             F.when(
                 F.col("n_rich") > 1,
-                _floor4(
-                    2.0 * er / (F.col("n_rich") * (F.col("n_rich") - 1.0))
+                quantize(
+                    2.0 * er / (F.col("n_rich") * (F.col("n_rich") - 1.0)), 4
                 ),
             ).alias("phi"),
         )

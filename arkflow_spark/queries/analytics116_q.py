@@ -30,13 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ cross-price elasticity
@@ -153,7 +148,7 @@ def part_cross_price_elasticity(
             "brand_a",
             "brand_b",
             n.cast("bigint").alias("n_months"),
-            _floor4(beta).alias("elasticity"),
+            quantize(beta, 4).alias("elasticity"),
             (beta > 0).alias("substitutes"),
             F.abs(beta).alias("_ab"),
         )
@@ -247,12 +242,9 @@ def dq_sentinel_values(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             (F.col("tick") / 100.0).alias("value"),
             F.col("c").cast("bigint").alias("n_rows"),
-            (
-                F.floor(F.col("c") / F.col("t") * 1000000 + 0.5)
-                / 1000000
-            ).alias("share"),
-            _floor4(F.col("nb_avg")).alias("neighborhood_avg"),
-            _floor4(F.col("c") / F.col("nb_avg")).alias("spike_ratio"),
+            quantize(F.col("c") / F.col("t"), 6).alias("share"),
+            quantize(F.col("nb_avg"), 4).alias("neighborhood_avg"),
+            quantize(F.col("c") / F.col("nb_avg"), 4).alias("spike_ratio"),
             (F.col("c") / F.col("nb_avg") > 5).alias("sentinel_flag"),
             F.col("c").alias("_c"),
         )
@@ -379,11 +371,11 @@ def text_boilerplate_shingles(
             "source",
             F.col("n_docs").cast("bigint").alias("n_docs"),
             n_aff.cast("bigint").alias("docs_with_boilerplate"),
-            _floor4(n_aff * 1.0 / F.col("n_docs")).alias(
+            quantize(n_aff * 1.0 / F.col("n_docs"), 4).alias(
                 "affected_share"
             ),
             F.when(
-                n_aff > 0, _floor4(F.col("sk") / n_aff)
+                n_aff > 0, quantize(F.col("sk") / n_aff, 4)
             ).alias("mean_shingles_per_affected"),
         )
         .orderBy("source")

@@ -31,13 +31,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ Fisher's exact test
@@ -218,7 +213,7 @@ def nation_fisher_exact_deficit(
         F.max("b").alias("deficit_east"),
         F.max("c").alias("surplus_west"),
         F.max("d").alias("surplus_east"),
-        _floor4(psum.cast("double")).alias("p_two_sided"),
+        quantize(psum.cast("double"), 4).alias("p_two_sided"),
         (psum.cast("double") < 0.05).alias("reject_05"),
     )
 
@@ -324,11 +319,11 @@ def events_mantel_haenszel(
     return terms.agg(
         F.count("*").cast("int").alias("n_strata"),
         F.sum("a").cast("bigint").alias("observed_a"),
-        _floor4(ea).alias("expected_a"),
-        _floor4(
-            F.sum("rr").cast("double") / F.sum("ss").cast("double")
+        quantize(ea, 4).alias("expected_a"),
+        quantize(
+            F.sum("rr").cast("double") / F.sum("ss").cast("double"), 4
         ).alias("mh_odds_ratio"),
-        _floor4(chi2).alias("cmh_chi2"),
+        quantize(chi2, 4).alias("cmh_chi2"),
         (chi2 > 3.841459).alias("reject_05"),
     )
 
@@ -413,7 +408,6 @@ def nation_rca_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     rca = (
         F.col("f").cast("double") / F.col("fn").cast("double")
     ) / (F.col("fs").cast("double") / F.col("ft").cast("double"))
-    cents = lambda col: F.floor(col * 100 + 0.5) / 100
     return (
         flow.join(F.broadcast(ni), "nation")
         .join(F.broadcast(sj), "segment")
@@ -421,8 +415,8 @@ def nation_rca_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "nation",
             "segment",
-            cents(F.col("f").cast("double")).alias("exports"),
-            _floor4(rca).alias("rca"),
+            quantize(F.col("f").cast("double"), 2).alias("exports"),
+            quantize(rca, 4).alias("rca"),
             (rca > 1).alias("specialized"),
             rca.alias("_r"),
         )

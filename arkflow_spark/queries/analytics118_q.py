@@ -30,18 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    """Deterministic 6-decimal quantization (see analytics27_q)."""
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ------------------------------------------------ multiwindow burn alerts
@@ -142,12 +132,8 @@ def events_multiwindow_burn_alerts(
         ((burn(360) > 6) & (burn(30) > 6)).alias("ticket"),
         burn(60).alias("burn60"),
     )
-    share = lambda c: (
-        F.floor(
-            F.count(F.when(F.col(c), 1)) * 1.0 / F.count("*") * 1000000
-            + 0.5
-        )
-        / 1000000
+    share = lambda c: quantize(
+        F.count(F.when(F.col(c), 1)) * 1.0 / F.count("*"), 6
     )
     return flags.agg(
         F.count("*").cast("bigint").alias("n_minutes"),
@@ -159,7 +145,7 @@ def events_multiwindow_burn_alerts(
         ),
         share("page").alias("page_share"),
         share("ticket").alias("ticket_share"),
-        _floor4(F.max("burn60")).alias("max_burn_1h"),
+        quantize(F.max("burn60"), 4).alias("max_burn_1h"),
     )
 
 
@@ -234,8 +220,8 @@ def text_dialog_format_share(
         (F.col("turn") >= 3).alias("is_dialog"),
         (F.col("lst") >= 5).alias("is_list"),
     )
-    share = lambda c: _floor4(
-        F.count(F.when(F.col(c), 1)) * 1.0 / F.count("*")
+    share = lambda c: quantize(
+        F.count(F.when(F.col(c), 1)) * 1.0 / F.count("*"), 4
     )
     return (
         cls.groupBy("source")
@@ -337,7 +323,7 @@ def embedding_cka_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             (F.col("i0") + 1).alias("i"),
-            _floor6(F.col("v0").cast("double")).alias("v"),
+            quantize(F.col("v0").cast("double"), 6).alias("v"),
         )
         .filter(
             (F.col("i") <= _CKA_BLOCK)
@@ -362,7 +348,7 @@ def embedding_cka_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("ia", "ib")
         .agg(
             F.sum(
-                _floor6(F.col("va") * F.col("vb_v")).cast(
+                quantize(F.col("va") * F.col("vb_v"), 6).cast(
                     "decimal(24,6)"
                 )
             )
@@ -397,7 +383,7 @@ def embedding_cka_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bb").cast("double"),
     )
     return fro.select(
-        _floor4(ab / F.sqrt(aa * bb)).alias("cka"),
-        _floor4(aa).alias("head_fro2"),
-        _floor4(bb).alias("tail_fro2"),
+        quantize(ab / F.sqrt(aa * bb), 4).alias("cka"),
+        quantize(aa, 4).alias("head_fro2"),
+        quantize(bb, 4).alias("tail_fro2"),
     )

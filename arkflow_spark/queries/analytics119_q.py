@@ -29,13 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ kNN reciprocity
@@ -144,7 +139,7 @@ def ann_knn_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("qa").cast("bigint").alias("n_vecs"),
             F.count("*").cast("bigint").alias("n_edges"),
             mut.cast("bigint").alias("n_mutual"),
-            _floor4(mut * 1.0 / F.count("*")).alias("reciprocity"),
+            quantize(mut * 1.0 / F.count("*"), 4).alias("reciprocity"),
         )
         .select(
             F.col("label").cast("int").alias("label"),
@@ -272,19 +267,15 @@ def layout_encoding_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     metrics = stacked.groupBy("col").agg(
         F.count("*").cast("bigint").alias("n_rows"),
         F.countDistinct("v").cast("bigint").alias("n_distinct"),
-        (
-            F.floor(
-                F.countDistinct("v") * 1.0 / F.count("*") * 1000000
-                + 0.5
-            )
-            / 1000000
-        ).alias("distinct_ratio"),
-        _floor4(
+        quantize(F.countDistinct("v") * 1.0 / F.count("*"), 6).alias(
+            "distinct_ratio"
+        ),
+        quantize(
             F.count("*")
             * 1.0
-            / (F.count("*") - F.sum(F.col("same").cast("int")))
+            / (F.count("*") - F.sum(F.col("same").cast("int"))), 4
         ).alias("mean_run_len"),
-        _floor4(
+        quantize(
             F.sum(
                 F.when(
                     F.col("mono").isNotNull() & F.col("mono"), 1
@@ -296,7 +287,7 @@ def layout_encoding_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.when(F.col("mono").isNotNull(), 1).otherwise(0)
                 ),
                 F.lit(1),
-            )
+            ), 4
         ).alias("monotone_share"),
     )
     rec = (
@@ -465,12 +456,12 @@ def events_alert_mttd(spark: SparkSession, sf_dir: str) -> DataFrame:
     return det.agg(
         F.count("*").cast("bigint").alias("n_incidents"),
         F.count("first_page").cast("bigint").alias("detected"),
-        _floor4(F.count("first_page") * 1.0 / F.count("*")).alias(
+        quantize(F.count("first_page") * 1.0 / F.count("*"), 4).alias(
             "detection_rate"
         ),
-        _floor4(
+        quantize(
             F.sum(delay_us).cast("double")
             / F.greatest(F.count("first_page"), F.lit(1))
-            / 60000000
+            / 60000000, 4
         ).alias("mean_mttd_min"),
     )

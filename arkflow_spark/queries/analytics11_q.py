@@ -29,13 +29,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import DUCK_TS_FMT, SPARK_TS_FMT, query
+from arkflow_spark.queries.base import (
+    DUCK_TS_FMT,
+    SPARK_TS_FMT,
+    quantize,
+    query,
+)
 from arkflow_spark.tables import load, register_views
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # -------------------------------------------------- recursive hierarchy
@@ -242,8 +242,8 @@ def events_geo_grid_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lon",
             "n_own",
             "n_neigh",
-            _floor4(
-                F.col("n_neigh") / (9.0 * F.col("mean_cell"))
+            quantize(
+                F.col("n_neigh") / (9.0 * F.col("mean_cell")), 4
             ).alias("hot_ratio"),
             (
                 F.col("n_neigh") > 9.0 * F.col("mean_cell") * 1.2
@@ -328,7 +328,7 @@ def orders_incremental_agg_merge(
                 F.coalesce(F.col("s.n"), F.lit(0))
                 + F.coalesce(F.col("d.n"), F.lit(0))
             ).alias("n"),
-            (F.floor(merged_rev * 100 + 0.5) / 100).alias("revenue"),
+            quantize(merged_rev, 2).alias("revenue"),
             F.when(F.col("s.day").isNull(), "insert")
             .when(F.col("d.day").isNull(), "unchanged")
             .otherwise("update")

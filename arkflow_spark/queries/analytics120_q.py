@@ -29,13 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ quantile treatment effect
@@ -109,10 +104,10 @@ def events_quantile_treatment_effect(
         .crossJoin(F.broadcast(b))
         .select(
             "quantile",
-            _floor4(F.col("qsa")[F.col("i")]).alias("arm_a"),
-            _floor4(F.col("qsb")[F.col("i")]).alias("arm_b"),
-            _floor4(
-                F.col("qsb")[F.col("i")] - F.col("qsa")[F.col("i")]
+            quantize(F.col("qsa")[F.col("i")], 4).alias("arm_a"),
+            quantize(F.col("qsb")[F.col("i")], 4).alias("arm_b"),
+            quantize(
+                F.col("qsb")[F.col("i")] - F.col("qsa")[F.col("i")], 4
             ).alias("qte"),
         )
         .orderBy("quantile")
@@ -210,8 +205,8 @@ def events_cochran_armitage_trend(
     )
     return s.select(
         F.col("nn").cast("bigint").alias("n_units"),
-        _floor4(p).alias("overall_rate"),
-        F.when(ok, _floor4(z)).alias("z_trend"),
+        quantize(p, 4).alias("overall_rate"),
+        F.when(ok, quantize(z, 4)).alias("z_trend"),
         F.when(ok, F.abs(z) > 1.959964).alias("reject_05"),
     )
 
@@ -374,13 +369,13 @@ def ann_filtered_search_recall(
     )
     return per.agg(
         F.count("*").cast("bigint").alias("n_queries"),
-        _floor4(
-            F.sum("returned").cast("double") / (_FA_K * F.count("*"))
+        quantize(
+            F.sum("returned").cast("double") / (_FA_K * F.count("*")), 4
         ).alias("post_filter_recall"),
-        _floor4(
+        quantize(
             F.sum(
                 F.when(F.col("returned") == _FA_K, 1).otherwise(0)
             ).cast("double")
-            / F.count("*")
+            / F.count("*"), 4
         ).alias("full_fill_share"),
     )

@@ -29,13 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ format inference
@@ -135,7 +130,7 @@ def dq_format_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("r").cast("int").alias("rank"),
             "sig",
             F.col("c").cast("bigint").alias("n_rows"),
-            _floor4(F.col("c") * 1.0 / F.col("t")).alias("coverage"),
+            quantize(F.col("c") * 1.0 / F.col("t"), 4).alias("coverage"),
         )
         .orderBy("col", "rank")
     )
@@ -241,7 +236,7 @@ def events_boxcox_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             F.col("lam").alias("lambda"),
-            (F.floor(F.col("loglik") * 100 + 0.5) / 100).alias("loglik"),
+            quantize(F.col("loglik"), 2).alias("loglik"),
             (F.col("r") == 1).alias("chosen"),
         )
         .orderBy("event_type", "lambda")
@@ -354,7 +349,7 @@ def documents_rrf_quality_fusion(
             F.col("r1").cast("bigint").alias("rank_length"),
             F.col("r2").cast("bigint").alias("rank_alpha"),
             F.col("r3").cast("bigint").alias("rank_distinct"),
-            (F.floor(rrf * 1000000 + 0.5) / 1000000).alias("rrf_score"),
+            quantize(rrf, 6).alias("rrf_score"),
             rrf.alias("_s"),
         )
         .orderBy(F.desc("_s"), "doc_id")

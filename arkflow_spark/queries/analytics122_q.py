@@ -30,17 +30,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from arkflow_spark.functions import copurchase
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.queries.analytics43_q import (
     _LP_ROUNDS,
     _lp_round_sql,
 )
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ modularity
@@ -143,7 +138,7 @@ def graph_community_modularity(
     return terms.agg(
         F.count("*").cast("bigint").alias("n_communities"),
         F.max("m").cast("bigint").alias("n_edges"),
-        _floor4(F.sum("q").cast("double")).alias("modularity"),
+        quantize(F.sum("q").cast("double"), 4).alias("modularity"),
     )
 
 
@@ -217,7 +212,7 @@ def part_dead_stock_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(F.col("age_days") > _DS_FRESH_DAYS, 1))
             .cast("bigint")
             .alias("stale"),
-            _floor4(dead * 1.0 / F.count("*")).alias("dead_share"),
+            quantize(dead * 1.0 / F.count("*"), 4).alias("dead_share"),
             F.max("age_days").cast("bigint").alias("oldest_age_days"),
         )
         .orderBy("brand")
@@ -299,7 +294,7 @@ def dq_sum_overflow_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.select(
         "col",
         "n_rows",
-        (F.floor(F.col("max_abs") * 100 + 0.5) / 100).alias("max_abs"),
+        quantize(F.col("max_abs"), 2).alias("max_abs"),
         digits_now.alias("sum_digits_now"),
         digits_1k.alias("sum_digits_1000x"),
         (F.lit(38) - 2 - digits_1k).cast("int").alias("headroom_digits"),

@@ -29,13 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ USL fit
@@ -161,11 +156,10 @@ def events_usl_scalability_fit(
     tot = a + b + c
     sigma = (b + c) / tot
     kappa = c / tot
-    f6 = lambda col: F.floor(col * 1000000 + 0.5) / 1000000
     return mom.select(
-        f6(tot).alias("inv_lambda"),
-        _floor4(sigma).alias("sigma"),
-        f6(kappa).alias("kappa"),
+        quantize(tot, 6).alias("inv_lambda"),
+        quantize(sigma, 4).alias("sigma"),
+        quantize(kappa, 6).alias("kappa"),
         F.when(
             (c > 0) & (a >= 0),
             F.floor(F.sqrt((1 - sigma) / kappa)).cast("bigint"),
@@ -265,7 +259,7 @@ def supplier_leadtime_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("supp").cast("bigint").alias("supp"),
             F.col("n").cast("bigint").alias("n_lines"),
             F.col("var95").alias("p95_delay_days"),
-            _floor4(F.col("cvar95")).alias("cvar95_delay_days"),
+            quantize(F.col("cvar95"), 4).alias("cvar95_delay_days"),
             F.col("cvar95").alias("_c"),
         )
         .orderBy(F.desc("_c"), "supp")
@@ -348,7 +342,7 @@ def part_price_ladder_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             (F.col("cents") / 100.0).alias("gap_low"),
             (F.col("nxt") / 100.0).alias("gap_high"),
-            _floor4(ratio).alias("max_gap_ratio"),
+            quantize(ratio, 4).alias("max_gap_ratio"),
             (ratio > 2).alias("ladder_hole"),
         )
         .orderBy("brand")

@@ -29,18 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    """Deterministic 6-decimal quantization (see analytics27_q)."""
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ------------------------------------------------ SPRT replay
@@ -139,7 +129,7 @@ def events_sprt_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("d", "yyyy-MM-dd").alias("day"),
         F.col("n").cast("bigint").alias("n_events"),
         F.col("x").cast("bigint").alias("n_conversions"),
-        _floor4(F.col("llr_cum")).alias("llr_cum"),
+        quantize(F.col("llr_cum"), 4).alias("llr_cum"),
         F.when(F.col("llr_cum") >= up, F.lit("accept_h1"))
         .when(F.col("llr_cum") <= lo, F.lit("accept_h0"))
         .otherwise(F.lit("continue"))
@@ -253,19 +243,18 @@ def nation_trade_reciprocity(
             ),
         )
     )
-    cents = lambda col: F.floor(col * 100 + 0.5) / 100
     imb = F.abs(F.col("fab") - F.col("fba"))
     return (
         pairs.select(
             "nation_a",
             "nation_b",
-            cents(F.col("fab")).alias("flow_ab"),
-            cents(F.col("fba")).alias("flow_ba"),
-            _floor4(
+            quantize(F.col("fab"), 2).alias("flow_ab"),
+            quantize(F.col("fba"), 2).alias("flow_ba"),
+            quantize(
                 2 * F.least(F.col("fab"), F.col("fba"))
-                / (F.col("fab") + F.col("fba"))
+                / (F.col("fab") + F.col("fba")), 4
             ).alias("corridor_reciprocity"),
-            cents(imb).alias("imbalance"),
+            quantize(imb, 2).alias("imbalance"),
             imb.alias("_i"),
         )
         .orderBy(F.desc("_i"), "nation_a", "nation_b")
@@ -388,8 +377,8 @@ def embedding_lof_simplified(
         lof.select(
             F.col("qa").cast("bigint").alias("vec_id"),
             F.col("label").cast("int").alias("label"),
-            _floor6(F.col("dk")).alias("k_distance"),
-            _floor4(F.col("lof")).alias("lof"),
+            quantize(F.col("dk"), 6).alias("k_distance"),
+            quantize(F.col("lof"), 4).alias("lof"),
             F.col("lof").alias("_l"),
         )
         .orderBy(F.desc("_l"), "vec_id")

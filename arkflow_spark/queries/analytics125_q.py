@@ -30,14 +30,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from arkflow_spark.functions import copurchase
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.queries.analytics43_q import _lp_round_sql
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ Kupiec backtest
@@ -141,11 +136,11 @@ def events_var_backtest_kupiec(
     )
     return test.select(
         "event_type",
-        _floor4(F.col("var99")).alias("var99"),
+        quantize(F.col("var99"), 4).alias("var99"),
         n.cast("bigint").alias("n_oos"),
         x.cast("bigint").alias("n_breaches"),
-        (F.floor(rate * 1000000 + 0.5) / 1000000).alias("breach_rate"),
-        _floor4(lr).alias("kupiec_lr"),
+        quantize(rate, 6).alias("breach_rate"),
+        quantize(lr, 4).alias("kupiec_lr"),
         (lr > 3.841459).alias("reject_05"),
     ).orderBy("event_type")
 
@@ -242,8 +237,8 @@ def graph_percolation_support_sweep(
                 F.col("n_edges").cast("bigint").alias("n_edges"),
                 F.col("n_nodes").cast("bigint").alias("n_nodes"),
                 F.col("giant_size").cast("bigint").alias("giant_size"),
-                _floor4(
-                    F.col("giant_size") * 1.0 / F.col("n_nodes")
+                quantize(
+                    F.col("giant_size") * 1.0 / F.col("n_nodes"), 4
                 ).alias("giant_share"),
             )
         )
@@ -351,7 +346,7 @@ def documents_quality_length_residual(
         resid.groupBy("source")
         .agg(
             F.count("*").cast("bigint").alias("n_docs"),
-            (F.floor(mr * 1000000 + 0.5) / 1000000).alias(
+            quantize(mr, 6).alias(
                 "mean_residual"
             ),
             (mr < -0.01).alias("length_inflated"),

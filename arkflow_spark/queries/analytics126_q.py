@@ -29,13 +29,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ alpha-NDCG
@@ -179,8 +174,8 @@ def ann_retrieval_alpha_ndcg(
         gains.groupBy("qid")
         .agg(
             F.sum("novel").cast("bigint").alias("distinct_labels"),
-            _floor4(
-                F.sum("g").cast("double") / float(_AN_IDEAL)
+            quantize(
+                F.sum("g").cast("double") / float(_AN_IDEAL), 4
             ).alias("alpha_ndcg"),
         )
         .select(
@@ -302,7 +297,7 @@ def events_ripley_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("t").alias("t_seconds"),
             within.cast("bigint").alias("pairs_within"),
-            _floor4(khat).alias("k_hat"),
+            quantize(khat, 4).alias("k_hat"),
             (2 * F.col("t")).cast("double").alias("k_poisson"),
             (khat > 2 * F.col("t")).alias("clustered"),
         )
@@ -381,8 +376,8 @@ def dedup_rate_by_length_band(
             (F.sum("c") - F.count("*")).cast("bigint").alias(
                 "n_redundant"
             ),
-            _floor4(
-                (F.sum("c") - F.count("*")) * 1.0 / F.sum("c")
+            quantize(
+                (F.sum("c") - F.count("*")) * 1.0 / F.sum("c"), 4
             ).alias("dup_rate"),
             F.max("c").cast("bigint").alias("largest_group"),
         )

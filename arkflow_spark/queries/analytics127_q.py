@@ -25,14 +25,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from arkflow_spark.functions import copurchase
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.queries.analytics43_q import _lp_round_sql, _lp_rounds
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ Holm step-down
@@ -163,8 +158,8 @@ def events_holm_stepdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             F.col("r").cast("int").alias("rank"),
-            _floor4(F.col("zval")).alias("z_share_shift"),
-            _floor4(F.col("zc")).alias("critical_z"),
+            quantize(F.col("zval"), 4).alias("z_share_shift"),
+            quantize(F.col("zc"), 4).alias("critical_z"),
             "reject",
         )
         .orderBy("rank")
@@ -329,13 +324,13 @@ def graph_weak_tie_removal_impact(
             .cast("bigint")
             .alias("n_bridges_removed"),
             F.col("n_nodes").cast("bigint").alias("n_nodes"),
-            _floor4(gb * 1.0 / F.col("n_nodes")).alias(
+            quantize(gb * 1.0 / F.col("n_nodes"), 4).alias(
                 "giant_share_before"
             ),
-            _floor4(ga * 1.0 / F.col("n_nodes")).alias(
+            quantize(ga * 1.0 / F.col("n_nodes"), 4).alias(
                 "giant_share_after"
             ),
-            _floor4((gb - ga) * 1.0 / F.col("n_nodes")).alias(
+            quantize((gb - ga) * 1.0 / F.col("n_nodes"), 4).alias(
                 "reach_lost"
             ),
         )

@@ -25,13 +25,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from arkflow_spark.functions import copurchase
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ cron artifacts
@@ -110,11 +105,11 @@ def events_cron_artifact_detection(
         .select(
             F.col("mm").cast("int").alias("minute_of_hour"),
             F.col("c").cast("bigint").alias("n_events"),
-            _floor4(F.col("c") / (F.col("t") / 60)).alias(
+            quantize(F.col("c") / (F.col("t") / 60), 4).alias(
                 "lift_vs_uniform"
             ),
             (F.col("mm") % 15 == 0).alias("quarter_mark"),
-            (F.floor(F.col("chi2") * 100 + 0.5) / 100).alias(
+            quantize(F.col("chi2"), 2).alias(
                 "chi2_60cells"
             ),
             (F.col("chi2") > 77.93).alias("nonuniform_05"),
@@ -225,8 +220,8 @@ def graph_ktruss_membership(
             "k",
             F.col("n_edges").cast("bigint").alias("n_edges"),
             F.col("truss_edges").cast("bigint").alias("truss_edges"),
-            _floor4(
-                F.col("truss_edges") * 1.0 / F.col("n_edges")
+            quantize(
+                F.col("truss_edges") * 1.0 / F.col("n_edges"), 4
             ).alias("truss_share"),
             F.col("max_t").cast("bigint").alias("max_edge_triangles"),
         )

@@ -25,13 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ uniformity/alignment
@@ -146,8 +141,8 @@ def embedding_uniformity_alignment(
     return pairs.agg(
         pos.cast("bigint").alias("n_pos_pairs"),
         neg.cast("bigint").alias("n_neg_pairs"),
-        _floor4(align).alias("alignment"),
-        _floor4(unif).alias("uniformity"),
+        quantize(align, 4).alias("alignment"),
+        quantize(unif, 4).alias("uniformity"),
     )
 
 
@@ -289,9 +284,9 @@ def customer_brand_switching(
             "from_brand",
             "to_brand",
             F.col("c").cast("bigint").alias("n_transitions"),
-            (F.floor(F.col("c") / F.col("t") * 1000000 + 0.5) / 1000000)
+            quantize(F.col("c") / F.col("t"), 6)
             .alias("share"),
-            _floor4(F.col("stay") / F.col("t")).alias("loyalty_share"),
+            quantize(F.col("stay") / F.col("t"), 4).alias("loyalty_share"),
             F.col("c").alias("_c"),
         )
         .orderBy(F.desc("_c"), "from_brand", "to_brand")

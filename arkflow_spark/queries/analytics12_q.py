@@ -29,13 +29,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import DUCK_TS_FMT, SPARK_TS_FMT, query
+from arkflow_spark.queries.base import (
+    DUCK_TS_FMT,
+    SPARK_TS_FMT,
+    quantize,
+    query,
+)
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # -------------------------------------------------- cohort LTV
@@ -119,14 +119,9 @@ def orders_cohort_revenue_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("cohort", SPARK_TS_FMT).alias("cohort"),
             "age",
             "cohort_size",
-            (
-                F.floor(
-                    F.sum("rev").over(w).cast("double")
-                    / F.col("cohort_size")
-                    * 100
-                    + 0.5
-                )
-                / 100
+            quantize(
+                F.sum("rev").over(w).cast("double")
+                / F.col("cohort_size"), 2
             ).alias("ltv_per_member"),
         )
         .orderBy("cohort", "age")
@@ -233,7 +228,7 @@ def events_haar_wavelet(spark: SparkSession, sf_dir: str) -> DataFrame:
         energies.append(
             paired.groupBy("event_type").agg(
                 F.lit(k).alias("level"),
-                _floor4(F.sum(F.col("d") * F.col("d"))).alias("energy"),
+                quantize(F.sum(F.col("d") * F.col("d")), 4).alias("energy"),
                 F.count("*").alias("n_coeffs"),
             )
         )
@@ -319,7 +314,7 @@ def events_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         mom.select(
             "event_type",
             F.col("p").alias("period_h"),
-            _floor4(amp / F.col("n")).alias("amplitude"),
+            quantize(amp / F.col("n"), 4).alias("amplitude"),
         )
         .orderBy("event_type", "period_h")
     )
@@ -382,7 +377,7 @@ def text_readability_flesch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return c.select(
         "doc_id", "words", "sentences", "syllables",
-        _floor4(flesch).alias("flesch"),
+        quantize(flesch, 4).alias("flesch"),
     ).orderBy("doc_id")
 
 
@@ -455,8 +450,8 @@ def events_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             "treated",
             "post",
             "n",
-            _floor4(mean).alias("mean_value"),
-            _floor4(did).alias("did_estimate"),
+            quantize(mean, 4).alias("mean_value"),
+            quantize(did, 4).alias("did_estimate"),
         )
         .orderBy("treated", "post")
     )

@@ -24,13 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from arkflow_spark.functions import copurchase
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ promo attach
@@ -122,18 +117,17 @@ def lineitem_promo_attach_rate(
         )
         / cnt(~F.col("has_promo"))
     )
-    cents = lambda c: F.floor(c * 100 + 0.5) / 100
     return per_order.agg(
         F.count("*").cast("bigint").alias("n_orders"),
         cnt(F.col("has_promo")).cast("bigint").alias("promo_orders"),
-        _floor4(
+        quantize(
             cnt(F.col("has_promo") & F.col("nonpromo_rev").isNotNull())
             * 1.0
-            / cnt(F.col("has_promo"))
+            / cnt(F.col("has_promo")), 4
         ).alias("mixed_share"),
-        cents(with_p).alias("nonpromo_rev_with_promo"),
-        cents(without).alias("nonpromo_rev_without"),
-        _floor4(with_p / without).alias("halo_lift"),
+        quantize(with_p, 2).alias("nonpromo_rev_with_promo"),
+        quantize(without, 2).alias("nonpromo_rev_without"),
+        quantize(with_p / without, 4).alias("halo_lift"),
         (with_p > without).alias("halo_positive"),
     )
 
@@ -226,9 +220,9 @@ def graph_avg_neighbor_degree(
         .groupBy("degree_band", "bo")
         .agg(
             F.count("*").cast("bigint").alias("n_edge_ends"),
-            _floor4(
+            quantize(
                 F.sum(F.col("d_nbr").cast("decimal(18,1)")).cast("double")
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("avg_neighbor_degree"),
         )
         .orderBy("bo")

@@ -32,13 +32,8 @@ from pyspark.sql import functions as F
 
 from arkflow_spark.functions import copurchase
 from arkflow_spark.queries.analytics43_q import _lp_round_sql
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 _CD_SUPPORT = 2
@@ -183,7 +178,7 @@ def graph_community_conductance(
             "size",
             "vol",
             F.coalesce(F.col("cut"), F.lit(0)).alias("cut"),
-            _floor4(phi).alias("conductance"),
+            quantize(phi, 4).alias("conductance"),
         )
         .orderBy(F.desc("size"), "community")
         .limit(_CD_TOP)
@@ -283,11 +278,11 @@ def graph_brand_homophily(
     return tr.crossJoin(F.broadcast(ex)).select(
         "n_edges",
         "n_brands",
-        _floor4(F.col("within_share")).alias("within_share"),
-        _floor4(F.col("expected_share")).alias("expected_share"),
-        _floor4(
+        quantize(F.col("within_share"), 4).alias("within_share"),
+        quantize(F.col("expected_share"), 4).alias("expected_share"),
+        quantize(
             (F.col("within_share") - F.col("expected_share"))
-            / (1 - F.col("expected_share"))
+            / (1 - F.col("expected_share")), 4
         ).alias("assortativity_r"),
     )
 
@@ -370,16 +365,16 @@ def graph_community_size_gini(
     return agg.select(
         F.col("k").alias("n_communities"),
         "n_nodes",
-        _floor4(
+        quantize(
             2.0 * F.col("wsum") / (F.col("k") * F.col("n_nodes"))
-            - (F.col("k") + 1.0) / F.col("k")
+            - (F.col("k") + 1.0) / F.col("k"), 4
         ).alias("size_gini"),
-        _floor4(
+        quantize(
             F.when(
                 F.col("k") > 1, -F.col("negent") / F.log(F.col("k"))
-            ).otherwise(F.lit(0.0))
+            ).otherwise(F.lit(0.0)), 4
         ).alias("size_entropy_norm"),
-        _floor4(F.col("giant") * 1.0 / F.col("n_nodes")).alias(
+        quantize(F.col("giant") * 1.0 / F.col("n_nodes"), 4).alias(
             "giant_share"
         ),
     )

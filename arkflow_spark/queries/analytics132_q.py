@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import QUERIES, query
+from arkflow_spark.queries.base import QUERIES, quantize, query
 from arkflow_spark.queries.dedup_q import (
     N_HASHES,
     _cc_oracle,
@@ -40,11 +40,6 @@ from arkflow_spark.queries.dedup_q import (
     _mh_signatures,
 )
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # -------------------------------------------- quality survivorship
@@ -175,12 +170,12 @@ def documents_dedup_quality_survivorship(
         (F.col("n_members") - F.col("n_multi_clusters"))
         .cast("bigint")
         .alias("n_dup_docs"),
-        _floor4(F.col("minid_mean")).alias("minid_policy_quality"),
-        _floor4(F.col("best_mean")).alias("best_policy_quality"),
-        _floor4(F.col("canonical_best_share")).alias(
+        quantize(F.col("minid_mean"), 4).alias("minid_policy_quality"),
+        quantize(F.col("best_mean"), 4).alias("best_policy_quality"),
+        quantize(F.col("canonical_best_share"), 4).alias(
             "canonical_is_best_share"
         ),
-        _floor4(F.col("best_mean") - F.col("minid_mean")).alias(
+        quantize(F.col("best_mean") - F.col("minid_mean"), 4).alias(
             "quality_gain"
         ),
     )
@@ -267,10 +262,10 @@ def dedup_signature_slot_health(
         .agg(
             F.sum("c").cast("bigint").alias("n_docs"),
             F.count("*").cast("bigint").alias("n_distinct"),
-            _floor4(1 - F.count("*") * 1.0 / F.sum("c")).alias(
+            quantize(1 - F.count("*") * 1.0 / F.sum("c"), 4).alias(
                 "collision_rate"
             ),
-            _floor4(F.max("c") * 1.0 / F.sum("c")).alias(
+            quantize(F.max("c") * 1.0 / F.sum("c"), 4).alias(
                 "top_value_share"
             ),
         )
@@ -345,7 +340,7 @@ def dedup_cross_source_pairs(
             "source_a",
             "source_b",
             "n_pairs",
-            _floor4(F.col("n_pairs") / F.col("t")).alias("pair_share"),
+            quantize(F.col("n_pairs") / F.col("t"), 4).alias("pair_share"),
             (F.col("source_a") != F.col("source_b")).alias(
                 "is_cross_source"
             ),

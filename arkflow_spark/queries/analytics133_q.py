@@ -31,17 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ---------------------------------------------- minute availability
@@ -115,11 +106,11 @@ def events_error_minute_availability(
             F.col("month").cast("date").alias("month"),
             F.coalesce("down_minutes", F.lit(0)).alias("down_minutes"),
             month_minutes.alias("month_minutes"),
-            _floor6(
+            quantize(
                 1.0
                 - F.coalesce("down_minutes", F.lit(0))
                 * 1.0
-                / month_minutes
+                / month_minutes, 6
             ).alias("availability"),
         )
         .orderBy("month")
@@ -218,13 +209,13 @@ def supplier_leadtime_cpk(
         st.select(
             F.col("l_suppkey").alias("suppkey"),
             "n",
-            _floor4(mu).alias("mean_days"),
-            _floor4(sig).alias("std_days"),
-            _floor4((_CPK_USL - _CPK_LSL) / (6 * sig)).alias("cp"),
-            _floor4(
-                F.least(_CPK_USL - mu, mu - F.lit(_CPK_LSL)) / (3 * sig)
+            quantize(mu, 4).alias("mean_days"),
+            quantize(sig, 4).alias("std_days"),
+            quantize((_CPK_USL - _CPK_LSL) / (6 * sig), 4).alias("cp"),
+            quantize(
+                F.least(_CPK_USL - mu, mu - F.lit(_CPK_LSL)) / (3 * sig), 4
             ).alias("cpk"),
-            _floor4(F.col("oos") * 1.0 / F.col("n")).alias(
+            quantize(F.col("oos") * 1.0 / F.col("n"), 4).alias(
                 "out_of_spec_share"
             ),
         )
@@ -345,8 +336,8 @@ def lineitem_minmax_pruning_sim(
                 "pred",
                 "n_rowgroups",
                 "n_pruned",
-                _floor4(
-                    F.col("n_pruned") * 1.0 / F.col("n_rowgroups")
+                quantize(
+                    F.col("n_pruned") * 1.0 / F.col("n_rowgroups"), 4
                 ).alias("pruned_share"),
             )
         )

@@ -26,17 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ---------------------------------------------- import dependency
@@ -129,8 +120,8 @@ def nation_import_dependency_hhi(
         shares.groupBy("importer")
         .agg(
             F.count("*").cast("bigint").alias("n_partners"),
-            _floor4(F.sum(F.col("sh") * F.col("sh"))).alias("import_hhi"),
-            _floor4(F.max("sh")).alias("top_partner_share"),
+            quantize(F.sum(F.col("sh") * F.col("sh")), 4).alias("import_hhi"),
+            quantize(F.max("sh"), 4).alias("top_partner_share"),
         )
         .orderBy(F.desc("import_hhi"), "importer")
     )
@@ -231,7 +222,7 @@ def text_tfidf_keywords_by_source(
             "source",
             "rnk",
             F.col("w").alias("keyword"),
-            _floor6(F.col("score")).alias("tfidf"),
+            quantize(F.col("score"), 6).alias("tfidf"),
         )
         .orderBy("source", "rnk")
     )
@@ -363,6 +354,6 @@ def events_gap_fill_interpolate(
     return bounds.select(
         "event_type",
         "day",
-        _floor4(filled).alias("cnt_filled"),
+        quantize(filled, 4).alias("cnt_filled"),
         F.col("cnt").isNull().alias("is_interpolated"),
     ).orderBy("event_type", "day")

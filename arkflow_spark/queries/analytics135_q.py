@@ -36,13 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from arkflow_spark.functions.pq import pq_codes
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # the deterministic-codebook assignment, with the assigned codeword's
@@ -143,14 +138,14 @@ def ann_pq_quantization_error(
         .select(
             F.col("s").cast("int").alias("subspace"),
             F.col("n").cast("bigint").alias("n_vectors"),
-            _floor4(F.col("tot").cast("double") / F.col("n")).alias(
+            quantize(F.col("tot").cast("double") / F.col("n"), 4).alias(
                 "mse"
             ),
             F.col("codes_used").cast("bigint").alias("codes_used"),
-            _floor4(
-                F.col("max_c").cast("double") / F.col("n")
+            quantize(
+                F.col("max_c").cast("double") / F.col("n"), 4
             ).alias("max_code_share"),
-            _floor4(-F.col("ent_sum").cast("double")).alias(
+            quantize(-F.col("ent_sum").cast("double"), 4).alias(
                 "code_entropy"
             ),
         )
@@ -200,10 +195,10 @@ def ann_pq_reconstruction_by_label(
         .groupBy("label")
         .agg(
             F.count("*").cast("bigint").alias("n_vectors"),
-            _floor4(
-                F.sum("err").cast("double") / F.count("*")
+            quantize(
+                F.sum("err").cast("double") / F.count("*"), 4
             ).alias("mean_err"),
-            _floor4(F.max("err").cast("double")).alias("max_err"),
+            quantize(F.max("err").cast("double"), 4).alias("max_err"),
         )
         .orderBy("label")
     )

@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.queries.dedup_q import _norm_text
 from arkflow_spark.tables import load
 
@@ -49,11 +49,6 @@ _PREV_PQ = f"read_parquet('{PREV_SNAPSHOT}/documents.parquet')"
 
 _N_BANDS = 5
 _BAND_W = 150
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 @query(
@@ -272,8 +267,8 @@ def documents_snapshot_quality_drift(
             "source",
             F.col("nc").cast("bigint").alias("n_cur"),
             F.col("np").cast("bigint").alias("n_prev"),
-            _floor4(len_delta).alias("mean_len_delta"),
-            _floor4(F.col("psi_sum").cast("double")).alias(
+            quantize(len_delta, 4).alias("mean_len_delta"),
+            quantize(F.col("psi_sum").cast("double"), 4).alias(
                 "psi_length"
             ),
         )

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.queries.dedup_q import (
     BAND_SIZE,
     N_HASHES,
@@ -30,11 +30,6 @@ from arkflow_spark.queries.dedup_q import (
     _shingles,
 )
 from arkflow_spark.tables import load, register_views
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # -------------------------------------------------- FILTER clause
@@ -85,7 +80,7 @@ def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_orders",
         "n_finished",
         F.col("open_revenue").cast("double").alias("open_revenue"),
-        _floor4(F.col("avg_large")).alias("avg_large"),
+        quantize(F.col("avg_large"), 4).alias("avg_large"),
         "first_pending",
     ).orderBy("o_orderpriority")
 
@@ -339,6 +334,6 @@ def dedup_lsh_eval_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(
             F.when(F.col("is_true") & ~F.col("is_cand"), 1).otherwise(0)
         ).alias("fn"),
-        _floor4(tp * 1.0 / F.greatest(n_cand, F.lit(1))).alias("prec"),
-        _floor4(tp * 1.0 / F.greatest(n_truth, F.lit(1))).alias("recall"),
+        quantize(tp * 1.0 / F.greatest(n_cand, F.lit(1)), 4).alias("prec"),
+        quantize(tp * 1.0 / F.greatest(n_truth, F.lit(1)), 4).alias("recall"),
     )

@@ -23,14 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.queries.text_q import _lang_score_sql, text_lang_id
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # -------------------------------------------------- lang-id confusion
@@ -110,8 +105,8 @@ def text_langid_eval_confusion(
             "true_lang",
             "pred_lang",
             "n",
-            _floor4(F.col("n") * 1.0 / F.col("n_true")).alias("share"),
-            _floor4(F.col("a")).alias("accuracy"),
+            quantize(F.col("n") * 1.0 / F.col("n_true"), 4).alias("share"),
+            quantize(F.col("a"), 4).alias("accuracy"),
         )
         .orderBy("true_lang", "pred_lang")
     )
@@ -178,7 +173,7 @@ def documents_weighted_sample_ares(
         .select(
             "doc_id",
             "n_chars",
-            (F.floor(F.col("k") * 100000000 + 0.5) / 100000000).alias(
+            quantize(F.col("k"), 8).alias(
                 "sample_key"
             ),
         )

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.queries.vector_q import (
     _ORACLE_EXPLODED,
     _dot,
@@ -30,11 +30,6 @@ from arkflow_spark.queries.vector_q import (
     N_QUERIES,
 )
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # -------------------------------------------------- hard negatives
@@ -232,7 +227,7 @@ def documents_curriculum_order(
         .select(
             "doc_id",
             "n_chars",
-            _floor4(F.col("flesch")).alias("flesch"),
+            quantize(F.col("flesch"), 4).alias("flesch"),
             "r_len",
             "r_hard",
         )
@@ -246,7 +241,7 @@ def documents_curriculum_order(
         "doc_id",
         "n_chars",
         "flesch",
-        _floor4(F.col("__diff")).alias("difficulty"),
+        quantize(F.col("__diff"), 4).alias("difficulty"),
         F.col(RN).alias("curriculum_rank"),
         exact_ntile(F.col(RN), F.col(N), 4).alias("stage"),
     ).orderBy("curriculum_rank")
@@ -306,9 +301,9 @@ def events_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mom.select(
         "event_type",
         "n",
-        _floor4(mean).alias("mean_value"),
-        _floor4(var).alias("variance"),
-        _floor4(mde).alias("mde"),
+        quantize(mean, 4).alias("mean_value"),
+        quantize(var, 4).alias("variance"),
+        quantize(mde, 4).alias("mde"),
         F.ceil(2 * _Z_SUM_SQ * var / (mde * mde))
         .cast("bigint")
         .alias("n_per_arm"),

@@ -24,13 +24,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from arkflow_spark.functions import distributed_rank as dr
-from arkflow_spark.queries.base import DUCK_TS_FMT, SPARK_TS_FMT, query
+from arkflow_spark.queries.base import (
+    DUCK_TS_FMT,
+    SPARK_TS_FMT,
+    quantize,
+    query,
+)
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # -------------------------------------------------- AR(2) fit + forecast
@@ -185,11 +185,11 @@ def events_ar2_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corr.select(
         "event_type",
         "n",
-        _floor4(F.col("r1")).alias("r1"),
-        _floor4(F.col("r2")).alias("r2"),
-        _floor4(phi1).alias("phi1"),
-        _floor4(phi2).alias("phi2"),
-        _floor4(forecast).alias("forecast_next"),
+        quantize(F.col("r1"), 4).alias("r1"),
+        quantize(F.col("r2"), 4).alias("r2"),
+        quantize(phi1, 4).alias("phi1"),
+        quantize(phi2, 4).alias("phi2"),
+        quantize(forecast, 4).alias("forecast_next"),
     ).orderBy("event_type")
 
 
@@ -316,8 +316,8 @@ def events_incident_mtbf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sp.agg(
         F.count("*").alias("n_incidents"),
         F.sum("n_errors").alias("n_errors"),
-        _floor4(F.avg(dur_us) / 1000000).alias("mttr_s"),
-        _floor4(F.avg("gap_us") / 1000000).alias("mtbf_s"),
+        quantize(F.avg(dur_us) / 1000000, 4).alias("mttr_s"),
+        quantize(F.avg("gap_us") / 1000000, 4).alias("mtbf_s"),
         F.expr("max(unix_micros(cast(ended as timestamp)) "
                "- unix_micros(cast(started as timestamp))) div 1000000")
         .alias("worst_incident_s"),

@@ -24,13 +24,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import DUCK_TS_FMT, SPARK_TS_FMT, query
+from arkflow_spark.queries.base import (
+    DUCK_TS_FMT,
+    SPARK_TS_FMT,
+    quantize,
+    query,
+)
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # -------------------------------------------------- DAU / MAU
@@ -176,7 +176,7 @@ def events_dau_mau_stickiness(
             dau["d"].alias("day_num"),
             "dau",
             "mau",
-            _floor4(F.col("dau") * 1.0 / F.col("mau")).alias(
+            quantize(F.col("dau") * 1.0 / F.col("mau"), 4).alias(
                 "stickiness"
             ),
         )
@@ -240,9 +240,9 @@ def text_code_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     lines = F.regexp_count(F.col("text"), F.lit("\n")) + 1
     return d.select(
         "doc_id",
-        _floor4(n_symbols * 1.0 / n).alias("symbol_density"),
+        quantize(n_symbols * 1.0 / n, 4).alias("symbol_density"),
         kw_hits.alias("kw_hits"),
-        _floor4(indented * 1.0 / lines).alias("indent_share"),
+        quantize(indented * 1.0 / lines, 4).alias("indent_share"),
         (
             (n_symbols * 20 > n)
             | (kw_hits >= 3)

@@ -24,13 +24,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import DUCK_TS_FMT, SPARK_TS_FMT, query
+from arkflow_spark.queries.base import (
+    DUCK_TS_FMT,
+    SPARK_TS_FMT,
+    quantize,
+    query,
+)
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # -------------------------------------------------- snapshot diff
@@ -202,7 +202,7 @@ def events_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             F.date_format("h", SPARK_TS_FMT).alias("h"),
             "c",
-            _floor4((F.col("c") - F.col("mu")) / F.col("sd")).alias("z"),
+            quantize((F.col("c") - F.col("mu")) / F.col("sd"), 4).alias("z"),
         )
         .orderBy("event_type", "h")
     )
@@ -259,8 +259,8 @@ def events_apdex_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n"),
             sat.alias("satisfied"),
             tol.alias("tolerating"),
-            _floor4(
-                (sat + tol * 0.5) / F.count("*")
+            quantize(
+                (sat + tol * 0.5) / F.count("*"), 4
             ).alias("apdex"),
         )
         .orderBy("event_type")

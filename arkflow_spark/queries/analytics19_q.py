@@ -23,13 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # -------------------------------------------------- PSI drift
@@ -164,7 +159,7 @@ def events_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         shares.groupBy("event_type")
         .agg(
             F.count("*").alias("n_bins"),
-            _floor4(psi).alias("psi"),
+            quantize(psi, 4).alias("psi"),
             (psi > 0.2).alias("drifted"),
         )
         .orderBy("event_type")
@@ -224,7 +219,7 @@ def lineitem_margin_waterfall(
         F.col("l_tax"),
     )
     q4 = lambda c: F.sum(
-        (F.floor(c * 10000 + 0.5) / 10000).cast("decimal(18,4)")
+        quantize(c, 4).cast("decimal(18,4)")
     )
     m = li.groupBy(F.year("l_shipdate").alias("yr")).agg(
         F.sum(ep.cast("decimal(18,2)")).alias("gross"),
@@ -347,14 +342,14 @@ def orders_mix_shift_decomposition(
     )
     return wide.select(
         "seg",
-        _floor4(F.col("share_pre")).alias("share_pre"),
-        _floor4(F.col("share_post")).alias("share_post"),
-        _floor4(F.col("avg_pre")).alias("avg_pre"),
-        _floor4(F.col("avg_post")).alias("avg_post"),
-        _floor4(
-            (F.col("share_post") - F.col("share_pre")) * F.col("avg_pre")
+        quantize(F.col("share_pre"), 4).alias("share_pre"),
+        quantize(F.col("share_post"), 4).alias("share_post"),
+        quantize(F.col("avg_pre"), 4).alias("avg_pre"),
+        quantize(F.col("avg_post"), 4).alias("avg_post"),
+        quantize(
+            (F.col("share_post") - F.col("share_pre")) * F.col("avg_pre"), 4
         ).alias("mix_effect"),
-        _floor4(
-            F.col("share_post") * (F.col("avg_post") - F.col("avg_pre"))
+        quantize(
+            F.col("share_post") * (F.col("avg_post") - F.col("avg_pre")), 4
         ).alias("rate_effect"),
     ).orderBy("seg")

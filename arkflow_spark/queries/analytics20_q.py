@@ -28,11 +28,6 @@ from arkflow_spark.queries.dedup_q import _ORACLE_SHINGLES, _shingles
 from arkflow_spark.tables import load
 
 
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
 # -------------------------------------------------- threshold curve
 
 _CURVE_THRESHOLDS = (0.5, 0.6, 0.7, 0.8, 0.9)

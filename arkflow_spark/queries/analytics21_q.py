@@ -15,13 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 _SEASON_LAG = 24  # hours
@@ -119,16 +114,16 @@ def events_forecast_eval_wape(
     return scored.select(
         "event_type",
         "n_eval",
-        _floor4(F.col("ae_naive") * 1.0 / F.col("actual_mass")).alias(
+        quantize(F.col("ae_naive") * 1.0 / F.col("actual_mass"), 4).alias(
             "wape_naive"
         ),
-        _floor4(F.col("ae_snaive") * 1.0 / F.col("actual_mass")).alias(
+        quantize(F.col("ae_snaive") * 1.0 / F.col("actual_mass"), 4).alias(
             "wape_snaive"
         ),
-        _floor4(F.col("sm_naive") / F.col("n_eval")).alias(
+        quantize(F.col("sm_naive") / F.col("n_eval"), 4).alias(
             "smape_naive"
         ),
-        _floor4(F.col("sm_snaive") / F.col("n_eval")).alias(
+        quantize(F.col("sm_snaive") / F.col("n_eval"), 4).alias(
             "smape_snaive"
         ),
         F.when(

@@ -19,7 +19,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import DUCK_TS_FMT, SPARK_TS_FMT, query
+from arkflow_spark.queries.base import (
+    DUCK_TS_FMT,
+    SPARK_TS_FMT,
+    quantize,
+    query,
+)
 from arkflow_spark.tables import load
 
 _AES_KEY = "0123456789abcdef"  # 16-byte demo key (vault-managed in prod)
@@ -142,7 +147,7 @@ def orders_duplicate_payments(
             pa.alias("amount_a"),
             pb.alias("amount_b"),
             gap.alias("day_gap"),
-            (F.floor(rel * 10000 + 0.5) / 10000).alias(
+            quantize(rel, 4).alias(
                 "rel_amount_diff"
             ),
             # integer-free exact comparison: |d|*100 <= max(a,b)  <=>

@@ -19,13 +19,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import DUCK_TS_FMT, SPARK_TS_FMT, query
+from arkflow_spark.queries.base import (
+    DUCK_TS_FMT,
+    SPARK_TS_FMT,
+    quantize,
+    query,
+)
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 @query(
@@ -115,7 +115,7 @@ def orders_seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         ratios.groupBy("cal_month")
         .agg(
             F.count("*").alias("n_years"),
-            _floor4(F.avg("ratio")).alias("seasonal_index"),
+            quantize(F.avg("ratio"), 4).alias("seasonal_index"),
         )
         .orderBy("cal_month")
     )
@@ -173,7 +173,7 @@ def lineitem_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
         shares.groupBy("l_partkey")
         .agg(
             F.count("*").alias("n_suppliers"),
-            _floor4(hhi).alias("hhi"),
+            quantize(hhi, 4).alias("hhi"),
             (hhi > 0.25).alias("concentrated"),
         )
         .orderBy("l_partkey")

@@ -19,13 +19,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import DUCK_TS_FMT, SPARK_TS_FMT, query
+from arkflow_spark.queries.base import (
+    DUCK_TS_FMT,
+    SPARK_TS_FMT,
+    quantize,
+    query,
+)
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 _BAND_QS = (0.1, 0.5, 0.9)
@@ -203,11 +203,11 @@ def events_retention_halflife(
     )
     return mom.select(
         F.col("n").alias("n_points"),
-        _floor4(-slope).alias("decay_b"),
-        _floor4(
+        quantize(-slope, 4).alias("decay_b"),
+        quantize(
             F.when(
                 slope < -1e-9,
                 F.lit(0.6931471805599453) / (-slope),
-            )
+            ), 4
         ).alias("halflife_days"),
     )

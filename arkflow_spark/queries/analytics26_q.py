@@ -14,13 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 _CUPED_CUTOVER = "2024-01-16"
@@ -107,21 +102,21 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     vary_n = n * syy - sy * sy
     return mom.select(
         n.alias("n_users"),
-        _floor4(F.try_divide(cov_n, varx_n)).alias("theta"),
+        quantize(F.try_divide(cov_n, varx_n), 4).alias("theta"),
         # try_divide on the n-1 / varx_n denominators too: a 1-user or
         # zero-pre-period-variance input must yield NULL (DuckDB's /0
         # semantics), not a DIVIDE_BY_ZERO error under ANSI mode.
-        _floor4(
-            F.try_divide(syy - F.try_divide(sy * sy, n), n - 1)
+        quantize(
+            F.try_divide(syy - F.try_divide(sy * sy, n), n - 1), 4
         ).alias("var_y"),
-        _floor4(
+        quantize(
             F.try_divide(
                 (syy - F.try_divide(sy * sy, n))
                 - F.try_divide(cov_n * cov_n, n * 1.0 * varx_n),
                 n - 1,
-            )
+            ), 4
         ).alias("var_y_adj"),
-        _floor4(
-            F.try_divide(cov_n * cov_n * 1.0, varx_n * vary_n)
+        quantize(
+            F.try_divide(cov_n * cov_n * 1.0, varx_n * vary_n), 4
         ).alias("variance_reduction"),
     )

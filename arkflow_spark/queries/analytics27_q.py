@@ -24,17 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # -------------------------------------------------- backlog burndown
@@ -231,7 +222,7 @@ def events_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     resamples = drawn.groupBy("event_type", "b").agg(
         (
             F.sum(
-                _floor6(F.col("w") * F.col("value")).cast("decimal(28,6)")
+                quantize(F.col("w") * F.col("value"), 6).cast("decimal(28,6)")
             ).cast("double")
             / F.nullif(F.sum("w"), F.lit(0))
         ).alias("m")
@@ -241,7 +232,7 @@ def events_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     pw = Window.partitionBy("event_type")
     ranked = (
         resamples.filter(F.col("m").isNotNull())
-        .select("event_type", _floor6(F.col("m")).alias("m"), "b")
+        .select("event_type", quantize(F.col("m"), 6).alias("m"), "b")
         .withColumn(
             "rn",
             F.row_number().over(pw.orderBy("m", "b")),
@@ -251,9 +242,9 @@ def events_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ranked.groupBy("event_type", "b_eff")
         .agg(
-            _floor4(
+            quantize(
                 F.sum(F.col("m").cast("decimal(28,6)")).cast("double")
-                / F.col("b_eff")
+                / F.col("b_eff"), 4
             ).alias("boot_mean"),
             F.max(F.when(F.col("rn") == 2, F.col("m"))).alias("ci_lo"),
             F.max(
@@ -325,10 +316,10 @@ def lineitem_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .select(
             "p_brand",
-            _floor6(
-                F.log(F.col("l_extendedprice") / F.col("l_quantity"))
+            quantize(
+                F.log(F.col("l_extendedprice") / F.col("l_quantity")), 6
             ).alias("x"),
-            _floor6(F.log("l_quantity")).alias("y"),
+            quantize(F.log("l_quantity"), 6).alias("y"),
         )
     )
     mom = obs.groupBy("p_brand").agg(
@@ -336,21 +327,21 @@ def lineitem_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("x").cast("decimal(28,6)")).cast("double").alias("sx"),
         F.sum(F.col("y").cast("decimal(28,6)")).cast("double").alias("sy"),
         F.sum(
-            _floor6(F.col("x") * F.col("y")).cast("decimal(28,6)")
+            quantize(F.col("x") * F.col("y"), 6).cast("decimal(28,6)")
         ).cast("double").alias("sxy"),
         F.sum(
-            _floor6(F.col("x") * F.col("x")).cast("decimal(28,6)")
+            quantize(F.col("x") * F.col("x"), 6).cast("decimal(28,6)")
         ).cast("double").alias("sxx"),
     )
     n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
     return mom.select(
         "p_brand",
         n.cast("bigint").alias("n"),
-        _floor4(
+        quantize(
             F.try_divide(
                 n * F.col("sxy") - sx * sy,
                 n * F.col("sxx") - sx * sx,
-            )
+            ), 4
         ).alias("elasticity"),
     ).orderBy("p_brand")
 
@@ -423,9 +414,9 @@ def documents_quality_threshold_sweep(
     )
     scored = d.select(
         "n_chars",
-        _floor4(
+        quantize(
             F.least(n_words / 100.0, F.lit(1.0)) * 0.5
-            + F.least(n_stop * 5.0 / n_words, F.lit(1.0)) * 0.5
+            + F.least(n_stop * 5.0 / n_words, F.lit(1.0)) * 0.5, 4
         ).alias("score"),
     )
     hist = scored.groupBy("score").agg(
@@ -457,7 +448,7 @@ def documents_quality_threshold_sweep(
             F.col("t").alias("threshold"),
             "docs_kept",
             "chars_kept",
-            _floor4(F.col("docs_kept") * 1.0 / total).alias("pct_docs"),
+            quantize(F.col("docs_kept") * 1.0 / total, 4).alias("pct_docs"),
         )
         .orderBy("threshold")
     )

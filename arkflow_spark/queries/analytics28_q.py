@@ -22,21 +22,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.queries.dedup_q import (
     N_HASHES,
     _ORACLE_SHINGLES,
 )
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # -------------------------------------------------- LSH band sweep
@@ -152,8 +143,8 @@ def dedup_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bands",
         "rows_per_band",
         "n_candidates",
-        _floor4(
-            F.pow(1.0 / F.col("bands"), 1.0 / F.col("rows_per_band"))
+        quantize(
+            F.pow(1.0 / F.col("bands"), 1.0 / F.col("rows_per_band")), 4
         ).alias("est_threshold"),
     ).orderBy(F.desc("bands"))
 
@@ -242,7 +233,7 @@ def events_lateness_watermark_audit(
         ranked.groupBy("event_type", "n")
         .agg(
             F.sum(late).cast("bigint").alias("n_late"),
-            _floor4(F.sum(late) * 1.0 / F.col("n")).alias("pct_late"),
+            quantize(F.sum(late) * 1.0 / F.col("n"), 4).alias("pct_late"),
             at(0.50).alias("p50_late_s"),
             at(0.95).alias("p95_late_s"),
             at(0.99).alias("p99_late_s"),
@@ -327,7 +318,7 @@ def customer_interpurchase_gaps(
         .agg(F.count("*").cast("bigint").alias("n_gaps"))
         .withColumn(
             "segment_share",
-            _floor4(F.col("n_gaps") * 1.0 / F.sum("n_gaps").over(sw)),
+            quantize(F.col("n_gaps") * 1.0 / F.sum("n_gaps").over(sw), 4),
         )
         .orderBy("c_mktsegment", "gap_bucket")
     )
@@ -395,15 +386,15 @@ def lineitem_discount_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("l_discount") * 100 + 0.5)
         .cast("integer")
         .alias("disc_pct"),
-        _floor6(
-            F.col("l_extendedprice") * (1 - F.col("l_discount"))
+        quantize(
+            F.col("l_extendedprice") * (1 - F.col("l_discount")), 6
         ).alias("y"),
     )
     grp = obs.groupBy("disc_pct").agg(
         F.count("*").alias("n_g"),
         F.sum(F.col("y").cast("decimal(28,6)")).cast("double").alias("s_g"),
         F.sum(
-            _floor6(F.col("y") * F.col("y")).cast("decimal(28,6)")
+            quantize(F.col("y") * F.col("y"), 6).cast("decimal(28,6)")
         ).cast("double").alias("ss_g"),
     )
     terms = grp.withColumn(
@@ -424,13 +415,13 @@ def lineitem_discount_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
         n.alias("n"),
         # single product denominators: a 1-level (k=1) or saturated
         # (n=k) input yields NULL via try_divide, never DIVIDE_BY_ZERO
-        _floor4(
+        quantize(
             F.try_divide(
                 (sq - s * s / n) * (n - k),
                 (k - 1) * (ss - sq),
-            )
+            ), 4
         ).alias("f_stat"),
-        _floor4(F.try_divide(sq - s * s / n, ss - s * s / n)).alias(
+        quantize(F.try_divide(sq - s * s / n, ss - s * s / n), 4).alias(
             "eta_sq"
         ),
     )

@@ -23,17 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # --------------------------------------------- hash-priority sample
@@ -258,16 +249,16 @@ def events_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         thr, ["event_type", "k"]
     )
     logsum = F.sum(
-        _floor6(F.log(F.col("value") / F.col("x_k1"))).cast(
+        quantize(F.log(F.col("value") / F.col("x_k1")), 6).cast(
             "decimal(28,6)"
         )
     ).cast("double")
     return (
         joined.groupBy("event_type", "k")
         .agg(
-            _floor4(logsum / F.col("k")).alias("hill_inv_alpha"),
+            quantize(logsum / F.col("k"), 4).alias("hill_inv_alpha"),
             # an all-equal top-k has a zero log-sum: NULL, never an error
-            _floor4(F.try_divide(F.col("k") * 1.0, logsum)).alias(
+            quantize(F.try_divide(F.col("k") * 1.0, logsum), 4).alias(
                 "tail_index"
             ),
         )
@@ -336,7 +327,7 @@ def orders_otif_fill_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").cast("bigint").alias("n_orders"),
             F.sum(on_time).cast("bigint").alias("n_on_time"),
-            _floor4(F.sum(on_time) * 1.0 / F.count("*")).alias(
+            quantize(F.sum(on_time) * 1.0 / F.count("*"), 4).alias(
                 "fill_rate"
             ),
         )

@@ -25,15 +25,10 @@ from pyspark.sql import functions as F
 from arkflow_spark.queries.base import (
     DUCK_TS_FMT,
     SPARK_TS_FMT,
+    quantize,
     query,
 )
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (both engines floor the same
-    double, so there is exactly one representable answer)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # -------------------------------------------------- sequence patterns
@@ -295,15 +290,15 @@ def events_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return v.select(
         "event_type",
         F.col("n1").alias("n_group"),
-        _floor4(F.col("m1")).alias("mean_group"),
-        _floor4(F.col("m0")).alias("mean_rest"),
-        _floor4((F.col("m1") - F.col("m0")) / F.sqrt(se2)).alias("t_stat"),
-        _floor4(
+        quantize(F.col("m1"), 4).alias("mean_group"),
+        quantize(F.col("m0"), 4).alias("mean_rest"),
+        quantize((F.col("m1") - F.col("m0")) / F.sqrt(se2), 4).alias("t_stat"),
+        quantize(
             F.pow(se2, 2)
             / (
                 F.pow(F.col("v1") / F.col("n1"), 2) / (F.col("n1") - 1)
                 + F.pow(F.col("v0") / F.col("n0"), 2) / (F.col("n0") - 1)
-            )
+            ), 4
         ).alias("df_welch"),
     ).orderBy("event_type")
 
@@ -416,8 +411,8 @@ def events_seasonal_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         hr.alias("hr"),
         "value",
-        _floor4(sm).alias("seasonal_mean"),
-        _floor4(F.col("value") - sm).alias("residual"),
+        quantize(sm, 4).alias("seasonal_mean"),
+        quantize(F.col("value") - sm, 4).alias("residual"),
     ).orderBy("event_id")
 
 
@@ -504,8 +499,8 @@ def lineitem_abc_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_parts"),
             F.sum("rev").cast("double").alias("class_revenue"),
-            _floor4(
-                F.sum("rev").cast("double") / F.max("tot").cast("double")
+            quantize(
+                F.sum("rev").cast("double") / F.max("tot").cast("double"), 4
             ).alias("revenue_share"),
         )
         .orderBy("abc_class")
@@ -552,9 +547,9 @@ def events_histogram_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_points"),
             F.min("value").alias("lo"),
             F.max("value").alias("hi"),
-            _floor4(
+            quantize(
                 F.sum(F.col("value").cast("decimal(18,6)")).cast("double")
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("mean_value"),
         )
         .orderBy("event_type", "quartile")
@@ -597,22 +592,23 @@ def agg_geo_harmonic_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.groupBy("event_type")
         .agg(
             n.alias("n"),
-            _floor4(
-                F.sum(F.col("value").cast("decimal(18,6)")).cast("double") / n
+            quantize(
+                F.sum(F.col("value").cast("decimal(18,6)")).cast("double")
+                / n, 4
             ).alias("arith_mean"),
-            _floor4(
+            quantize(
                 F.exp(
                     F.sum(F.log(F.col("value")).cast("decimal(18,6)")).cast(
                         "double"
                     )
                     / n
-                )
+                ), 4
             ).alias("geo_mean"),
-            _floor4(
+            quantize(
                 n
                 / F.sum((F.lit(1.0) / F.col("value")).cast("decimal(18,6)")).cast(
                     "double"
-                )
+                ), 4
             ).alias("harm_mean"),
         )
         .orderBy("event_type")

@@ -33,14 +33,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.queries.text_q import TOKEN_RE
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------- exact-substring dup spans
@@ -130,7 +125,7 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").cast("bigint").alias("n_spans"),
             F.count("dup").cast("bigint").alias("n_dup_spans"),
-            _floor4(F.count("dup") * 1.0 / F.count("*")).alias("dup_frac"),
+            quantize(F.count("dup") * 1.0 / F.count("*"), 4).alias("dup_frac"),
         )
         .orderBy("doc_id")
     )
@@ -215,14 +210,9 @@ def documents_ccnet_ppl_buckets(
         .crossJoin(F.broadcast(total))
         .groupBy("doc_id", "lang")
         .agg(
-            (
-                F.floor(
-                    F.sum(nll.cast("decimal(18,6)")).cast("double")
-                    / F.count("*")
-                    * 10000
-                    + 0.5
-                )
-                / 10000
+            quantize(
+                F.sum(nll.cast("decimal(18,6)")).cast("double")
+                / F.count("*"), 4
             ).alias("avg_nll")
         )
     )
@@ -243,9 +233,9 @@ def documents_ccnet_ppl_buckets(
             F.count("*").cast("bigint").alias("n_docs"),
             F.min("avg_nll").alias("min_nll"),
             F.max("avg_nll").alias("max_nll"),
-            _floor4(
+            quantize(
                 F.sum(F.col("avg_nll").cast("decimal(18,4)")).cast("double")
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("mean_nll"),
         )
         .select(
@@ -350,12 +340,12 @@ def dedup_edit_distance_blocked(
             F.col("a.doc_id").alias("doc_a"),
             F.col("c.doc_id").alias("doc_b"),
             dist.cast("bigint").alias("edit_dist"),
-            _floor4(
+            quantize(
                 1
                 - F.try_divide(
                     dist * 1.0,
                     F.greatest(F.length(head_a), F.length(head_c)),
-                )
+                ), 4
             ).alias("similarity"),
         )
         .orderBy("doc_a", "doc_b")
@@ -431,7 +421,7 @@ def documents_tokenizer_fertility(
         "lang",
         n_tok.alias("n_tokens"),
         n_words.alias("n_words"),
-        _floor4(n_tok * 1.0 / n_words).alias("fertility"),
+        quantize(n_tok * 1.0 / n_words, 4).alias("fertility"),
     )
     pw = Window.partitionBy("lang")
     ranked = per_doc.withColumn(
@@ -443,11 +433,11 @@ def documents_tokenizer_fertility(
             F.count("*").cast("bigint").alias("n_docs"),
             F.sum("n_tokens").cast("bigint").alias("total_tokens"),
             F.sum("n_words").cast("bigint").alias("total_words"),
-            _floor4(
+            quantize(
                 F.sum(F.col("fertility").cast("decimal(18,4)")).cast(
                     "double"
                 )
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("mean_fertility"),
             F.max(
                 F.when(

@@ -29,17 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ----------------------------------------------------- Gini coefficient
@@ -92,7 +83,7 @@ def events_gini_concentration(
     """
     e = load(spark, sf_dir, "events")
     per_user = e.groupBy("event_type", "user_id").agg(
-        F.sum(_floor6(F.col("value")).cast("decimal(18,6)"))
+        F.sum(quantize(F.col("value"), 6).cast("decimal(18,6)"))
         .cast("double")
         .alias("x")
     )
@@ -109,10 +100,10 @@ def events_gini_concentration(
         ranked.groupBy("event_type")
         .agg(
             n.cast("bigint").alias("n_users"),
-            _floor4(sum_x).alias("total_value"),
-            _floor4(
+            quantize(sum_x, 4).alias("total_value"),
+            quantize(
                 F.try_divide(2.0 * sum_ix, n * sum_x)
-                - (n + 1.0) / n
+                - (n + 1.0) / n, 4
             ).alias("gini"),
         )
         .orderBy("event_type")
@@ -177,7 +168,7 @@ def events_spc_xmr_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical in both engines.
     """
     e = load(spark, sf_dir, "events")
-    x = _floor6(F.col("value"))
+    x = quantize(F.col("value"), 6)
     seq = e.select(
         "event_type",
         x.alias("x"),
@@ -187,11 +178,11 @@ def events_spc_xmr_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stats = seq.groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("n_points"),
-        _floor4(
+        quantize(
             F.sum(F.col("x").cast("decimal(18,6)")).cast("double")
-            / F.count("*")
+            / F.count("*"), 4
         ).alias("xbar"),
-        _floor4(
+        quantize(
             F.try_divide(
                 F.sum(
                     F.abs(F.col("x") - F.col("prev")).cast(
@@ -199,11 +190,11 @@ def events_spc_xmr_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
                 ).cast("double"),
                 F.count("prev"),
-            )
+            ), 4
         ).alias("mrbar"),
     )
-    ucl = _floor4(F.col("xbar") + _XMR_K * F.col("mrbar"))
-    lcl = _floor4(F.col("xbar") - _XMR_K * F.col("mrbar"))
+    ucl = quantize(F.col("xbar") + _XMR_K * F.col("mrbar"), 4)
+    lcl = quantize(F.col("xbar") - _XMR_K * F.col("mrbar"), 4)
     limits = stats.select(
         "event_type",
         "n_points",
@@ -290,11 +281,11 @@ def events_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("h"),
     ).agg(
-        _floor6(
-            F.sum(_floor6(F.col("value")).cast("decimal(18,6)")).cast(
+        quantize(
+            F.sum(quantize(F.col("value"), 6).cast("decimal(18,6)")).cast(
                 "double"
             )
-            / F.count("*")
+            / F.count("*"), 6
         ).alias("y")
     ).persist()  # both sides of the pair join — scan the raw stream once
     a = hourly.alias("a")
@@ -307,8 +298,8 @@ def events_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("a.h") < F.col("b.h")),
     ).select(
         F.col("a.event_type").alias("event_type"),
-        _floor6(
-            (F.col("b.y") - F.col("a.y")) / (F.col("b.h") - F.col("a.h"))
+        quantize(
+            (F.col("b.y") - F.col("a.y")) / (F.col("b.h") - F.col("a.h")), 6
         ).alias("slope"),
     )
     # r8 optimization round: the lower-median SLOPE VALUE is the k-th
@@ -417,10 +408,10 @@ def events_burstiness_fano(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n_minutes",
         "n_events",
-        _floor4(mean).alias("mean_rate"),
-        _floor4(var).alias("var_rate"),
-        _floor4(var / mean).alias("fano"),
-        _floor4(F.try_divide(sigma - mean, sigma + mean)).alias(
+        quantize(mean, 4).alias("mean_rate"),
+        quantize(var, 4).alias("var_rate"),
+        quantize(var / mean, 4).alias("fano"),
+        quantize(F.try_divide(sigma - mean, sigma + mean), 4).alias(
             "burstiness"
         ),
     ).orderBy("event_type")

@@ -33,17 +33,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
 
 DIM = 64
 N_QUERIES = 5
 TOP_K = 10
 RERANK_POOL = 30  # Hamming candidates reranked exactly
-
-
-def _floor4(col):
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 def _fold_sum(terms):
@@ -297,7 +293,7 @@ def ann_binary_hamming_topk(
             "query_id",
             "cand_id",
             "hamming",
-            _floor4(F.col("cos_raw")).alias("cosine"),
+            quantize(F.col("cos_raw"), 4).alias("cosine"),
             F.col("rnk").cast("bigint").alias("rnk"),
         )
         .orderBy("query_id", "rnk")
@@ -381,7 +377,7 @@ def embedding_label_outliers(
     cent = x.groupBy("label", "i").agg(
         (
             F.sum(
-                (F.floor(F.col("v") * 1000000 + 0.5) / 1000000).cast(
+                quantize(F.col("v"), 6).cast(
                     "decimal(18,6)"
                 )
             ).cast("double")
@@ -410,7 +406,7 @@ def embedding_label_outliers(
         .select(
             "label",
             "vec_id",
-            _floor4(F.sqrt("d2")).alias("centroid_dist"),
+            quantize(F.sqrt("d2"), 4).alias("centroid_dist"),
             F.col("rnk").cast("bigint").alias("rnk"),
         )
         .orderBy("label", "rnk")
@@ -489,7 +485,7 @@ def graph_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("log2_bucket")
     ).agg(F.count("*").alias("n_nodes"))
-    ly = F.floor(F.log(2.0, "n_nodes") * 1000000 + 0.5) / 1000000
+    ly = quantize(F.log(2.0, "n_nodes"), 6)
     pts = pts.select(
         "log2_bucket",
         "n_nodes",
@@ -504,10 +500,7 @@ def graph_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("sxx"),
         F.sum(
-            (
-                F.floor(F.col("lx") * F.col("ly") * 1000000 + 0.5)
-                / 1000000
-            ).cast("decimal(18,6)")
+            quantize(F.col("lx") * F.col("ly"), 6).cast("decimal(18,6)")
         )
         .cast("double")
         .alias("sxy"),
@@ -521,7 +514,7 @@ def graph_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "log2_bucket",
             F.col("n_nodes").cast("bigint").alias("n_nodes"),
-            _floor4(slope).alias("loglog_slope"),
+            quantize(slope, 4).alias("loglog_slope"),
         )
         .orderBy("log2_bucket")
     )

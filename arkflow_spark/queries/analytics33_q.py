@@ -26,13 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------------- filter funnel
@@ -172,10 +167,10 @@ def documents_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s.n_in").alias("n_in"),
             F.col("s.n_kept").alias("n_kept"),
             (F.col("s.n_in") - F.col("s.n_kept")).alias("n_dropped"),
-            _floor4(
+            quantize(
                 F.try_divide(
                     F.col("s.n_in") - F.col("s.n_kept"), F.col("s.n_in")
-                )
+                ), 4
             ).alias("drop_frac"),
         )
         .orderBy("stage_idx")
@@ -301,9 +296,9 @@ def events_topk_drift_jaccard(
             F.col("s1.n").cast("bigint").alias("n_prev"),
             F.col("s2.n").cast("bigint").alias("n_curr"),
             n_common.cast("bigint").alias("n_common"),
-            _floor4(
+            quantize(
                 n_common * 1.0
-                / (F.col("s1.n") + F.col("s2.n") - n_common)
+                / (F.col("s1.n") + F.col("s2.n") - n_common), 4
             ).alias("jaccard"),
         )
         .orderBy("event_type", "day")
@@ -374,18 +369,13 @@ def orders_open_aging_buckets(
         .when(F.col("age_days") <= 90, "61-90")
         .otherwise("90+")
     )
-    cents = F.floor(F.col("o_totalprice") * 100 + 0.5) / 100
+    cents = quantize(F.col("o_totalprice"), 2)
     return (
         open_orders.groupBy("priority", bucket.alias("age_bucket"))
         .agg(
             F.count("*").cast("bigint").alias("n_orders"),
-            (
-                F.floor(
-                    F.sum(cents.cast("decimal(18,2)")).cast("double")
-                    * 100
-                    + 0.5
-                )
-                / 100
+            quantize(
+                F.sum(cents.cast("decimal(18,2)")).cast("double"), 2
             ).alias("open_value"),
         )
         .orderBy("priority", "age_bucket")
@@ -462,11 +452,11 @@ def text_mixed_script_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_latin").cast("bigint").alias("total_latin"),
             F.sum("n_cjk").cast("bigint").alias("total_cjk"),
             F.sum("n_digit").cast("bigint").alias("total_digit"),
-            _floor4(
+            quantize(
                 F.try_divide(
                     F.sum("n_cjk") * 1.0,
                     F.sum("n_latin") + F.sum("n_cjk"),
-                )
+                ), 4
             ).alias("cjk_share"),
         )
         .orderBy("lang")

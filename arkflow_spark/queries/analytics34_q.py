@@ -28,17 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ------------------------------------------- supplier lead-time card
@@ -109,16 +100,11 @@ def supplier_lead_time_scorecard(
         .groupBy(F.col("s_name").alias("supplier"))
         .agg(
             F.count("*").cast("bigint").alias("n_lines"),
-            (
-                F.floor(
-                    F.sum(F.col("lead_days").cast("decimal(18,2)")).cast(
-                        "double"
-                    )
-                    / F.count("*")
-                    * 100
-                    + 0.5
+            quantize(
+                F.sum(F.col("lead_days").cast("decimal(18,2)")).cast(
+                    "double"
                 )
-                / 100
+                / F.count("*"), 2
             ).alias("mean_lead_days"),
             F.max(
                 F.when(
@@ -129,14 +115,14 @@ def supplier_lead_time_scorecard(
             )
             .cast("bigint")
             .alias("p90_lead_days"),
-            _floor4(
+            quantize(
                 F.sum(
                     F.when(F.col("lead_days") > _LATE_DAYS, 1).otherwise(
                         0
                     )
                 )
                 * 1.0
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("late_rate"),
         )
         .orderBy("supplier")
@@ -238,13 +224,7 @@ def lineitem_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from arkflow_spark.functions.distributed_rank import with_global_order
 
     li = load(spark, sf_dir, "lineitem")
-    cents = (
-        F.floor(
-            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-            + 0.5
-        )
-        / 100
-    )
+    cents = quantize(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2)
     rev = li.groupBy("l_partkey").agg(
         F.sum(cents.cast("decimal(18,2)")).alias("revenue")
     )
@@ -277,15 +257,15 @@ def lineitem_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = F.count("*")
     s1 = F.sum(F.col("q").cast("decimal(18,2)")).cast("double")
     s2 = F.sum(
-        (F.floor(F.col("q") * F.col("q") * 100 + 0.5) / 100).cast(
+        quantize(F.col("q") * F.col("q"), 2).cast(
             "decimal(28,2)"
         )
     ).cast("double")
     mean = s1 / n
-    cv = _floor4(
+    cv = quantize(
         F.when((n < 2) | (s1 == 0), None).otherwise(
             F.sqrt(s2 / n - mean * mean) / mean
-        )
+        ), 4
     )
     xyz_cls = weekly.groupBy("l_partkey").agg(cv.alias("cv")).select(
         "l_partkey",
@@ -300,15 +280,10 @@ def lineitem_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("abc", "xyz")
         .agg(
             F.count("*").cast("bigint").alias("n_parts"),
-            (
-                F.floor(
-                    F.sum(F.col("revenue").cast("decimal(18,2)")).cast(
-                        "double"
-                    )
-                    * 100
-                    + 0.5
-                )
-                / 100
+            quantize(
+                F.sum(F.col("revenue").cast("decimal(18,2)")).cast(
+                    "double"
+                ), 2
             ).alias("revenue"),
         )
         .orderBy("abc", "xyz")
@@ -483,9 +458,9 @@ def text_bigram_kn_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.groupBy("doc_id")
         .agg(
             F.count("*").cast("bigint").alias("n_bigrams"),
-            _floor4(
+            quantize(
                 F.sum(F.col("nll").cast("decimal(18,6)")).cast("double")
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("avg_nll_bits"),
         )
         .orderBy("doc_id")

@@ -27,13 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------- repeated n-gram fractions
@@ -144,22 +139,22 @@ def text_repeated_ngram_fractions(
         per_doc.groupBy("doc_id")
         .agg(
             pick(2, F.col("total")).alias("n_bigrams"),
-            _floor4(
+            quantize(
                 pick(
                     2,
                     1.0
                     - F.col("distinct_grams") * 1.0 / F.col("total"),
-                )
+                ), 4
             ).alias("rep2_frac"),
-            _floor4(
+            quantize(
                 pick(
                     3,
                     1.0
                     - F.col("distinct_grams") * 1.0 / F.col("total"),
-                )
+                ), 4
             ).alias("rep3_frac"),
-            _floor4(
-                pick(2, F.col("top_count") * 1.0 / F.col("total"))
+            quantize(
+                pick(2, F.col("top_count") * 1.0 / F.col("total")), 4
             ).alias("top_bigram_share"),
         )
         .orderBy("doc_id")
@@ -222,7 +217,7 @@ def events_hourweek_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dow",
             "hod",
             F.col("c").cast("bigint").alias("n_events"),
-            _floor4(F.col("c") * 1.0 / F.col("total")).alias("share"),
+            quantize(F.col("c") * 1.0 / F.col("total"), 4).alias("share"),
         )
         .orderBy("event_type", "dow", "hod")
     )
@@ -294,7 +289,7 @@ def orders_eoq_replenishment(
             / 365.0
         ).alias("years")
     )
-    cents = F.floor(F.col("l_extendedprice") * 100 + 0.5) / 100
+    cents = quantize(F.col("l_extendedprice"), 2)
     demand = li.groupBy("l_partkey").agg(
         F.sum(F.col("l_quantity").cast("decimal(18,2)"))
         .cast("double")
@@ -308,14 +303,13 @@ def orders_eoq_replenishment(
     eoq = F.sqrt(
         2 * annual * _EOQ_ORDER_COST / (_EOQ_HOLD_RATE * unit_price)
     )
-    floor2 = lambda c: F.floor(c * 100 + 0.5) / 100
     return (
         demand.crossJoin(F.broadcast(span))
         .select(
             "l_partkey",
-            floor2(annual).alias("annual_demand"),
-            floor2(eoq).alias("eoq"),
-            floor2(annual / eoq).alias("orders_per_year"),
+            quantize(annual, 2).alias("annual_demand"),
+            quantize(eoq, 2).alias("eoq"),
+            quantize(annual / eoq, 2).alias("orders_per_year"),
             "total_qty",
         )
         .orderBy(F.desc("total_qty"), "l_partkey")
@@ -387,7 +381,7 @@ def events_hampel_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup. All array ops codegen inside the window stage.
     """
     e = load(spark, sf_dir, "events")
-    x = F.floor(F.col("value") * 1000000 + 0.5) / 1000000
+    x = quantize(F.col("value"), 6)
     w = (
         Window.partitionBy("event_type")
         .orderBy("ts", "event_id")
@@ -441,8 +435,8 @@ def events_hampel_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(is_out, 1).otherwise(0))
             .cast("bigint")
             .alias("n_outliers"),
-            _floor4(
-                F.sum(F.when(is_out, 1).otherwise(0)) * 1.0 / F.count("*")
+            quantize(
+                F.sum(F.when(is_out, 1).otherwise(0)) * 1.0 / F.count("*"), 4
             ).alias("outlier_frac"),
         )
         .orderBy("event_type")

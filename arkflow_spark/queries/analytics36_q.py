@@ -35,17 +35,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import QUERIES, o_dsum, dsum, query
+from arkflow_spark.queries.base import QUERIES, o_dsum, dsum, quantize, query
 from arkflow_spark.queries.pq_q import K, SUB, _d2, _subspaces
 from arkflow_spark.tables import load
 
 N_QUERIES = 5   # matches vector_q / pq_q query split
 PQ_TOP_K = 5    # matches ann_ivf_search's per-bucket top-k
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ---------------------------------------------------------- IVF-PQ search
@@ -297,9 +292,9 @@ def events_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             F.col("na").alias("n_a"),
             F.col("nb").alias("n_b"),
-            _floor4(ksd).alias("ks_d"),
-            _floor4(
-                F.least(F.lit(1.0), 2 * F.exp(-2 * neff * ksd * ksd))
+            quantize(ksd, 4).alias("ks_d"),
+            quantize(
+                F.least(F.lit(1.0), 2 * F.exp(-2 * neff * ksd * ksd)), 4
             ).alias("p_approx"),
         )
         .orderBy("event_type")
@@ -399,8 +394,9 @@ def events_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
             na.alias("n_a"),
             nb.alias("n_b"),
             u.alias("u_stat"),
-            _floor4(F.try_divide(u - mu, F.nullif(F.sqrt(var), F.lit(0.0))))
-            .alias("z_stat"),
+            quantize(
+                F.try_divide(u - mu, F.nullif(F.sqrt(var), F.lit(0.0))), 4
+            ).alias("z_stat"),
         )
         .orderBy("event_type")
     )

@@ -30,13 +30,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from arkflow_spark.functions import copurchase
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # --------------------------------------------------- Spearman rank corr
@@ -126,7 +121,7 @@ def events_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.select(
         "event_type",
         "n",
-        _floor4(F.try_divide(num, F.nullif(den, F.lit(0.0)))).alias(
+        quantize(F.try_divide(num, F.nullif(den, F.lit(0.0))), 4).alias(
             "spearman_rho"
         ),
     ).orderBy("event_type")
@@ -231,9 +226,9 @@ def lineitem_newsvendor_qstar(spark: SparkSession, sf_dir: str) -> DataFrame:
         qstar.select(
             "l_partkey",
             "n_weeks",
-            _floor4(mean_w).alias("mean_weekly"),
+            quantize(mean_w, 4).alias("mean_weekly"),
             "q_star",
-            _floor4(F.col("q_star") - mean_w).alias("safety_stock"),
+            quantize(F.col("q_star") - mean_w, 4).alias("safety_stock"),
             "total_d",
         )
         .orderBy(F.desc("total_d"), F.asc("l_partkey"))
@@ -362,11 +357,11 @@ def graph_link_prediction_ra(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a").alias("part_a"),
             F.col("b").alias("part_b"),
             "cn",
-            _floor4(
+            quantize(
                 F.col("cn").cast("double")
-                / (F.col("deg_a") + F.col("deg_b") - F.col("cn"))
+                / (F.col("deg_a") + F.col("deg_b") - F.col("cn")), 4
             ).alias("jaccard"),
-            _floor4(F.col("ra")).alias("ra_index"),
+            quantize(F.col("ra"), 4).alias("ra_index"),
         )
         .orderBy(F.desc("cn"), F.asc("part_a"), F.asc("part_b"))
     )

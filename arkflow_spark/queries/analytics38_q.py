@@ -36,14 +36,10 @@ from arkflow_spark.queries.base import (
     DUCK_TS_FMT,
     QUERIES,
     SPARK_TS_FMT,
+    quantize,
     query,
 )
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ semantic dedup (SemDeDup)
@@ -287,8 +283,8 @@ def events_chi_square_independence(
             F.col("r").alias("n_rows"),
             F.col("c").alias("n_cols"),
             ((F.col("r") - 1) * (F.col("c") - 1)).alias("dof"),
-            _floor4(F.col("chi2").cast("double")).alias("chi2"),
-            _floor4(
+            quantize(F.col("chi2").cast("double"), 4).alias("chi2"),
+            quantize(
                 F.sqrt(
                     F.try_divide(
                         F.col("chi2").cast("double"),
@@ -298,7 +294,7 @@ def events_chi_square_independence(
                             F.lit(0),
                         ),
                     )
-                )
+                ), 4
             ).alias("cramers_v"),
         )
     )
@@ -381,14 +377,14 @@ def events_markov_entropy_rate(
         .select(
             "prev",
             F.col("row_n").alias("n_out"),
-            _floor4(F.col("h_row").cast("double")).alias("h_bits"),
-            _floor4(F.col("row_n").cast("double") / F.col("total")).alias(
+            quantize(F.col("h_row").cast("double"), 4).alias("h_bits"),
+            quantize(F.col("row_n").cast("double") / F.col("total"), 4).alias(
                 "pi"
             ),
-            _floor4(
+            quantize(
                 F.col("row_n").cast("double")
                 / F.col("total")
-                * F.col("h_row").cast("double")
+                * F.col("h_row").cast("double"), 4
             ).alias("rate_contribution"),
         )
         .orderBy("prev")
@@ -539,9 +535,9 @@ def events_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sm.select(
         "event_type",
         F.date_format("h", SPARK_TS_FMT).alias("h"),
-        _floor4(F.col("y")).alias("y"),
-        _floor4(F.col("level")).alias("level"),
-        _floor4(F.col("trend")).alias("trend"),
-        _floor4(F.col("season")).alias("season"),
-        _floor4(F.col("forecast_next")).alias("forecast_next"),
+        quantize(F.col("y"), 4).alias("y"),
+        quantize(F.col("level"), 4).alias("level"),
+        quantize(F.col("trend"), 4).alias("trend"),
+        quantize(F.col("season"), 4).alias("season"),
+        quantize(F.col("forecast_next"), 4).alias("forecast_next"),
     ).orderBy("event_type", "h")

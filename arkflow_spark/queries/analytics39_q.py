@@ -28,13 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------- BG/NBD P(alive)
@@ -122,9 +117,9 @@ def customer_bgnbd_palive(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust.select(
             "o_custkey",
             "x",
-            _floor4(F.col("t_x")).alias("recency_days"),
-            _floor4(F.col("big_t")).alias("span_days"),
-            _floor4(p_alive).alias("p_alive"),
+            quantize(F.col("t_x"), 4).alias("recency_days"),
+            quantize(F.col("big_t"), 4).alias("span_days"),
+            quantize(p_alive, 4).alias("p_alive"),
         )
         .orderBy(F.desc("x"), F.asc("o_custkey"))
         .limit(50)
@@ -267,8 +262,8 @@ def orders_weibull_cycletime_fit(
     return m.select(
         "o_orderpriority",
         "n",
-        _floor4(slope).alias("shape_k"),
-        _floor4(F.exp(-intercept / slope)).alias("scale_days"),
+        quantize(slope, 4).alias("shape_k"),
+        quantize(F.exp(-intercept / slope), 4).alias("scale_days"),
     ).orderBy("o_orderpriority")
 
 
@@ -398,10 +393,10 @@ def events_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             "n",
-            _floor4(rho[1]).alias("rho1"),
-            _floor4(rho[2]).alias("rho2"),
-            _floor4(rho[3]).alias("rho3"),
-            _floor4(q).alias("q_stat"),
+            quantize(rho[1], 4).alias("rho1"),
+            quantize(rho[2], 4).alias("rho2"),
+            quantize(rho[3], 4).alias("rho3"),
+            quantize(q, 4).alias("q_stat"),
             F.lit(_LB_LAGS).alias("dof"),
         )
         .orderBy("event_type")
@@ -489,9 +484,9 @@ def supplier_wilson_otd_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_suppkey",
             "n",
             "k",
-            _floor4(p).alias("otd_rate"),
-            _floor4((center - half) / denom).alias("wilson_lo"),
-            _floor4((center + half) / denom).alias("wilson_hi"),
+            quantize(p, 4).alias("otd_rate"),
+            quantize((center - half) / denom, 4).alias("wilson_lo"),
+            quantize((center + half) / denom, 4).alias("wilson_hi"),
         )
         .orderBy(F.desc("n"), F.asc("l_suppkey"))
         .limit(20)

@@ -15,13 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query, r4
+from arkflow_spark.queries.base import quantize, query, r4
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # -------------------------------------------------- Kaplan-Meier
@@ -140,7 +135,7 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("dur").cast("bigint").alias("dur_s"),
             F.col("n_risk").cast("bigint").alias("n_risk"),
             F.col("d_ev").cast("bigint").alias("n_events"),
-            _floor4(F.exp("lsum")).alias("survival"),
+            quantize(F.exp("lsum"), 4).alias("survival"),
         )
         .orderBy("dur_s")
     )
@@ -252,7 +247,7 @@ def events_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out += [
             F.col(f"n{k}").alias(f"n_pairs_lag{k}"),
-            _floor4(r).alias(f"r_lag{k}"),
+            quantize(r, 4).alias(f"r_lag{k}"),
         ]
     return s.select(*out).orderBy("event_type")
 
@@ -360,12 +355,12 @@ def events_benford_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
         expd.groupBy("event_type")
         .agg(
             F.sum("obs").cast("bigint").alias("n_pos"),
-            _floor4(
+            quantize(
                 F.sum(
                     (F.col("obs") - F.col("exp"))
                     * (F.col("obs") - F.col("exp"))
                     / F.col("exp")
-                )
+                ), 4
             ).alias("chi2"),
         )
         .orderBy("event_type")
@@ -439,8 +434,8 @@ def events_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_users",
             "n_viewers",
             "n_converted",
-            _floor4(
-                F.col("n_converted") * 1.0 / F.col("n_viewers")
+            quantize(
+                F.col("n_converted") * 1.0 / F.col("n_viewers"), 4
             ).alias("conversion_rate"),
             "median_latency_s",
             "p90_latency_s",
@@ -574,20 +569,20 @@ def agg_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(kept, 1).otherwise(0))
             .cast("bigint")
             .alias("n_kept"),
-            _floor4(
+            quantize(
                 F.sum(
                     F.when(kept, F.col("value").cast("decimal(18,6)"))
                 ).cast("double")
-                / F.sum(F.when(kept, 1).otherwise(0))
+                / F.sum(F.when(kept, 1).otherwise(0)), 4
             ).alias("trimmed_mean"),
-            _floor4(
+            quantize(
                 F.sum(
                     F.least(
                         F.greatest(F.col("value"), F.col("p05")),
                         F.col("p95"),
                     ).cast("decimal(18,6)")
                 ).cast("double")
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("winsor_mean"),
         )
         .orderBy("event_type")

@@ -31,14 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import QUERIES, query
+from arkflow_spark.queries.base import QUERIES, quantize, query
 from arkflow_spark.queries.pq_q import K, SUB, _d2, _subspaces
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # --------------------------------------------- survivorship golden record
@@ -217,13 +212,13 @@ def events_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.select(
         "event_type",
         "n",
-        _floor4(F.col("p05")).alias("p05"),
-        _floor4(F.col("p95")).alias("p95"),
-        _floor4(s / n).alias("win_mean"),
-        _floor4(
+        quantize(F.col("p05"), 4).alias("p05"),
+        quantize(F.col("p95"), 4).alias("p95"),
+        quantize(s / n, 4).alias("win_mean"),
+        quantize(
             F.sqrt(
                 F.try_divide(q - s * s / n, F.nullif(n - 1, F.lit(0)))
-            )
+            ), 4
         ).alias("win_std"),
     ).orderBy("event_type")
 
@@ -535,7 +530,7 @@ def events_gpd_pot_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pwm.select(
         "event_type",
         F.col("n").alias("n_excesses"),
-        _floor4(F.col("u")).alias("threshold_p90"),
-        _floor4(2 - F.try_divide(b0, den)).alias("xi_shape"),
-        _floor4(F.try_divide(2 * b0 * b1, den)).alias("sigma_scale"),
+        quantize(F.col("u"), 4).alias("threshold_p90"),
+        quantize(2 - F.try_divide(b0, den), 4).alias("xi_shape"),
+        quantize(F.try_divide(2 * b0 * b1, den), 4).alias("sigma_scale"),
     ).orderBy("event_type")

@@ -29,13 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import QUERIES, query
+from arkflow_spark.queries.base import QUERIES, quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # --------------------------------------------------- ANN recall@5 eval
@@ -195,10 +190,10 @@ def ann_ivf_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "n_hits",
-            _floor4(F.col("n_hits").cast("double") / _EVAL_K).alias(
+            quantize(F.col("n_hits").cast("double") / _EVAL_K, 4).alias(
                 "recall_at_5"
             ),
-            _floor4(F.col("mr")).alias("mean_recall"),
+            quantize(F.col("mr"), 4).alias("mean_recall"),
         )
         .orderBy("query_id")
     )
@@ -288,7 +283,7 @@ def text_js_divergence_sources(
         grid.select("source", term.alias("term"))
         .groupBy("source")
         .agg(
-            _floor4(F.sum("term").cast("double")).alias("jsd_bits")
+            quantize(F.sum("term").cast("double"), 4).alias("jsd_bits")
         )
         .orderBy("source")
     )
@@ -464,18 +459,18 @@ def orders_littles_law_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("mo", "yyyy-MM").alias("month"),
             "n_days",
             F.coalesce("completions", F.lit(0)).alias("completions"),
-            _floor4(avg_wip).alias("avg_wip"),
-            _floor4(thr).alias("throughput_per_day"),
-            _floor4(
-                F.try_divide(avg_wip, F.nullif(thr, F.lit(0.0)))
+            quantize(avg_wip, 4).alias("avg_wip"),
+            quantize(thr, 4).alias("throughput_per_day"),
+            quantize(
+                F.try_divide(avg_wip, F.nullif(thr, F.lit(0.0))), 4
             ).alias("w_littles_days"),
-            _floor4(
+            quantize(
                 F.try_divide(
                     F.col("cycle_days_sum").cast("double"),
                     F.nullif(F.col("completions"), F.lit(0)).cast(
                         "double"
                     ),
-                )
+                ), 4
             ).alias("w_measured_days"),
         )
         .orderBy("mo")
@@ -552,7 +547,7 @@ def events_circular_hour_stats(
     return m.select(
         "event_type",
         "n",
-        _floor4(ang_pos / _TWO_PI * 24).alias("circ_mean_hour"),
-        _floor4(r).alias("resultant_r"),
-        _floor4((1 - r)).alias("circ_variance"),
+        quantize(ang_pos / _TWO_PI * 24, 4).alias("circ_mean_hour"),
+        quantize(r, 4).alias("resultant_r"),
+        quantize(1 - r, 4).alias("circ_variance"),
     ).orderBy("event_type")

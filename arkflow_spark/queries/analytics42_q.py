@@ -28,13 +28,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import DUCK_TS_FMT, SPARK_TS_FMT, query
+from arkflow_spark.queries.base import (
+    DUCK_TS_FMT,
+    SPARK_TS_FMT,
+    quantize,
+    query,
+)
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ Croston's forecast
@@ -151,9 +151,9 @@ def orders_croston_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     return folded.select(
         "l_partkey",
         "n_demands",
-        _floor4(F.col("size_hat")).alias("size_hat"),
-        _floor4(F.col("interval_hat")).alias("interval_hat"),
-        _floor4(F.col("size_hat") / F.col("interval_hat")).alias(
+        quantize(F.col("size_hat"), 4).alias("size_hat"),
+        quantize(F.col("interval_hat"), 4).alias("interval_hat"),
+        quantize(F.col("size_hat") / F.col("interval_hat"), 4).alias(
             "croston_rate"
         ),
     ).orderBy("l_partkey")
@@ -232,10 +232,10 @@ def documents_temperature_mix_weights(
             "source",
             "n_docs",
             "n_chars",
-            _floor4(raw).alias("raw_share"),
-            _floor4(temp).alias("temp_share"),
-            _floor4(
-                F.try_divide(temp, F.nullif(raw, F.lit(0.0)))
+            quantize(raw, 4).alias("raw_share"),
+            quantize(temp, 4).alias("temp_share"),
+            quantize(
+                F.try_divide(temp, F.nullif(raw, F.lit(0.0))), 4
             ).alias("effective_epochs"),
         )
         .orderBy("source")
@@ -304,7 +304,7 @@ def events_running_records(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n"),
             F.sum("is_record").alias("n_records"),
-            _floor4(F.log(F.count("*"))).alias("expected_iid"),
+            quantize(F.log(F.count("*")), 4).alias("expected_iid"),
             F.max(
                 F.when(F.col("is_record") == 1, F.col("rn"))
             ).alias("last_record_rn"),
@@ -441,10 +441,10 @@ def text_mattr_lexical_diversity(
         .select(
             "doc_id",
             "n_tokens",
-            _floor4(
-                F.col("n_types").cast("double") / F.col("n_tokens")
+            quantize(
+                F.col("n_types").cast("double") / F.col("n_tokens"), 4
             ).alias("raw_ttr"),
-            _floor4(F.col("mattr")).alias("mattr"),
+            quantize(F.col("mattr"), 4).alias("mattr"),
         )
         .orderBy("doc_id")
     )

@@ -30,13 +30,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from arkflow_spark.functions import copurchase
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------- label propagation (3 rounds)
@@ -230,8 +225,8 @@ def events_decayed_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             "n",
-            _floor4(F.col("mass")).alias("decayed_mass"),
-            _floor4(F.col("mass") / F.col("n")).alias("freshness"),
+            quantize(F.col("mass"), 4).alias("decayed_mass"),
+            quantize(F.col("mass") / F.col("n"), 4).alias("freshness"),
         )
         .orderBy("event_type")
     )
@@ -340,9 +335,9 @@ def lineitem_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.select(
         "yr",
         "n_parts",
-        _floor4(lasp).alias("laspeyres"),
-        _floor4(paas).alias("paasche"),
-        _floor4(F.sqrt(lasp * paas)).alias("fisher"),
+        quantize(lasp, 4).alias("laspeyres"),
+        quantize(paas, 4).alias("paasche"),
+        quantize(F.sqrt(lasp * paas), 4).alias("fisher"),
     ).orderBy("yr")
 
 
@@ -470,7 +465,7 @@ def embedding_intrinsic_dim_twonn(
     )
     return mu.agg(
         F.count("*").alias("n_used"),
-        _floor4(
-            F.count("*") / F.sum("lnmu").cast("double")
+        quantize(
+            F.count("*") / F.sum("lnmu").cast("double"), 4
         ).alias("intrinsic_dim"),
     )

@@ -26,13 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ vocab coverage curve
@@ -128,9 +123,9 @@ def text_vocab_coverage_curve(
             "vocab_size",
             "n_types",
             "tokens_covered",
-            _floor4(
+            quantize(
                 F.col("tokens_covered").cast("double")
-                / F.col("n_tokens")
+                / F.col("n_tokens"), 4
             ).alias("coverage"),
         )
         .orderBy("vocab_size")
@@ -230,11 +225,11 @@ def events_threshold_flappiness(
             "event_type",
             "n",
             "n_crossings",
-            _floor4(
+            quantize(
                 F.try_divide(
                     F.col("n_crossings").cast("double"),
                     F.nullif(F.col("n") - 1, F.lit(0)),
-                )
+                ), 4
             ).alias("flappiness"),
         )
         .orderBy("event_type")
@@ -330,13 +325,13 @@ def customer_clv_discounted(spark: SparkSession, sf_dir: str) -> DataFrame:
         clv.select(
             "o_custkey",
             "n_active_years",
-            _floor4(F.col("nominal_ltv")).alias("nominal_ltv"),
-            _floor4(F.col("discounted_ltv")).alias("discounted_ltv"),
-            _floor4(
+            quantize(F.col("nominal_ltv"), 4).alias("nominal_ltv"),
+            quantize(F.col("discounted_ltv"), 4).alias("discounted_ltv"),
+            quantize(
                 F.try_divide(
                     F.col("discounted_ltv"),
                     F.nullif(F.col("nominal_ltv"), F.lit(0.0)),
-                )
+                ), 4
             ).alias("discount_haircut"),
         )
         # order on the QUANTIZED value (the oracle's output alias) so
@@ -430,9 +425,9 @@ def part_dual_sourcing_shares(
         .select(
             "l_partkey",
             "n_suppliers",
-            _floor4(F.col("q_total")).alias("total_qty"),
-            _floor4(F.col("leader_share")).alias("leader_share"),
-            _floor4(F.col("hhi")).alias("hhi"),
+            quantize(F.col("q_total"), 4).alias("total_qty"),
+            quantize(F.col("leader_share"), 4).alias("leader_share"),
+            quantize(F.col("hhi"), 4).alias("hhi"),
         )
         .orderBy(F.desc("total_qty"), F.asc("l_partkey"))
         .limit(20)

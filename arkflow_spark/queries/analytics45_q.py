@@ -29,13 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ---------------------------------------------------- character entropy
@@ -106,7 +101,7 @@ def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.col("n").alias("n_chars_counted"),
             "n_distinct",
-            _floor4(F.col("h")).alias("entropy_bits"),
+            quantize(F.col("h"), 4).alias("entropy_bits"),
         )
         .orderBy("doc_id")
     )
@@ -184,9 +179,9 @@ def events_inspection_paradox(
         .select(
             "event_type",
             "n_gaps",
-            _floor4(mean_gap).alias("mean_gap_min"),
-            _floor4(wait).alias("observer_wait_min"),
-            _floor4(wait / mean_gap).alias("paradox_ratio"),
+            quantize(mean_gap, 4).alias("mean_gap_min"),
+            quantize(wait, 4).alias("observer_wait_min"),
+            quantize(wait / mean_gap, 4).alias("paradox_ratio"),
         )
         .orderBy("event_type")
     )
@@ -282,11 +277,11 @@ def embedding_anisotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return cos.agg(
         F.count("*").alias("n_pairs"),
-        _floor4(
-            F.sum("c").cast("double") / F.count("*")
+        quantize(
+            F.sum("c").cast("double") / F.count("*"), 4
         ).alias("mean_cosine"),
-        _floor4(F.max("c").cast("double")).alias("max_cosine"),
-        _floor4(F.min("c").cast("double")).alias("min_cosine"),
+        quantize(F.max("c").cast("double"), 4).alias("max_cosine"),
+        quantize(F.min("c").cast("double"), 4).alias("min_cosine"),
     )
 
 
@@ -373,16 +368,16 @@ def events_activation_time_to_n(
     )
     return ranked.agg(
         F.max("n").alias("n_activated"),
-        _floor4(
+        quantize(
             F.min(
                 F.when(F.col("cum") * 2 >= F.col("n"), F.col("hours"))
-            )
+            ), 4
         ).alias("median_hours"),
-        _floor4(
+        quantize(
             F.min(
                 F.when(
                     F.col("cum") * 10 >= F.col("n") * 9, F.col("hours")
                 )
-            )
+            ), 4
         ).alias("p90_hours"),
     )

@@ -31,13 +31,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import DUCK_TS_FMT, SPARK_TS_FMT, query
+from arkflow_spark.queries.base import (
+    DUCK_TS_FMT,
+    SPARK_TS_FMT,
+    quantize,
+    query,
+)
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------- Page-Hinkley drift
@@ -171,8 +171,8 @@ def events_page_hinkley_drift(
         cum.groupBy("event_type")
         .agg(
             F.count("*").alias("n_events"),
-            _floor4(
-                F.max((F.col("mt") - F.col("dt")).cast("double"))
+            quantize(
+                F.max((F.col("mt") - F.col("dt")).cast("double")), 4
             ).alias("ph_stat"),
             F.sum(F.when(alarm, 1).otherwise(0))
             .cast("bigint")
@@ -314,14 +314,14 @@ def orders_interrupted_time_series(
     return fit.select(
         F.col("an").alias("n_days_pre"),
         F.col("bn").alias("n_days_post"),
-        _floor4(F.col("pre_slope")).alias("pre_slope"),
-        _floor4(F.col("post_slope")).alias("post_slope"),
-        _floor4(F.col("post_slope") - F.col("pre_slope")).alias(
+        quantize(F.col("pre_slope"), 4).alias("pre_slope"),
+        quantize(F.col("post_slope"), 4).alias("post_slope"),
+        quantize(F.col("post_slope") - F.col("pre_slope"), 4).alias(
             "slope_change"
         ),
-        _floor4(
+        quantize(
             (post_icpt + F.col("post_slope") * t0)
-            - (pre_icpt + F.col("pre_slope") * t0)
+            - (pre_icpt + F.col("pre_slope") * t0), 4
         ).alias("level_change_at_cut"),
     )
 
@@ -539,16 +539,16 @@ def events_tail_codependence(
             F.sum("hot_a").cast("bigint").alias("n_hot_a"),
             F.sum("hot_b").cast("bigint").alias("n_hot_b"),
             both.cast("bigint").alias("n_hot_both"),
-            _floor4(
-                both * 1.0 / F.nullif(F.sum("hot_a"), F.lit(0))
+            quantize(
+                both * 1.0 / F.nullif(F.sum("hot_a"), F.lit(0)), 4
             ).alias("p_b_given_a"),
-            _floor4(
+            quantize(
                 both
                 * 1.0
                 * F.count("*")
                 / F.nullif(
                     F.sum("hot_a") * F.sum("hot_b"), F.lit(0)
-                )
+                ), 4
             ).alias("lift"),
         )
         .orderBy("type_a", "type_b")

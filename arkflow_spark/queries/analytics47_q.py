@@ -29,13 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------- Heaps' law fit
@@ -165,8 +160,8 @@ def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return m.select(
         F.col("n").alias("n_points"),
-        _floor4(beta).alias("heaps_beta"),
-        _floor4(F.exp((sy - beta * sx) / n)).alias("heaps_k"),
+        quantize(beta, 4).alias("heaps_beta"),
+        quantize(F.exp((sy - beta * sx) / n), 4).alias("heaps_k"),
     )
 
 
@@ -230,10 +225,10 @@ def multimodal_duplicate_frames(
             (F.count("*") - F.countDistinct("frame_sha"))
             .cast("bigint")
             .alias("n_dup_frames"),
-            _floor4(
+            quantize(
                 (F.count("*") - F.countDistinct("frame_sha"))
                 * 1.0
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("dup_ratio"),
         )
         .orderBy("media_id")
@@ -312,8 +307,8 @@ def documents_cross_shard_overlap(
             "n_a",
             "n_b",
             shared.cast("bigint").alias("n_shared"),
-            _floor4(
-                shared * 1.0 / (F.col("n_a") + F.col("n_b") - shared)
+            quantize(
+                shared * 1.0 / (F.col("n_a") + F.col("n_b") - shared), 4
             ).alias("jaccard"),
         )
         .orderBy("source_a", "source_b")
@@ -401,5 +396,5 @@ def ann_cosine_range_search(
     return cos.select(
         "query_id",
         "cand_id",
-        (F.floor(F.col("c") * 1000000 + 0.5) / 1000000).alias("cosine"),
+        quantize(F.col("c"), 6).alias("cosine"),
     ).orderBy("query_id", "cand_id")

@@ -29,13 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ Mann-Kendall trend
@@ -155,9 +150,9 @@ def events_mann_kendall_trend(
             "event_type",
             F.col("n").alias("n_hours"),
             "s_stat",
-            _floor4(var_s).alias("var_s"),
-            _floor4(
-                s_adj / F.nullif(F.sqrt(var_s), F.lit(0.0))
+            quantize(var_s, 4).alias("var_s"),
+            quantize(
+                s_adj / F.nullif(F.sqrt(var_s), F.lit(0.0)), 4
             ).alias("z_score"),
         )
         .orderBy("event_type")
@@ -255,10 +250,10 @@ def lineitem_return_shrinkage(
             "l_partkey",
             "n",
             "k",
-            _floor4(rate).alias("raw_rate"),
-            _floor4(
+            quantize(rate, 4).alias("raw_rate"),
+            quantize(
                 (F.col("k") + F.col("alpha"))
-                / (F.col("n") + F.col("alpha") + F.col("beta"))
+                / (F.col("n") + F.col("alpha") + F.col("beta")), 4
             ).alias("shrunk_rate"),
         )
         .orderBy("l_partkey")
@@ -372,8 +367,8 @@ def text_stopword_stylometry(
         .filter(F.col("source_a") < F.col("source_b"))
         .groupBy("source_a", "source_b")
         .agg(
-            _floor4(
-                F.sum(term.cast("decimal(18,12)")).cast("double")
+            quantize(
+                F.sum(term.cast("decimal(18,12)")).cast("double"), 4
             ).alias("chi2_distance")
         )
         .orderBy("source_a", "source_b")
@@ -484,10 +479,10 @@ def embedding_silhouette_simplified(
         s.groupBy("label")
         .agg(
             F.count("*").cast("bigint").alias("n_vectors"),
-            _floor4(F.sum("s").cast("double") / F.count("*")).alias(
+            quantize(F.sum("s").cast("double") / F.count("*"), 4).alias(
                 "mean_silhouette"
             ),
-            _floor4(F.min("s").cast("double")).alias("min_silhouette"),
+            quantize(F.min("s").cast("double"), 4).alias("min_silhouette"),
         )
         .orderBy("label")
     )

@@ -23,13 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------- Matryoshka prefix-dim recall
@@ -164,23 +159,23 @@ def embedding_matryoshka_prefix_recall(
     return (
         ranked.groupBy("query_id")
         .agg(
-            _floor4(
+            quantize(
                 F.sum(
                     F.when(
                         (F.col("r64") <= k) & (F.col("r16") <= k), 1
                     ).otherwise(0)
                 )
                 * 1.0
-                / k
+                / k, 4
             ).alias("recall_16"),
-            _floor4(
+            quantize(
                 F.sum(
                     F.when(
                         (F.col("r64") <= k) & (F.col("r32") <= k), 1
                     ).otherwise(0)
                 )
                 * 1.0
-                / k
+                / k, 4
             ).alias("recall_32"),
         )
         .orderBy("query_id")
@@ -376,13 +371,13 @@ def dedup_minhash_bbit_calibration(
         .select(
             "doc_a",
             "doc_b",
-            _floor4(
-                shr * 1.0 / (F.col("n_a") + F.col("n_b") - shr)
+            quantize(
+                shr * 1.0 / (F.col("n_a") + F.col("n_b") - shr), 4
             ).alias("j_exact"),
             mh_agree.cast("bigint").alias("mh_agree"),
             bit_agree.cast("bigint").alias("bit_agree"),
-            _floor4(mh_agree * 1.0 / N_HASHES).alias("j_minhash"),
-            _floor4(2.0 * bit_agree / N_HASHES - 1).alias("j_bbit"),
+            quantize(mh_agree * 1.0 / N_HASHES, 4).alias("j_minhash"),
+            quantize(2.0 * bit_agree / N_HASHES - 1, 4).alias("j_bbit"),
         )
         .orderBy("doc_a", "doc_b")
     )

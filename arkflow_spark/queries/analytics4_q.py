@@ -14,12 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query, r4
+from arkflow_spark.queries.base import quantize, query, r4
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # -------------------------------------------------- behavioral entropy
@@ -74,8 +70,8 @@ def events_user_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.col("n").cast("bigint").alias("n_events"),
         F.col("n_types").cast("bigint").alias("n_types"),
-        _floor4(h).alias("entropy"),
-        F.when(F.col("n_types") > 1, _floor4(h / dln(F.col("n_types"))))
+        quantize(h, 4).alias("entropy"),
+        F.when(F.col("n_types") > 1, quantize(h / dln(F.col("n_types")), 4))
         .otherwise(0.0)
         .alias("entropy_norm"),
     ).orderBy("user_id")
@@ -172,9 +168,9 @@ def documents_partition_advisor(
             F.count("*").alias("n_docs"),
             F.sum("n_chars").alias("total_chars"),
             F.max("n_chars").alias("max_doc_chars"),
-            _floor4(
+            quantize(
                 F.sum(F.col("n_chars").cast("decimal(18,6)")).cast("double")
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("mean_doc_chars"),
             F.expr(f"(sum(n_chars) + {t - 1}) div {t}")
             .cast("bigint")
@@ -253,9 +249,9 @@ def events_seasonality_r2(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cell_fit.crossJoin(F.broadcast(tot)).select(
         F.col("n").alias("n_events"),
         F.col("n_cells").cast("bigint").alias("n_cells"),
-        _floor4(
+        quantize(
             1
             - (F.col("q") - F.col("fit"))
-            / (F.col("q") - F.col("s") * F.col("s") / F.col("n"))
+            / (F.col("q") - F.col("s") * F.col("s") / F.col("n")), 4
         ).alias("r2_seasonal"),
     )

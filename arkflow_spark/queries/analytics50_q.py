@@ -26,13 +26,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import DUCK_TS_FMT, SPARK_TS_FMT, query
+from arkflow_spark.queries.base import (
+    DUCK_TS_FMT,
+    SPARK_TS_FMT,
+    quantize,
+    query,
+)
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ license screen
@@ -110,10 +110,10 @@ def documents_license_screen(
                 F.sum(f"f_{name}").cast("bigint").alias(f"n_{name}")
                 for name, _ in _LICENSE_MARKERS
             ],
-            _floor4(
+            quantize(
                 F.sum(F.when(any_marker > 0, 1).otherwise(0))
                 * 1.0
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("marked_share"),
         )
         .orderBy("source")
@@ -274,17 +274,17 @@ def events_gpd_return_levels(
     )
     p_u = F.col("n") * 1.0 / F.col("n_all")
     rl_cols = [
-        _floor4(
+        quantize(
             F.col("u")
             + F.col("sigma")
             / F.nullif(F.col("xi"), F.lit(0.0))
-            * (F.pow(F.lit(float(m)) * p_u, F.col("xi")) - 1)
+            * (F.pow(F.lit(float(m)) * p_u, F.col("xi")) - 1), 4
         ).alias(f"rl_{m}")
         for m in _RETURN_HORIZONS
     ]
     return par.select(
         "event_type",
-        _floor4(F.col("u")).alias("threshold_p90"),
+        quantize(F.col("u"), 4).alias("threshold_p90"),
         *rl_cols,
     ).orderBy("event_type")
 
@@ -352,7 +352,7 @@ def events_hourly_type_entropy(
             F.date_format("h", SPARK_TS_FMT).alias("hour"),
             F.col("n").cast("bigint").alias("n_events"),
             F.col("n_types").cast("bigint").alias("n_types"),
-            _floor4(F.col("hent")).alias("entropy_bits"),
+            quantize(F.col("hent"), 4).alias("entropy_bits"),
         )
         .orderBy("hour")
     )

@@ -42,18 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    """6-decimal quantization for p-values (they live near 0)."""
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ------------------------------------------------ Kruskal-Wallis H
@@ -122,8 +112,8 @@ def events_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     return t.select(
         F.col("n").alias("n_total"),
         F.col("k").alias("k_groups"),
-        _floor4(h).alias("h_stat"),
-        _floor4((h - F.col("k") + 1) / (F.col("n") - F.col("k"))).alias(
+        quantize(h, 4).alias("h_stat"),
+        quantize((h - F.col("k") + 1) / (F.col("n") - F.col("k")), 4).alias(
             "epsilon_sq"
         ),
     )
@@ -220,10 +210,10 @@ def events_levene_bf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return parts.select(
         F.col("n").alias("n_total"),
         F.col("k").alias("k_groups"),
-        _floor4(
+        quantize(
             ((F.col("n") - F.col("k")) * 1.0 / (F.col("k") - 1))
             * F.col("num")
-            / F.col("den")
+            / F.col("den"), 4
         ).alias("f_stat"),
     )
 
@@ -302,10 +292,11 @@ def events_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     return g.select(
         "event_type",
         "n",
-        _floor4(g1).alias("skewness_g1"),
-        _floor4(g2).alias("excess_kurtosis_g2"),
-        _floor4(
-            F.col("n") / 6.0 * (F.pow(g1, F.lit(2)) + F.pow(g2, F.lit(2)) / 4)
+        quantize(g1, 4).alias("skewness_g1"),
+        quantize(g2, 4).alias("excess_kurtosis_g2"),
+        quantize(
+            F.col("n") / 6.0
+            * (F.pow(g1, F.lit(2)) + F.pow(g2, F.lit(2)) / 4), 4
         ).alias("jb_stat"),
     ).orderBy("event_type")
 
@@ -423,15 +414,15 @@ def events_wilcoxon_signed_rank(
         n.alias("n_pairs"),
         F.col("wp").cast("bigint").alias("w_plus"),
         (n * (n + 1) / 2 - F.col("wp")).cast("bigint").alias("w_minus"),
-        _floor4(z).alias("z_stat"),
-        _floor6(
+        quantize(z, 4).alias("z_stat"),
+        quantize(
             F.least(
                 F.lit(1.0),
                 2
                 * F.exp(
                     -0.717 * F.abs(z) - 0.416 * F.pow(z, F.lit(2))
                 ),
-            )
+            ), 6
         ).alias("p_approx"),
     )
 
@@ -566,9 +557,9 @@ def events_benjamini_hochberg(
             "event_type",
             "hod",
             "n_c",
-            _floor4(F.col("mean_c")).alias("mean_cell"),
-            _floor4(F.col("z")).alias("z_stat"),
-            _floor6(F.col("pv")).alias("p_approx"),
+            quantize(F.col("mean_c"), 4).alias("mean_cell"),
+            quantize(F.col("z"), 4).alias("z_stat"),
+            quantize(F.col("pv"), 6).alias("p_approx"),
             F.col("rn").alias("p_rank"),
             F.when(F.col("rn") <= F.col("k"), 1)
             .otherwise(0)

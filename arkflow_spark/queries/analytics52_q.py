@@ -33,18 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    """6-decimal quantization for densities (they live near 0)."""
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ------------------------------------------------ grid DBSCAN (1-D)
@@ -269,10 +259,10 @@ def events_kde_silverman_grid(
         .select(
             "event_type",
             F.col("grid_i").cast("int").alias("grid_i"),
-            _floor4(F.col("x")).alias("grid_x"),
-            _floor6(
+            quantize(F.col("x"), 4).alias("grid_x"),
+            quantize(
                 F.col("ksum")
-                / (F.col("n") * F.col("h") * math.sqrt(2 * math.pi))
+                / (F.col("n") * F.col("h") * math.sqrt(2 * math.pi)), 6
             ).alias("density"),
         )
         .orderBy("event_type", "grid_i")
@@ -409,17 +399,14 @@ def orders_chain_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def _cents(col):
-        return F.floor(col * 100 + 0.5) / 100
-
     return tail.select(
         "cohort",
         "last_age",
-        _cents(F.col("observed")).alias("observed_revenue"),
-        _cents(F.col("observed") * F.col("tail_factor")).alias(
+        quantize(F.col("observed"), 2).alias("observed_revenue"),
+        quantize(F.col("observed") * F.col("tail_factor"), 2).alias(
             "ultimate_revenue"
         ),
-        _cents(F.col("observed") * (F.col("tail_factor") - 1)).alias(
+        quantize(F.col("observed") * (F.col("tail_factor") - 1), 2).alias(
             "ibnr_revenue"
         ),
     ).orderBy("cohort")
@@ -504,9 +491,9 @@ def events_quantile_normalization_map(
         .select(
             "event_type",
             "level",
-            _floor4(F.col("type_value")).alias("type_value"),
-            _floor4(F.col("ref_value")).alias("ref_value"),
-            _floor4(F.col("ref_value") - F.col("type_value")).alias(
+            quantize(F.col("type_value"), 4).alias("type_value"),
+            quantize(F.col("ref_value"), 4).alias("ref_value"),
+            quantize(F.col("ref_value") - F.col("type_value"), 4).alias(
                 "shift"
             ),
         )

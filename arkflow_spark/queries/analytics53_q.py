@@ -32,13 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ Fellegi-Sunter linkage
@@ -163,9 +158,9 @@ def part_entity_resolution_fs(
         .groupBy("decision")
         .agg(
             F.count("*").cast("bigint").alias("n_pairs"),
-            _floor4(
+            quantize(
                 F.sum(F.col("score").cast("decimal(18,6)")).cast("double")
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("avg_score"),
         )
         .orderBy("decision")
@@ -453,9 +448,9 @@ def events_granger_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         "y_type",
         "x_type",
         F.col("t").alias("n_hours"),
-        _floor4(rss_ar1).alias("rss_ar1"),
-        _floor4(rss_full).alias("rss_full"),
-        _floor4(
-            (rss_ar1 - rss_full) / (rss_full / (F.col("t") - 3))
+        quantize(rss_ar1, 4).alias("rss_ar1"),
+        quantize(rss_full, 4).alias("rss_full"),
+        quantize(
+            (rss_ar1 - rss_full) / (rss_full / (F.col("t") - 3)), 4
         ).alias("f_stat"),
     ).orderBy("y_type", "x_type")

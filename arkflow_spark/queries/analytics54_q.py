@@ -28,13 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ exact Kendall tau-b
@@ -148,10 +143,10 @@ def lineitem_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("nn").alias("n_rows"),
             F.col("c").alias("concordant"),
             F.col("dd").alias("discordant"),
-            _floor4(
+            quantize(
                 (F.col("c") - F.col("dd"))
                 * 1.0
-                / F.sqrt((n0 - F.col("n1")) * (n0 - F.col("n2")))
+                / F.sqrt((n0 - F.col("n1")) * (n0 - F.col("n2"))), 4
             ).alias("tau_b"),
         )
     )
@@ -244,12 +239,12 @@ def events_allan_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "tau_hours")
         .agg(
             F.count("*").cast("bigint").alias("n_pairs"),
-            _floor4(
+            quantize(
                 0.5
                 * F.avg(
                     (F.col("rate") - F.col("prev"))
                     * (F.col("rate") - F.col("prev"))
-                )
+                ), 4
             ).alias("allan_var"),
         )
         .orderBy("event_type", "tau_hours")
@@ -356,9 +351,9 @@ def events_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.col("n").alias("n_hours"),
         "t_obs",
-        _floor4(t_exp).alias("t_expected"),
-        _floor4(
+        quantize(t_exp, 4).alias("t_expected"),
+        quantize(
             (F.col("t_obs") - t_exp)
-            / F.sqrt((16.0 * F.col("n") - 29) / 90)
+            / F.sqrt((16.0 * F.col("n") - 29) / 90), 4
         ).alias("z_stat"),
     ).orderBy("event_type")

@@ -36,13 +36,8 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ JL distortion audit
@@ -176,11 +171,11 @@ def embedding_jl_distortion(
     ratio = F.col("d_proj") / F.col("d_orig")
     return pairs.agg(
         F.count("*").cast("bigint").alias("n_pairs"),
-        _floor4(
-            F.sum(ratio.cast("decimal(18,6)")).cast("double") / F.count("*")
+        quantize(
+            F.sum(ratio.cast("decimal(18,6)")).cast("double") / F.count("*"), 4
         ).alias("mean_distortion"),
-        _floor4(F.min(ratio)).alias("min_distortion"),
-        _floor4(F.max(ratio)).alias("max_distortion"),
+        quantize(F.min(ratio), 4).alias("min_distortion"),
+        quantize(F.max(ratio), 4).alias("max_distortion"),
     )
 
 
@@ -278,10 +273,10 @@ def events_isotonic_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("h").alias("hour"),
             F.col("w").alias("n_events"),
-            _floor4(F.col("s").cast("double") / F.col("w")).alias(
+            quantize(F.col("s").cast("double") / F.col("w"), 4).alias(
                 "mean_value"
             ),
-            _floor4(F.col("iso")).alias("isotonic_fit"),
+            quantize(F.col("iso"), 4).alias("isotonic_fit"),
         )
         .orderBy("hour")
     )
@@ -376,8 +371,8 @@ def events_friedman_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             "n_blocks",
-            _floor4(F.col("mean_rank")).alias("mean_rank"),
-            _floor4(
+            quantize(F.col("mean_rank"), 4).alias("mean_rank"),
+            quantize(
                 12.0
                 * F.col("nb")
                 / (F.col("k") * (F.col("k") + 1))
@@ -386,7 +381,7 @@ def events_friedman_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                     - (F.col("k") + 1) * F.col("sr")
                     + F.col("k")
                     * F.pow((F.col("k") + 1) / 2.0, F.lit(2))
-                )
+                ), 4
             ).alias("friedman_chi2"),
         )
         .orderBy("event_type")
@@ -514,15 +509,15 @@ def events_spectral_entropy(
         power.join(F.broadcast(tot), "event_type")
         .groupBy("event_type")
         .agg(
-            _floor4(
+            quantize(
                 -F.sum(
                     F.when(
                         F.col("pw") > 0, share * F.log(share)
                     ).otherwise(0.0)
                 )
-                / float(__import__("math").log(_SPEC_FREQS))
+                / float(__import__("math").log(_SPEC_FREQS)), 4
             ).alias("spectral_entropy"),
-            _floor4(F.max(share)).alias("top_freq_share"),
+            quantize(F.max(share), 4).alias("top_freq_share"),
         )
         .orderBy("event_type")
     )

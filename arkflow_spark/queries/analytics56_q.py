@@ -28,13 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ Theil decomposition
@@ -137,15 +132,15 @@ def lineitem_theil_decomposition(
         .select(
             "nation",
             F.col("n_g").alias("n_suppliers"),
-            _floor4(share).alias("revenue_share"),
-            _floor4(t_g).alias("theil_within"),
-            _floor4(share * t_g).alias("within_contribution"),
-            _floor4(
+            quantize(share, 4).alias("revenue_share"),
+            quantize(t_g, 4).alias("theil_within"),
+            quantize(share * t_g, 4).alias("within_contribution"),
+            quantize(
                 share
                 * F.log(
                     (F.col("x_g") / F.col("n_g"))
                     / (F.col("xx") / F.col("n"))
-                )
+                ), 4
             ).alias("between_contribution"),
         )
         .orderBy("nation")
@@ -315,9 +310,9 @@ def events_segmentation_2cp_daily(
             F.col("tmax").alias("n_days"),
             F.col("ca").alias("break1_day"),
             F.col("cb").alias("break2_day"),
-            _floor4(F.col("sse3")).alias("sse_3seg"),
-            _floor4(F.col("sse1")).alias("sse_1seg"),
-            _floor4(1 - F.col("sse3") / F.col("sse1")).alias(
+            quantize(F.col("sse3"), 4).alias("sse_3seg"),
+            quantize(F.col("sse1"), 4).alias("sse_1seg"),
+            quantize(1 - F.col("sse3") / F.col("sse1"), 4).alias(
                 "variance_explained"
             ),
         )
@@ -423,12 +418,12 @@ def events_eb_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "user_id",
             F.col("n").alias("n_events"),
-            _floor4(F.col("m")).alias("raw_mean"),
-            _floor4(
+            quantize(F.col("m"), 4).alias("raw_mean"),
+            quantize(
                 (F.col("n") * F.col("m") + alpha * F.col("mg"))
-                / (F.col("n") + alpha)
+                / (F.col("n") + alpha), 4
             ).alias("shrunk_mean"),
-            _floor4(alpha).alias("alpha"),
+            quantize(alpha, 4).alias("alpha"),
         )
         .orderBy(F.desc("n_events"), F.asc("user_id"))
         .limit(20)

@@ -33,13 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ TOPSIS scorecard
@@ -162,9 +157,9 @@ def supplier_topsis_scorecard(
     return (
         j.select(
             F.col("sk").alias("s_suppkey"),
-            _floor4(dp).alias("d_plus"),
-            _floor4(dm).alias("d_minus"),
-            _floor4(dm / (dp + dm)).alias("closeness"),
+            quantize(dp, 4).alias("d_plus"),
+            quantize(dm, 4).alias("d_minus"),
+            quantize(dm / (dp + dm), 4).alias("closeness"),
         )
         .orderBy(F.desc("closeness"), F.asc("s_suppkey"))
         .limit(15)
@@ -411,10 +406,10 @@ def events_erlang_staffing(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             F.col("hod").alias("hour_of_day"),
-            _floor4(F.col("lambda_h")).alias("arrivals_per_hour"),
-            _floor4(F.col("lambda_h") / _ERL_MU).alias("offered_load"),
+            quantize(F.col("lambda_h"), 4).alias("arrivals_per_hour"),
+            quantize(F.col("lambda_h") / _ERL_MU, 4).alias("offered_load"),
             chosen.cast("bigint").alias("agents"),
-            _floor4(F.col("wait_prob")).alias("wait_prob"),
+            quantize(F.col("wait_prob"), 4).alias("wait_prob"),
         )
         .orderBy("hour_of_day")
     )
@@ -524,10 +519,10 @@ def text_mojibake_garbage_screen(
             F.sum("f_hybrid_tokens")
             .cast("bigint")
             .alias("n_hybrid_tokens"),
-            _floor4(
+            quantize(
                 F.sum(F.when(any_f > 0, 1).otherwise(0))
                 * 1.0
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("garbage_share"),
         )
         .orderBy("source")

@@ -28,13 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ shot boundaries
@@ -127,7 +122,7 @@ def multimodal_shot_boundaries(
         .agg(
             F.sum("len").cast("bigint").alias("n_frames"),
             F.count("*").cast("bigint").alias("n_shots"),
-            _floor4(F.sum("len") * 1.0 / F.count("*")).alias(
+            quantize(F.sum("len") * 1.0 / F.count("*"), 4).alias(
                 "mean_shot_len"
             ),
             F.max("len").cast("bigint").alias("longest_shot"),
@@ -236,9 +231,9 @@ def events_mutual_information(
         .crossJoin(F.broadcast(tot))
         .select(
             F.col("n").alias("n_events"),
-            _floor4(F.col("mi")).alias("mi_nats"),
-            _floor4(F.col("h")).alias("h_stream_nats"),
-            _floor4(F.col("mi") / F.col("h")).alias("mi_normalized"),
+            quantize(F.col("mi"), 4).alias("mi_nats"),
+            quantize(F.col("h"), 4).alias("h_stream_nats"),
+            quantize(F.col("mi") / F.col("h"), 4).alias("mi_normalized"),
         )
     )
 
@@ -391,9 +386,9 @@ def events_sample_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             F.col("b_cnt").alias("template_pairs_m2"),
             F.col("a_cnt").alias("template_pairs_m3"),
-            _floor4(F.col("tol")).alias("tolerance"),
-            _floor4(
-                -F.log(F.col("a_cnt") * 1.0 / F.col("b_cnt"))
+            quantize(F.col("tol"), 4).alias("tolerance"),
+            quantize(
+                -F.log(F.col("a_cnt") * 1.0 / F.col("b_cnt")), 4
             ).alias("sample_entropy"),
         )
         .orderBy("event_type")

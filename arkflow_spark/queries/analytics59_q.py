@@ -29,13 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ NDCG / MRR / P@10
@@ -185,17 +180,17 @@ def ann_retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("qid").alias("query_id"),
             F.col("n_rel").alias(f"relevant_in_top{_IR_K}"),
-            _floor4(
+            quantize(
                 F.when(F.col("idcg").isNull(), 0.0).otherwise(
                     F.col("dcg") / F.col("idcg")
-                )
+                ), 4
             ).alias("ndcg"),
-            _floor4(
+            quantize(
                 F.when(F.col("first_hit") == 0, 0.0).otherwise(
                     1.0 / F.col("first_hit")
-                )
+                ), 4
             ).alias("reciprocal_rank"),
-            _floor4(F.col("n_rel") * 1.0 / _IR_K).alias(
+            quantize(F.col("n_rel") * 1.0 / _IR_K, 4).alias(
                 "precision_at_k"
             ),
         )
@@ -387,7 +382,7 @@ def documents_bradley_terry_sources(
     )
     return normd.select(
         "source",
-        _floor4(F.col("strength")).alias("bt_strength"),
+        quantize(F.col("strength"), 4).alias("bt_strength"),
         "n_wins",
         "n_duels",
     ).orderBy(F.desc("bt_strength"), F.asc("source"))
@@ -528,7 +523,7 @@ def events_conformal_interval(
         .agg(
             F.sum("is_cal").cast("bigint").alias("n_calibration"),
             F.sum(1 - F.col("is_cal")).cast("bigint").alias("n_eval"),
-            _floor4(
+            quantize(
                 F.sum(
                     F.when(
                         (F.col("is_cal") == 0)
@@ -537,14 +532,14 @@ def events_conformal_interval(
                     ).otherwise(0)
                 )
                 * 1.0
-                / F.greatest(F.sum(1 - F.col("is_cal")), F.lit(1))
+                / F.greatest(F.sum(1 - F.col("is_cal")), F.lit(1)), 4
             ).alias("empirical_coverage"),
         )
         .select(
             "event_type",
             "n_calibration",
             "n_eval",
-            _floor4(F.col("q")).alias("q_hat"),
+            quantize(F.col("q"), 4).alias("q_hat"),
             "empirical_coverage",
         )
         .orderBy("event_type")

@@ -35,14 +35,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import DUCK_TS_FMT, SPARK_TS_FMT, query
+from arkflow_spark.queries.base import (
+    DUCK_TS_FMT,
+    SPARK_TS_FMT,
+    quantize,
+    query,
+)
 from arkflow_spark.queries.dedup_q import _ORACLE_SHINGLES, _shingles
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # -------------------------------------------------- rolling median
@@ -100,7 +100,7 @@ def window_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         e.select(
             "event_id", "event_type", "ts", "value",
-            _floor4(med).alias("roll_med"),
+            quantize(med, 4).alias("roll_med"),
         )
         .orderBy("event_id")
     )
@@ -203,7 +203,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_a", "doc_b",
             shared.alias("shared"),
             small.alias("n_small"),
-            _floor4(cont).alias("containment"),
+            quantize(cont, 4).alias("containment"),
         )
         .orderBy("doc_a", "doc_b")
     )
@@ -494,7 +494,7 @@ def events_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return alarms.select(
         "user_id", "event_type", "event_id",
         F.date_format("ts", SPARK_TS_FMT).alias("ts"),
-        _floor4(F.col("s_stat")).alias("s_stat"),
+        quantize(F.col("s_stat"), 4).alias("s_stat"),
     ).orderBy("user_id", "event_type", "event_id")
 
 

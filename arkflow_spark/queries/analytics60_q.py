@@ -30,13 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ rate-limit audit
@@ -112,7 +107,7 @@ def events_sliding_rate_limit_audit(
         .agg(
             F.count("*").cast("bigint").alias("n_events"),
             F.sum(dropped).cast("bigint").alias("n_dropped"),
-            _floor4(F.sum(dropped) * 1.0 / F.count("*")).alias(
+            quantize(F.sum(dropped) * 1.0 / F.count("*"), 4).alias(
                 "drop_share"
             ),
         )
@@ -220,8 +215,8 @@ def part_demand_classification_syntetos(
         cls.groupBy("demand_class")
         .agg(
             F.count("*").cast("bigint").alias("n_parts"),
-            _floor4(F.avg("adi")).alias("mean_adi"),
-            _floor4(F.avg("cv2")).alias("mean_cv2"),
+            quantize(F.avg("adi"), 4).alias("mean_adi"),
+            quantize(F.avg("cv2"), 4).alias("mean_cv2"),
         )
         .orderBy("demand_class")
     )
@@ -334,5 +329,5 @@ def events_markov_hitting_time(
     h = out
     return h.select(
         F.col("s").alias("from_state"),
-        _floor4(F.col("h")).alias(f"expected_steps_to_{_HIT_TARGET}"),
+        quantize(F.col("h"), 4).alias(f"expected_steps_to_{_HIT_TARGET}"),
     ).orderBy("from_state")

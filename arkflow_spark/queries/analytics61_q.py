@@ -25,13 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ MMR rerank
@@ -190,7 +185,7 @@ def ann_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         picked, "pick_order BIGINT, vec_id BIGINT, rel DOUBLE"
     )
     return out.select(
-        "pick_order", "vec_id", _floor4(F.col("rel")).alias("relevance")
+        "pick_order", "vec_id", quantize(F.col("rel"), 4).alias("relevance")
     ).orderBy("pick_order")
 
 
@@ -332,14 +327,14 @@ def events_otsu_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(b), "event_type")
         .select(
             "event_type",
-            _floor4(
+            quantize(
                 F.col("lo")
                 + (F.col("bin") + 1)
                 * (F.col("hi") - F.col("lo"))
-                / _OTSU_BINS
+                / _OTSU_BINS, 4
             ).alias("threshold"),
-            _floor4(
-                F.col("between_var") / F.col("n") / F.col("n")
+            quantize(
+                F.col("between_var") / F.col("n") / F.col("n"), 4
             ).alias("between_var_norm"),
         )
         .orderBy("event_type")
@@ -441,15 +436,15 @@ def customer_decile_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
             "decile",
             F.col("n").alias("n_customers"),
             F.col("resp").alias("n_responders"),
-            _floor4(F.col("resp") * 1.0 / F.col("n")).alias(
+            quantize(F.col("resp") * 1.0 / F.col("n"), 4).alias(
                 "response_rate"
             ),
-            _floor4(
+            quantize(
                 (F.col("resp") * 1.0 / F.col("n"))
-                / (F.col("rr") * 1.0 / F.col("nn"))
+                / (F.col("rr") * 1.0 / F.col("nn")), 4
             ).alias("lift"),
-            _floor4(
-                F.sum("resp").over(wcum).cast("double") / F.col("rr")
+            quantize(
+                F.sum("resp").over(wcum).cast("double") / F.col("rr"), 4
             ).alias("cumulative_capture"),
         )
         .orderBy("decile")

@@ -31,13 +31,8 @@ from itertools import combinations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ Shapley attribution
@@ -182,8 +177,8 @@ def events_shapley_attribution(
     )
     return out.select(
         "channel",
-        _floor4(F.col("shapley")).alias("shapley_value"),
-        _floor4(F.col("share")).alias("share"),
+        quantize(F.col("shapley"), 4).alias("shapley_value"),
+        quantize(F.col("share"), 4).alias("share"),
     ).orderBy("channel")
 
 
@@ -321,11 +316,11 @@ def events_gumbel_block_maxima(
     return fit.select(
         "event_type",
         "n_blocks",
-        _floor4(mu).alias("gumbel_mu"),
-        _floor4(beta).alias("gumbel_beta"),
-        _floor4(rl(30)).alias("return_level_30d"),
-        _floor4(rl(90)).alias("return_level_90d"),
-        _floor4(rl(365)).alias("return_level_365d"),
+        quantize(mu, 4).alias("gumbel_mu"),
+        quantize(beta, 4).alias("gumbel_beta"),
+        quantize(rl(30), 4).alias("return_level_30d"),
+        quantize(rl(90), 4).alias("return_level_90d"),
+        quantize(rl(365), 4).alias("return_level_365d"),
     ).orderBy("event_type")
 
 
@@ -390,12 +385,12 @@ def text_structured_extraction_rates(
         .agg(
             F.count("*").cast("bigint").alias("n_docs"),
             *[
-                _floor4(
+                quantize(
                     F.sum(
                         F.when(F.col(f"n_{name}") > 0, 1).otherwise(0)
                     )
                     * 1.0
-                    / F.count("*")
+                    / F.count("*"), 4
                 ).alias(f"coverage_{name}")
                 for name, _ in _EXTRACTORS
             ],

@@ -28,13 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ max scan statistic
@@ -127,10 +122,10 @@ def events_scan_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             F.col("w").alias("max_window_events"),
             F.col("m").alias("window_end_minute"),
-            _floor4(
+            quantize(
                 F.col("w")
                 * 1.0
-                / (F.col("n") * float(_SCAN_MINUTES) / F.col("span_m"))
+                / (F.col("n") * float(_SCAN_MINUTES) / F.col("span_m")), 4
             ).alias("burst_ratio"),
         )
         .orderBy("event_type")
@@ -279,12 +274,12 @@ def part_safety_stock_service_levels(
     return ss.agg(
         F.count("*").cast("bigint").alias("n_parts"),
         *[
-            _floor4(F.avg(z * F.col("sigma_ltd"))).alias(
+            quantize(F.avg(z * F.col("sigma_ltd")), 4).alias(
                 f"mean_ss_p{lvl}"
             )
             for lvl, z in _SS_Z
         ],
-        _floor4(F.avg("sigma_ltd")).alias("mean_sigma_ltd"),
+        quantize(F.avg("sigma_ltd"), 4).alias("mean_sigma_ltd"),
     )
 
 
@@ -404,13 +399,13 @@ def events_twoway_anova_unweighted(
         .select(
             F.col("a").alias("n_streams"),
             F.col("b").alias("n_hours"),
-            _floor4(F.col("b") * F.col("ssa")).alias("ss_stream"),
-            _floor4(F.col("a") * F.col("ssb")).alias("ss_hour"),
-            _floor4(F.col("ss_ab")).alias("ss_interaction"),
-            _floor4(
+            quantize(F.col("b") * F.col("ssa"), 4).alias("ss_stream"),
+            quantize(F.col("a") * F.col("ssb"), 4).alias("ss_hour"),
+            quantize(F.col("ss_ab"), 4).alias("ss_interaction"),
+            quantize(
                 F.col("ss_ab")
                 / ((F.col("a") - 1) * (F.col("b") - 1))
-                / (F.col("b") * F.col("ssa") / (F.col("a") - 1))
+                / (F.col("b") * F.col("ssa") / (F.col("a") - 1)), 4
             ).alias("interaction_vs_stream"),
         )
     )

@@ -27,13 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ hubness audit
@@ -155,9 +150,9 @@ def embedding_hubness_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").alias("n_vectors"),
         "max_occ",
         "n_antihubs",
-        _floor4(
+        quantize(
             (F.col("m3") / F.col("n"))
-            / F.pow(F.col("m2") / F.col("n"), F.lit(1.5))
+            / F.pow(F.col("m2") / F.col("n"), F.lit(1.5)), 4
         ).alias("k_occurrence_skew"),
     )
 
@@ -228,17 +223,17 @@ def events_negbin_fit_userday(
     )
     return mo.select(
         F.col("n").alias("n_user_days"),
-        _floor4(F.col("m")).alias("mean_count"),
-        _floor4(F.col("v") / F.col("m")).alias("dispersion_index"),
-        _floor4(
+        quantize(F.col("m"), 4).alias("mean_count"),
+        quantize(F.col("v") / F.col("m"), 4).alias("dispersion_index"),
+        quantize(
             F.when(
                 F.col("v") > F.col("m"),
                 F.col("m") * F.col("m") / (F.col("v") - F.col("m")),
-            ).otherwise(0.0)
+            ).otherwise(0.0), 4
         ).alias("nb_r"),
-        _floor4(
+        quantize(
             F.when(F.col("v") > F.col("m"), F.col("m") / F.col("v"))
-            .otherwise(1.0)
+            .otherwise(1.0), 4
         ).alias("nb_p"),
     )
 
@@ -335,7 +330,7 @@ def text_word_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w").alias("word"),
             F.col("df").alias("doc_freq"),
             F.col("tf").alias("total_freq"),
-            _floor4(
+            quantize(
                 (
                     (
                         F.col("sumsq")
@@ -343,9 +338,9 @@ def text_word_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
                     / (nd - 1)
                 )
-                / mu
+                / mu, 4
             ).alias("burstiness_vmr"),
-            _floor4(F.col("tf") * 1.0 / F.col("df")).alias(
+            quantize(F.col("tf") * 1.0 / F.col("df"), 4).alias(
                 "mean_count_when_present"
             ),
         )

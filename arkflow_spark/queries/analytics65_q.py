@@ -23,13 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ segmented OLS
@@ -203,13 +198,13 @@ def lineitem_segmented_price_quantity(
         .filter(F.col("rn") == 1)
         .select(
             F.col("brk").alias("breakpoint_qty"),
-            (F.floor(F.col("sse2") / 1000000 * 100 + 0.5) / 100).alias(
+            quantize(F.col("sse2") / 1000000, 2).alias(
                 "sse_2seg_m"
             ),
-            (F.floor(F.col("sse1") / 1000000 * 100 + 0.5) / 100).alias(
+            quantize(F.col("sse1") / 1000000, 2).alias(
                 "sse_1seg_m"
             ),
-            _floor4(1 - F.col("sse2") / F.col("sse1")).alias(
+            quantize(1 - F.col("sse2") / F.col("sse1"), 4).alias(
                 "variance_explained_gain"
             ),
         )
@@ -332,10 +327,10 @@ def events_energy_distance_cohorts(
             "event_type",
             F.col("ta").alias("n_even"),
             F.col("tb").alias("n_odd"),
-            _floor4(
-                2 * F.col("exy") - F.col("exx") - F.col("eyy")
+            quantize(
+                2 * F.col("exy") - F.col("exx") - F.col("eyy"), 4
             ).alias("energy_distance"),
-            _floor4(F.col("exy")).alias("e_cross"),
+            quantize(F.col("exy"), 4).alias("e_cross"),
         )
         .orderBy("event_type")
     )

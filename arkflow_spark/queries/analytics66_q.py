@@ -26,13 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ exact 1-D k-means
@@ -216,21 +211,21 @@ def events_kmeans1d_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(tot), "event_type")
         .select(
             "event_type",
-            _floor4(
+            quantize(
                 F.col("lo")
-                + (F.col("ba") + 1) * (F.col("hi") - F.col("lo")) / _KM_BINS
+                + (F.col("ba") + 1) * (F.col("hi") - F.col("lo")) / _KM_BINS, 4
             ).alias("boundary_1"),
-            _floor4(
+            quantize(
                 F.col("lo")
-                + (F.col("bb") + 1) * (F.col("hi") - F.col("lo")) / _KM_BINS
+                + (F.col("bb") + 1) * (F.col("hi") - F.col("lo")) / _KM_BINS, 4
             ).alias("boundary_2"),
-            _floor4(F.col("sse") / F.col("tn")).alias(
+            quantize(F.col("sse") / F.col("tn"), 4).alias(
                 "within_sse_per_point"
             ),
-            _floor4(
+            quantize(
                 1
                 - F.col("sse")
-                / (F.col("tss") - F.col("ts") * F.col("ts") / F.col("tn"))
+                / (F.col("tss") - F.col("ts") * F.col("ts") / F.col("tn")), 4
             ).alias("variance_explained"),
         )
         .orderBy("event_type")
@@ -534,9 +529,9 @@ def documents_length_mixture_em(
     )
     return state.select(
         F.col("n").alias("n_docs"),
-        _floor4(F.col("w1")).alias("weight_short"),
-        _floor4(F.col("mu1")).alias("mu_log_short"),
-        _floor4(F.col("mu2")).alias("mu_log_long"),
-        _floor4(F.sqrt("s1")).alias("sd_log_short"),
-        _floor4(F.sqrt("s2")).alias("sd_log_long"),
+        quantize(F.col("w1"), 4).alias("weight_short"),
+        quantize(F.col("mu1"), 4).alias("mu_log_short"),
+        quantize(F.col("mu2"), 4).alias("mu_log_long"),
+        quantize(F.sqrt("s1"), 4).alias("sd_log_short"),
+        quantize(F.sqrt("s2"), 4).alias("sd_log_long"),
     ).distinct()

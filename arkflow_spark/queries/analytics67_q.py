@@ -22,13 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ runs test
@@ -142,8 +137,8 @@ def events_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("r").alias("n_runs"),
             F.col("n1").alias("n_above"),
             F.col("n2").alias("n_below"),
-            _floor4(er).alias("expected_runs"),
-            _floor4((F.col("r") - er) / F.sqrt(vr)).alias("z_stat"),
+            quantize(er, 4).alias("expected_runs"),
+            quantize((F.col("r") - er) / F.sqrt(vr), 4).alias("z_stat"),
         )
         .orderBy("event_type")
     )
@@ -259,5 +254,5 @@ def documents_quality_knee_kneedle(
     return out.select(
         "knee_threshold",
         "docs_retained",
-        _floor4(F.col("knee_strength")).alias("knee_strength"),
+        quantize(F.col("knee_strength"), 4).alias("knee_strength"),
     )

@@ -27,18 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    """Deterministic 6-decimal quantization (see analytics27_q)."""
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ------------------------------------------------ Hurst (agg. variance)
@@ -164,8 +154,8 @@ def events_hurst_aggvar(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ols.select(
         "event_type",
         "n_scales",
-        _floor4(slope).alias("var_slope"),
-        _floor4(slope / 2).alias("hurst_h"),
+        quantize(slope, 4).alias("var_slope"),
+        quantize(slope / 2, 4).alias("hurst_h"),
     ).orderBy("event_type")
 
 
@@ -279,10 +269,10 @@ def events_brier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(_CAL_BINS - 1),
         ).alias("bin"),
         "y",
-        _floor6((F.col("p") - F.col("y")) * (F.col("p") - F.col("y"))).alias(
-            "se"
-        ),
-        _floor6(F.col("p")).alias("pq"),
+        quantize(
+            (F.col("p") - F.col("y")) * (F.col("p") - F.col("y")), 6
+        ).alias("se"),
+        quantize(F.col("p"), 6).alias("pq"),
     )
     # ONE pass over the event-scaled test set: the per-bin aggregate
     # ({b}-row table, persisted) carries exact decimal SE sums, so the
@@ -314,7 +304,7 @@ def events_brier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
             "mean_p",
             "frac_pos",
-            _floor4(F.col("brier")).alias("brier_overall"),
+            quantize(F.col("brier"), 4).alias("brier_overall"),
         )
         .orderBy("bin")
     )
@@ -411,12 +401,12 @@ def orders_market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "part_a",
             "part_b",
             F.col("c_ab").alias("pair_orders"),
-            _floor4(F.col("c_ab") * 1.0 / F.col("ca")).alias(
+            quantize(F.col("c_ab") * 1.0 / F.col("ca"), 4).alias(
                 "confidence_a_to_b"
             ),
-            _floor4(
+            quantize(
                 F.col("c_ab") * 1.0 * F.col("n_orders")
-                / (F.col("ca") * F.col("cb"))
+                / (F.col("ca") * F.col("cb")), 4
             ).alias("lift"),
         )
         .orderBy(F.col("lift").desc(), "part_a", "part_b")

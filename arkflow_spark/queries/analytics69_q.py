@@ -27,13 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 _STOPS = ("the", "and", "of", "to", "in")
@@ -137,9 +132,9 @@ def documents_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_only_a",
         "n_only_b",
         "n_neither",
-        _floor4(po).alias("p_observed"),
-        _floor4(pe).alias("p_expected"),
-        _floor4((po - pe) / (1 - pe)).alias("kappa"),
+        quantize(po, 4).alias("p_observed"),
+        quantize(pe, 4).alias("p_expected"),
+        quantize((po - pe) / (1 - pe), 4).alias("kappa"),
     )
 
 
@@ -230,15 +225,10 @@ def text_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "r",
             "nr",
-            _floor4(
-                (F.col("r") + 1) * 1.0 * F.col("nr_next") / F.col("nr")
+            quantize(
+                (F.col("r") + 1) * 1.0 * F.col("nr_next") / F.col("nr"), 4
             ).alias("r_star"),
-            (
-                F.floor(
-                    F.col("n1") * 1.0 / F.col("t") * 1000000 + 0.5
-                )
-                / 1000000
-            ).alias("p_unseen"),
+            quantize(F.col("n1") * 1.0 / F.col("t"), 6).alias("p_unseen"),
         )
         .orderBy("r")
     )

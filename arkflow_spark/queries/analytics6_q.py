@@ -26,15 +26,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import DUCK_TS_FMT, SPARK_TS_FMT, query
+from arkflow_spark.queries.base import (
+    DUCK_TS_FMT,
+    SPARK_TS_FMT,
+    quantize,
+    query,
+)
 from arkflow_spark.queries.dedup_q import _ORACLE_SHINGLES, _shingles
 from arkflow_spark.queries.vector_q import _ORACLE_EXPLODED, _dot, _norm
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # -------------------------------------------------- kNN classification
@@ -193,7 +193,7 @@ def documents_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_shingles"),
             novel.cast("bigint").alias("n_novel"),
-            _floor4(novel * 1.0 / F.count("*")).alias("novelty"),
+            quantize(novel * 1.0 / F.count("*"), 4).alias("novelty"),
         )
         .orderBy("doc_id")
     )
@@ -363,10 +363,10 @@ def events_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sm.select(
         "event_type",
         F.date_format("h", SPARK_TS_FMT).alias("h"),
-        _floor4(F.col("y")).alias("y"),
-        _floor4(F.col("level")).alias("level"),
-        _floor4(F.col("trend")).alias("trend"),
-        _floor4(F.col("level") + F.col("trend")).alias("forecast_next"),
+        quantize(F.col("y"), 4).alias("y"),
+        quantize(F.col("level"), 4).alias("level"),
+        quantize(F.col("trend"), 4).alias("trend"),
+        quantize(F.col("level") + F.col("trend"), 4).alias("forecast_next"),
     ).orderBy("event_type", "h")
 
 
@@ -469,7 +469,7 @@ def events_mahalanobis_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("ts", SPARK_TS_FMT).alias("ts"),
             F.col("x1").alias("value"),
             F.col("x2").cast("bigint").alias("hr"),
-            _floor4(d2).alias("d2"),
+            quantize(d2, 4).alias("d2"),
         )
         .orderBy("event_id")
     )

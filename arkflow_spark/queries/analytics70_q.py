@@ -29,18 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    """Deterministic 6-decimal quantization (see analytics27_q)."""
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ------------------------------------------------ exact tied AUC
@@ -122,8 +112,8 @@ def events_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tot.select(
         F.col("n1").alias("n_pos"),
         F.col("n0").alias("n_neg"),
-        _floor4(
-            F.col("u2") * 1.0 / (2.0 * F.col("n1") * F.col("n0"))
+        quantize(
+            F.col("u2") * 1.0 / (2.0 * F.col("n1") * F.col("n0")), 4
         ).alias("auc"),
     )
 
@@ -193,7 +183,7 @@ def documents_importance_ess(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "n_docs",
         "n",
-        _floor6(F.col("n") * 1.0 / (F.col("k") * F.col("n_docs"))).alias(
+        quantize(F.col("n") * 1.0 / (F.col("k") * F.col("n_docs")), 6).alias(
             "w"
         ),
     )
@@ -206,7 +196,7 @@ def documents_importance_ess(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("sw"),
         F.sum(
             F.col("n_docs").cast("decimal(18,0)")
-            * _floor6(F.col("w") * F.col("w")).cast("decimal(18,6)")
+            * quantize(F.col("w") * F.col("w"), 6).cast("decimal(18,6)")
         )
         .cast("double")
         .alias("sw2"),
@@ -217,14 +207,14 @@ def documents_importance_ess(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             "n_docs",
             F.col("w").alias("weight"),
-            _floor4(F.col("n_docs") * F.col("w") / F.col("sw")).alias(
+            quantize(F.col("n_docs") * F.col("w") / F.col("sw"), 4).alias(
                 "weight_share"
             ),
-            _floor4(F.col("sw") * F.col("sw") / F.col("sw2")).alias(
+            quantize(F.col("sw") * F.col("sw") / F.col("sw2"), 4).alias(
                 "ess_overall"
             ),
-            _floor4(
-                F.col("sw") * F.col("sw") / F.col("sw2") / F.col("n")
+            quantize(
+                F.col("sw") * F.col("sw") / F.col("sw2") / F.col("n"), 4
             ).alias("ess_ratio"),
         )
         .orderBy("source")
@@ -336,8 +326,8 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "source",
             "w",
-            _floor6(
-                F.coalesce(F.col("c"), F.lit(0)) * 1.0 / F.col("t")
+            quantize(
+                F.coalesce(F.col("c"), F.lit(0)) * 1.0 / F.col("t"), 6
             ).alias("f"),
         )
         .persist()  # sources x M panel; feeds mom, dev, and both z sides
@@ -355,9 +345,9 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             (
                 F.sum(
-                    _floor6(
+                    quantize(
                         (F.col("f") - F.col("mu"))
-                        * (F.col("f") - F.col("mu"))
+                        * (F.col("f") - F.col("mu")), 6
                     ).cast("decimal(18,6)")
                 ).cast("double")
                 / F.col("k")
@@ -386,13 +376,13 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("source_a") < F.col("source_b"))
         .groupBy("source_a", "source_b")
         .agg(
-            _floor4(
+            quantize(
                 F.sum(
-                    _floor6(F.abs(F.col("za") - F.col("zb"))).cast(
+                    quantize(F.abs(F.col("za") - F.col("zb")), 6).cast(
                         "decimal(18,6)"
                     )
                 ).cast("double")
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("delta")
         )
         .orderBy("source_a", "source_b")

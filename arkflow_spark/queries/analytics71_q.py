@@ -26,13 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 _O_HOURLY = """
@@ -193,12 +188,12 @@ def events_pacf_durbin(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dl.select(
         "event_type",
         "n_hours",
-        _floor4(F.col("r1")).alias("acf1"),
-        _floor4(F.col("r2")).alias("acf2"),
-        _floor4(F.col("r3")).alias("acf3"),
-        _floor4(F.col("r1")).alias("pacf1"),
-        _floor4(F.col("phi22")).alias("pacf2"),
-        _floor4(pacf3).alias("pacf3"),
+        quantize(F.col("r1"), 4).alias("acf1"),
+        quantize(F.col("r2"), 4).alias("acf2"),
+        quantize(F.col("r3"), 4).alias("acf3"),
+        quantize(F.col("r1"), 4).alias("pacf1"),
+        quantize(F.col("phi22"), 4).alias("pacf2"),
+        quantize(pacf3, 4).alias("pacf3"),
     ).orderBy("event_type")
 
 
@@ -287,18 +282,18 @@ def events_pinball_quantile_eval(
         .groupBy("event_type")
         .agg(
             F.count("*").cast("bigint").alias("n_test_hours"),
-            _floor4(
+            quantize(
                 F.sum(
                     F.when(diff >= 0, _TAU * diff).otherwise(
                         (_TAU - 1) * diff
                     )
                 )
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("pinball_loss"),
-            _floor4(
+            quantize(
                 F.sum(F.when(F.col("c") <= F.col("q90"), 1).otherwise(0))
                 * 1.0
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("coverage"),
         )
         .orderBy("event_type")
@@ -372,8 +367,8 @@ def events_split_rate_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.col("k1").alias("first_half"),
         F.col("k2").alias("second_half"),
-        _floor4(F.col("k2") * 1.0 / F.col("k1")).alias("rate_ratio"),
-        _floor4(
-            (F.col("k1") - n * 0.5) / F.sqrt(n * 0.25)
+        quantize(F.col("k2") * 1.0 / F.col("k1"), 4).alias("rate_ratio"),
+        quantize(
+            (F.col("k1") - n * 0.5) / F.sqrt(n * 0.25), 4
         ).alias("z_stat"),
     ).orderBy("event_type")

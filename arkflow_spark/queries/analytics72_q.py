@@ -31,13 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ aHash near-dup
@@ -154,10 +149,10 @@ def multimodal_ahash_near_dup(
         (F.count("*") - F.countDistinct("ahash"))
         .cast("bigint")
         .alias("n_near_dups"),
-        _floor4(
+        quantize(
             F.sum(F.length(F.replace(F.col("ahash"), F.lit("0"), F.lit(""))))
             .cast("double")
-            / (F.count("*") * _AHASH_BITS)
+            / (F.count("*") * _AHASH_BITS), 4
         ).alias("bit_density"),
     )
 
@@ -222,11 +217,11 @@ def events_poisson_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             "hr",
             "k",
-            _floor4(lam).alias("lambda"),
-            _floor4(
+            quantize(lam, 4).alias("lambda"),
+            quantize(
                 F.col("k") * F.log(F.col("k") * 1.0 / lam)
                 - F.col("k")
-                + lam
+                + lam, 4
             ).alias("surprise"),
         )
         .orderBy(F.col("surprise").desc(), "event_type", "hr")
@@ -334,8 +329,8 @@ def events_absence_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             "hr",
             "hod",
-            _floor4(lam).alias("lambda_hod"),
-            (F.floor(F.exp(-lam) * 1000000 + 0.5) / 1000000).alias(
+            quantize(lam, 4).alias("lambda_hod"),
+            quantize(F.exp(-lam), 6).alias(
                 "p_silence"
             ),
             (F.exp(-lam) < _P0_MAX).alias("flagged"),

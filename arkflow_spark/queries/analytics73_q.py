@@ -29,18 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    """Deterministic 6-decimal quantization (see analytics27_q)."""
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ------------------------------------------------ paired t (hour-of-week)
@@ -150,9 +140,9 @@ def events_paired_t_hod(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     diffs = slot.select(
         "event_type",
-        _floor6(
+        quantize(
             F.col("s2") * 1.0 / F.col("n2")
-            - F.col("s1") * 1.0 / F.col("n1")
+            - F.col("s1") * 1.0 / F.col("n1"), 6
         ).alias("d"),
     )
     agg = diffs.groupBy("event_type").agg(
@@ -161,7 +151,7 @@ def events_paired_t_hod(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("sd1"),
         F.sum(
-            _floor6(F.col("d") * F.col("d")).cast("decimal(18,6)")
+            quantize(F.col("d") * F.col("d"), 6).cast("decimal(18,6)")
         )
         .cast("double")
         .alias("sd2"),
@@ -172,8 +162,8 @@ def events_paired_t_hod(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select(
         "event_type",
         "n_pairs",
-        _floor4(mean_d).alias("mean_diff"),
-        _floor4(mean_d / F.sqrt(var_d / n)).alias("t_stat"),
+        quantize(mean_d, 4).alias("mean_diff"),
+        quantize(mean_d / F.sqrt(var_d / n), 4).alias("t_stat"),
     ).orderBy("event_type")
 
 
@@ -324,19 +314,19 @@ def embedding_triplet_violations(
         F.when(F.col("s_pid") <= F.col("s_nid"), 1)
         .otherwise(0)
         .alias("viol"),
-        _floor6(F.col("s_pid") - F.col("s_nid")).alias("gap"),
+        quantize(F.col("s_pid") - F.col("s_nid"), 6).alias("gap"),
     )
     return (
         scored.groupBy("label")
         .agg(
             F.count("*").cast("bigint").alias("n_triplets"),
             F.sum("viol").cast("bigint").alias("n_violations"),
-            _floor4(F.sum("viol") * 1.0 / F.count("*")).alias(
+            quantize(F.sum("viol") * 1.0 / F.count("*"), 4).alias(
                 "violation_rate"
             ),
-            _floor4(
+            quantize(
                 F.sum(F.col("gap").cast("decimal(18,6)")).cast("double")
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("mean_gap"),
         )
         .orderBy("label")
@@ -438,19 +428,18 @@ def lineitem_revenue_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     both = F.col("q1").isNotNull() & F.col("q2").isNotNull()
     p1 = F.col("r1") / F.col("q1")
     p2 = F.col("r2") / F.col("q2")
-    cents = lambda c: F.floor(c * 100 + 0.5) / 100
     terms = pv.select(
         "flag",
-        cents(F.when(both, (p2 - p1) * F.col("q1")).otherwise(0.0)).alias(
-            "price_t"
-        ),
-        cents(
-            F.when(both, p1 * (F.col("q2") - F.col("q1"))).otherwise(0.0)
+        quantize(
+            F.when(both, (p2 - p1) * F.col("q1")).otherwise(0.0), 2
+        ).alias("price_t"),
+        quantize(
+            F.when(both, p1 * (F.col("q2") - F.col("q1"))).otherwise(0.0), 2
         ).alias("volume_t"),
-        cents(
+        quantize(
             F.when(
                 both, (p2 - p1) * (F.col("q2") - F.col("q1"))
-            ).otherwise(0.0)
+            ).otherwise(0.0), 2
         ).alias("cross_t"),
         F.when(F.col("q1").isNull(), F.col("r2"))
         .otherwise(0.0)

@@ -29,18 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    """Deterministic 6-decimal quantization (see analytics27_q)."""
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ------------------------------------------------ sample KS audit
@@ -163,8 +153,8 @@ def events_sample_ks_representativeness(
         "event_type",
         F.col("nf").alias("n_full"),
         F.col("ns").alias("n_sample"),
-        _floor4(stat).alias("ks_stat"),
-        _floor4(crit).alias("d_crit_95"),
+        quantize(stat, 4).alias("ks_stat"),
+        quantize(crit, 4).alias("d_crit_95"),
         (stat > crit).alias("reject"),
     ).orderBy("event_type")
 
@@ -274,15 +264,13 @@ def events_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("f1").cast("bigint").alias("n1"),
         F.max("f2").cast("bigint").alias("n2"),
     )
-    gap = (
-        F.floor((F.col("v_next") - F.col("v")) * 100 + 0.5) / 100
-    ).cast("decimal(18,2)")
+    gap = quantize(F.col("v_next") - F.col("v"), 2).cast("decimal(18,2)")
     return (
         cum.join(F.broadcast(tot), "event_type")
         .filter(F.col("v_next").isNotNull())
         .groupBy("event_type", "n1", "n2")
         .agg(
-            _floor4(
+            quantize(
                 F.sum(
                     (
                         F.abs(
@@ -292,7 +280,7 @@ def events_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                         * gap
                     ).cast("decimal(38,2)")
                 ).cast("double")
-                / (F.col("n1") * F.col("n2"))
+                / (F.col("n1") * F.col("n2")), 4
             ).alias("w1_distance")
         )
         .select("event_type", "n1", "n2", "w1_distance")
@@ -365,20 +353,20 @@ def embedding_effective_dim_pr(
         F.posexplode("embedding").alias("i0", "raw")
     ).select(
         (F.col("i0") + 1).alias("i"),
-        _floor6(F.col("raw").cast("double")).alias("v"),
+        quantize(F.col("raw").cast("double"), 6).alias("v"),
     )
     mom = x.groupBy("i").agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum(F.col("v").cast("decimal(18,6)")).cast("double").alias("s1"),
-        F.sum(_floor6(F.col("v") * F.col("v")).cast("decimal(18,6)"))
+        F.sum(quantize(F.col("v") * F.col("v"), 6).cast("decimal(18,6)"))
         .cast("double")
         .alias("s2"),
     )
     vars_ = mom.select(
         "i",
-        _floor6(
+        quantize(
             (F.col("s2") - F.col("s1") * F.col("s1") / F.col("n"))
-            / F.col("n")
+            / F.col("n"), 6
         ).alias("var_i"),
     )
     agg = vars_.agg(
@@ -387,7 +375,7 @@ def embedding_effective_dim_pr(
         .cast("double")
         .alias("sv"),
         F.sum(
-            _floor6(F.col("var_i") * F.col("var_i")).cast("decimal(18,6)")
+            quantize(F.col("var_i") * F.col("var_i"), 6).cast("decimal(18,6)")
         )
         .cast("double")
         .alias("sv2"),
@@ -395,9 +383,9 @@ def embedding_effective_dim_pr(
     )
     return agg.select(
         "n_dims",
-        _floor4(F.col("sv") * F.col("sv") / F.col("sv2")).alias(
+        quantize(F.col("sv") * F.col("sv") / F.col("sv2"), 4).alias(
             "effective_dim"
         ),
-        _floor4(F.col("sv")).alias("total_variance"),
-        _floor4(F.col("vmax") / F.col("sv")).alias("top_dim_share"),
+        quantize(F.col("sv"), 4).alias("total_variance"),
+        quantize(F.col("vmax") / F.col("sv"), 4).alias("top_dim_share"),
     )

@@ -28,13 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ KMV theta intersection
@@ -180,10 +175,10 @@ def sketch_theta_intersection(
         .select(
             "exact_intersection",
             F.col("n_in_both").alias("sketch_members"),
-            _floor4(
+            quantize(
                 F.when(
                     F.col("tmin").isNull(), F.col("n_in_both") * 1.0
-                ).otherwise(F.col("n_in_both") / theta_frac)
+                ).otherwise(F.col("n_in_both") / theta_frac), 4
             ).alias("kmv_estimate"),
         )
     )
@@ -360,7 +355,7 @@ def lineitem_brand_concentration(
         .select(
             "yr",
             "n_brands",
-            (F.floor(F.col("r") / F.col("t") * 1000000 + 0.5) / 1000000)
+            quantize(F.col("r") / F.col("t"), 6)
             .alias("s"),
             F.row_number().over(wr).alias("rk"),
         )
@@ -368,24 +363,23 @@ def lineitem_brand_concentration(
     return (
         shr.groupBy("yr", "n_brands")
         .agg(
-            _floor4(
+            quantize(
                 F.sum(
                     F.when(
                         F.col("rk") <= 4, F.col("s").cast("decimal(18,6)")
                     ).otherwise(F.lit(0).cast("decimal(18,6)"))
-                )
+                ), 4
             ).alias("cr4"),
-            _floor4(
+            quantize(
                 F.sum(
                     F.when(
                         F.col("rk") <= 8, F.col("s").cast("decimal(18,6)")
                     ).otherwise(F.lit(0).cast("decimal(18,6)"))
-                )
+                ), 4
             ).alias("cr8"),
             F.floor(
                 F.sum(
-                    (F.floor(F.col("s") * F.col("s") * 1000000 + 0.5)
-                     / 1000000).cast("decimal(18,6)")
+                    quantize(F.col("s") * F.col("s"), 6).cast("decimal(18,6)")
                 )
                 * 10000
                 + 0.5

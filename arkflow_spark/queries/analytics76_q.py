@@ -28,13 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ burstiness (CV form)
@@ -110,9 +105,9 @@ def events_interarrival_burstiness(
     return mom.select(
         "event_type",
         F.col("n").alias("n_gaps"),
-        _floor4(mu / 1000000).alias("mean_gap_s"),
-        _floor4(sd / mu).alias("cv"),
-        _floor4((sd - mu) / (sd + mu)).alias("burstiness_b"),
+        quantize(mu / 1000000, 4).alias("mean_gap_s"),
+        quantize(sd / mu, 4).alias("cv"),
+        quantize((sd - mu) / (sd + mu), 4).alias("burstiness_b"),
     ).orderBy("event_type")
 
 
@@ -196,10 +191,10 @@ def events_session_gap_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("m").alias("gap_minutes"),
             (F.col("n_users") + F.col("n_breaks")).alias("n_sessions"),
-            _floor4(
+            quantize(
                 F.col("n_events")
                 * 1.0
-                / (F.col("n_users") + F.col("n_breaks"))
+                / (F.col("n_users") + F.col("n_breaks")), 4
             ).alias("events_per_session"),
         )
         .orderBy("gap_minutes")
@@ -304,10 +299,10 @@ def events_groupby_key_advisor(
         "key_set",
         "n_groups",
         "max_group",
-        _floor4(F.col("max_group") * 1.0 / F.col("n_rows")).alias(
+        quantize(F.col("max_group") * 1.0 / F.col("n_rows"), 4).alias(
             "max_share"
         ),
-        _floor4(skew).alias("skew_ratio"),
+        quantize(skew, 4).alias("skew_ratio"),
         F.when(
             F.col("n_groups") <= _BROADCAST_GROUPS,
             "partial-agg+broadcast-result",

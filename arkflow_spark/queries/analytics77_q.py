@@ -27,13 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ rare transitions
@@ -101,8 +96,8 @@ def events_rare_transition_surprise(
             "cur",
             "nxt",
             F.col("c").alias("n_observed"),
-            (F.floor(p * 1000000 + 0.5) / 1000000).alias("p_mle"),
-            _floor4(-F.log(p)).alias("surprisal"),
+            quantize(p, 6).alias("p_mle"),
+            quantize(-F.log(p), 4).alias("surprisal"),
             F.floor(-F.log(p) * F.col("c") * 100 + 0.5)
             .cast("bigint")
             .alias("total_surprise_x100"),
@@ -194,8 +189,8 @@ def customer_segment_nation_residuals(
             F.col("seg").alias("c_mktsegment"),
             F.col("nat").alias("c_nationkey"),
             F.col("o").alias("observed"),
-            _floor4(e).alias("expected"),
-            _floor4(z).alias("std_residual"),
+            quantize(e, 4).alias("expected"),
+            quantize(z, 4).alias("std_residual"),
         )
         .orderBy(
             F.abs(F.col("std_residual")).desc(),
@@ -292,7 +287,7 @@ def events_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("k").cast("bigint").alias("n_rows"),
         F.min("k").cast("bigint").alias("min_k"),
         below.alias(f"rows_below_k{_K_THRESHOLD}"),
-        _floor4(
-            below * 1.0 / F.sum("k")
+        quantize(
+            below * 1.0 / F.sum("k"), 4
         ).alias("risk_share"),
     )

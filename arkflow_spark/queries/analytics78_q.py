@@ -28,18 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    """Deterministic 6-decimal quantization (see analytics27_q)."""
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 _O_NORMS = """
@@ -67,17 +57,17 @@ def _spark_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "vec_id",
         (F.col("i0") + 1).alias("i"),
-        _floor6(F.col("raw").cast("double")).alias("v"),
+        quantize(F.col("raw").cast("double"), 6).alias("v"),
     )
     nrm = x.groupBy("vec_id").agg(
-        _floor6(
+        quantize(
             F.sqrt(
                 F.sum(
-                    _floor6(F.col("v") * F.col("v")).cast(
+                    quantize(F.col("v") * F.col("v"), 6).cast(
                         "decimal(18,6)"
                     )
                 ).cast("double")
-            )
+            ), 6
         ).alias("nrm")
     )
     return x, nrm
@@ -166,18 +156,18 @@ def embedding_length_centroid_corr(
     """
     x, nrm = _spark_norms(spark, sf_dir)
     cent = x.groupBy("i").agg(
-        _floor6(
+        quantize(
             F.sum(F.col("v").cast("decimal(18,6)")).cast("double")
-            / F.count("*")
+            / F.count("*"), 6
         ).alias("c")
     )
     cnorm = cent.agg(
-        _floor6(
+        quantize(
             F.sqrt(
                 F.sum(
-                    _floor6(F.col("c") * F.col("c")).cast("decimal(18,6)")
+                    quantize(F.col("c") * F.col("c"), 6).cast("decimal(18,6)")
                 ).cast("double")
-            )
+            ), 6
         ).alias("cn")
     )
     dots = (
@@ -185,7 +175,7 @@ def embedding_length_centroid_corr(
         .groupBy("vec_id")
         .agg(
             F.sum(
-                _floor6(F.col("v") * F.col("c")).cast("decimal(18,6)")
+                quantize(F.col("v") * F.col("c"), 6).cast("decimal(18,6)")
             )
             .cast("double")
             .alias("dot")
@@ -196,8 +186,8 @@ def embedding_length_centroid_corr(
         .crossJoin(F.broadcast(cnorm))
         .select(
             "vec_id",
-            _floor6(
-                F.col("dot") / (F.col("nrm") * F.col("cn"))
+            quantize(
+                F.col("dot") / (F.col("nrm") * F.col("cn")), 6
             ).alias("y"),
         )
     )
@@ -206,7 +196,7 @@ def embedding_length_centroid_corr(
         d.select(F.col("doc_id").alias("vec_id"), "n_chars"), "vec_id"
     ).select(
         F.col("n_chars").cast("bigint").alias("len"),
-        _floor6(F.log(F.col("n_chars"))).alias("loglen"),
+        quantize(F.log(F.col("n_chars")), 6).alias("loglen"),
         "y",
     )
     s = joined.agg(
@@ -222,7 +212,7 @@ def embedding_length_centroid_corr(
         .cast("double")
         .alias("sl"),
         F.sum(
-            _floor6(F.col("loglen") * F.col("loglen")).cast(
+            quantize(F.col("loglen") * F.col("loglen"), 6).cast(
                 "decimal(18,6)"
             )
         )
@@ -232,17 +222,17 @@ def embedding_length_centroid_corr(
         .cast("double")
         .alias("sy"),
         F.sum(
-            _floor6(F.col("y") * F.col("y")).cast("decimal(18,6)")
+            quantize(F.col("y") * F.col("y"), 6).cast("decimal(18,6)")
         )
         .cast("double")
         .alias("syy"),
         F.sum(
-            _floor6(F.col("len") * F.col("y")).cast("decimal(28,6)")
+            quantize(F.col("len") * F.col("y"), 6).cast("decimal(28,6)")
         )
         .cast("double")
         .alias("sxy"),
         F.sum(
-            _floor6(F.col("loglen") * F.col("y")).cast("decimal(18,6)")
+            quantize(F.col("loglen") * F.col("y"), 6).cast("decimal(18,6)")
         )
         .cast("double")
         .alias("sly"),
@@ -258,8 +248,8 @@ def embedding_length_centroid_corr(
     )
     return s.select(
         n.alias("n_docs"),
-        _floor4(r_len).alias("r_centroid_length"),
-        _floor4(r_log).alias("r_centroid_loglength"),
+        quantize(r_len, 4).alias("r_centroid_length"),
+        quantize(r_log, 4).alias("r_centroid_loglength"),
     )
 
 
@@ -330,18 +320,18 @@ def embedding_source_cohesion(
     )
     xs = x.join(F.broadcast(d), "vec_id")
     cent = xs.groupBy("source", "i").agg(
-        _floor6(
+        quantize(
             F.sum(F.col("v").cast("decimal(18,6)")).cast("double")
-            / F.count("*")
+            / F.count("*"), 6
         ).alias("c")
     )
     cnorm = cent.groupBy("source").agg(
-        _floor6(
+        quantize(
             F.sqrt(
                 F.sum(
-                    _floor6(F.col("c") * F.col("c")).cast("decimal(18,6)")
+                    quantize(F.col("c") * F.col("c"), 6).cast("decimal(18,6)")
                 ).cast("double")
-            )
+            ), 6
         ).alias("cn")
     )
     dots = (
@@ -349,7 +339,7 @@ def embedding_source_cohesion(
         .groupBy("source", "vec_id")
         .agg(
             F.sum(
-                _floor6(F.col("v") * F.col("c")).cast("decimal(18,6)")
+                quantize(F.col("v") * F.col("c"), 6).cast("decimal(18,6)")
             )
             .cast("double")
             .alias("dot")
@@ -361,8 +351,8 @@ def embedding_source_cohesion(
         .filter((F.col("nrm") > 0) & (F.col("cn") > 0))
         .select(
             "source",
-            _floor6(
-                F.col("dot") / (F.col("nrm") * F.col("cn"))
+            quantize(
+                F.col("dot") / (F.col("nrm") * F.col("cn")), 6
             ).alias("cos_c"),
         )
     )
@@ -370,13 +360,13 @@ def embedding_source_cohesion(
         coh.groupBy("source")
         .agg(
             F.count("*").cast("bigint").alias("n_docs"),
-            _floor4(
+            quantize(
                 F.sum(F.col("cos_c").cast("decimal(18,6)")).cast(
                     "double"
                 )
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("cohesion_mean"),
-            _floor4(F.min("cos_c")).alias("cohesion_min"),
+            quantize(F.min("cos_c"), 4).alias("cohesion_min"),
         )
         .orderBy("source")
     )
@@ -473,7 +463,7 @@ def ann_retrieval_length_bias(
     ).select(
         "doc_id",
         "source",
-        _floor6(percent_rank_of(F.col(RN), F.col(N))).alias("lp"),
+        quantize(percent_rank_of(F.col(RN), F.col(N)), 6).alias("lp"),
     )
     e = parallelize_fanout(load(spark, sf_dir, "embeddings"))
     withn = e.select(
@@ -525,14 +515,14 @@ def ann_retrieval_length_bias(
         scored2.groupBy("query_len_q")
         .agg(
             F.count("*").cast("bigint").alias("n_pairs"),
-            _floor4(dsum6("neigh_lp") / F.count("*")).alias(
+            quantize(dsum6("neigh_lp") / F.count("*"), 4).alias(
                 "mean_neighbor_len_pct"
             ),
-            _floor4(dsum6("query_lp") / F.count("*")).alias(
+            quantize(dsum6("query_lp") / F.count("*"), 4).alias(
                 "mean_query_len_pct"
             ),
-            _floor4(
-                (dsum6("neigh_lp") - dsum6("query_lp")) / F.count("*")
+            quantize(
+                (dsum6("neigh_lp") - dsum6("query_lp")) / F.count("*"), 4
             ).alias("length_drift"),
         )
         .orderBy("query_len_q")

@@ -29,14 +29,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.queries.dedup_q import _mh_oracle
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ referential integrity
@@ -134,14 +129,9 @@ def dq_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "relation",
         "n_rows",
         "n_orphans",
-        (
-            F.floor(
-                (1 - F.col("n_orphans") * 1.0 / F.col("n_rows"))
-                * 1000000
-                + 0.5
-            )
-            / 1000000
-        ).alias("integrity_rate"),
+        quantize(1 - F.col("n_orphans") * 1.0 / F.col("n_rows"), 6).alias(
+            "integrity_rate"
+        ),
     ).orderBy("relation")
 
 
@@ -235,9 +225,9 @@ def multimodal_payload_entropy(
         .groupBy("media_group")
         .agg(
             F.count("*").cast("bigint").alias("n_payloads"),
-            _floor4(
+            quantize(
                 F.sum(F.col("ent").cast("decimal(18,6)")).cast("double")
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("mean_entropy"),
             F.min("ent").alias("min_entropy"),
             F.max("ent").alias("max_entropy"),
@@ -321,10 +311,10 @@ def dedup_transitivity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         closed.agg(
             F.count("*").cast("bigint").alias("n_wedges"),
             F.sum("is_closed").cast("bigint").alias("n_closed"),
-            _floor4(
+            quantize(
                 F.sum("is_closed")
                 * 1.0
-                / F.greatest(F.count("*"), F.lit(1))
+                / F.greatest(F.count("*"), F.lit(1)), 4
             ).alias("transitivity_rate"),
         )
         .crossJoin(F.broadcast(n_pairs))

@@ -32,11 +32,6 @@ from arkflow_spark.queries.base import DUCK_TS_FMT, SPARK_TS_FMT, query
 from arkflow_spark.tables import load
 
 
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
 # -------------------------------------------------- 2D skyline
 
 

@@ -27,18 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import ORACLE, QUERIES, query
+from arkflow_spark.queries.base import ORACLE, QUERIES, quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    """Deterministic 6-decimal quantization (see analytics27_q)."""
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ------------------------------------------------ MASE backtest
@@ -153,12 +143,12 @@ def events_forecast_mase_seasonal_naive(
             "event_type",
             "train_n",
             "test_n",
-            _floor4(F.col("test_ae") * 1.0 / F.col("test_n")).alias(
+            quantize(F.col("test_ae") * 1.0 / F.col("test_n"), 4).alias(
                 "test_mae"
             ),
-            _floor4(
+            quantize(
                 (F.col("test_ae") * 1.0 / F.col("test_n"))
-                / (F.col("train_ae") * 1.0 / F.col("train_n"))
+                / (F.col("train_ae") * 1.0 / F.col("train_n")), 4
             ).alias("mase"),
         )
         .orderBy("event_type")
@@ -169,6 +159,8 @@ def events_forecast_mase_seasonal_naive(
 
 
 def _nmi_oracle() -> str:
+    # vector_q registers the ann_ivf_assign oracle read below
+    import arkflow_spark.queries.vector_q  # noqa: F401
     ivf = ORACLE["ann_ivf_assign"]
     return f"""
     WITH assign AS (
@@ -257,7 +249,7 @@ def embedding_cluster_source_nmi(
         .crossJoin(F.broadcast(tot))
         .agg(
             F.sum(
-                _floor6(
+                quantize(
                     F.col("n_ij")
                     * 1.0
                     / F.col("n")
@@ -266,7 +258,7 @@ def embedding_cluster_source_nmi(
                         * 1.0
                         * F.col("n")
                         / (F.col("ni") * 1.0 * F.col("nj"))
-                    )
+                    ), 6
                 ).cast("decimal(18,6)")
             )
             .cast("double")
@@ -279,9 +271,9 @@ def embedding_cluster_source_nmi(
             df.crossJoin(F.broadcast(tot))
             .agg(
                 F.sum(
-                    _floor6(
+                    quantize(
                         -(F.col(cnt_col) * 1.0 / F.col("n"))
-                        * F.log(F.col(cnt_col) * 1.0 / F.col("n"))
+                        * F.log(F.col(cnt_col) * 1.0 / F.col("n")), 6
                     ).cast("decimal(18,6)")
                 )
                 .cast("double")
@@ -303,9 +295,9 @@ def embedding_cluster_source_nmi(
         .select(
             "n_clusters",
             "n_sources",
-            _floor4(F.col("mi")).alias("mutual_information"),
-            _floor4(
-                F.col("mi") / F.sqrt(F.col("h_r") * F.col("h_c"))
+            quantize(F.col("mi"), 4).alias("mutual_information"),
+            quantize(
+                F.col("mi") / F.sqrt(F.col("h_r") * F.col("h_c")), 4
             ).alias("nmi"),
         )
     )
@@ -379,9 +371,9 @@ def lineitem_part_price_dispersion(
         sp.groupBy("l_partkey")
         .agg(
             F.count("*").cast("bigint").alias("n_suppliers"),
-            _floor4(F.min("unit_price")).alias("min_price"),
-            _floor4(F.max("unit_price")).alias("max_price"),
-            _floor4(F.max("unit_price") / F.min("unit_price")).alias(
+            quantize(F.min("unit_price"), 4).alias("min_price"),
+            quantize(F.max("unit_price"), 4).alias("max_price"),
+            quantize(F.max("unit_price") / F.min("unit_price"), 4).alias(
                 "price_ratio"
             ),
         )

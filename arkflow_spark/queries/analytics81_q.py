@@ -28,18 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    """Deterministic 6-decimal quantization (see analytics27_q)."""
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ------------------------------------------------ ICC(1)
@@ -120,7 +110,7 @@ def events_icc_user_clustering(
         .cast("double")
         .alias("sn2"),
         F.sum(
-            _floor6(F.col("s") * F.col("s") / F.col("n")).cast(
+            quantize(F.col("s") * F.col("s") / F.col("n"), 6).cast(
                 "decimal(28,6)"
             )
         )
@@ -129,8 +119,7 @@ def events_icc_user_clustering(
     )
     sst = e.agg(
         F.sum(
-            (F.floor(F.col("value") * F.col("value") * 10000 + 0.5)
-             / 10000).cast("decimal(28,4)")
+            quantize(F.col("value") * F.col("value"), 4).cast("decimal(28,4)")
         )
         .cast("double")
         .alias("sq")
@@ -144,10 +133,10 @@ def events_icc_user_clustering(
     return j.select(
         F.col("k").alias("n_users"),
         F.col("nt").alias("n_events"),
-        _floor4(n0).alias("n0"),
-        _floor4(msb).alias("msb"),
-        _floor4(msw).alias("msw"),
-        _floor4((msb - msw) / (msb + (n0 - 1) * msw)).alias("icc1"),
+        quantize(n0, 4).alias("n0"),
+        quantize(msb, 4).alias("msb"),
+        quantize(msw, 4).alias("msw"),
+        quantize((msb - msw) / (msb + (n0 - 1) * msw), 4).alias("icc1"),
     )
 
 
@@ -220,17 +209,17 @@ def documents_neyman_allocation(
     sd = strata.select(
         "source",
         "n_s",
-        _floor6(
+        quantize(
             F.sqrt(
                 (F.col("s2") - F.col("s1") * F.col("s1") / F.col("n_s"))
                 / F.greatest(F.col("n_s") - 1, F.lit(1))
-            )
+            ), 6
         ).alias("sd_s"),
     )
     tot = sd.agg(
         F.sum("n_s").cast("bigint").alias("nt"),
         F.sum(
-            _floor6(F.col("n_s") * F.col("sd_s")).cast("decimal(28,6)")
+            quantize(F.col("n_s") * F.col("sd_s"), 6).cast("decimal(28,6)")
         )
         .cast("double")
         .alias("w"),
@@ -243,7 +232,7 @@ def documents_neyman_allocation(
             "sd_s",
             F.floor(
                 _SAMPLE_BUDGET
-                * (_floor6(F.col("n_s") * F.col("sd_s")))
+                * (quantize(F.col("n_s") * F.col("sd_s"), 6))
                 / F.col("w")
                 + 0.5
             )
@@ -356,9 +345,9 @@ def events_median_polish_hourweek(
     resid = t3.select(
         "dow",
         "hod",
-        _floor4(
+        quantize(
             F.col("v")
-            - F.expr("percentile(CAST(v AS DOUBLE), 0.5)").over(w4)
+            - F.expr("percentile(CAST(v AS DOUBLE), 0.5)").over(w4), 4
         ).alias("residual"),
     )
     return resid.orderBy(

@@ -28,18 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    """Deterministic 6-decimal quantization (see analytics27_q)."""
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ------------------------------------------------ experience curve
@@ -126,8 +116,8 @@ def lineitem_experience_curve(
     )
     cum = monthly.select(
         "p_brand",
-        _floor6(F.log(F.col("rev") / F.col("qty"))).alias("y"),
-        _floor6(F.log(F.sum("qty").over(wc))).alias("x"),
+        quantize(F.log(F.col("rev") / F.col("qty")), 6).alias("y"),
+        quantize(F.log(F.sum("qty").over(wc)), 6).alias("x"),
     )
     ols = (
         cum.groupBy("p_brand")
@@ -140,12 +130,12 @@ def lineitem_experience_curve(
             .cast("double")
             .alias("sy"),
             F.sum(
-                _floor6(F.col("x") * F.col("y")).cast("decimal(18,6)")
+                quantize(F.col("x") * F.col("y"), 6).cast("decimal(18,6)")
             )
             .cast("double")
             .alias("sxy"),
             F.sum(
-                _floor6(F.col("x") * F.col("x")).cast("decimal(18,6)")
+                quantize(F.col("x") * F.col("x"), 6).cast("decimal(18,6)")
             )
             .cast("double")
             .alias("sxx"),
@@ -158,8 +148,8 @@ def lineitem_experience_curve(
     return ols.select(
         "p_brand",
         "n_months",
-        _floor4(slope).alias("elasticity_slope"),
-        _floor4(1 - F.pow(F.lit(2.0), slope)).alias("learning_rate"),
+        quantize(slope, 4).alias("elasticity_slope"),
+        quantize(1 - F.pow(F.lit(2.0), slope), 4).alias("learning_rate"),
     ).orderBy("p_brand")
 
 
@@ -238,10 +228,10 @@ def events_u_chart_error_rate(
             F.col("d").alias("day_idx"),
             F.col("n").alias("n_events"),
             "errs",
-            _floor4(u_i).alias("u_i"),
-            _floor4(ub).alias("u_bar"),
-            _floor4(ub + 3 * sig).alias("ucl"),
-            _floor4(F.greatest(ub - 3 * sig, F.lit(0.0))).alias("lcl"),
+            quantize(u_i, 4).alias("u_i"),
+            quantize(ub, 4).alias("u_bar"),
+            quantize(ub + 3 * sig, 4).alias("ucl"),
+            quantize(F.greatest(ub - 3 * sig, F.lit(0.0)), 4).alias("lcl"),
             (
                 (u_i > ub + 3 * sig)
                 | (u_i < F.greatest(ub - 3 * sig, F.lit(0.0)))
@@ -337,8 +327,7 @@ def events_compound_poisson_check(
         .cast("double")
         .alias("s1"),
         F.sum(
-            (F.floor(F.col("value") * F.col("value") * 10000 + 0.5)
-             / 10000).cast("decimal(28,4)")
+            quantize(F.col("value") * F.col("value"), 4).cast("decimal(28,4)")
         )
         .cast("double")
         .alias("s2"),
@@ -362,7 +351,7 @@ def events_compound_poisson_check(
         .cast("double")
         .alias("st"),
         F.sum(
-            (F.floor(F.col("tot") * F.col("tot") * 100 + 0.5) / 100)
+            quantize(F.col("tot") * F.col("tot"), 2)
             .cast("decimal(38,2)")
         )
         .cast("double")
@@ -381,11 +370,10 @@ def events_compound_poisson_check(
         F.col("nd") - 1
     )
     pred = mean_n * var_x + F.pow(mean_x, F.lit(2)) * var_n
-    cents = lambda c: F.floor(c * 100 + 0.5) / 100
     return j.select(
         "event_type",
         F.col("nd").alias("n_days"),
-        cents(obs).alias("observed_var"),
-        cents(pred).alias("predicted_var"),
-        _floor4(obs / pred).alias("var_ratio"),
+        quantize(obs, 2).alias("observed_var"),
+        quantize(pred, 2).alias("predicted_var"),
+        quantize(obs / pred, 4).alias("var_ratio"),
     ).orderBy("event_type")

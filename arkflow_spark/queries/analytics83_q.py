@@ -28,19 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.queries.dedup_q import _ORACLE_SHINGLES, _shingles
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    """Deterministic 6-decimal quantization (see analytics27_q)."""
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ------------------------------------------------ degree assortativity
@@ -144,7 +134,7 @@ def graph_degree_assortativity(
     return (
         mom.crossJoin(F.broadcast(n_edges))
         .crossJoin(F.broadcast(n_nodes))
-        .select("n_edges", "n_nodes", _floor4(r).alias("assortativity"))
+        .select("n_edges", "n_nodes", quantize(r, 4).alias("assortativity"))
     )
 
 
@@ -247,7 +237,7 @@ def events_extremal_index_runs(
         "event_type",
         "n_exceed",
         "n_clusters",
-        _floor4(F.col("n_clusters") * 1.0 / F.col("n_exceed")).alias(
+        quantize(F.col("n_clusters") * 1.0 / F.col("n_exceed"), 4).alias(
             "theta_hat"
         ),
     ).orderBy("event_type")
@@ -367,8 +357,8 @@ def documents_novelty_decay_fit(
     )
     pts = per_dec.select(
         F.col("decile").cast("double").alias("x"),
-        _floor6(F.log(F.col("tn") * 1.0 / F.col("ts"))).alias("y"),
-        _floor4(F.col("tn") * 1.0 / F.col("ts")).alias("rate"),
+        quantize(F.log(F.col("tn") * 1.0 / F.col("ts")), 6).alias("y"),
+        quantize(F.col("tn") * 1.0 / F.col("ts"), 4).alias("rate"),
     ).persist()
     ols = pts.agg(
         F.count("*").cast("bigint").alias("k"),
@@ -378,7 +368,7 @@ def documents_novelty_decay_fit(
         .cast("double")
         .alias("sy"),
         F.sum(
-            _floor6(F.col("x") * F.col("y")).cast("decimal(18,6)")
+            quantize(F.col("x") * F.col("y"), 6).cast("decimal(18,6)")
         )
         .cast("double")
         .alias("sxy"),
@@ -394,7 +384,7 @@ def documents_novelty_decay_fit(
         .select(
             F.col("k").alias("n_deciles"),
             "peak_novelty",
-            _floor4(slope).alias("decay_slope"),
-            _floor4(-math.log(2) / slope).alias("half_life_deciles"),
+            quantize(slope, 4).alias("decay_slope"),
+            quantize(-math.log(2) / slope, 4).alias("half_life_deciles"),
         )
     )

@@ -28,18 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    """Deterministic 6-decimal quantization (see analytics27_q)."""
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ------------------------------------------------ hedonic 2-var OLS
@@ -113,7 +103,6 @@ def part_hedonic_price_2var(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("x2"),
         F.col("p_retailprice").alias("y"),
     )
-    cents = lambda c: F.floor(c * 100 + 0.5) / 100
     m = obs.agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum(F.col("x1").cast("decimal(18,2)"))
@@ -134,10 +123,10 @@ def part_hedonic_price_2var(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((F.col("x2") * F.col("x2")).cast("decimal(28,4)"))
         .cast("double")
         .alias("s22"),
-        F.sum(cents(F.col("x1") * F.col("y")).cast("decimal(28,2)"))
+        F.sum(quantize(F.col("x1") * F.col("y"), 2).cast("decimal(28,2)"))
         .cast("double")
         .alias("s1y"),
-        F.sum(cents(F.col("x2") * F.col("y")).cast("decimal(28,2)"))
+        F.sum(quantize(F.col("x2") * F.col("y"), 2).cast("decimal(28,2)"))
         .cast("double")
         .alias("s2y"),
     )
@@ -152,10 +141,10 @@ def part_hedonic_price_2var(spark: SparkSession, sf_dir: str) -> DataFrame:
     b2 = (c2y * c11 - c1y * c12) / det
     return m.select(
         n.alias("n_parts"),
-        _floor4(b1).alias("beta_size"),
-        _floor4(b2).alias("beta_economy"),
-        _floor4(
-            F.col("sy") / n - b1 * F.col("s1") / n - b2 * F.col("s2") / n
+        quantize(b1, 4).alias("beta_size"),
+        quantize(b2, 4).alias("beta_economy"),
+        quantize(
+            F.col("sy") / n - b1 * F.col("s1") / n - b2 * F.col("s2") / n, 4
         ).alias("intercept"),
     )
 
@@ -271,10 +260,10 @@ def events_user_activity_markov(
     p01 = F.col("n01") * 1.0 / F.col("n0x")
     return trans.select(
         (F.col("n1x") + F.col("n0x")).alias("n_transitions"),
-        _floor4(p11).alias("p_stay"),
-        _floor4(p01).alias("p_return"),
-        _floor4(p01 / (1 - p11 + p01)).alias("stationary_rate"),
-        _floor4(F.col("act") * 1.0 / F.col("tot")).alias(
+        quantize(p11, 4).alias("p_stay"),
+        quantize(p01, 4).alias("p_return"),
+        quantize(p01 / (1 - p11 + p01), 4).alias("stationary_rate"),
+        quantize(F.col("act") * 1.0 / F.col("tot"), 4).alias(
             "observed_rate"
         ),
     )
@@ -351,7 +340,7 @@ def events_bounce_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").cast("bigint").alias("n_sessions"),
             F.sum("is_bounce").cast("bigint").alias("n_bounces"),
-            _floor4(F.sum("is_bounce") * 1.0 / F.count("*")).alias(
+            quantize(F.sum("is_bounce") * 1.0 / F.count("*"), 4).alias(
                 "bounce_rate"
             ),
         )

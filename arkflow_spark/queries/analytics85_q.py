@@ -27,18 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    """Deterministic 6-decimal quantization (see analytics27_q)."""
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ------------------------------------------------ distance concentration
@@ -135,8 +125,8 @@ def embedding_distance_concentration(
     )
     cosd = a.join(b, "ida").select(
         "ida",
-        _floor6(
-            _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
+        quantize(
+            _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")), 6
         ).alias("c"),
     )
     ranked = dr.with_global_order(
@@ -163,11 +153,11 @@ def embedding_distance_concentration(
     )
     return qs.select(
         "n_pairs",
-        _floor4(F.col("mean_c")).alias("mean_cosine"),
-        _floor4(F.col("p05")).alias("p05_cosine"),
-        _floor4(F.col("p95")).alias("p95_cosine"),
-        _floor4(
-            (F.col("p95") - F.col("p05")) / (1 - F.col("mean_c"))
+        quantize(F.col("mean_c"), 4).alias("mean_cosine"),
+        quantize(F.col("p05"), 4).alias("p05_cosine"),
+        quantize(F.col("p95"), 4).alias("p95_cosine"),
+        quantize(
+            (F.col("p95") - F.col("p05")) / (1 - F.col("mean_c")), 4
         ).alias("relative_contrast"),
     )
 
@@ -253,12 +243,12 @@ def events_behavior_cooccurrence_lift(
             "type_a",
             "type_b",
             F.col("c_ab").alias("users_both"),
-            _floor4(F.col("c_ab") * 1.0 / F.col("ca")).alias(
+            quantize(F.col("c_ab") * 1.0 / F.col("ca"), 4).alias(
                 "confidence_a_to_b"
             ),
-            _floor4(
+            quantize(
                 F.col("c_ab") * 1.0 * F.col("n_users")
-                / (F.col("ca") * F.col("cb"))
+                / (F.col("ca") * F.col("cb")), 4
             ).alias("lift"),
         )
         .orderBy("type_a", "type_b")
@@ -372,13 +362,13 @@ def customer_balance_order_propensity(
         .select(
             F.col("quartile").alias("balance_quartile"),
             "n_customers",
-            _floor4(
-                F.col("n_orders") * 1.0 / F.col("n_customers")
+            quantize(
+                F.col("n_orders") * 1.0 / F.col("n_customers"), 4
             ).alias("orders_per_customer"),
-            _floor4(
-                F.col("n_active") * 1.0 / F.col("n_customers")
+            quantize(
+                F.col("n_active") * 1.0 / F.col("n_customers"), 4
             ).alias("active_rate"),
-            _floor4(F.col("rev") / F.col("tr")).alias("revenue_share"),
+            quantize(F.col("rev") / F.col("tr"), 4).alias("revenue_share"),
         )
         .orderBy("balance_quartile")
     )

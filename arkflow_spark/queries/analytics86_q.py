@@ -27,13 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ priority lead time
@@ -204,12 +199,12 @@ def orders_month_end_loading(
     return agg.select(
         F.col("n").alias("n_orders"),
         F.col("k").alias("tail_orders"),
-        _floor4(share).alias("tail_share"),
-        _floor4(eshare).alias("expected_share"),
-        _floor4(share / eshare).alias("loading_lift"),
-        _floor4(
+        quantize(share, 4).alias("tail_share"),
+        quantize(eshare, 4).alias("expected_share"),
+        quantize(share / eshare, 4).alias("loading_lift"),
+        quantize(
             (F.col("k") - F.col("expected_p_n"))
-            / F.sqrt(F.col("expected_p_n") * (1 - eshare))
+            / F.sqrt(F.col("expected_p_n") * (1 - eshare)), 4
         ).alias("z_stat"),
     )
 
@@ -330,16 +325,11 @@ def events_anderson_darling_2sample(
     num = (
         F.col("m") * 1.0 * F.col("nn") - F.col("j") * 1.0 * F.col("n1")
     )
-    term = (
-        F.floor(
-            num
-            * num
-            / (F.col("j") * 1.0 * (F.col("nn") - F.col("j")))
-            * F.col("cblk")
-            * 1000000
-            + 0.5
-        )
-        / 1000000
+    term = quantize(
+        num
+        * num
+        / (F.col("j") * 1.0 * (F.col("nn") - F.col("j")))
+        * F.col("cblk"), 6
     ).cast("decimal(38,6)")
     terms = (
         cum.join(F.broadcast(tot), "event_type")
@@ -363,7 +353,7 @@ def events_anderson_darling_2sample(
         "event_type",
         "n1",
         "n2",
-        _floor4(
+        quantize(
             F.col("s")
             / (
                 F.col("nn")
@@ -372,6 +362,6 @@ def events_anderson_darling_2sample(
                 * F.col("n2")
                 / F.col("nn")
             )
-            / F.col("nn")
+            / F.col("nn"), 4
         ).alias("a2_stat"),
     ).orderBy("event_type")

@@ -28,18 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    """Deterministic 6-decimal quantization (see analytics27_q)."""
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ------------------------------------------------ Fisher ratio
@@ -107,7 +97,7 @@ def embedding_fisher_ratio_dims(
     ).select(
         "label",
         (F.col("i0") + 1).alias("i"),
-        _floor6(F.col("raw").cast("double")).alias("v"),
+        quantize(F.col("raw").cast("double"), 6).alias("v"),
     )
     lab = x.groupBy("label", "i").agg(
         F.count("*").cast("bigint").alias("n"),
@@ -115,7 +105,7 @@ def embedding_fisher_ratio_dims(
         .cast("double")
         .alias("s1"),
         F.sum(
-            _floor6(F.col("v") * F.col("v")).cast("decimal(18,6)")
+            quantize(F.col("v") * F.col("v"), 6).cast("decimal(18,6)")
         )
         .cast("double")
         .alias("s2"),
@@ -126,7 +116,7 @@ def embedding_fisher_ratio_dims(
         .cast("double")
         .alias("st"),
         F.sum(
-            _floor6(F.col("s1") * F.col("s1") / F.col("n")).cast(
+            quantize(F.col("s1") * F.col("s1") / F.col("n"), 6).cast(
                 "decimal(28,6)"
             )
         )
@@ -144,9 +134,9 @@ def embedding_fisher_ratio_dims(
     return (
         per_dim.select(
             F.col("i").alias("dim"),
-            _floor6(between).alias("between_ms"),
-            _floor6(within).alias("within_ms"),
-            _floor4(between / within).alias("fisher_ratio"),
+            quantize(between, 6).alias("between_ms"),
+            quantize(within, 6).alias("within_ms"),
+            quantize(between / within, 4).alias("fisher_ratio"),
         )
         .orderBy(F.col("fisher_ratio").desc(), "dim")
         .limit(_FISHER_TOP)
@@ -317,16 +307,16 @@ def text_dispersion_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(
             F.max("c_w").alias("n_occurrences"),
-            _floor4(
+            quantize(
                 0.5
                 * F.sum(
-                    _floor6(
+                    quantize(
                         F.abs(
                             F.col("c_sw") * 1.0 / F.col("c_w")
                             - F.col("t") * 1.0 / F.col("tt")
-                        )
+                        ), 6
                     ).cast("decimal(18,6)")
-                )
+                ), 4
             ).alias("dp"),
         )
         .select(F.col("w").alias("word"), "n_occurrences", "dp")

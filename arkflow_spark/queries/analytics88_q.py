@@ -28,13 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ MCF
@@ -159,10 +154,10 @@ def events_mean_cumulative_function(
             F.coalesce(F.col("cum_obs"), F.lit(0))
             .cast("bigint")
             .alias("cum_events"),
-            _floor4(
+            quantize(
                 F.coalesce(F.col("cum_obs"), F.lit(0))
                 * 1.0
-                / F.nullif(F.col("observable"), F.lit(0))
+                / F.nullif(F.col("observable"), F.lit(0)), 4
             ).alias("mcf"),
         )
         .orderBy("age")
@@ -278,10 +273,10 @@ def events_record_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.col("n").alias("n_events"),
         "n_records",
-        _floor4(F.col("h1")).alias("expected_records"),
-        _floor4(
+        quantize(F.col("h1"), 4).alias("expected_records"),
+        quantize(
             (F.col("n_records") - F.col("h1"))
-            / F.sqrt(F.col("h1") - F.col("h2"))
+            / F.sqrt(F.col("h1") - F.col("h2")), 4
         ).alias("z_stat"),
     ).orderBy("event_type")
 
@@ -360,11 +355,11 @@ def dq_intra_order_consistency(
         F.sum(F.when(price_conflict, 1).otherwise(0))
         .cast("bigint")
         .alias("n_price_conflicts"),
-        _floor4(
+        quantize(
             F.sum(
                 F.when(disc_conflict | price_conflict, 1).otherwise(0)
             )
             * 1.0
-            / F.count("*")
+            / F.count("*"), 4
         ).alias("conflict_share"),
     )

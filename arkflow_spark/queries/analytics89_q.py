@@ -26,19 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.queries.vector_q import _ORACLE_EXPLODED, _dot, _norm
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    """Deterministic 6-decimal quantization (see analytics27_q)."""
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ------------------------------------------------ kNN accuracy sweep
@@ -172,14 +162,14 @@ def ann_knn_accuracy_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("bigint")
             .alias("n_correct"),
-            _floor4(
+            quantize(
                 F.sum(
                     F.when(
                         F.col("true_label") == F.col("predicted"), 1
                     ).otherwise(0)
                 )
                 * 1.0
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("accuracy"),
         )
         .orderBy("k")
@@ -236,15 +226,10 @@ def dq_temporal_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("lead_days") < 0, 1).otherwise(0))
         .cast("bigint")
         .alias("n_ship_before_order"),
-        (
-            F.floor(
-                F.sum(F.when(F.col("lead_days") < 0, 1).otherwise(0))
-                * 1.0
-                / F.count("*")
-                * 1000000
-                + 0.5
-            )
-            / 1000000
+        quantize(
+            F.sum(F.when(F.col("lead_days") < 0, 1).otherwise(0))
+            * 1.0
+            / F.count("*"), 6
         ).alias("violation_share"),
         F.min("lead_days").cast("bigint").alias("worst_lead_days"),
         F.max("lead_days").cast("bigint").alias("max_lead_days"),
@@ -339,17 +324,17 @@ def events_daily_mix_divergence(
         )
     )
     m = (F.col("p") + F.col("q")) / 2
-    term = _floor6(
+    term = quantize(
         F.when(F.col("p") > 0, 0.5 * F.col("p") * F.log(F.col("p") / m))
         .otherwise(0.0)
         + F.when(
             F.col("q") > 0, 0.5 * F.col("q") * F.log(F.col("q") / m)
-        ).otherwise(0.0)
+        ).otherwise(0.0), 6
     )
     js = terms.groupBy("d").agg(
         F.max("n").alias("n_events"),
-        _floor4(
-            F.sum(term.cast("decimal(18,6)")).cast("double")
+        quantize(
+            F.sum(term.cast("decimal(18,6)")).cast("double"), 4
         ).alias("js_div"),
     )
     return (

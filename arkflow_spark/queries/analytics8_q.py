@@ -36,13 +36,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import DUCK_TS_FMT, SPARK_TS_FMT, query
+from arkflow_spark.queries.base import (
+    DUCK_TS_FMT,
+    SPARK_TS_FMT,
+    quantize,
+    query,
+)
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # -------------------------------------------------- BM25 ranked retrieval
@@ -173,13 +173,13 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     w = Window.partitionBy("query_id").orderBy(
-        _floor4(F.col("score")).desc(), "doc_id"
+        quantize(F.col("score"), 4).desc(), "doc_id"
     )
     return (
         scored.select(
             "query_id",
             "doc_id",
-            _floor4(F.col("score")).alias("score"),
+            quantize(F.col("score"), 4).alias("score"),
             F.row_number().over(w).alias("r"),
         )
         .filter(F.col("r") <= _BM25_TOPN)
@@ -247,11 +247,11 @@ def events_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
             # (all readings at one instant) must yield NULL like
             # DuckDB's 0/0 — under Spark's default ANSI mode a plain
             # division RAISES there (fuzzer-found)
-            _floor4(
+            quantize(
                 F.try_divide(
                     F.sum(F.col("value") * F.col("dur_us")),
                     F.sum("dur_us"),
-                )
+                ), 4
             ).alias("twa"),
         )
         .select(

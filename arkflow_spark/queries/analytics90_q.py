@@ -26,13 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ last-digit screen
@@ -106,10 +101,10 @@ def dq_last_digit_uniformity(
         .groupBy("metric", "n")
         .agg(
             F.count("*").cast("bigint").alias("n_digits_seen"),
-            _floor4(
-                F.sum((F.col("c") - exp) * (F.col("c") - exp) / exp)
+            quantize(
+                F.sum((F.col("c") - exp) * (F.col("c") - exp) / exp), 4
             ).alias("chi2_stat"),
-            _floor4(F.max("c") * 10.0 / F.col("n")).alias(
+            quantize(F.max("c") * 10.0 / F.col("n"), 4).alias(
                 "max_digit_lift"
             ),
         )
@@ -177,19 +172,14 @@ def dq_id_time_monotonicity(
             )
             .cast("bigint")
             .alias("n_inversions"),
-            (
-                F.floor(
-                    F.sum(
-                        F.when(
-                            F.col("event_id") < F.col("prev_id"), 1
-                        ).otherwise(0)
-                    )
-                    * 1.0
-                    / F.count("prev_id")
-                    * 1000000
-                    + 0.5
+            quantize(
+                F.sum(
+                    F.when(
+                        F.col("event_id") < F.col("prev_id"), 1
+                    ).otherwise(0)
                 )
-                / 1000000
+                * 1.0
+                / F.count("prev_id"), 6
             ).alias("inversion_rate"),
         )
         .orderBy("event_type")
@@ -276,10 +266,10 @@ def text_source_vocab_jaccard(
             "shared",
             "vocab_a",
             "vocab_b",
-            _floor4(
+            quantize(
                 F.col("shared")
                 * 1.0
-                / (F.col("vocab_a") + F.col("vocab_b") - F.col("shared"))
+                / (F.col("vocab_a") + F.col("vocab_b") - F.col("shared")), 4
             ).alias("jaccard"),
         )
         .orderBy(F.col("jaccard").asc(), "source_a", "source_b")

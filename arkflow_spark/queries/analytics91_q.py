@@ -27,14 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.queries.dedup_q import _ORACLE_SHINGLES, _shingles
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ vintage curves
@@ -149,14 +144,9 @@ def orders_vintage_revenue_curves(
             F.col("q0").alias("cohort_quarter"),
             "age",
             "n_cust",
-            (
-                F.floor(
-                    F.coalesce(F.col("crev"), F.lit(0.0))
-                    / F.col("n_cust")
-                    * 100
-                    + 0.5
-                )
-                / 100
+            quantize(
+                F.coalesce(F.col("crev"), F.lit(0.0))
+                / F.col("n_cust"), 2
             ).alias("cum_rev_per_customer"),
         )
         .orderBy("cohort_quarter", "age")
@@ -242,29 +232,24 @@ def text_self_similarity_stride(
         .join(F.broadcast(za), "ida")
         .join(F.broadcast(zb), "idb")
         .select(
-            (
-                F.floor(
-                    F.coalesce(F.col("inter"), F.lit(0))
-                    * 1.0
-                    / (
-                        F.col("na")
-                        + F.col("nb")
-                        - F.coalesce(F.col("inter"), F.lit(0))
-                    )
-                    * 1000000
-                    + 0.5
-                )
-                / 1000000
+            quantize(
+                F.coalesce(F.col("inter"), F.lit(0))
+                * 1.0
+                / (
+                    F.col("na")
+                    + F.col("nb")
+                    - F.coalesce(F.col("inter"), F.lit(0))
+                ), 6
             ).alias("j")
         )
     )
     return jac.agg(
         F.count("*").cast("bigint").alias("n_pairs"),
-        _floor4(
+        quantize(
             F.sum(F.col("j").cast("decimal(18,6)")).cast("double")
-            / F.count("*")
+            / F.count("*"), 4
         ).alias("mean_jaccard"),
-        _floor4(F.max("j")).alias("max_jaccard"),
+        quantize(F.max("j"), 4).alias("max_jaccard"),
         F.sum(F.when(F.col("j") > 0.5, 1).otherwise(0))
         .cast("bigint")
         .alias("n_above_half"),
@@ -374,16 +359,15 @@ def nation_trade_imbalance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("flow_ab") + F.col("flow_ba") > 0)
     )
-    cents = lambda col: F.floor(col * 100 + 0.5) / 100
     return (
         pairs.select(
             "nation_a",
             "nation_b",
-            cents(F.col("flow_ab")).alias("flow_ab"),
-            cents(F.col("flow_ba")).alias("flow_ba"),
-            _floor4(
+            quantize(F.col("flow_ab"), 2).alias("flow_ab"),
+            quantize(F.col("flow_ba"), 2).alias("flow_ba"),
+            quantize(
                 F.abs(F.col("flow_ab") - F.col("flow_ba"))
-                / (F.col("flow_ab") + F.col("flow_ba"))
+                / (F.col("flow_ab") + F.col("flow_ba")), 4
             ).alias("imbalance_ratio"),
         )
         .orderBy(F.col("imbalance_ratio").desc(), "nation_a", "nation_b")

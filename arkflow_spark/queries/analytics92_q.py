@@ -28,18 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    """Deterministic 6-decimal quantization (see analytics27_q)."""
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ------------------------------------------------ ARCH LM
@@ -134,10 +124,10 @@ def events_arch_lm_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             "hr",
-            _floor6(
+            quantize(
                 F.pow(
                     F.col("c") - F.col("s") * 1.0 / F.col("m"), F.lit(2)
-                )
+                ), 6
             ).alias("e2"),
         )
     )
@@ -145,7 +135,6 @@ def events_arch_lm_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     lagged = resid.select(
         "event_type", "e2", F.lag("e2").over(w).alias("l2")
     )
-    cents = lambda c: F.floor(c * 100 + 0.5) / 100
     mom = lagged.groupBy("event_type").agg(
         F.count("l2").cast("bigint").alias("n"),
         F.sum(
@@ -158,16 +147,16 @@ def events_arch_lm_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("l2").cast("decimal(28,6)"))
         .cast("double")
         .alias("sx"),
-        F.sum(cents(F.col("e2") * F.col("l2")).cast("decimal(38,2)"))
+        F.sum(quantize(F.col("e2") * F.col("l2"), 2).cast("decimal(38,2)"))
         .cast("double")
         .alias("sxy"),
-        F.sum(cents(F.col("l2") * F.col("l2")).cast("decimal(38,2)"))
+        F.sum(quantize(F.col("l2") * F.col("l2"), 2).cast("decimal(38,2)"))
         .cast("double")
         .alias("sxx"),
         F.sum(
             F.when(
                 F.col("l2").isNotNull(),
-                cents(F.col("e2") * F.col("e2")).cast("decimal(38,2)"),
+                quantize(F.col("e2") * F.col("e2"), 2).cast("decimal(38,2)"),
             )
         )
         .cast("double")
@@ -182,8 +171,8 @@ def events_arch_lm_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mom.select(
         "event_type",
         n.alias("n_hours"),
-        _floor4(r2).alias("r_squared"),
-        _floor4(n * r2).alias("lm_stat"),
+        quantize(r2, 4).alias("r_squared"),
+        quantize(n * r2, 4).alias("lm_stat"),
         (n * r2 > 6.635).alias("arch_at_1pct"),
     ).orderBy("event_type")
 
@@ -419,20 +408,20 @@ def events_run_length_geometric_fit(
         F.col("lbin") < 5, F.pow(q, F.col("lbin") - 1) * p
     ).otherwise(F.pow(q, F.lit(4)))
     exp = F.col("r") * prob
-    term = _floor6(
-        F.pow(F.col("k") - exp, F.lit(2)) / exp
+    term = quantize(
+        F.pow(F.col("k") - exp, F.lit(2)) / exp, 6
     ).cast("decimal(28,6)")
     return (
         binned.join(F.broadcast(tot), "event_type")
         .groupBy("event_type", "r", "total_len")
-        .agg(_floor4(F.sum(term).cast("double")).alias("chi2_stat"))
+        .agg(quantize(F.sum(term).cast("double"), 4).alias("chi2_stat"))
         .select(
             "event_type",
             F.col("r").alias("n_runs"),
-            _floor4(F.col("total_len") * 1.0 / F.col("r")).alias(
+            quantize(F.col("total_len") * 1.0 / F.col("r"), 4).alias(
                 "mean_run_length"
             ),
-            _floor4(1 - F.col("r") * 1.0 / F.col("total_len")).alias(
+            quantize(1 - F.col("r") * 1.0 / F.col("total_len"), 4).alias(
                 "implied_continue_p"
             ),
             "chi2_stat",

@@ -27,18 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    """Deterministic 6-decimal quantization (see analytics27_q)."""
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ------------------------------------------------ whale curve
@@ -130,9 +120,9 @@ def customer_whale_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("p").alias("top_pct"),
             F.col("cutoff").alias("n_customers"),
-            _floor4(
+            quantize(
                 F.col("__cum_m").cast("double")
-                / F.col("__tot_m").cast("double")
+                / F.col("__tot_m").cast("double"), 4
             ).alias("revenue_share"),
         )
         .orderBy("top_pct")
@@ -195,10 +185,9 @@ def dq_timestamp_truncation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "on_second",
         "on_minute",
         "on_hour",
-        (
-            F.floor(F.col("on_second") * 1.0 / F.col("n") * 1000000 + 0.5)
-            / 1000000
-        ).alias("second_share"),
+        quantize(F.col("on_second") * 1.0 / F.col("n"), 6).alias(
+            "second_share"
+        ),
         (F.col("on_second") * 1.0 / F.col("n") > 0.0001).alias(
             "truncation_suspected"
         ),
@@ -302,7 +291,6 @@ def part_demand_pooling_benefit(
         # part-level and the brand-level moment rollups — without the
         # cache the lineitem join+rollup ran twice per action
     )
-    cents = lambda c: F.floor(c * 100 + 0.5) / 100
 
     def moments(df, keys):
         return (
@@ -313,7 +301,7 @@ def part_demand_pooling_benefit(
                 .cast("double")
                 .alias("s1"),
                 F.sum(
-                    cents(F.col("q") * F.col("q")).cast("decimal(38,2)")
+                    quantize(F.col("q") * F.col("q"), 2).cast("decimal(38,2)")
                 )
                 .cast("double")
                 .alias("s2"),
@@ -331,13 +319,13 @@ def part_demand_pooling_benefit(
         / (F.col("nw") - 1)
     ) / (F.col("s1") / F.col("nw"))
     mean_part_cv = (
-        part_cv.select("p_brand", _floor6(cv()).alias("cv"))
+        part_cv.select("p_brand", quantize(cv(), 6).alias("cv"))
         .groupBy("p_brand")
         .agg(
             F.count("*").cast("bigint").alias("n_parts"),
-            _floor4(
+            quantize(
                 F.sum(F.col("cv").cast("decimal(18,6)")).cast("double")
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("mean_cv"),
         )
     )
@@ -347,8 +335,8 @@ def part_demand_pooling_benefit(
             "p_brand",
             "n_parts",
             F.col("mean_cv").alias("mean_part_cv"),
-            _floor4(cv()).alias("pooled_cv"),
-            _floor4(cv() / F.col("mean_cv")).alias("pooling_ratio"),
+            quantize(cv(), 4).alias("pooled_cv"),
+            quantize(cv() / F.col("mean_cv"), 4).alias("pooling_ratio"),
         )
         .orderBy("p_brand")
     )

@@ -25,24 +25,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import ORACLE, QUERIES, query
+from arkflow_spark.queries.base import ORACLE, QUERIES, quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    """Deterministic 6-decimal quantization (see analytics27_q)."""
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ------------------------------------------------ IVF bucket balance
 
 
 def _balance_oracle() -> str:
+    # vector_q registers the ann_ivf_assign oracle read below
+    import arkflow_spark.queries.vector_q  # noqa: F401
     ivf = ORACLE["ann_ivf_assign"]
     return f"""
     WITH occ AS (
@@ -98,9 +90,9 @@ def ann_ivf_bucket_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ent = occ.crossJoin(F.broadcast(tot)).agg(
         F.sum(
-            _floor6(
+            quantize(
                 -(F.col("c") * 1.0 / F.col("n"))
-                * F.log(F.col("c") * 1.0 / F.col("n"))
+                * F.log(F.col("c") * 1.0 / F.col("n")), 6
             ).cast("decimal(18,6)")
         )
         .cast("double")
@@ -109,13 +101,13 @@ def ann_ivf_bucket_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tot.crossJoin(F.broadcast(ent)).select(
         F.col("k").alias("n_buckets"),
         F.col("n").alias("n_vectors"),
-        _floor4(F.col("cmax") * 1.0 * F.col("k") / F.col("n")).alias(
+        quantize(F.col("cmax") * 1.0 * F.col("k") / F.col("n"), 4).alias(
             "max_over_mean"
         ),
-        _floor4(F.col("cmax") * 1.0 / F.col("n")).alias(
+        quantize(F.col("cmax") * 1.0 / F.col("n"), 4).alias(
             "biggest_share"
         ),
-        _floor4(F.col("h") / F.log(F.col("k"))).alias(
+        quantize(F.col("h") / F.log(F.col("k")), 4).alias(
             "occupancy_entropy_norm"
         ),
     )
@@ -184,9 +176,9 @@ def text_positional_length_profile(
         pos.groupBy("decile")
         .agg(
             F.count("*").cast("bigint").alias("n_tokens"),
-            _floor4(
+            quantize(
                 F.sum(F.col("wlen").cast("decimal(18,0)")).cast("double")
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("mean_token_len"),
         )
         .orderBy("decile")
@@ -245,24 +237,23 @@ def part_price_realization(spark: SparkSession, sf_dir: str) -> DataFrame:
             < F.col("p_retailprice")
         ).alias("below_list"),
     )
-    cents = lambda c: F.floor(c * 100 + 0.5) / 100
     return (
         lines.groupBy("p_brand")
         .agg(
             F.count("*").cast("bigint").alias("n_lines"),
-            _floor4(
+            quantize(
                 F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
                 .cast("double")
                 / F.sum(
-                    cents(
-                        F.col("p_retailprice") * F.col("l_quantity")
+                    quantize(
+                        F.col("p_retailprice") * F.col("l_quantity"), 2
                     ).cast("decimal(28,2)")
-                ).cast("double")
+                ).cast("double"), 4
             ).alias("realization_ratio"),
-            _floor4(
+            quantize(
                 F.sum(F.when(F.col("below_list"), 1).otherwise(0))
                 * 1.0
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("below_list_share"),
         )
         .orderBy("p_brand")

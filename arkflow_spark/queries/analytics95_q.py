@@ -29,18 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    """Deterministic 6-decimal quantization (see analytics27_q)."""
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ------------------------------------------------ clumpiness
@@ -121,7 +111,7 @@ def customer_purchase_clumpiness(
         .agg(
             F.max("n").alias("n"),
             F.sum(
-                _floor6(x * F.log(x)).cast("decimal(18,6)")
+                quantize(x * F.log(x), 6).cast("decimal(18,6)")
             )
             .cast("double")
             .alias("sx"),
@@ -129,8 +119,8 @@ def customer_purchase_clumpiness(
         .filter(F.col("n") >= 2)
         .select(
             "o_custkey",
-            _floor6(
-                1 + F.col("sx") / F.log(F.col("n") + 1.0)
+            quantize(
+                1 + F.col("sx") / F.log(F.col("n") + 1.0), 6
             ).alias("hp"),
         )
     )
@@ -142,11 +132,11 @@ def customer_purchase_clumpiness(
         .groupBy("c_mktsegment")
         .agg(
             F.count("*").cast("bigint").alias("n_customers"),
-            _floor4(
+            quantize(
                 F.sum(F.col("hp").cast("decimal(18,6)")).cast("double")
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("mean_clumpiness"),
-            _floor4(F.max("hp")).alias("max_clumpiness"),
+            quantize(F.max("hp"), 4).alias("max_clumpiness"),
         )
         .orderBy("c_mktsegment")
     )
@@ -228,7 +218,6 @@ def lineitem_simpson_paradox_check(
     p = load(spark, sf_dir, "part").select(
         "p_partkey", "p_brand", "p_retailprice"
     )
-    cents = lambda c: F.floor(c * 100 + 0.5) / 100
     lines = (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .groupBy("p_brand", F.year("l_shipdate").alias("y"))
@@ -237,8 +226,8 @@ def lineitem_simpson_paradox_check(
             .cast("double")
             .alias("realized"),
             F.sum(
-                cents(
-                    F.col("p_retailprice") * F.col("l_quantity")
+                quantize(
+                    F.col("p_retailprice") * F.col("l_quantity"), 2
                 ).cast("decimal(28,2)")
             )
             .cast("double")
@@ -289,7 +278,7 @@ def lineitem_simpson_paradox_check(
             down.alias("n_brands_down"),
         )
         .select(
-            _floor6(F.col("o_r2") - F.col("o_r1")).alias(
+            quantize(F.col("o_r2") - F.col("o_r1"), 6).alias(
                 "overall_delta"
             ),
             "n_brands",

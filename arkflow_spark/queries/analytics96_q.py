@@ -26,18 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    """Deterministic 6-decimal quantization (see analytics27_q)."""
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ------------------------------------------------ lognormal check
@@ -110,7 +100,7 @@ def orders_lognormal_fit_check(
     lx = o.select(
         F.col("o_orderpriority").alias("priority"),
         F.col("o_totalprice").alias("v"),
-        _floor6(F.log("o_totalprice")).alias("lv"),
+        quantize(F.log("o_totalprice"), 6).alias("lv"),
     )
     mom = lx.groupBy("priority").agg(
         F.count("*").cast("bigint").alias("n"),
@@ -118,7 +108,7 @@ def orders_lognormal_fit_check(
         .cast("double")
         .alias("s1"),
         F.sum(
-            _floor6(F.col("lv") * F.col("lv")).cast("decimal(18,6)")
+            quantize(F.col("lv") * F.col("lv"), 6).cast("decimal(18,6)")
         )
         .cast("double")
         .alias("s2"),
@@ -144,17 +134,16 @@ def orders_lognormal_fit_check(
         (F.col("s2") - F.col("s1") * F.col("s1") / F.col("n"))
         / (F.col("n") - 1)
     )
-    cents = lambda c: F.floor(c * 100 + 0.5) / 100
     return (
         mom.join(obs, "priority")
         .select(
             "priority",
             F.col("n").alias("n_orders"),
-            cents(F.exp(mu)).alias("implied_median"),
-            cents(F.col("obs_median")).alias("observed_median"),
-            cents(F.exp(mu + _Z90 * sig)).alias("implied_p90"),
-            cents(F.col("obs_p90")).alias("observed_p90"),
-            _floor4(F.exp(mu + _Z90 * sig) / F.col("obs_p90")).alias(
+            quantize(F.exp(mu), 2).alias("implied_median"),
+            quantize(F.col("obs_median"), 2).alias("observed_median"),
+            quantize(F.exp(mu + _Z90 * sig), 2).alias("implied_p90"),
+            quantize(F.col("obs_p90"), 2).alias("observed_p90"),
+            quantize(F.exp(mu + _Z90 * sig) / F.col("obs_p90"), 4).alias(
                 "p90_ratio"
             ),
         )
@@ -222,15 +211,15 @@ def events_user_concentration(
         ranked.groupBy("event_type")
         .agg(
             F.max("n_users").alias("n_users"),
-            _floor4(
+            quantize(
                 F.max(F.when(F.col("rn") == 1, F.col("c")))
                 * 1.0
-                / F.max("tot")
+                / F.max("tot"), 4
             ).alias("top1_share"),
-            _floor4(
+            quantize(
                 F.sum(F.when(F.col("rn") <= 5, F.col("c")).otherwise(0))
                 * 1.0
-                / F.max("tot")
+                / F.max("tot"), 4
             ).alias("top5_share"),
         )
         .orderBy("event_type")
@@ -278,10 +267,10 @@ def dq_embedding_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(F.col("vec_id").isNull(), 0).otherwise(1))
             .cast("bigint")
             .alias("n_embedded"),
-            _floor4(
+            quantize(
                 F.sum(F.when(F.col("vec_id").isNull(), 0).otherwise(1))
                 * 1.0
-                / F.count("*")
+                / F.count("*"), 4
             ).alias("coverage"),
             (
                 F.sum(F.when(F.col("vec_id").isNull(), 1).otherwise(0))

@@ -31,13 +31,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from arkflow_spark.functions import copurchase
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------- clustering coefficient
@@ -138,10 +133,10 @@ def graph_clustering_coefficient(
             "n_edges",
             F.col("w").alias("n_wedges"),
             F.col("t").alias("n_triangles"),
-            _floor4(
-                3.0 * F.col("t") / F.nullif(F.col("w"), F.lit(0))
+            quantize(
+                3.0 * F.col("t") / F.nullif(F.col("w"), F.lit(0)), 4
             ).alias("global_clustering"),
-            _floor4(F.col("sum_d") * 1.0 / F.col("n_nodes")).alias(
+            quantize(F.col("sum_d") * 1.0 / F.col("n_nodes"), 4).alias(
                 "mean_degree"
             ),
         )
@@ -221,7 +216,7 @@ def embedding_duplicate_vectors(
         .alias("n_dup_groups"),
         dup_extra.cast("bigint").alias("n_redundant"),
         F.max("c").cast("bigint").alias("max_group_size"),
-        _floor4(dup_extra * 1.0 / F.sum("c")).alias("redundancy_rate"),
+        quantize(dup_extra * 1.0 / F.sum("c"), 4).alias("redundancy_rate"),
     )
 
 
@@ -316,21 +311,21 @@ def text_sentence_length_profile(
         cum.groupBy("lang")
         .agg(
             F.max("n").alias("n_sentences"),
-            _floor4(F.max("st") * 1.0 / F.max("n")).alias("mean_tokens"),
+            quantize(F.max("st") * 1.0 / F.max("n"), 4).alias("mean_tokens"),
             F.min(
                 F.when(F.col("cm") * 2 >= F.col("n"), F.col("l"))
             ).alias("median_tokens"),
             F.min(
                 F.when(F.col("cm") * 10 >= F.col("n") * 9, F.col("l"))
             ).alias("p90_tokens"),
-            _floor4(
+            quantize(
                 F.sum(
                     F.when(
                         F.col("l") > _LONG_SENT_TOKENS, F.col("c")
                     ).otherwise(0)
                 )
                 * 1.0
-                / F.max("n")
+                / F.max("n"), 4
             ).alias("long_share"),
         )
         .orderBy("lang")

@@ -28,18 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
-
-
-def _floor6(col):
-    """Deterministic 6-decimal quantization (see analytics27_q)."""
-    return F.floor(col * 1000000 + 0.5) / 1000000
 
 
 # ------------------------------------------------ seasonal strength
@@ -94,7 +84,7 @@ def events_seasonal_strength(
     rollup; the decomposition is bounded-grid arithmetic.
     """
     e = load(spark, sf_dir, "events")
-    v = _floor6(F.col("value"))
+    v = quantize(F.col("value"), 6)
     cell = e.select(
         "event_type",
         F.hour("ts").cast("bigint").alias("hod"),
@@ -104,7 +94,7 @@ def events_seasonal_strength(
         F.sum(F.col("v").cast("decimal(18,6)"))
         .cast("double")
         .alias("s1"),
-        F.sum(_floor6(F.col("v") * F.col("v")).cast("decimal(18,6)"))
+        F.sum(quantize(F.col("v") * F.col("v"), 6).cast("decimal(18,6)"))
         .cast("double")
         .alias("s2"),
     )
@@ -117,8 +107,8 @@ def events_seasonal_strength(
         .cast("double")
         .alias("t2"),
         F.sum(
-            _floor6(
-                F.col("s2") - F.col("s1") * F.col("s1") / F.col("n")
+            quantize(
+                F.col("s2") - F.col("s1") * F.col("s1") / F.col("n"), 6
             ).cast("decimal(28,6)")
         )
         .cast("double")
@@ -128,12 +118,12 @@ def events_seasonal_strength(
     return per.select(
         "event_type",
         F.col("n").alias("n_events"),
-        _floor4(sst / F.col("n")).alias("var_total"),
-        _floor4(F.col("sse") / F.col("n")).alias("var_within_hod"),
-        _floor4(
+        quantize(sst / F.col("n"), 4).alias("var_total"),
+        quantize(F.col("sse") / F.col("n"), 4).alias("var_within_hod"),
+        quantize(
             F.greatest(
                 1 - F.col("sse") / F.nullif(sst, F.lit(0)), F.lit(0)
-            )
+            ), 4
         ).alias("seasonal_strength"),
     ).orderBy("event_type")
 
@@ -198,7 +188,7 @@ def dedup_cluster_size_histogram(
             F.col("size").alias("cluster_size"),
             "n_clusters",
             "n_docs",
-            _floor4(F.col("n_docs") * 1.0 / F.col("n_docs_t")).alias(
+            quantize(F.col("n_docs") * 1.0 / F.col("n_docs_t"), 4).alias(
                 "doc_share"
             ),
         )
@@ -297,10 +287,10 @@ def text_char_trigram_lang_signature(
         .groupBy("lang_a", "lang_b")
         .agg(
             F.count("*").cast("bigint").alias("shared_trigrams"),
-            _floor4(
+            quantize(
                 F.count("*")
                 * 1.0
-                / (2 * _SIG_TOP - F.count("*"))
+                / (2 * _SIG_TOP - F.count("*")), 4
             ).alias("jaccard_top"),
         )
         .orderBy("lang_a", "lang_b")

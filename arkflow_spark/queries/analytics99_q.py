@@ -26,13 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------ peak-hour stability
@@ -130,7 +125,7 @@ def events_peak_hour_stability(
             "event_type",
             "n_days",
             "modal_peak_hour",
-            _floor4(F.col("n_modal") * 1.0 / F.col("n_days")).alias(
+            quantize(F.col("n_modal") * 1.0 / F.col("n_days"), 4).alias(
                 "stability"
             ),
         )
@@ -215,12 +210,12 @@ def lineitem_return_rate_by_delay(
             "delay_weeks",
             "n_lines",
             "n_returned",
-            _floor4(F.col("n_returned") * 1.0 / F.col("n_lines")).alias(
+            quantize(F.col("n_returned") * 1.0 / F.col("n_lines"), 4).alias(
                 "return_rate"
             ),
-            _floor4(
+            quantize(
                 (F.col("n_returned") * 1.0 / F.col("n_lines"))
-                / (F.col("tr") * 1.0 / F.col("tn"))
+                / (F.col("tr") * 1.0 / F.col("tn")), 4
             ).alias("rate_vs_overall"),
         )
         .orderBy("delay_weeks")
@@ -281,26 +276,25 @@ def orders_new_vs_returning_revenue(
         F.min("y").alias("y0")
     ).persist()  # customer-bounded; the revenue pass joins it back
     ret = F.col("y") > F.col("y0")
-    cents = lambda c: F.floor(c * 100 + 0.5) / 100
     return (
         o.join(first_y, "o_custkey")
         .groupBy(F.col("y").alias("order_year"))
         .agg(
             F.count("*").cast("bigint").alias("n_orders"),
-            cents(F.sum("rev").cast("double")).alias("revenue"),
+            quantize(F.sum("rev").cast("double"), 2).alias("revenue"),
             F.sum(F.when(ret, 1).otherwise(0))
             .cast("bigint")
             .alias("n_returning_orders"),
-            cents(
+            quantize(
                 F.sum(F.when(ret, F.col("rev")).otherwise(0)).cast(
                     "double"
-                )
+                ), 2
             ).alias("returning_revenue"),
-            _floor4(
+            quantize(
                 F.sum(F.when(ret, F.col("rev")).otherwise(0)).cast(
                     "double"
                 )
-                / F.sum("rev").cast("double")
+                / F.sum("rev").cast("double"), 4
             ).alias("returning_share"),
         )
         .orderBy("order_year")

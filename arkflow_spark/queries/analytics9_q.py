@@ -26,13 +26,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import DUCK_TS_FMT, SPARK_TS_FMT, query
+from arkflow_spark.queries.base import (
+    DUCK_TS_FMT,
+    SPARK_TS_FMT,
+    quantize,
+    query,
+)
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # -------------------------------------------------- column profiler
@@ -136,11 +136,11 @@ def dq_profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("l_quantity").alias("c_qty"),
         F.min("l_quantity").alias("mn_qty"),
         F.max("l_quantity").alias("mx_qty"),
-        _floor4(F.avg("l_quantity")).alias("avg_qty"),
+        quantize(F.avg("l_quantity"), 4).alias("avg_qty"),
         F.count("l_discount").alias("c_disc"),
         F.min("l_discount").alias("mn_disc"),
         F.max("l_discount").alias("mx_disc"),
-        _floor4(F.avg("l_discount")).alias("avg_disc"),
+        quantize(F.avg("l_discount"), 4).alias("avg_disc"),
         F.count("l_returnflag").alias("c_rf"),
         F.min("l_returnflag").alias("mn_rf"),
         F.max("l_returnflag").alias("mx_rf"),
@@ -155,7 +155,7 @@ def dq_profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
             mxs=None):
         return F.struct(
             F.lit(col).alias("col"),
-            _floor4(F.col(c) * 1.0 / F.col("n")).alias("completeness"),
+            quantize(F.col(c) * 1.0 / F.col("n"), 4).alias("completeness"),
             (F.col(mn) if mn else null_d).alias("min_num"),
             (F.col(mx) if mx else null_d).alias("max_num"),
             (F.col(mean) if mean else null_d).alias("mean"),
@@ -337,7 +337,7 @@ def dq_validation_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.agg(nonempty.alias("ok"), F.count("*").alias("n"))
         .select(
             F.lit("documents_text_complete").alias("check_name"),
-            _floor4(F.col("ok") * 1.0 / F.col("n")).alias("metric"),
+            quantize(F.col("ok") * 1.0 / F.col("n"), 4).alias("metric"),
             (F.col("ok") * 100 >= F.col("n") * 99).alias("passed"),
         )
     )
@@ -467,7 +467,7 @@ def events_ddsketch_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             "q",
-            _floor4(est_raw).alias("est"),
+            quantize(est_raw, 4).alias("est"),
             "exact_val",
             (
                 F.abs(est_raw - F.col("exact_val")) / F.col("exact_val")

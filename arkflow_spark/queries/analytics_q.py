@@ -19,15 +19,10 @@ from arkflow_spark.functions import copurchase
 from arkflow_spark.queries.base import (
     DUCK_TS_FMT,
     SPARK_TS_FMT,
+    quantize,
     query,
 )
 from arkflow_spark.tables import load
-
-
-def _floor4(col):
-    """Deterministic 4-decimal round (ROUND tie-breaking differs between
-    engines on exact .00005 doubles; floor has one answer per double)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 # ------------------------------------------------------------------- EWMA
@@ -84,7 +79,7 @@ def events_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             F.date_format("ts", SPARK_TS_FMT).alias("ts"),
             "value",
-            _floor4(num / den).alias("ewma"),
+            quantize(num / den, 4).alias("ewma"),
         )
         .orderBy("user_id", "ts", "value")
     )
@@ -160,7 +155,7 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("ts", SPARK_TS_FMT).alias("ts"),
             "value",
             "n",
-            _floor4(zs).alias("zscore"),
+            quantize(zs, 4).alias("zscore"),
             F.coalesce(F.abs(zs) > 3, F.lit(False)).alias("is_anomaly"),
         )
         .orderBy("user_id", "ts", "value")
@@ -370,7 +365,7 @@ def events_retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
             "day_offset",
             "n_active",
             "cohort_size",
-            _floor4(F.col("n_active") * 1.0 / F.col("cohort_size")).alias(
+            quantize(F.col("n_active") * 1.0 / F.col("cohort_size"), 4).alias(
                 "retention"
             ),
         )
@@ -544,12 +539,9 @@ def events_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             "bin",
-            (F.floor(width * 10000 + 0.5) / 10000).alias("bin_lo"),
+            quantize(width, 4).alias("bin_lo"),
             "cnt",
-            (
-                F.floor(F.col("cnt") * 1.0 / F.col("n") * 10000 + 0.5)
-                / 10000
-            ).alias("frac"),
+            quantize(F.col("cnt") * 1.0 / F.col("n"), 4).alias("frac"),
         )
         .orderBy("event_type", "bin")
     )
@@ -631,16 +623,11 @@ def events_changepoint_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "ts",
         "event_id",
-        (
-            F.floor(
-                F.abs(
-                    F.col("sum_after") / F.col("n_after")
-                    - F.col("sum_before") / F.col("n_before")
-                )
-                * 10000
-                + 0.5
-            )
-            / 10000
+        quantize(
+            F.abs(
+                F.col("sum_after") / F.col("n_after")
+                - F.col("sum_before") / F.col("n_before")
+            ), 4
         ).alias("shift_score"),
     )
     rw = Window.partitionBy("event_type").orderBy(
@@ -919,16 +906,11 @@ def lineitem_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "part_a",
             "part_b",
             "n_pair",
-            (
-                F.floor(
-                    F.col("n_pair")
-                    * 1.0
-                    * F.col("n_orders")
-                    / (F.col("n_a") * F.col("n_b"))
-                    * 10000
-                    + 0.5
-                )
-                / 10000
+            quantize(
+                F.col("n_pair")
+                * 1.0
+                * F.col("n_orders")
+                / (F.col("n_a") * F.col("n_b")), 4
             ).alias("lift"),
             "rnk",
         )
@@ -986,10 +968,7 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
             "prev",
             "next",
             "n",
-            (
-                F.floor(F.col("n") * 1.0 / F.col("tot") * 10000 + 0.5)
-                / 10000
-            ).alias("p"),
+            quantize(F.col("n") * 1.0 / F.col("tot"), 4).alias("p"),
         )
         .orderBy("prev", "next")
     )

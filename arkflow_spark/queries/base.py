@@ -13,6 +13,10 @@ in BOTH engines. Variance-family statistics can't be made exact that way;
 they are rounded to 4 decimals (error ~1e-12 relative, far below the
 rounding quantum). Timestamps are emitted as formatted strings to sidestep
 precision/timezone representation differences.
+
+The rounding rule both engines share is :func:`quantize`: Spark's
+``quantize(col, p)`` and the oracle's ``floor(x * 10^p + 0.5) / 10^p``
+compute the same value from the same double.
 """
 
 from __future__ import annotations
@@ -28,7 +32,10 @@ ORACLE: dict[str, str] = {}
 
 def query(name: str, oracle: str | None = None):
     """Register a (spark, sf_dir) -> DataFrame callable, with optional
-    DuckDB oracle SQL. No oracle => driver records a rows-only check."""
+    DuckDB oracle SQL. No oracle => driver records a rows-only check.
+    Raises ``ValueError`` if ``name`` is already registered."""
+    if name in QUERIES:
+        raise ValueError(f"query {name!r} is already registered")
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         QUERIES[name] = fn
@@ -65,6 +72,16 @@ def o_davg(expr: str, alias: str) -> str:
         f"CAST(SUM(CAST(({expr}) AS DECIMAL(18,6))) AS DOUBLE)"
         f" / COUNT({expr}) AS {alias}"
     )
+
+
+def quantize(col: Column, places: int) -> Column:
+    """``floor(col * 10^places + 0.5) / 10^places``: deterministic rounding
+    to ``places`` decimals. Both engines floor the same double, so there is
+    exactly one representable answer; ROUND's tie-breaking on exact
+    half-quantum doubles differs between Spark and DuckDB. ``10**places``
+    stays a Python int, so Spark sees an integer literal, as the oracle
+    SQL does."""
+    return F.floor(col * 10**places + 0.5) / 10**places
 
 
 def r4(col: Column, alias: str) -> Column:

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
 
 # ------------------------------------------------------------- gopher rules
@@ -182,15 +182,10 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("nll").cast("decimal(18,6)"))
             .cast("double")
             .alias("total_nll"),
-            (
-                F.floor(
-                    F.sum(F.col("nll").cast("decimal(18,6)"))
-                    .cast("double")
-                    / F.count("*")
-                    * 10000
-                    + 0.5
-                )
-                / 10000
+            quantize(
+                F.sum(F.col("nll").cast("decimal(18,6)"))
+                .cast("double")
+                / F.count("*"), 4
             ).alias("avg_nll_bits"),
         )
         .orderBy("doc_id")

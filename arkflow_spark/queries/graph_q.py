@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from arkflow_spark.functions import copurchase
 from arkflow_spark.functions.indexes import bucketed_index
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
 
 DAMPING = 0.85
@@ -172,7 +172,7 @@ def _topk_ranks(ranks):
         .withColumn("rnk", F.row_number().over(w))
         .select(
             "node",
-            (F.floor(F.col("r") * 1000000 + 0.5) / 1000000).alias(
+            quantize(F.col("r"), 6).alias(
                 "rank_r"
             ),
             "rnk",

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
 
 TERM_RE = "[a-z]{2,}"
@@ -406,10 +406,10 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         v.crossJoin(F.broadcast(nrm))
         .select(
             "i",
-            (F.floor(F.col("w") * 1000000 + 0.5) / 1000000).alias(
+            quantize(F.col("w"), 6).alias(
                 "loading"
             ),
-            (F.floor(F.col("nrm") * 10000 + 0.5) / 10000).alias(
+            quantize(F.col("nrm"), 4).alias(
                 "sigma2_scaled"
             ),
         )

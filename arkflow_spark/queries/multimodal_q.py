@@ -18,7 +18,7 @@ from arkflow_spark.operators.multimodal import (
     frame_audio,
     frame_sample,
 )
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.tables import load
 
 
@@ -142,6 +142,6 @@ def multimodal_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         "frame_idx",
         "start",
         "n_samples",
-        (F.floor(F.col("rms") * 10000 + 0.5) / 10000).alias("rms_r"),
+        quantize(F.col("rms"), 4).alias("rms_r"),
         "peak",
     ).orderBy("media_id", "frame_idx")

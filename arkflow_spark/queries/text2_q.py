@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import query
+from arkflow_spark.queries.base import quantize, query
 from arkflow_spark.queries.text_q import TOKEN_RE
 from arkflow_spark.tables import load
 
@@ -82,15 +82,12 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ln_n, ln_r = F.log(F.col("n")), F.log(F.col("rnk"))
 
-    def _r4(c: F.Column, alias: str) -> F.Column:
-        return (F.floor(c * 10000 + 0.5) / 10000).alias(alias)
-
     return (
         ranked.groupBy("lang")
         .agg(
             F.count("*").alias("n_terms"),
-            _r4(F.regr_slope(ln_n, ln_r), "zipf_slope"),
-            _r4(F.regr_r2(ln_n, ln_r), "zipf_r2"),
+            quantize(F.regr_slope(ln_n, ln_r), 4).alias("zipf_slope"),
+            quantize(F.regr_r2(ln_n, ln_r), 4).alias("zipf_r2"),
         )
         .orderBy("lang")
     )
@@ -232,7 +229,7 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_tokens"),
             dec.alias("total_nll"),
-            (F.floor(dec / F.count("*") * 10000 + 0.5) / 10000).alias(
+            quantize(dec / F.count("*"), 4).alias(
                 "avg_nll_bits"
             ),
         )
@@ -329,7 +326,7 @@ def documents_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_tokens"),
             dec.alias("log_ratio"),
-            (F.floor(dec / F.count("*") * 10000 + 0.5) / 10000).alias(
+            quantize(dec / F.count("*"), 4).alias(
                 "avg_log_ratio"
             ),
         )
@@ -426,19 +423,14 @@ def text_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     nt = tc.agg(F.sum("n_t").alias("nt"))
     ta = tc.select(F.col("t").alias("a"), F.col("n_t").alias("n_a"))
     tb = tc.select(F.col("t").alias("b"), F.col("n_t").alias("n_b"))
-    pmi = (
-        F.floor(
-            F.log2(
-                (F.col("n_ab") * 1.0 / F.col("np"))
-                / (
-                    (F.col("n_a") * 1.0 / F.col("nt"))
-                    * (F.col("n_b") * 1.0 / F.col("nt"))
-                )
+    pmi = quantize(
+        F.log2(
+            (F.col("n_ab") * 1.0 / F.col("np"))
+            / (
+                (F.col("n_a") * 1.0 / F.col("nt"))
+                * (F.col("n_b") * 1.0 / F.col("nt"))
             )
-            * 10000
-            + 0.5
-        )
-        / 10000
+        ), 4
     ).alias("pmi")
     scored = (
         pc.filter(F.col("n_ab") >= 25)

@@ -26,7 +26,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import DUCK_TS_FMT, SPARK_TS_FMT, query
+from arkflow_spark.queries.base import (
+    DUCK_TS_FMT,
+    SPARK_TS_FMT,
+    quantize,
+    query,
+)
 from arkflow_spark.tables import load
 
 # Shared resample + dense-grid CTE prefix for the DuckDB oracles: latest
@@ -195,7 +200,7 @@ def events_gapfill_interpolate(
         "user_id",
         F.date_format("h", SPARK_TS_FMT).alias("hour"),
         # deterministic round: see oracle comment (ROUND tie-breaks differ)
-        (F.floor(interp * 10000 + 0.5) / 10000).alias("value_interp"),
+        quantize(interp, 4).alias("value_interp"),
         F.col("value").isNull().alias("was_gap"),
     ).orderBy("user_id", "h")
 

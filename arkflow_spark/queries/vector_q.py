@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.queries.base import QUERIES, query
+from arkflow_spark.queries.base import QUERIES, quantize, query
 from arkflow_spark.tables import load
 
 N_QUERIES = 5
@@ -38,11 +38,6 @@ def _norm(a):
             lambda acc, x: acc + x,
         )
     )
-
-
-def _floor4(col):
-    """Deterministic 4-decimal quantization (see analytics2_q)."""
-    return F.floor(col * 10000 + 0.5) / 10000
 
 
 _ORACLE_EXPLODED = """
@@ -879,7 +874,7 @@ def ann_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(full.query_id)
         .agg(
             F.count("t_cand").cast("bigint").alias("n_overlap"),
-            _floor4(F.count("t_cand") * 1.0 / TOP_K).alias(
+            quantize(F.count("t_cand") * 1.0 / TOP_K, 4).alias(
                 f"recall_at_{TOP_K}"
             ),
         )

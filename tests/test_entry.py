@@ -24,6 +24,17 @@ def test_queries_and_oracles_registered(spark):
     assert set(oracles) <= set(qs)
 
 
+def test_query_rejects_duplicate_name():
+    from arkflow_spark.queries.base import ORACLE, QUERIES, query
+
+    name = "q1_pricing_summary"
+    queries_before, oracles_before = dict(QUERIES), dict(ORACLE)
+    with pytest.raises(ValueError, match=name):
+        query(name, oracle="SELECT 1 AS x")(lambda spark, sf_dir: None)
+    assert QUERIES == queries_before
+    assert ORACLE == oracles_before
+
+
 @pytest.mark.parametrize("name", sorted(entry_mod.queries()))
 def test_query_runs_smoke(spark, name):
     fn = entry_mod.queries()[name]

@@ -19,11 +19,6 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-# r9: gated behind ARKFLOW_FULL_TESTS=1 — hypothesis sweeps vs DuckDB
-# (VERDICT r8 item 1: the driver's default verify profile must finish
-# inside its window; nothing deleted, full suite runs with the flag)
-pytestmark = pytest.mark.slow
-
 
 SF_DIR = "/root/testdata/sf0.001"
 
