@@ -14,7 +14,7 @@ component sizes.
   for each.
 - `graph_component_size_histogram` — size distribution of
   co-purchase graph components after 3 bounded min-label rounds
-  (the `dedup_cluster_canonical` / `graph_community_label_prop`
+  (the `dedup_cluster_canonical` / `graph_community_label_prop_bucketed`
   unrolling discipline, oracle-mirrored): how much of the catalog is
   one connected mass vs isolated islands.
 

@@ -4,7 +4,7 @@ accumulator overflow margins.
 - `graph_community_modularity` — Newman modularity Q of the
   label-propagation communities: sum over communities of
   (within-edges/m - (degree-mass/2m)^2). The number that says
-  whether `graph_community_label_prop`'s communities are real
+  whether `graph_community_label_prop_bucketed`'s communities are real
   structure (Q >> 0) or noise (Q ~ 0) — detection without evaluation
   is how bad segmentations ship.
 - `part_dead_stock_aging` — dead-stock report per brand: the share
@@ -89,7 +89,7 @@ def graph_community_modularity(
     """Newman modularity of the {r}-round min-label communities over
     the co-purchase graph: Q = sum_c (e_c/m - (d_c/2m)^2). Both
     engines run the IDENTICAL unrolled rounds (the
-    `graph_community_label_prop` discipline), so the partition — and
+    `graph_community_label_prop_bucketed` discipline), so the partition — and
     therefore Q — is deterministic. Q near 0 means the label-prop
     segmentation carries no more within-community edge mass than a
     degree-preserving random graph would; shipping those segments to

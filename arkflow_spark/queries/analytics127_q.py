@@ -25,8 +25,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from arkflow_spark.functions import copurchase
+from arkflow_spark.functions.graph_labels import component_labels, lp_rounds
 from arkflow_spark.queries.base import quantize, query
-from arkflow_spark.queries.analytics43_q import _lp_round_sql, _lp_rounds
+from arkflow_spark.queries.analytics43_q import _lp_round_sql
 from arkflow_spark.tables import load
 
 
@@ -265,7 +266,6 @@ def graph_weak_tie_removal_impact(
     shares are label-keyed rollups.
     """.format(s=_WT_SUPPORT, r=_WT_ROUNDS)
     from arkflow_spark.functions.graph_closure import closed_edges
-    from arkflow_spark.functions.graph_labels import component_labels
 
     edges = copurchase.directed(
         spark, sf_dir, min_support=_WT_SUPPORT
@@ -281,7 +281,7 @@ def graph_weak_tie_removal_impact(
         )
 
     def giant(und_df, nodes_df):
-        lbl = _lp_rounds(
+        lbl = lp_rounds(
             nodes_df.select("u", F.col("u").alias("lbl")),
             und_df,
             _WT_ROUNDS,

@@ -242,7 +242,7 @@ def dedup_lsh_eval_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
     S-curve P(candidate) = 1-(1-j^rows)^bands.
 
     The ground-truth all-pairs shingle join is the documented quadratic
-    verification baseline (same as `dedup_ngram_jaccard`) — the harness
+    verification baseline (`dedup_prefix_filter`'s oracle) — the harness
     runs on samples by construction; the LSH side stays bucket-bounded.
     """.format(j=_EVAL_JACCARD)
     sh = _shingles(spark, sf_dir).persist()

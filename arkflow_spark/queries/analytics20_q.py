@@ -69,7 +69,7 @@ def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold, all from ONE pairs computation — the curve you read
     before choosing the threshold (and hence the LSH banding) for a
     100 TB dedup pass. The all-pairs base is the documented quadratic
-    verification path (`dedup_ngram_jaccard`); production computes the
+    verification path (`dedup_prefix_filter`'s oracle); production computes the
     same curve over LSH candidates.
 
     Scale: the per-threshold sweep is a broadcast of 5 rows over the

@@ -198,7 +198,7 @@ def text_self_similarity_stride(
     """Corpus self-similarity over the deterministic stride-{s} pair
     sample: trigram-shingle Jaccard between doc i and doc i+{s}
     (O(n) pairs), reporting the mean, max and the >0.5 count. The
-    MEAN templatedness number — `dedup_ngram_jaccard` surfaces the
+    MEAN templatedness number — `dedup_prefix_filter` surfaces the
     worst pairs; this one prices the whole corpus (Self-BLEU's role,
     made exact and cheap).
 

@@ -87,7 +87,7 @@ def graph_clustering_coefficient(
     """Global clustering coefficient (transitivity) of the co-purchase
     graph: 3 x triangles / wedges, where wedges = sum over nodes of
     d(d-1)/2. High transitivity = purchases form closed bundles
-    (community structure worth mining, `graph_community_label_prop`);
+    (community structure worth mining, `graph_community_label_prop_bucketed`);
     low = hub-and-spoke staples (`graph_degree_assortativity` tells
     which). `graph_triangle_count` gives the raw numerator; this is
     the normalized statistic comparable across catalogs and releases.

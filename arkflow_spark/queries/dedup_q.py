@@ -1,5 +1,5 @@
-"""Deduplication operators over `documents`: exact, n-gram Jaccard,
-MinHash+LSH, SimHash.
+"""Deduplication operators over `documents`: exact, MinHash+LSH, SimHash,
+n-gram Jaccard via prefix filtering.
 
 A core training-data-pipeline capability beyond the reference's own surface
 (BASELINE.json north star). Cross-engine determinism: every hash function is
@@ -9,9 +9,11 @@ base-16 parse, so the DuckDB oracle replicates the full pipeline bit-for-bit.
 Scale design (100 TB):
 - exact dedup = hash-groupBy: one shuffle on a 128-bit key, no skew
   (fingerprints are uniform).
-- n-gram Jaccard all-pairs is quadratic in shingle frequency — correct but
-  reserved for verification; the scalable path is MinHash+LSH, which caps
-  the join key cardinality at (band, band_key) buckets.
+- n-gram Jaccard all-pairs is quadratic in shingle frequency, so it lives
+  only in the oracle; the exact query joins rare-shingle prefixes instead
+  (PPJoin, zero false negatives), and the approximate path is
+  MinHash+LSH, which caps the join key cardinality at (band, band_key)
+  buckets.
 - SimHash pairs join on 8-bit bands (pigeonhole: hamming<=3 over 4 bands
   leaves one band intact), never all-pairs.
 """
@@ -156,58 +158,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") == F.min("doc_id").over(w)).alias("keep"),
         F.count("*").over(w).alias("group_size"),
     ).orderBy("doc_id")
-
-
-@query(
-    "dedup_ngram_jaccard",
-    oracle=f"""
-    WITH {_ORACLE_SHINGLES},
-    pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS shared
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT doc_a, doc_b, shared, sa.n AS n_a, sb.n AS n_b,
-           ROUND(shared * 1.0 / (sa.n + sb.n - shared), 4) AS jaccard
-    FROM pairs
-    JOIN sizes sa ON sa.doc_id = doc_a
-    JOIN sizes sb ON sb.doc_id = doc_b
-    WHERE shared * 1.0 / (sa.n + sb.n - shared) >= 0.6
-    ORDER BY doc_a, doc_b
-    """,
-)
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 3-gram Jaccard near-dup pairs (threshold 0.6) via shingle
-    self-join. Correctness baseline for the MinHash path; at 100 TB the
-    shingle join is capped by LSH instead (see dedup_minhash_lsh)."""
-    sh = _shingles(spark, sf_dir)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("shared"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
-    jac = F.col("shared") * 1.0 / (F.col("n_a") + F.col("n_b") - F.col("shared"))
-    return (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(jac >= 0.6)
-        .select(
-            "doc_a", "doc_b", "shared", "n_a", "n_b",
-            F.round(jac, 4).alias("jaccard"),
-        )
-        .orderBy("doc_a", "doc_b")
-    )
 
 
 def _mh_oracle() -> str:

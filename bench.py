@@ -134,7 +134,6 @@ HEADLINE = [
     "events_running_records",
     "text_mattr_lexical_diversity",
     # round-4 batch 43 (first benched in BENCH_r04)
-    "graph_community_label_prop",
     "events_decayed_rate",
     "lineitem_price_index",
     "embedding_intrinsic_dim_twonn",

@@ -35,6 +35,19 @@ def test_query_rejects_duplicate_name():
     assert ORACLE == oracles_before
 
 
+def test_no_two_queries_share_an_oracle():
+    """One query per oracle: two names whose oracle texts differ only in
+    whitespace answer the same question twice."""
+    from arkflow_spark.queries.base import ORACLE
+
+    by_text: dict[str, list[str]] = {}
+    for name, sql in ORACLE.items():
+        by_text.setdefault(" ".join(sql.split()), []).append(name)
+    shared = sorted(sorted(names) for names in by_text.values()
+                    if len(names) > 1)
+    assert shared == []
+
+
 @pytest.mark.parametrize("name", sorted(entry_mod.queries()))
 def test_query_runs_smoke(spark, name):
     fn = entry_mod.queries()[name]

@@ -399,7 +399,7 @@ SUPPLY_QUERIES = (
     # base year only), parts absent from the base year (excluded),
     # 1-part/2-part graphs (min-label floods in round 1)
     "lineitem_price_index",
-    "graph_community_label_prop",
+    "graph_community_label_prop_bucketed",
     # round-4 batch 44: single-supplier parts (HHI 1, leader share 1),
     # zero-quantity lineitems (share 0/0 -> both engines divide the
     # same exact decimal totals)

@@ -1624,8 +1624,9 @@ def test_mattr_fanout_is_doc_bounded(spark):
 
 def test_label_prop_rounds_are_min_agg_joins(spark):
     """Each round is one edge-keyed join + integer min-agg (Pregel
-    dataflow); no Python, no cartesian."""
-    plan = plan_of(spark, "graph_community_label_prop")
+    dataflow, run by the labels-index build); the query over it has no
+    Python, no cartesian, and ends in a top-k."""
+    plan = plan_of(spark, "graph_community_label_prop_bucketed")
     assert "BatchEvalPython" not in plan
     assert "CartesianProduct" not in plan
     assert "TakeOrderedAndProject" in plan

@@ -33,7 +33,7 @@ DOCS = [
 
 SHORT_SAFE_QUERIES = [
     "dedup_exact",
-    "dedup_ngram_jaccard",
+    "dedup_prefix_filter",
     "dedup_minhash_lsh",
     "dedup_simhash",
     "dedup_cluster_canonical",

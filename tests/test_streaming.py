@@ -69,7 +69,6 @@ def test_stream_pipeline_foreachbatch(spark, tmp_path, events_stream_dir):
     assert merged == {"a": 10, "b": 10}
 
 
-@pytest.mark.slow  # r9: >=10s multi-batch/restart run — ARKFLOW_FULL_TESTS=1
 def test_stream_tumbling_window_event_time(spark, tmp_path, events_stream_dir):
     """Streaming tumbling window with watermark — the reference's window
     buffer under real incremental execution."""
@@ -102,9 +101,12 @@ def test_stream_tumbling_window_event_time(spark, tmp_path, events_stream_dir):
         )
     )
     eng = Engine(spark, cfg)
-    q = eng.streams[0].start(str(tmp_path / "ckpt2"))
+    # drain with availableNow: a processAllAvailable() under the buffer's
+    # 10-minute processing-time trigger waits for the next epoch-aligned
+    # trigger, up to 10 minutes of wall clock
+    q = eng.streams[0].start(str(tmp_path / "ckpt2"), once=True)
     try:
-        q.processAllAvailable()
+        q.awaitTermination()
     finally:
         q.stop()
     rows = [r for batch in eng.streams[0].output.batches for r in batch]
