@@ -24,20 +24,6 @@ META_TIMESTAMP = "__meta_timestamp"
 META_INGEST_TIME = "__meta_ingest_time"
 META_EXT = "__meta_ext"
 
-META_SCHEMA: dict[str, T.DataType] = {
-    META_SOURCE: T.StringType(),
-    META_PARTITION: T.IntegerType(),
-    META_OFFSET: T.LongType(),
-    META_KEY: T.BinaryType(),
-    META_TIMESTAMP: T.TimestampType(),
-    META_INGEST_TIME: T.TimestampType(),
-    META_EXT: T.MapType(T.StringType(), T.StringType()),
-}
-
-# reference: DEFAULT_RECORD_BATCH = 8192 (lib.rs:53) — informational here;
-# Spark sizes batches via maxPartitionBytes / Arrow batch size instead.
-DEFAULT_RECORD_BATCH = 8192
-
 
 def new_binary_df(spark: SparkSession, payloads: list[bytes]) -> DataFrame:
     """Build a raw batch: one Binary ``__value__`` row per message
@@ -46,15 +32,6 @@ def new_binary_df(spark: SparkSession, payloads: list[bytes]) -> DataFrame:
         [(p,) for p in payloads],
         T.StructType([T.StructField(VALUE_COL, T.BinaryType(), False)]),
     )
-
-
-def with_source(df: DataFrame, source: str) -> DataFrame:
-    """Tag every row with its input name (reference: lib.rs:480-487)."""
-    return df.withColumn(META_SOURCE, F.lit(source))
-
-
-def with_ingest_time(df: DataFrame, col: Column | None = None) -> DataFrame:
-    return df.withColumn(META_INGEST_TIME, col or F.current_timestamp())
 
 
 def with_meta(
@@ -80,9 +57,18 @@ def with_meta(
     return df
 
 
+def infer_json_schema(
+    spark: SparkSession, texts: DataFrame
+) -> T.StructType | None:
+    """Infer a schema from the first 1000 JSON strings of the one-column
+    frame ``texts`` (reference: component/json.rs:22-52 infer); None when
+    it has no rows, so callers can return an empty batch."""
+    sample = [r[0] for r in texts.limit(1000).collect()]
+    if not sample:
+        return None
+    return spark.read.json(spark.sparkContext.parallelize(sample)).schema
+
+
 def meta_columns(df: DataFrame) -> list[str]:
     return [c for c in df.columns if c.startswith("__meta_")]
 
-
-def data_columns(df: DataFrame) -> list[str]:
-    return [c for c in df.columns if not c.startswith("__meta_") and c != VALUE_COL]

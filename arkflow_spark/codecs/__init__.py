@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.batch import VALUE_COL, meta_columns
+from arkflow_spark.batch import VALUE_COL, infer_json_schema, meta_columns
 from arkflow_spark.registry import CODECS
 
 
@@ -53,18 +53,12 @@ class DebeziumJsonCodec:
         if self.schema:
             payload_schema = self.schema
         else:
-            sample = [
-                r[0]
-                for r in df.select(F.get_json_object(s, "$.after").alias("a"))
-                .filter(F.col("a").isNotNull())
-                .limit(1000)
-                .collect()
-            ]
-            if not sample:
+            after = F.get_json_object(s, "$.after")
+            payload_schema = infer_json_schema(
+                spark, df.filter(after.isNotNull()).select(after)
+            )
+            if payload_schema is None:
                 return df.limit(0)
-            payload_schema = spark.read.json(
-                spark.sparkContext.parallelize(sample)
-            ).schema
         envelope = df.select(
             s.alias("__raw__"),
             F.get_json_object(s, "$.op").alias("op"),

@@ -1,13 +1,10 @@
 """Skew-mitigation utilities for hot keys at 100 TB.
 
 AQE's skew-join splitting (on in session.py) handles sort-merge joins at
-runtime; these helpers cover the two cases AQE doesn't:
-
-- salted two-phase aggregation: a groupBy whose key distribution is
-  pathological (one key >> executor memory) aggregates first on
-  (key, salt), then on key — both phases map-side combinable;
-- salted broadcast-skew join: replicate the small side per salt so the hot
-  key's rows spread over N tasks.
+runtime; this helper covers the case AQE doesn't: salted two-phase
+aggregation. A groupBy whose key distribution is pathological (one key >>
+executor memory) aggregates first on (key, salt), then on key — both
+phases map-side combinable.
 """
 
 from __future__ import annotations
@@ -61,21 +58,3 @@ def salted_agg(
         p2_cols.append(recombine[fn_name](f"__p1_{name}").alias(name))
     return phase1.agg(*p1_cols).groupBy(*keys).agg(*p2_cols)
 
-
-def salted_broadcast_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: str,
-    n_salts: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Join a skewed big side to a small side by replicating the small side
-    across salts: big gets a random salt, small is exploded to every salt,
-    the join key becomes (on, salt). The hot key's rows land on n_salts
-    tasks instead of one."""
-    big_s = with_salt(big, n_salts)
-    small_s = small.withColumn(
-        SALT_COL, F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    out = big_s.join(F.broadcast(small_s), on=[on, SALT_COL], how=how)
-    return out.drop(SALT_COL)

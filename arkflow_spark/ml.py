@@ -13,8 +13,8 @@ beyond-reference capability, built the Spark-native way:
   MLlib KMeans instead of reusing data labels (``ann_ivf_assign`` is the
   label-centroid variant with a DuckDB oracle; KMeans is what you run when
   labels don't exist);
-- streaming inference: ``score_stream`` applies any fitted
-  ``PipelineModel``/clustering model to a Structured Streaming DataFrame —
+- streaming inference: any fitted ``PipelineModel``/clustering model's
+  ``transform`` applies directly to a Structured Streaming DataFrame —
   MLlib transformers are row-local, so the scoring stage is narrow (no
   shuffle, no state) and scales with input splits.
 
@@ -86,22 +86,12 @@ def assign_buckets(
     return model.transform(vec)
 
 
-def score_stream(model, stream_df: DataFrame) -> DataFrame:
-    """Apply a fitted MLlib model/pipeline to a streaming DataFrame.
-
-    MLlib ``transform`` is expression-based and row-local, so it composes
-    with readStream → transform → writeStream with no extra state; this is
-    the reference's missing "AI integration" expressed Spark-natively."""
-    return model.transform(stream_df)
-
-
 __all__ = [
     "Pipeline",
     "PipelineModel",
     "array_to_vector",
     "assign_buckets",
     "fit_kmeans_ivf",
-    "score_stream",
     "tfidf_pipeline",
     "vector_to_array",
 ]

@@ -15,7 +15,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arkflow_spark.batch import VALUE_COL, meta_columns
+from arkflow_spark.batch import VALUE_COL, infer_json_schema, meta_columns
 from arkflow_spark.functions.compat import assert_query_only, translate_sql
 from arkflow_spark.registry import CODECS, PROCESSORS, TEMPORARIES
 
@@ -72,15 +72,11 @@ class JsonToArrow:
                 F.from_json(F.col(VALUE_COL).cast("string"), self.schema),
             )
         else:
-            sample = [
-                r[0]
-                for r in df.select(F.col(VALUE_COL).cast("string")).limit(1000).collect()
-            ]
-            if not sample:
+            inferred = infer_json_schema(
+                spark, df.select(F.col(VALUE_COL).cast("string"))
+            )
+            if inferred is None:
                 return df.limit(0)
-            inferred = spark.read.json(
-                spark.sparkContext.parallelize(sample)
-            ).schema
             parsed = df.withColumn(
                 "__data__",
                 F.from_json(F.col(VALUE_COL).cast("string"), inferred),

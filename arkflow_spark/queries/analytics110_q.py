@@ -178,7 +178,7 @@ def ann_probe_cost_distribution(
     )
     occ = assign.groupBy("bucket").agg(
         F.count("*").cast("bigint").alias("c")
-    ).persist()  # k rows over the whole IVF lineage
+    )  # k rows over the whole IVF lineage
     from pyspark.sql import Window
 
     wall = Window.partitionBy()

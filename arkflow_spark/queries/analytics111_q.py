@@ -222,7 +222,7 @@ def ann_ivf_assignment_stability(
             )
             / F.count("*")
         ).alias("c")
-    ).persist()  # 2 x labels x dims — broadcast into the distance pass
+    )  # 2 x labels x dims — broadcast into the distance pass
     cc = cent.select(
         F.col("half").alias("chalf"),
         F.col("label").alias("clabel"),

@@ -264,7 +264,7 @@ def orders_new_vs_returning_revenue(
     year-over-year, on exact decimal sums.
 
     Scale shape: one (customer, year) first-order aggregate
-    (persisted — broadcastable onto the order stream), one year
+    (customer-bounded — broadcastable onto the order stream), one year
     rollup. No windows.
     """
     o = load(spark, sf_dir, "orders").select(
@@ -274,7 +274,7 @@ def orders_new_vs_returning_revenue(
     )
     first_y = o.groupBy("o_custkey").agg(
         F.min("y").alias("y0")
-    ).persist()  # customer-bounded; the revenue pass joins it back
+    )  # customer-bounded; the revenue pass joins it back
     ret = F.col("y") > F.col("y0")
     return (
         o.join(first_y, "o_custkey")

@@ -104,19 +104,3 @@ def seq1(n: Column) -> Column:
 # Spark: date_format(ts, SPARK_TS_FMT) ; DuckDB: strftime(ts, DUCK_TS_FMT)
 SPARK_TS_FMT = "yyyy-MM-dd HH:mm:ss"
 DUCK_TS_FMT = "%Y-%m-%d %H:%M:%S"
-
-
-def fmt_ts(col: Column | str, alias: str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.date_format(c, SPARK_TS_FMT).alias(alias)
-
-
-def materialize_bounded(df: DataFrame) -> DataFrame:
-    """Pin a BOUNDED intermediate (shortlists, transition matrices,
-    duel grids — tables whose row count is fixed by construction, not
-    corpus-scaled) as a local DataFrame so iterative consumers don't
-    re-execute its corpus-scan lineage once per round. The collect is
-    sanctioned precisely because the input is bounded; passing a
-    corpus-scaled frame here is a bug."""
-    spark = df.sparkSession
-    return spark.createDataFrame(df.collect(), df.schema)

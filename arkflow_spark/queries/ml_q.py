@@ -219,7 +219,7 @@ def documents_quality_classifier(
     Scale notes: features are a narrow projection; LBFGS does
     treeAggregate rounds over the cached feature frame (no shuffle
     growth with corpus size beyond the aggregate tree); scoring is
-    row-local. The same fitted model streams via ``ml.score_stream``.
+    row-local. The same fitted model's ``transform`` applies to a stream.
     """
     from pyspark.ml.classification import LogisticRegression
     from pyspark.ml.feature import VectorAssembler

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 from arkflow_spark.queries.base import (
     davg,
     dsum,
-    fmt_ts,
     o_davg,
     o_dsum,
     query,

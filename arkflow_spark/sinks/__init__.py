@@ -165,51 +165,6 @@ class KafkaOutput:
         self._payload(df).foreachPartition(write_partition)
 
 
-@OUTPUTS.register("http")
-class HttpOutput:
-    """POST batches to an endpoint (reference: output/http.rs:235).
-
-    Rows are serialized to JSON lines and POSTed per partition FROM THE
-    EXECUTORS (foreachPartition) — the driver never materializes the batch,
-    so the sink scales with partition count; ``batch_rows`` bounds each
-    request body."""
-
-    def __init__(self, conf: dict):
-        self.url = conf["url"]
-        self.headers = dict(conf.get("headers", {}))
-        self.batch_rows = int(conf.get("batch_rows", 1000))
-        self.timeout_s = float(conf.get("timeout_s", 10))
-
-    def write_batch(self, df: DataFrame, epoch_id: int = 0) -> None:
-        url, headers = self.url, {"Content-Type": "application/x-ndjson",
-                                  **self.headers}
-        batch_rows, timeout_s = self.batch_rows, self.timeout_s
-        cols = [c for c in df.columns if not c.startswith("__meta_")]
-        payload_df = df.select(F.to_json(F.struct(*cols)).alias("line"))
-
-        def post_partition(rows) -> None:
-            import requests
-
-            buf: list[str] = []
-
-            def flush() -> None:
-                if buf:
-                    resp = requests.post(
-                        url, data="\n".join(buf).encode(), headers=headers,
-                        timeout=timeout_s,
-                    )
-                    resp.raise_for_status()
-                    buf.clear()
-
-            for r in rows:
-                buf.append(r["line"])
-                if len(buf) >= batch_rows:
-                    flush()
-            flush()
-
-        payload_df.foreachPartition(post_partition)
-
-
 @OUTPUTS.register("sql")
 class SqlOutput:
     """JDBC INSERT/upsert (reference: output/sql.rs:438). Plain modes map
@@ -231,6 +186,6 @@ class SqlOutput:
         w.save()
 
 
-# client-library sinks register on import (mongodb/influxdb/redis/mqtt/
-# nats/pulsar); serialization is pure-python, clients import-gated
+# client sinks register on import (http/mongodb/influxdb/redis/mqtt/nats/
+# pulsar); serialization is pure-python, client libraries import-gated
 from arkflow_spark.sinks import clients as _clients  # noqa: E402,F401

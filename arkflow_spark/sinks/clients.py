@@ -1,7 +1,8 @@
-"""Client-library sinks: MongoDB, InfluxDB, Redis, MQTT, NATS, Pulsar.
+"""Client sinks: HTTP, MongoDB, InfluxDB, Redis, MQTT, NATS, Pulsar.
 
 Reference parity targets (all foreachBatch-per-ack-range semantics,
 output/mod.rs:41-49):
+- http     -> output/http.rs:235     (POST ndjson bodies)
 - mongodb  -> output/mongodb.rs:303  (insert one document per row)
 - influxdb -> output/influxdb.rs:573 (v2 line-protocol writes)
 - redis    -> output/redis.rs:192    (publish channel or SET key/value)
@@ -10,13 +11,14 @@ output/mod.rs:41-49):
 - pulsar   -> output/pulsar.rs:208   (send topic/payload)
 
 Design: every sink serializes rows EXECUTOR-SIDE via ``foreachPartition``
-(the driver never materializes a batch — same shape as HttpOutput, which is
-the live-tested template), opening one client per partition and closing it
-on exit. Serialization is pure Python in ``sinks.serializers`` and unit
-tested without brokers; the client libraries (pymongo, influxdb-client,
-redis, paho-mqtt, nats-py, pulsar-client) are absent in this container, so
+(the driver never materializes a batch, so a sink scales with partition
+count), opening one client per partition and closing it on exit.
+Serialization is pure Python in ``sinks.serializers`` and unit tested
+without brokers; the client libraries (pymongo, influxdb-client, redis,
+paho-mqtt, nats-py, pulsar-client) are absent in this container, so
 construction of a *real* client is gated behind an import-try and tests
 inject a picklable ``client_factory`` (spool-dir fake) through the conf.
+HTTP's default client is ``requests``, live-tested against a local server.
 
 Scale notes: per-partition clients mean connection count == partition count
 (bound it with ``df.coalesce`` upstream if the broker minds); rows stream
@@ -26,13 +28,22 @@ of batch size.
 
 from __future__ import annotations
 
-from typing import Any, Callable, Iterable
+import itertools
+from typing import Any, Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from arkflow_spark.registry import OUTPUTS
 from arkflow_spark.sinks.serializers import row_to_doc, to_influx_line, to_payload
+
+
+def _chunks(items: Iterable, n: int) -> Iterator[list]:
+    """Yield ``items`` as lists of at most ``n``, never an empty one, so a
+    partition streams through in bounded request bodies."""
+    it = iter(items)
+    while chunk := list(itertools.islice(it, n)):
+        yield chunk
 
 
 class _ClientSink:
@@ -76,6 +87,52 @@ class _ClientSink:
         df.foreachPartition(run_partition)
 
 
+@OUTPUTS.register("http")
+class HttpOutput(_ClientSink):
+    """POST batches to ``url`` (reference: output/http.rs:235). Rows are
+    projected to JSON lines JVM-side (``__meta_*`` columns dropped), then
+    each partition POSTs one ndjson body per ``batch_rows`` chunk.
+    Client contract: ``post(lines: list[str])``."""
+
+    def __init__(self, conf: dict):
+        super().__init__(conf)
+        self.url = conf["url"]
+
+    def _default_factory(self):
+        url = self.url
+        headers = {
+            "Content-Type": "application/x-ndjson",
+            **self.conf.get("headers", {}),
+        }
+        timeout_s = float(self.conf.get("timeout_s", 10))
+
+        def factory():
+            import requests
+
+            class _W:
+                def post(self, lines):
+                    resp = requests.post(
+                        url, data="\n".join(lines).encode(), headers=headers,
+                        timeout=timeout_s,
+                    )
+                    resp.raise_for_status()
+
+            return _W()
+
+        return factory
+
+    def write_batch(self, df: DataFrame, epoch_id: int = 0) -> None:
+        cols = [c for c in df.columns if not c.startswith("__meta_")]
+        lines = df.select(F.to_json(F.struct(*cols)).alias("line"))
+        super().write_batch(lines, epoch_id)
+
+    @staticmethod
+    def _write(client, rows, conf) -> None:
+        lines = (r["line"] for r in rows)
+        for chunk in _chunks(lines, int(conf.get("batch_rows", 1000))):
+            client.post(chunk)
+
+
 @OUTPUTS.register("mongodb")
 class MongoDbOutput(_ClientSink):
     """Insert rows as documents (reference: output/mongodb.rs:303).
@@ -95,15 +152,9 @@ class MongoDbOutput(_ClientSink):
 
     @staticmethod
     def _write(client, rows, conf) -> None:
-        batch_rows = int(conf.get("batch_rows", 1000))
-        buf: list[dict] = []
-        for r in rows:
-            buf.append(row_to_doc(r))
-            if len(buf) >= batch_rows:
-                client.insert_many(buf)
-                buf = []
-        if buf:
-            client.insert_many(buf)
+        docs = (row_to_doc(r) for r in rows)
+        for chunk in _chunks(docs, int(conf.get("batch_rows", 1000))):
+            client.insert_many(chunk)
 
 
 @OUTPUTS.register("influxdb")
@@ -161,17 +212,12 @@ class InfluxDbOutput(_ClientSink):
         measurement = conf["measurement"]
         tags, fields = conf["tags"], conf["fields"]
         ts_col = conf.get("timestamp_col")
-        batch_rows = int(conf.get("batch_rows", 1000))
-        buf: list[str] = []
-        for r in rows:
-            line = to_influx_line(r, measurement, tags, fields, ts_col)
-            if line is not None:
-                buf.append(line)
-            if len(buf) >= batch_rows:
-                client.write(buf)
-                buf = []
-        if buf:
-            client.write(buf)
+        lines = (
+            to_influx_line(r, measurement, tags, fields, ts_col) for r in rows
+        )
+        kept = (line for line in lines if line is not None)
+        for chunk in _chunks(kept, int(conf.get("batch_rows", 1000))):
+            client.write(chunk)
 
 
 @OUTPUTS.register("redis")

@@ -8,7 +8,7 @@ the reference's manual ack machinery (input/mod.rs:43-52) is not rebuilt.
 
 from __future__ import annotations
 
-import json
+import functools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -196,106 +196,55 @@ class SqlInput:
         )
 
 
-@INPUTS.register("spooldir")
-class SpoolDirInput:
-    """Push-connector landing zone via the custom Python DataSource
-    (sources/push_source.py): the engine-side half of MQTT/HTTP/WebSocket
-    ingest (reference: input/{mqtt,http,websocket}.rs — see module doc)."""
+class SpoolInput:
+    """Spool-backed push input (reference: input/{mqtt,websocket,nats,
+    pulsar,redis,modbus,http}.rs): reads the spool landing zone ``path``
+    through the Python DataSource ``fmt`` with offset/commit semantics.
+    ``spooldir`` serves a spool an external bridge fills
+    (sources/push_source.py); the broker formats first pump their client
+    into the spool (sources/brokers.py). Every other conf key passes
+    through as a DataSource option (client/fake_count/host/port/topic/
+    compact_on_commit/rowsperpartition/...)."""
 
-    def __init__(self, conf: dict):
-        self.path = conf["path"]
-        self.source_name = conf.get("source_name", "spooldir")
-        # passthrough knobs: compact_on_commit, rowsperpartition, ...
-        self.options = {
-            k: str(v)
-            for k, v in conf.items()
-            if k not in ("path", "source_name") and v is not None
-        }
-
-    def _df(self, reader):
-        r = (
-            reader.format("spooldir")
-            .option("path", self.path)
-            .option("source_name", self.source_name)
-        )
-        for k, v in self.options.items():
-            r = r.option(k, v)
-        return r.load()
-
-    def read_batch(self, spark: SparkSession) -> DataFrame:
-        from arkflow_spark.sources.push_source import register
-
-        register(spark)
-        return self._df(spark.read)
-
-    def read_stream(self, spark: SparkSession) -> DataFrame:
-        from arkflow_spark.sources.push_source import register
-
-        register(spark)
-        return self._df(spark.readStream)
-
-
-class _BrokerInput:
-    """Engine-side broker push input: subscribe -> spool -> offsets via the
-    per-broker DataSource formats (sources/brokers.py). Conf keys pass
-    through as DataSource options (client/fake_count/host/port/topic/...);
-    ``path`` is the spool landing zone."""
-
-    FORMAT = ""
-
-    def __init__(self, conf: dict):
-        self.options = {
-            k: str(v) for k, v in conf.items() if v is not None
-        }
-        self.options.setdefault("source_name", self.FORMAT)
+    def __init__(self, conf: dict, fmt: str):
+        self.format = fmt
+        self.options = {k: str(v) for k, v in conf.items() if v is not None}
+        self.options.setdefault("source_name", fmt)
         if "path" not in self.options:
-            raise ValueError(f"{self.FORMAT} input needs a spool 'path'")
+            raise ValueError(f"{fmt} input needs a spool 'path'")
 
-    def _df(self, reader):
-        r = reader.format(self.FORMAT)
+    def _load(self, spark: SparkSession, reader) -> DataFrame:
+        from arkflow_spark.sources.brokers import register
+
+        register(spark)
+        r = reader.format(self.format)
         for k, v in self.options.items():
             r = r.option(k, v)
         return r.load()
 
     def read_batch(self, spark: SparkSession) -> DataFrame:
-        from arkflow_spark.sources.brokers import register
-
-        register(spark)
-        return self._df(spark.read)
+        return self._load(spark, spark.read)
 
     def read_stream(self, spark: SparkSession) -> DataFrame:
-        from arkflow_spark.sources.brokers import register
-
-        register(spark)
-        return self._df(spark.readStream)
+        return self._load(spark, spark.readStream)
 
 
-def _register_broker_inputs() -> None:
-    # reference: input/{mqtt,websocket,nats,pulsar,redis,modbus}.rs
-    for fmt in ("mqtt_broker", "websocket", "nats", "pulsar", "redis_sub", "modbus"):
-        cls = type(
-            f"{fmt.title().replace('_', '')}Input",
-            (_BrokerInput,),
-            {"FORMAT": fmt},
-        )
-        INPUTS.register(fmt)(cls)
-
-
-_register_broker_inputs()
+for _fmt in ("spooldir", "mqtt_broker", "websocket", "nats", "pulsar",
+             "redis_sub", "modbus"):
+    INPUTS.register(_fmt)(functools.partial(SpoolInput, fmt=_fmt))
 
 
 @INPUTS.register("http")
-class HttpInput(_BrokerInput):
+class HttpInput(SpoolInput):
     """HTTP input, both reference modes (input/http.rs:221-245):
 
     * **server** (``address``/``http_path``): a stdlib webhook server
       (sources/http_ingest.py) accepts POST/PUT bodies into the spool
-      ``path``; Spark reads the spool with offset/commit semantics.
+      ``path``; Spark reads it as format ``spooldir``. The server starts
+      before the first read.
     * **client poll** (``url`` [+ ``interval_ms``/``max_polls``]): the
-      poll client pumps response bodies through the broker reader.
+      poll client pumps response bodies through format ``http_poll``.
     """
-
-    FORMAT = "http_poll"
 
     def __init__(self, conf: dict):
         conf = dict(conf)
@@ -308,11 +257,11 @@ class HttpInput(_BrokerInput):
                 "auth": conf.pop("auth", None),
                 "rate_limit": conf.pop("rate_limit", None),
             }
-            self.FORMAT = "spooldir"
-        super().__init__(conf)
+        fmt = "http_poll" if self.server_conf is None else "spooldir"
+        super().__init__(conf, fmt)
         self._server = None
 
-    def _ensure_server(self) -> None:
+    def _load(self, spark: SparkSession, reader) -> DataFrame:
         if self.server_conf and self._server is None:
             from arkflow_spark.sources.http_ingest import WebhookIngestServer
 
@@ -320,24 +269,7 @@ class HttpInput(_BrokerInput):
                 self.options["path"], **self.server_conf
             ).start()
             self.port = self._server.port
-
-    def read_batch(self, spark: SparkSession) -> DataFrame:
-        self._ensure_server()
-        if self.server_conf:
-            from arkflow_spark.sources.push_source import register
-
-            register(spark)
-            return self._df(spark.read)
-        return super().read_batch(spark)
-
-    def read_stream(self, spark: SparkSession) -> DataFrame:
-        self._ensure_server()
-        if self.server_conf:
-            from arkflow_spark.sources.push_source import register
-
-            register(spark)
-            return self._df(spark.readStream)
-        return super().read_stream(spark)
+        return super()._load(spark, reader)
 
 
 @INPUTS.register("multiple_inputs")

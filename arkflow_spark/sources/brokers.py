@@ -33,6 +33,7 @@ import threading
 import time
 
 from arkflow_spark.sources.push_source import (
+    SpoolDirBatchReader,
     SpoolDirDataSource,
     SpoolDirStreamReader,
     spool_write,
@@ -345,13 +346,10 @@ def _broker_source(fmt_name: str, factory):
             # clients can't be drained in one shot — batch reads serve the
             # current spool snapshot (backfill semantics), stream mode is
             # the live path
-            from arkflow_spark.sources.push_source import SpoolDirBatchReader
-
             stream = BrokerStreamReader(self.options, factory)
             if getattr(stream._client, "synchronous", False):
                 stream._ensure_pump()
-            reader = SpoolDirBatchReader(self.options)
-            return reader
+            return SpoolDirBatchReader(self.options)
 
     _Source.__name__ = f"{fmt_name.capitalize()}DataSource"
     _Source.__doc__ = (
@@ -389,5 +387,6 @@ ALL_BROKER_SOURCES = (
 
 
 def register(spark) -> None:
-    for src in ALL_BROKER_SOURCES:
+    """Register every Python DataSource the spool-backed inputs read."""
+    for src in (SpoolDirDataSource, *ALL_BROKER_SOURCES):
         spark.dataSource.register(src)

@@ -15,7 +15,8 @@ replace ``_list_pending`` / ``_read_range`` with client calls, keep the
 offset machinery.
 
 Batch reads are supported too (``reader``), so the same `format("spooldir")`
-works for backfill.
+works for backfill. ``brokers.register(spark)`` registers this source
+together with the broker formats.
 
 Output schema matches the reference's raw-batch convention:
 ``__value__ BINARY, __meta_source STRING, __meta_offset BIGINT,
@@ -222,39 +223,3 @@ class SpoolDirDataSource(DataSource):
 
     def reader(self, schema) -> SpoolDirBatchReader:
         return SpoolDirBatchReader(self.options)
-
-
-def register(spark) -> None:
-    spark.dataSource.register(SpoolDirDataSource)
-
-
-# ---------------------------------------------------------------- brokers
-class MqttDataSource(SpoolDirDataSource):  # pragma: no cover - needs broker
-    """MQTT input (reference: input/mqtt.rs:276). A paho-mqtt subscriber
-    thread writes each message into the spool via :func:`spool_write`; the
-    offset/partition/commit machinery is inherited unchanged. Gated: the
-    paho client is not in this container."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "mqtt"
-
-    def streamReader(self, schema):
-        try:
-            import paho.mqtt.client  # noqa: F401
-        except ImportError as e:
-            raise NotImplementedError(
-                "mqtt source requires paho-mqtt; bridge into a spool dir or "
-                "use format('spooldir') with an external bridge"
-            ) from e
-        return super().streamReader(schema)
-
-
-class WebhookDataSource(SpoolDirDataSource):  # pragma: no cover
-    """HTTP webhook ingest (reference: input/http.rs:222): an HTTP server
-    appends request bodies to the spool; Spark consumes the spool. The
-    server side is an ingress concern, deliberately outside the engine."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "http_spool"

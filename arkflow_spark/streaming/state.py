@@ -213,100 +213,6 @@ def sliding_count_window_stream(
     )
 
 
-def sliding_count_window_tws(
-    df: DataFrame,
-    window_size: int,
-    slide_size: int,
-    key_col: str,
-    value_cols: list[str],
-    output_schema: str,
-) -> DataFrame:
-    """Count-based sliding window on the modern transformWithStateInPandas
-    API (Spark 4) — same semantics as :func:`sliding_count_window_stream`
-    (reference: buffer/sliding_window.rs:114-163), different state layout:
-
-    - buffered rows live in a ListState, so per-batch appends are
-      INCREMENTAL (RocksDB list merge) instead of rewriting the whole
-      buffer value each micro-batch — the applyInPandasWithState variant
-      rewrites O(window_size) state per batch, this writes O(new rows);
-    - consumed rows advance a head pointer in a ValueState; the list is
-      compacted (rewritten) only when dead rows outnumber live ones, so
-      dequeue cost is amortized O(1) per row and state size stays
-      < 2x window_size rows per key.
-
-    At 100 TB / millions of keys this is the implementation to run: state
-    I/O per batch is proportional to new data, not window size.
-
-    Runtime requirements (standard on cluster images, absent in this dev
-    container): the RocksDB state store provider and the google.protobuf
-    package (pyspark's transformWithState state-server protocol).
-    """
-    _check_slide(window_size, slide_size)
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    import pyspark.sql.types as T
-
-    value_fields = [df.schema[c] for c in value_cols]
-    buf_schema = T.StructType(list(value_fields))
-    out_cols = [key_col, "window_id", "pos_in_window"] + value_cols
-
-    class SlidingCountWindowProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._buf = handle.getListState("buf", buf_schema)
-            self._meta = handle.getValueState(
-                "meta", "next_wid bigint, head bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            next_wid, head = (
-                tuple(self._meta.get()) if self._meta.exists() else (0, 0)
-            )
-            fresh = [
-                tuple(r)
-                for pdf in rows
-                for r in pdf[value_cols].itertuples(index=False)
-            ]
-            if fresh:
-                self._buf.appendList(fresh)
-            buf = [tuple(r) for r in self._buf.get()]
-            emitted = False
-            while len(buf) - head >= window_size:
-                window = buf[head : head + window_size]
-                out = pd.DataFrame(window, columns=value_cols)
-                out.insert(0, "pos_in_window", range(window_size))
-                out.insert(0, "window_id", next_wid)
-                out.insert(0, key_col, key[0])
-                emitted = True
-                yield out
-                next_wid += 1
-                head += slide_size
-            live = len(buf) - head
-            if head > max(live, window_size):
-                # amortized compaction: rewrite only when dead > live rows
-                self._buf.clear()
-                if live:
-                    self._buf.appendList(buf[head:])
-                head = 0
-            self._meta.update((next_wid, head))
-            if not emitted:
-                yield pd.DataFrame(columns=out_cols)
-
-        def close(self) -> None:
-            pass
-
-    return (
-        df.groupBy(key_col)
-        .transformWithStateInPandas(
-            statefulProcessor=SlidingCountWindowProcessor(),
-            outputStructType=output_schema,
-            outputMode="append",
-            timeMode="none",
-        )
-    )
-
-
 def ewma_stream(
     df: DataFrame,
     alpha: float,

@@ -29,10 +29,6 @@ ALLOWED = {
     "queries/analytics62_q.py": (1, "2^4 coalition rows (Shapley grid)"),
     "queries/analytics66_q.py": (1, "_EM_BINS rows (EM histogram grid)"),
     "queries/analytics67_q.py": (1, "one row of 21 counters"),
-    "queries/base.py": (
-        1,
-        "local_frame helper: caller contract is a bounded input frame",
-    ),
     "queries/dedup_q.py": (
         1,
         "one single-row agg scalar (label-signature convergence check)",

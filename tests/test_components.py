@@ -282,22 +282,3 @@ def test_validate_processor_fail_and_aggregate(spark):
             {"checks": [{"name": "pos", "predicate": "id > 1"}]}
         ).process(spark, df)
 
-
-def test_materialize_bounded_pins_rows_and_schema(spark):
-    """materialize_bounded must return an equal-content local frame
-    whose evaluation no longer references the source lineage (the
-    iterative-query pin: MMR shortlist, Markov matrix, duel grid)."""
-    from pyspark.sql import functions as F
-
-    from arkflow_spark.queries.base import materialize_bounded
-
-    src = spark.range(10).select(
-        F.col("id"), (F.col("id") * 2.0).alias("v")
-    )
-    pinned = materialize_bounded(src)
-    assert pinned.schema == src.schema
-    assert sorted(r["v"] for r in pinned.collect()) == [
-        float(i * 2) for i in range(10)
-    ]
-    plan = pinned._jdf.queryExecution().optimizedPlan().toString()
-    assert "Range" not in plan  # local relation, not the source scan

@@ -441,9 +441,10 @@ def test_python_processor_inline_script_example(spark):
     ]
 
 
-def test_all_example_configs_parse():
-    """Every example YAML stays structurally valid (the broker-dependent
-    ones can't execute in this container, but must always parse)."""
+def test_all_example_configs_parse(spark):
+    """Every example YAML stays structurally valid and every stream in it
+    constructs through the registries (the broker-dependent ones can't
+    execute in this container, but must always parse and build)."""
     import glob
 
     from arkflow_spark.config import EngineConfig
@@ -453,6 +454,8 @@ def test_all_example_configs_parse():
     for p in paths:
         cfg = EngineConfig.from_file(p)
         assert cfg.streams, p
+        for conf in cfg.streams:
+            Stream(spark, conf)
 
 
 def test_validate_processor_gates_batch_to_dlq(spark):

@@ -11,7 +11,6 @@ from arkflow_spark.ml import (
     array_to_vector,
     assign_buckets,
     fit_kmeans_ivf,
-    score_stream,
     tfidf_pipeline,
     vector_to_array,
 )
@@ -58,7 +57,7 @@ def test_score_stream_applies_model_per_microbatch(spark):
             .parquet(f"{d}/in")
             .withColumn("embedding", array_to_vector(F.col("embedding")))
         )
-        scored = score_stream(model, stream)
+        scored = model.transform(stream)
         q = (
             scored.writeStream.format("memory")
             .queryName("ml_scored")

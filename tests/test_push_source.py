@@ -5,9 +5,11 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
-from arkflow_spark.sources.push_source import register, spool_write
+from arkflow_spark.sources.brokers import register
+from arkflow_spark.sources.push_source import spool_write
 
 
 def test_spooldir_batch_read(spark, tmp_path):
@@ -112,3 +114,30 @@ def test_commit_without_compaction_is_noop(tmp_path):
     import os
 
     assert [f for f in os.listdir(spool) if f.endswith(".msg")] == ["0.msg"]
+
+
+@pytest.mark.parametrize(
+    "type_name",
+    ["spooldir", "mqtt_broker", "websocket", "nats", "pulsar", "redis_sub",
+     "modbus"],
+)
+def test_spool_inputs_build_through_registry(spark, tmp_path, type_name):
+    """Every spool-backed engine input builds by name through ``INPUTS``
+    and reads its spool in batch mode: brokers via the deterministic fake
+    client, spooldir from messages a bridge already wrote. Rows keep their
+    payloads and tag ``__meta_source`` with the type name."""
+    from arkflow_spark.registry import INPUTS, load_all
+
+    load_all()
+    spool = str(tmp_path / "spool")
+    conf = {"type": type_name, "path": spool}
+    if type_name == "spooldir":
+        for i in range(2):
+            spool_write(spool, f"msg-{i}".encode())
+        want = ["msg-0", "msg-1"]
+    else:
+        conf["client"] = "fake"
+        want = ["msg-0", "msg-1", "msg-2"]
+    rows = INPUTS.build(conf).read_batch(spark).orderBy("__meta_offset").collect()
+    assert [bytes(r["__value__"]).decode() for r in rows] == want
+    assert {r["__meta_source"] for r in rows} == {type_name}

@@ -3,11 +3,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from arkflow_spark.functions.skew import (
-    salted_agg,
-    salted_broadcast_join,
-    with_salt,
-)
+from arkflow_spark.functions.skew import salted_agg, with_salt
 
 
 def test_salted_agg_matches_plain(spark):
@@ -36,23 +32,6 @@ def test_salted_agg_rejects_nondecomposable(spark):
     df = spark.range(10).select((F.col("id") % 2).alias("k"), F.col("id").alias("v"))
     with pytest.raises(ValueError):
         salted_agg(df, ["k"], {"a": F.avg("v")})
-
-
-def test_salted_broadcast_join_matches_plain(spark):
-    big = spark.range(5000).select(
-        (F.when(F.col("id") < 4500, 1).otherwise(F.col("id") % 10)).alias("k"),
-        F.col("id").alias("v"),
-    )  # key 1 is hot (90% of rows)
-    small = spark.createDataFrame(
-        [(i, f"dim{i}") for i in range(10)], "k BIGINT, name STRING"
-    )
-    plain = big.join(small, "k").groupBy("name").count()
-    salted = salted_broadcast_join(big, small, "k", n_salts=4).groupBy(
-        "name"
-    ).count()
-    assert {tuple(r) for r in plain.collect()} == {
-        tuple(r) for r in salted.collect()
-    }
 
 
 def test_deterministic_salt(spark):

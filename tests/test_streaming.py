@@ -200,61 +200,6 @@ def test_stream_dlq_keeps_stream_alive(spark, tmp_path, events_stream_dir):
     assert sum(len(b) for b in s.error_output.batches) == 20
 
 
-def test_stream_sliding_count_window_tws(spark, tmp_path, events_stream_dir):
-    """Same sliding-window semantics on the modern transformWithStateInPandas
-    API (incremental ListState + amortized head-pointer dequeue).
-
-    Requires google.protobuf (pyspark's transformWithState state-server
-    protocol dependency), absent in this container — skipped here, runs on
-    any standard cluster image."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState needs the protobuf package (absent here)",
-    )
-    from arkflow_spark.streaming.state import sliding_count_window_tws
-
-    # transformWithState requires the RocksDB state store provider
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    sdf = (
-        spark.readStream.schema("id BIGINT, ts TIMESTAMP, k STRING, v DOUBLE")
-        .parquet(events_stream_dir)
-    )
-    out = sliding_count_window_tws(
-        sdf,
-        window_size=3,
-        slide_size=2,
-        key_col="k",
-        value_cols=["id", "v"],
-        output_schema="k STRING, window_id BIGINT, pos_in_window BIGINT,"
-        " id BIGINT, v DOUBLE",
-    )
-    collected = []
-    q = (
-        out.writeStream.foreachBatch(
-            lambda df, eid: collected.extend(df.collect())
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    by_key = {}
-    for r in collected:
-        by_key.setdefault(r["k"], set()).add(r["window_id"])
-    assert by_key == {"a": {0, 1, 2, 3}, "b": {0, 1, 2, 3}}
-    a_w0 = sorted(
-        (r["pos_in_window"], r["id"]) for r in collected
-        if r["k"] == "a" and r["window_id"] == 0
-    )
-    ids = [i for _, i in a_w0]
-    assert len(ids) == 3 and ids == sorted(ids)
-
-
 @pytest.mark.slow  # r9: >=10s multi-batch/restart run — ARKFLOW_FULL_TESTS=1
 def test_file_input_rate_limit_option(spark, tmp_path):
     """max_files_per_trigger bounds per-trigger ingest (the reference's
@@ -429,7 +374,8 @@ def test_checkpoint_restart_resumes_offsets_exactly_once(spark, tmp_path):
     drained, stopped, fed more data, and RESTARTED from the same
     checkpoint must deliver every message exactly once — the second run
     resumes from the committed spool offset instead of re-reading."""
-    from arkflow_spark.sources.push_source import register, spool_write
+    from arkflow_spark.sources.brokers import register
+    from arkflow_spark.sources.push_source import spool_write
 
     register(spark)
     spool, out, ckpt = (
@@ -1911,9 +1857,7 @@ def test_keyed_fold_is_split_invariant(spark, monkeypatch, name):
             assert stored == whole_state, cut
 
 
-@pytest.mark.parametrize(
-    "form", ["sliding_count_window_stream", "sliding_count_window_tws"]
-)
+@pytest.mark.parametrize("form", ["sliding_count_window_stream"])
 @pytest.mark.parametrize(
     "window_size,slide_size", [(3, 5), (3, 0), (0, 1)]
 )
@@ -1923,7 +1867,7 @@ def test_stream_sliding_count_window_rejects_bad_sizes(
     """A slide longer than the window made the output depend on where
     micro-batch boundaries fell (skipped rows leaked into the next
     window); a zero size never drains the buffer, so the fold never
-    ends. Both stream forms reject them up front."""
+    ends. The stream form rejects them up front."""
     from arkflow_spark.streaming import state as state_ops
 
     with pytest.raises(ValueError, match="slide_size"):
